@@ -250,12 +250,20 @@ object Bench {
 
   /** One sample of one query: wall seconds, best-run CPU utilization,
     * the calibration-probe seconds measured immediately before it, the
-    * GC milliseconds this JVM collected DURING the sample (r14), and
-    * the memory-bandwidth probe seconds (r17; 0.0 = not measured, never
-    * rejects).
+    * GC milliseconds this JVM collected DURING the sample (r14), the
+    * memory-bandwidth probe seconds (r17; 0.0 = not measured, never
+    * rejects), and the generated classes Spark compiled during it (0
+    * once the query's plan shapes sit in the codegen cache).
     */
   private[graft] case class Sample(wall: Double, util: Double, probe: Double,
-                                   gcMs: Long = 0L, memProbe: Double = 0.0)
+                                   gcMs: Long = 0L, memProbe: Double = 0.0,
+                                   compiles: Long = 0L)
+
+  /** Generated classes compiled by this JVM so far (cache misses of
+    * Spark's codegen cache; hits do not count).
+    */
+  private def codegenCompiles: Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
   /** A sample is GC-thrash when garbage collection ate more than 25% of
     * its wall time AND at least half a second absolute (routine young-gen
@@ -474,6 +482,7 @@ object Bench {
       memFloor = math.min(memFloor, mp)
       val cpu0 = osBean.getProcessCpuTime
       val g0 = gcMs
+      val c0 = codegenCompiles
       val t0 = System.nanoTime()
       // fail FAST: swallowing the error would report the (often very
       // fast) failure path as a legitimate best-of-N time — a broken
@@ -485,7 +494,7 @@ object Bench {
       val wall = (System.nanoTime() - t0) / 1e9
       val cpuSec = (osBean.getProcessCpuTime - cpu0) / 1e9
       Sample(wall, cpuSec / (wall * Runtime.getRuntime.availableProcessors()),
-        p, gcMs - g0, mp)
+        p, gcMs - g0, mp, codegenCompiles - c0)
     }
 
     /** Sample `name` at least `base` times, extending to `cap` until the
@@ -505,22 +514,12 @@ object Bench {
     }
   }
 
-  /** The bench SparkSession — ONE recipe for both JVMs (the headline
-    * process and the forked sf1 process), so the two tiers cannot drift
-    * on config.
+  /** The bench SparkSession for both JVMs (the headline process and the
+    * forked sf1 process): the engine's one recipe,
+    * [[graft.core.DDFManager.localSession]], at SPARK_GRAFT_CPUS cores.
     */
-  private[graft] def benchSession(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
+  private[graft] def benchSession(): SparkSession =
+    graft.core.DDFManager.localSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -657,7 +656,7 @@ object Bench {
     def assemble(extra: String, xp: Seq[(String, Double)] = Seq.empty): String = {
       val qj = numMap(vs.map { case (k, v) => k -> v.best.wall } ++ xp)
       val tot = total + xp.map(_._2).sum
-      f"""{"metric":"total","value":$tot%.3f,"unit":"sec","queries":$qj,"sf":"$sfDir","runs":$runs,"harness":"hash-materialized; r9: per-sample CPU calibration probe rejects starved samples; r14: per-sample GC delta rejects gc-thrash samples, sf1 tier runs in a forked fresh JVM; r17: per-sample memory-bandwidth probe rejects bus-contended samples; r18: x10_* rows are the heavy operators on the 10x corpus, measured in the forked JVM (see Bench.scala scaladoc)","samples":$samplesJson,"probes":$probesJson,"probe_base":${sampler.probeFloor}%.3f,"mem_probes":${memProbesMap(results)},"mem_probe_base":${sampler.memFloor}%.3f,"best_run_cpu_util":$utilJson,"converged":$convJson,"contended":$contJson,"gc_thrash":$gcThrashJson,"rejected":$rejJson,"gc_rejected":$gcRejJson,"gc_ms":$gcHeadline,"gc_q_ms":$gcQJson,"anchor":"$anchorPath","vs_anchor":$vaJson,"prev_anchor":"$prevAnchorPath","vs_prev_anchor":$vpaJson,"suspect":$suspectJson,"retry":$headRetryJson$extra}"""
+      f"""{"metric":"total","value":$tot%.3f,"unit":"sec","queries":$qj,"sf":"$sfDir","runs":$runs,"harness":"hash-materialized; r9: per-sample CPU calibration probe rejects starved samples; r14: per-sample GC delta rejects gc-thrash samples, sf1 tier runs in a forked fresh JVM; r17: per-sample memory-bandwidth probe rejects bus-contended samples; r18: x10_* rows are the heavy operators on the 10x corpus, measured in the forked JVM (see Bench.scala scaladoc)","samples":$samplesJson,"probes":$probesJson,"probe_base":${sampler.probeFloor}%.3f,"mem_probes":${memProbesMap(results)},"codegen_compiles":${compilesMap(results)},"mem_probe_base":${sampler.memFloor}%.3f,"best_run_cpu_util":$utilJson,"converged":$convJson,"contended":$contJson,"gc_thrash":$gcThrashJson,"rejected":$rejJson,"gc_rejected":$gcRejJson,"gc_ms":$gcHeadline,"gc_q_ms":$gcQJson,"anchor":"$anchorPath","vs_anchor":$vaJson,"prev_anchor":"$prevAnchorPath","vs_prev_anchor":$vpaJson,"suspect":$suspectJson,"retry":$headRetryJson$extra}"""
     }
 
     // the stdout line interleaves with sbt/Spark logging and has arrived
@@ -806,6 +805,14 @@ object Bench {
   private[graft] def memProbesMap(xs: Seq[(String, Seq[Sample])]): String =
     xs.map { case (k, ss) =>
       "\"" + k + "\":" + ss.map(s => f"${s.memProbe}%.3f").mkString("[", ",", "]")
+    }.mkString("{", ",", "}")
+  /** Per query, the codegen compiles of each timed sample, in sample
+    * order: a nonzero entry after the first sample means the codegen
+    * cache is evicting that query's classes between runs.
+    */
+  private[graft] def compilesMap(xs: Seq[(String, Seq[Sample])]): String =
+    xs.map { case (k, ss) =>
+      "\"" + k + "\":" + ss.map(_.compiles).mkString("[", ",", "]")
     }.mkString("{", ",", "}")
 
   // ---- suspect-row self-healing (r16, r15 verdict ask #2) ----
@@ -983,6 +990,7 @@ object Bench {
     val sx = triples.map { case (n, ss, _) => ("x10_" + n) -> ss }
     s"""{"queries_x10":${numMap(vsX.map { case (k, v) => k -> v.best.wall })},""" +
       s""""samples_x10":${samplesMap(sx)},""" +
+      s""""codegen_compiles_x10":${compilesMap(sx)},""" +
       s""""converged_x10":${boolMap(vsX.map { case (k, v) => k -> v.converged })},""" +
       s""""unconverged_x10":${nameList(vsX.collect {
         case (k, v) if !v.converged && !v.contended && !v.gcThrash => k })},""" +
@@ -1056,7 +1064,7 @@ object Bench {
     val q1 = numMap(v1.map { case (k, v) => k -> v.best.wall })
     val t1 = v1.map(_._2.best.wall).sum
     val full =
-      f""","queries_sf1":$q1,"samples_sf1":${samplesMap(r1)},"probes_sf1":${probesMap(r1)},"mem_probes_sf1":${memProbesMap(r1)},"converged_sf1":${boolMap(v1.map { case (k, v) => k -> v.converged })},"contended_sf1":${boolMap(v1.map { case (k, v) => k -> v.contended })},"gc_thrash_sf1":${boolMap(v1.map { case (k, v) => k -> v.gcThrash })},"rejected_sf1":${intMap(v1.map { case (k, v) => k -> v.rejected })},"gc_rejected_sf1":${intMap(v1.map { case (k, v) => k -> v.gcRejected })},"total_sf1":$t1%.3f,"gc_ms_sf1":$gcTier,"gc_q_ms_sf1":${intMap(gcQ1)},"vs_anchor_sf1":${numMap2(vsAnchor1)},"vs_prev_anchor_sf1":${numMap2(vsPrev1)},"suspect_sf1":${nameList(suspects1)},"retry_sf1":${retryJson(retried)},"sf1_forked":$forked"""
+      f""","queries_sf1":$q1,"samples_sf1":${samplesMap(r1)},"probes_sf1":${probesMap(r1)},"mem_probes_sf1":${memProbesMap(r1)},"codegen_compiles_sf1":${compilesMap(r1)},"converged_sf1":${boolMap(v1.map { case (k, v) => k -> v.converged })},"contended_sf1":${boolMap(v1.map { case (k, v) => k -> v.contended })},"gc_thrash_sf1":${boolMap(v1.map { case (k, v) => k -> v.gcThrash })},"rejected_sf1":${intMap(v1.map { case (k, v) => k -> v.rejected })},"gc_rejected_sf1":${intMap(v1.map { case (k, v) => k -> v.gcRejected })},"total_sf1":$t1%.3f,"gc_ms_sf1":$gcTier,"gc_q_ms_sf1":${intMap(gcQ1)},"vs_anchor_sf1":${numMap2(vsAnchor1)},"vs_prev_anchor_sf1":${numMap2(vsPrev1)},"suspect_sf1":${nameList(suspects1)},"retry_sf1":${retryJson(retried)},"sf1_forked":$forked"""
     val compact = f""","queries_sf1":$q1,"total_sf1":$t1%.3f""" +
       s""","contended_sf1":${nameList(v1.collect { case (k, v) if v.contended => shortOf(k) })}""" +
       s""","gc_thrash_sf1":${nameList(v1.collect { case (k, v) if v.gcThrash => shortOf(k) })}""" +

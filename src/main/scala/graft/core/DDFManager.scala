@@ -254,8 +254,25 @@ object DDFManager {
     else if (isLogical) BooleanType
     else StringType
   }
-  /** Build a scale-ready local session: AQE on, 32 shuffle partitions for
-    * local[32] (the cluster deployment overrides via spark-submit conf).
+  /** Entries in Spark's per-JVM cache of compiled generated classes
+    * (`spark.sql.codegen.cache.maxEntries`, Spark's default 100). The
+    * cache is an LRU keyed on the generated source, so a session whose
+    * working set of distinct code bodies exceeds it evicts every entry
+    * before its next use: each repeated plan shape is compiled by Janino
+    * again, loaded as a new class and JIT-compiled again. Measured
+    * working sets: the analyst_sql benchmark workload needs ~172 bodies,
+    * curation_build ~218, and one `graft.Verify` pass over all 291
+    * registry queries at sf0.001 compiles ~4 280 distinct bodies (7 750
+    * compiles at the default). The bound leaves ~1.9× headroom over the
+    * registry. An entry holds ~30 KB of heap (its source is the key), so
+    * a full cache costs ~240 MB; entries exist only once compiled.
+    */
+  val CodegenCacheEntries = 8192
+
+  /** Build a scale-ready local session: AQE on, one shuffle partition
+    * per core (the cluster deployment overrides via spark-submit conf),
+    * UTC session time, a codegen cache sized by [[CodegenCacheEntries]].
+    * The one session recipe of the engine's mains, tools and tests.
     */
   def localSession(cores: Int = 32): SparkSession = {
     val spark = SparkSession
@@ -266,6 +283,7 @@ object DDFManager {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

@@ -981,8 +981,15 @@ object Dedup {
     * returning (localCheckpoint), following minhashDedup.
     *
     * Output: (id, text, n_kept, n_total) — n_* count this doc's segments.
+    *
+    * `inRowTotals = true` declares that every row of `segments` carries
+    * its doc's segment count in an `n_total` column, as [[spanSegments]]
+    * and [[paragraphSegments]] produce it; the counts are then taken from
+    * the rows instead of recounted. Any other `n_total` column the caller
+    * passes is ignored.
     */
-  def segmentDedup(segments: DataFrame, sep: String = " "): DataFrame = {
+  def segmentDedup(segments: DataFrame, sep: String = " ",
+                   inRowTotals: Boolean = false): DataFrame = {
     // r18 opt (guide §2.4/§8): the winner's OWN segment rides the
     // min-struct — (id, idx) is unique per row, so the fp-group min
     // picks exactly the first-occurrence row AND carries its text,
@@ -994,9 +1001,10 @@ object Dedup {
     // `n_total` (spanSegments/paragraphSegments do), the whole totals
     // aggregation + join vanish too and the segment frame has ONE
     // consumer — a single scan, no persist.
-    val hasTotals = segments.columns.contains("n_total")
+    require(!inRowTotals || segments.columns.contains("n_total"),
+      "segmentDedup: inRowTotals needs an n_total column on every segment row")
     val fp = md5(normText(col("seg")))
-    if (hasTotals) {
+    if (inRowTotals) {
       segments.withColumn("fp", fp)
         .groupBy("fp")
         .agg(min(struct(col("id"), col("idx"), col("seg"), col("n_total"))).as("w"))
@@ -1034,12 +1042,12 @@ object Dedup {
 
   /** [[segmentDedup]] over fixed token spans of `w`. */
   def spanDedup(df: DataFrame, textCol: String, idCol: String, w: Int): DataFrame =
-    segmentDedup(spanSegments(df, textCol, idCol, w))
+    segmentDedup(spanSegments(df, textCol, idCol, w), inRowTotals = true)
 
   /** [[segmentDedup]] over separator-delimited paragraphs. */
   def paragraphDedup(df: DataFrame, textCol: String, idCol: String,
                      sep: String = "\n\n"): DataFrame =
-    segmentDedup(paragraphSegments(df, textCol, idCol, sep), sep)
+    segmentDedup(paragraphSegments(df, textCol, idCol, sep), sep, inRowTotals = true)
 
   /** SemDeDup-style semantic near-dup pairs: embeddings assigned to
     * k-means cells ([[IvfIndex]]), exact cosine scored WITHIN cells only

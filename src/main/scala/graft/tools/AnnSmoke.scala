@@ -1,7 +1,8 @@
 package graft.tools
 
+import graft.core.DDFManager
 import graft.pipeline.{IvfIndex, Similarity}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** ANN at honest scale: 200 k+ vectors × 64 dims (the sf0.1 embeddings
@@ -35,13 +36,7 @@ object AnnSmoke {
     val f = sys.env.getOrElse("SPARK_GRAFT_ANN_F", "100").toInt
     val nQueries = sys.env.getOrElse("SPARK_GRAFT_ANN_QUERIES", "50").toInt
     val k = 10
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = DDFManager.localSession(cpus.toInt)
 
     val base = spark.read.parquet(s"$sfDir/embeddings.parquet")
     val dim = base.select(size(col("embedding"))).first().getInt(0)

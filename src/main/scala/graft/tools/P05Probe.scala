@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.core.DDFManager
 import org.apache.spark.sql.functions._
 
 /** Dev probe: p05's stage-by-stage row counts at a given dir (default:
@@ -8,11 +8,7 @@ import org.apache.spark.sql.functions._
   */
 object P05Probe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = DDFManager.localSession(32)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val dir =
       if (sys.env.contains("SPARK_GRAFT_NO_BLOW")) sfDir

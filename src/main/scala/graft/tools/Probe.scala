@@ -1,7 +1,7 @@
 package graft.tools
 
+import graft.core.DDFManager
 import graft.pipeline.Similarity
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scratch micro-benchmark main (not part of the driver contract):
@@ -16,10 +16,7 @@ object Probe {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = DDFManager.localSession(8)
     val emb = spark.read.parquet("/root/testdata/sf0.1/embeddings.parquet").cache()
     println(s"[probe] vectors: ${emb.count()}")
     val queries = emb.filter(col("vec_id") < 20)

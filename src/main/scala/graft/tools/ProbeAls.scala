@@ -1,7 +1,7 @@
 package graft.tools
 
+import graft.core.DDFManager
 import org.apache.spark.ml.recommendation.ALS
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Param probe for the ml06 ALS gate: reconstruction error and held-out
@@ -11,9 +11,7 @@ import org.apache.spark.sql.functions._
   */
 object ProbeAls {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = DDFManager.localSession(8)
     spark.sparkContext.setLogLevel("ERROR")
     spark.sparkContext.setCheckpointDir(
       java.nio.file.Files.createTempDirectory("graft_als_probe").toString)

@@ -1,7 +1,7 @@
 package graft.tools
 
+import graft.core.DDFManager
 import graft.pipeline.Dedup
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Stage-level probe of the incremental-minhash (d11) shape at the
@@ -13,11 +13,7 @@ import org.apache.spark.sql.functions._
   */
 object ProbeD11 {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = DDFManager.localSession(32)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val f = sys.env.getOrElse("SPARK_GRAFT_FACTOR", "10").toInt
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")

@@ -1,7 +1,7 @@
 package graft.tools
 
+import graft.core.DDFManager
 import graft.pipeline.SetJoin
-import org.apache.spark.sql.SparkSession
 
 /** Measures the prefix filter's pruning power and wall time on the real
   * documents corpus at a given sf dir + threshold. Prints one JSON line.
@@ -12,11 +12,7 @@ object SetJoinSmoke {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val t = args.lift(1).map(_.toDouble).getOrElse(0.8)
     val nDocs = args.lift(2).map(_.toLong).getOrElse(Long.MaxValue)
-    val spark = SparkSession.builder().master("local[32]")
-      .appName("setjoin-smoke")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = DDFManager.localSession(32)
     spark.sparkContext.setLogLevel("ERROR")
     import org.apache.spark.sql.functions._
     val docs = spark.read.parquet(s"$dir/documents.parquet")

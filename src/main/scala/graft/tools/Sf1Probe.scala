@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.core.DDFManager
 import org.apache.spark.sql.functions._
 
 /** Dev probe: build the bench's 10×-blown sf1 corpus and run the given
@@ -11,12 +11,7 @@ import org.apache.spark.sql.functions._
   */
 object Sf1Probe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = DDFManager.localSession(32)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val names = sys.env.getOrElse("SPARK_GRAFT_OPS", "p05_curation_corpus_build")
       .split(",").map(_.trim).filter(_.nonEmpty)

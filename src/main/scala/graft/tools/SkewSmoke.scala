@@ -1,6 +1,7 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.core.DDFManager
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Measures the skewed-join story SCALE.md asserts: one Zipf-hot key
@@ -28,13 +29,7 @@ object SkewSmoke {
     val runs = sys.env.getOrElse("SPARK_GRAFT_RUNS", "3").toInt
     val saltF = sys.env.getOrElse("SPARK_GRAFT_SALT", "16").toInt
     val nKeys = 100000L
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = DDFManager.localSession(cpus.toInt)
 
     // fact: 20% of rows carry key 0; the rest spread uniformly. The
     // payload column gives each row weight so the skewed task cost is

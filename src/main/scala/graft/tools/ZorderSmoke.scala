@@ -1,7 +1,7 @@
 package graft.tools
 
+import graft.core.DDFManager
 import graft.sources.Layout
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
@@ -16,11 +16,7 @@ object ZorderSmoke {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toInt).getOrElse(1000000)
     val files = args.lift(1).map(_.toInt).getOrElse(32)
-    val spark = SparkSession.builder().master("local[32]")
-      .appName("zorder-smoke")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = DDFManager.localSession(32)
     spark.sparkContext.setLogLevel("ERROR")
 
     val side = math.sqrt(n.toDouble).toInt

@@ -333,4 +333,39 @@ class CoreSpec extends SparkTestBase {
     assert(prof.filter(col("col_name") === "id")
       .select("row_count").head().getLong(0) == 0L)
   }
+
+  test("a repeated plan shape is compiled once: the codegen cache holds the working set") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    // the sf0.001 corpus that entry()'s smoke query reads
+    val lineitem = new java.io.File(new java.net.URI(SparkEntry.entry(spark).inputFiles.head))
+    val sfDir = Iterator.iterate(lineitem)(_.getParentFile)
+      .find(_.getName == "lineitem.parquet").get.getParent
+    // 183 distinct code bodies in a fresh JVM, past Spark's default cache
+    // of 100: with that default the LRU evicts each body before its next
+    // use, and the second pass compiles 174 classes again. These queries'
+    // AQE plans number their codegen stages the same way on every run, so
+    // an unchanged plan shape always maps to the same cached class.
+    val set = Seq("g02_triangle_count", "q80_tpch_q9", "q75_tpch_q8", "q81_tpch_q11",
+      "q82_tpch_q16", "q13_tpch_q5")
+    def compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    def pass(): Long = {
+      val c0 = compiles
+      set.foreach(q => SparkEntry.queries(q)(spark, sfDir).collect())
+      compiles - c0
+    }
+    pass()
+    assert(pass() == 0, "the second pass recompiled generated classes")
+  }
+
+  test("bench samples carry their codegen compile counts into every tier's artifact") {
+    val om = new com.fasterxml.jackson.databind.ObjectMapper()
+    val ss = Seq(Bench.Sample(1.0, 0.5, 0.02, compiles = 40L), Bench.Sample(0.9, 0.5, 0.02))
+    assert(om.readTree(Bench.compilesMap(Seq("q" -> ss))).get("q").toString == "[40,0]")
+    val (full, _) = Bench.sf1Render(Seq(("q", ss, 0L)), 0.02, Map.empty, identity, 0L,
+      forked = true)
+    assert(om.readTree("{\"a\":1" + full + "}").get("codegen_compiles_sf1")
+      .get("q").toString == "[40,0]")
+    val x10 = om.readTree(Bench.x10Render(Seq(("g", ss, 0L)), 0.02, Double.PositiveInfinity))
+    assert(x10.get("codegen_compiles_x10").get("x10_g").toString == "[40,0]")
+  }
 }
