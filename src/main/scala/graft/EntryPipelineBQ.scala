@@ -170,27 +170,23 @@ private[graft] object EntryPipelineBQ {
 
     Q("j04_edit_distance_join_k3",
       (s, d) => {
-        // The k ≥ 3 POSITIONAL-Q-GRAM path of the edit-distance join
-        // (j03's k=1 exercises only FastSS), on the corpus shape the
+        // The k ≥ 3 PassJoin partition-filter path of the edit-distance
+        // join (j03's k=1 exercises only FastSS), on the corpus shape the
         // filter is FOR: pseudo-natural 20-char strings over a 16-letter
-        // alphabet with a rich gram vocabulary (16⁴ = 65,536 at q=4) and
-        // no constant region. Deterministically derived from customer
+        // alphabet with no constant region, so the 4 segments of a string
+        // are discriminative. Deterministically derived from customer
         // keys: groups of 4 sibling keys share an md5-derived base
         // string (a crypto hash — earlier algebraic recipes leaked
         // cyclic-shift/negation structure that made cross-group pairs
         // grow quadratically); sibling r carries r planted substitutions
         // at spread positions, so every group yields its 6 true pairs at
-        // distances 0–3 and NOTHING else collides. q=4 over len 20
-        // keeps the count bound meaningful (17 grams > q·k = 12 → bound
-        // 5; at q=2 the bound would be 19−6=13 of 19 — also fine, but
-        // 16² = 256 gram types would go stop-frequent at scale). The
-        // oracle builds the SAME corpus and BRUTE-FORCES all n²/2 pairs
-        // — completeness proven on data, not fixtures (the j03 argument,
-        // now for the q-gram path).
+        // distances 0–3 and NOTHING else collides. The oracle builds the
+        // SAME corpus and BRUTE-FORCES all n²/2 pairs — completeness
+        // proven on data, not fixtures (the j03 argument, now for the
+        // partition filter).
         val m = mgr(s, d)
         pipeline.SetJoin.editDistanceJoin(
-            editCorpus(m.getDDFByName("customer").df), "name", "k",
-            maxDist = 3, q = 4)
+            editCorpus(m.getDDFByName("customer").df), "name", "k", maxDist = 3)
           .orderBy("id_a", "id_b")
       },
       Some(s"""WITH $duckEditCorpus
@@ -225,14 +221,15 @@ private[graft] object EntryPipelineBQ {
 
     Q("j06_edit_distance_lookup_k3",
       (s, d) => {
-        // the same lookup through the k ≥ 3 q-gram path (union-frequency
-        // stop grams, poolL × poolR fallback) — both candidate
-        // strategies of the two-table join under oracle
+        // the same lookup through the k ≥ 3 PassJoin path (each side's
+        // segments probed by the other side's substrings, plus the
+        // short-string pool) — both candidate strategies of the
+        // two-table join under oracle
         val m = mgr(s, d)
         val cust = m.getDDFByName("customer").df
         pipeline.SetJoin.editDistanceLookup(
             editProbes(cust), "pname", "pk",
-            editCorpus(cust), "name", "k", maxDist = 3, q = 4)
+            editCorpus(cust), "name", "k", maxDist = 3)
           .orderBy("id_l", "id_r")
       },
       Some(s"""WITH $duckEditCorpus,

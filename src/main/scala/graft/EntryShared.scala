@@ -882,11 +882,11 @@ private[graft] object EntryShared {
        |  WHERE d.doc_id % 7 <> 0)""".stripMargin
 
   /** j04/j05/j06 corpus: pseudo-natural 20-char strings over a 16-letter
-    * alphabet with a rich gram vocabulary (16⁴ at q=4) and no constant
-    * region — the corpus shape the k ≥ 3 q-gram filter is FOR. Groups of
-    * 4 sibling customer keys share an md5-derived base string (a crypto
-    * hash: earlier algebraic recipes leaked period/shift/negation
-    * structure that made cross-group pairs grow quadratically); sibling
+    * alphabet with no constant region — the corpus shape the k ≥ 3
+    * partition filter is FOR. Groups of 4 sibling customer keys share
+    * an md5-derived base string (a crypto hash: earlier algebraic
+    * recipes leaked period/shift/negation structure that made
+    * cross-group pairs grow quadratically); sibling
     * r carries r planted substitutions at spread positions, so every
     * group yields its 6 true pairs at distances 0–3 and nothing else
     * collides.

@@ -112,290 +112,144 @@ object SetJoin {
     * `strCol` values are within Levenshtein distance `maxDist`, with NO
     * false negatives. The entity-resolution sibling of
     * [[exactJaccardJoin]] — string identity instead of token sets.
-    *
-    * STRATEGY — two candidate generators, chosen by k:
-    *
-    * k ≤ 2 → DELETION NEIGHBORHOODS (FastSS): each string explodes to
-    * every variant reachable by ≤ k character deletions (k=1: len+1
-    * variants; k=2: O(len²)); candidates are pairs sharing a variant.
-    * Complete: an alignment with ≤ k edits leaves a common subsequence
-    * reachable from BOTH strings by ≤ k deletions, so true pairs always
-    * collide. Variants are near-full strings, so this is robust to the
-    * corpora that defeat substring signatures — zero-padded identifiers
-    * whose only discriminative content is a few tail characters
-    * (measured in SCALE.md: the q-gram filter drains such corpora into
-    * its quadratic fallback pool; deletion postings stay true-pair
-    * sized). Cost: the variant explode shuffles ~len^k × corpus rows —
-    * proportional, not quadratic.
-    *
-    * k ≥ 3 → PARTITION FILTER (r18; PassJoin pigeonhole — Li, Deng,
-    * Feng, public knowledge; kernels in
-    * [[graft.functions.EditDistanceExpressions]]): split the shorter
-    * string of a pair into k+1 contiguous segments — ≤ k edits cannot
-    * touch all of them, so one segment appears EXACTLY in the longer
-    * string within ±k of its home position. Candidates are the pairs
-    * hit by one equi-join of every string's own segments against every
-    * string's candidate-segment substrings (O(k³) short slices per
-    * string, generated in-row); strings shorter than k+1 code points
-    * (zero-length segments would match everywhere) pair only with
-    * lengths ≤ 2k via a bounded all-pairs pool. Complete at every
-    * step; no count bound, no gram-frequency pass, and — unlike the
-    * r17 positional q-gram count filter whose Σ gf² gram-collision
-    * join dominated j04 — the candidate join's output is
-    * near-true-pair-sized, and segment keys stay discriminative even
-    * on constant-region corpora ("Customer#000…": the varying tail
-    * still lands in its own segments).
-    *
-    * Survivors verify with codegen'd `levenshtein`. Output:
+    * Candidates come from [[editCandidates]] (FastSS for k ≤ 2, PassJoin
+    * for k ≥ 3) and are checked by [[verified]]. Output:
     * (id_a, id_b, dist), id_a < id_b, dist ≤ k.
     *
-    * `q` / `stopGramFraction` parameterize the q-gram machinery that
-    * [[editDistanceLookup]]'s k ≥ 3 path still runs; the self-join's
-    * partition filter needs no tuning and ignores them.
+    * `q` is ignored: it tuned the positional q-gram filter that PassJoin
+    * replaced, and stays so existing callers keep compiling.
     */
   def editDistanceJoin(df: DataFrame, strCol: String, idCol: String,
-                       maxDist: Int, q: Int = 2,
-                       stopGramFraction: Double = 0.05): DataFrame = {
+                       maxDist: Int, q: Int = 2): DataFrame = {
     require(maxDist >= 1, s"maxDist must be >= 1, got $maxDist")
     require(q >= 1, s"q must be >= 1, got $q")
-    require(stopGramFraction > 0 && stopGramFraction <= 1,
-      s"stopGramFraction in (0,1], got $stopGramFraction")
-    val k = maxDist
-    val strs = df.select(col(idCol).as("id"), col(strCol).cast("string").as("str"))
-      .filter(col("str").isNotNull)
-      .withColumn("len", length(col("str")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // try/finally (r14 review): gramStats' count and the eager result
-    // checkpoint are jobs — a failure in either must still release the
-    // corpus-sized cache (the Dedup.scala persist discipline)
-    try {
-    if (k <= 2) return deletionJoin(strs, k)
-    // r18: PARTITION FILTER (PassJoin pigeonhole — see
-    // functions/EditDistanceExpressions) replaces the positional q-gram
-    // count filter. The q-gram shape paid Σ_gram gf² joined rows (16 M
-    // on j04's sf0.1 corpus) into a pair-count aggregate plus two stats
-    // joins; segments are (k+1)-fraction-of-the-string exact keys, so
-    // the candidate join's output is near-true-pair-sized and there is
-    // no count bound, no stop-gram accounting, and no frequency pass.
-    // Candidates: some segment of the SHORTER string appears exactly in
-    // the longer within ±k of its home position — the equi-join below
-    // on (shorter-len, segment-index, content). Strings shorter than
-    // k+1 code points own zero-length segments; they pair only with
-    // lengths ≤ 2k (ed ≥ |len diff|), a bounded all-pairs pool.
-    // (q/stopGramFraction only parameterize the k ≤ 2-era gram filter,
-    // which editDistanceLookup still runs; they are unused here.)
-    val m = k + 1
-    val eligible = strs.filter(col("len") >= m)
-    val segs = eligible
-      .select(col("id").as("id_s"),
-        explode(graft.functions.VectorFunctions.edSegments(col("str"), k)).as("sg"),
-        col("len").as("l"))
-      .select(col("id_s"), col("l"), col("sg.i").as("i"), col("sg.g").as("g"))
-    val probes = eligible
-      .select(col("id").as("id_t"),
-        explode(graft.functions.VectorFunctions.edSegmentProbes(col("str"), k)).as("pb"))
-      .select(col("id_t"), col("pb.l").as("l"), col("pb.i").as("i"),
-        col("pb.g").as("g"))
-    val mainCands = probes.join(segs, Seq("l", "i", "g"))
-      .filter(col("id_s") =!= col("id_t"))
-      .select(
-        when(col("id_s") < col("id_t"), col("id_s")).otherwise(col("id_t")).as("id_a"),
-        when(col("id_s") < col("id_t"), col("id_t")).otherwise(col("id_s")).as("id_b"))
-    val shortPool = strs.filter(col("len") <= k).select(col("id"), col("len"))
-    val poolCands = shortPool.as("pa")
-      .join(strs.filter(col("len") <= 2 * k).select(col("id"), col("len")).as("pb"),
-        col("pa.id") =!= col("pb.id") &&
-          abs(col("pa.len") - col("pb.len")) <= k)
-      .select(
-        when(col("pa.id") < col("pb.id"), col("pa.id")).otherwise(col("pb.id")).as("id_a"),
-        when(col("pa.id") < col("pb.id"), col("pb.id")).otherwise(col("pa.id")).as("id_b"))
-    val va = strs.select(col("id").as("id_a"), col("str").as("stra"))
-    val vb = strs.select(col("id").as("id_b"), col("str").as("strb"))
-    val out = mainCands.unionAll(poolCands).distinct()
-      .join(va, "id_a").join(vb, "id_b")
-      // r17 opt: THRESHOLDED levenshtein — banded O(len·k) DP with early
-      // exit instead of the full O(len²) matrix; returns −1 past the
-      // threshold, so `between 0 and k` keeps exactly the `<= k` rows
-      // with their exact distances
-      .withColumn("dist", levenshtein(col("stra"), col("strb"), k))
-      .filter(col("dist").between(0, k))
-      .select(col("id_a"), col("id_b"), col("dist").cast("long").as("dist"))
+    val strs = prepStrings(df, strCol, idCol, persist = true)
+    // finally: the corpus-sized cache is released whether the eager
+    // checkpoint lands or a job throws (the Dedup.scala persist discipline)
+    try verified(editCandidates(strs, strs, maxDist, self = true), strs, strs, maxDist)
       .localCheckpoint(eager = true)
-    out
-    } finally strs.unpersist(blocking = false)
-  }
-
-  /** The q-gram path's gram accounting, shared by [[editDistanceJoin]]
-    * and [[qgramPoolStats]]: positional q-grams minus the stop grams
-    * (present in more than max(16, stopGramFraction·n) strings), plus
-    * per-string totals (n grams, r rare, d dropped). `strs` must carry
-    * (id, str, len).
-    */
-  private def gramStats(strs: DataFrame, q: Int, stopGramFraction: Double)
-      : (DataFrame, DataFrame) = {
-    val nStrings = strs.count()
-    val stopF = math.max(16.0, stopGramFraction * nStrings)
-    val grams = posGrams(strs, q)
-    val freq = grams.groupBy("gram")
-      .agg(count_distinct(col("id")).as("gf"))
-    classifyGrams(strs, grams, freq, stopF, q)
-  }
-
-  /** Positional q-grams of a prepped (id, str, len) frame:
-    * (id, len, pos, gram); a string has len − q + 1 grams (0 when short).
-    */
-  private def posGrams(strs: DataFrame, q: Int): DataFrame =
-    strs.select(col("id"), col("len"),
-      posexplode(expr(s"transform(sequence(1, greatest(len - ${q - 1}, 0)), " +
-        s"i -> substring(str, i, $q))")).as(Seq("pos", "gram")))
-
-  /** Split `grams` into the rare subset (per the `gf ≤ stopF` rule
-    * against the provided frequency table — classification is a pure
-    * function of the gram STRING, so any freq table keeps the count
-    * bound's completeness) and the per-string accounting (n, r, d).
-    */
-  private def classifyGrams(strs: DataFrame, grams: DataFrame, freq: DataFrame,
-                            stopF: Double, q: Int): (DataFrame, DataFrame) = {
-    val rare = grams.join(freq.filter(col("gf") <= stopF), "gram")
-      .select("id", "len", "pos", "gram")
-    val stats = strs.select(col("id"),
-        greatest(col("len") - (q - 1), lit(0)).as("n"))
-      .join(rare.groupBy("id").agg(count(lit(1)).as("r")), Seq("id"), "left")
-      .withColumn("r", coalesce(col("r"), lit(0L)))
-      .withColumn("d", col("n") - col("r"))
-    (rare, stats)
+    finally strs.unpersist(blocking = false)
   }
 
   /** EXACT edit-distance LOOKUP join (two tables): every (left, right)
     * pair within Levenshtein distance `maxDist` — the batch-vs-canonical
     * entity-resolution shape (match today's ingest against the reference
     * table) that [[editDistanceJoin]]'s self-join form only reaches via
-    * a wasteful union. Same two candidate strategies, same conservative-
-    * at-every-step guarantee (NO false negatives):
+    * a wasteful union. Same candidate generators and the same NO-false-
+    * negative guarantee. Output: (id_l, id_r, dist), dist ≤ maxDist.
     *
-    *   - k ≤ 2: FastSS deletion neighborhoods on BOTH sides; candidates
-    *     are cross-side variant collisions (the common-subsequence
-    *     completeness argument is side-agnostic).
-    *   - k ≥ 3: the positional q-gram count filter. Gram stop/rare
-    *     classification comes from the UNION frequency (a gram frequent
-    *     in either corpus would explode the join) — classification is a
-    *     pure function of the gram string, so the per-pair bound holds
-    *     verbatim: shared stop matches ≤ min(dL, dR), and a
-    *     requirement-≤-0 pair forces BOTH strings under q·k rare grams
-    *     (the editDistanceJoin scaladoc proof with sides substituted),
-    *     so the quadratic fallback pool is poolL × poolR only.
-    *
-    * Output: (id_l, id_r, dist), dist ≤ maxDist.
+    * `materialize = false` returns the LAZY plan (for plan pins) and
+    * persists nothing: the prep frames are private locals, so a caller
+    * could never release them (the Dsir.importanceWeights rule). The
+    * lazy mode re-executes prep per consumer, which is the point.
     */
   def editDistanceLookup(left: DataFrame, leftStr: String, leftId: String,
                          right: DataFrame, rightStr: String, rightId: String,
-                         maxDist: Int, q: Int = 2,
-                         stopGramFraction: Double = 0.05,
-                         materialize: Boolean = true): DataFrame = {
+                         maxDist: Int, materialize: Boolean = true): DataFrame = {
     require(maxDist >= 1, s"maxDist must be >= 1, got $maxDist")
-    require(q >= 1, s"q must be >= 1, got $q")
-    require(stopGramFraction > 0 && stopGramFraction <= 1,
-      s"stopGramFraction in (0,1], got $stopGramFraction")
-    val k = maxDist
-    // materialize=false returns the LAZY plan (for plan pins) — it must
-    // not persist: the prep frames are private locals, so a caller could
-    // never release them (r14 review; the Dsir.importanceWeights rule).
-    // The lazy mode re-executes prep per consumer, which is the point.
-    def prep(df: DataFrame, s: String, i: String) = {
-      val base = df.select(col(i).as("id"), col(s).cast("string").as("str"))
-        .filter(col("str").isNotNull)
-        .withColumn("len", length(col("str")))
-      if (materialize) base.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else base
-    }
-    val ls = prep(left, leftStr, leftId)
-    val rs = prep(right, rightStr, rightId)
-    val cands =
-      if (k <= 2) {
-        val lv = ls.select(col("id").as("id_l"), col("len").as("ll"),
-          explode(expr(variantsExpr(k))).as("vl"))
-        val rv = rs.select(col("id").as("id_r"), col("len").as("lr"),
-          explode(expr(variantsExpr(k))).as("vr"))
-        lv.join(rv, col("vl") === col("vr") && abs(col("ll") - col("lr")) <= k)
-          .select("id_l", "id_r").distinct()
-      } else {
-        val gl = posGrams(ls, q)
-        val gr = posGrams(rs, q)
-        // union doc-frequency: per-side distinct-string counts summed
-        val freq = gl.select("gram", "id").distinct()
-          .groupBy("gram").agg(count(lit(1)).as("gfl"))
-          .join(gr.select("gram", "id").distinct()
-            .groupBy("gram").agg(count(lit(1)).as("gfr")), Seq("gram"), "full")
-          .select(col("gram"), (coalesce(col("gfl"), lit(0L))
-            + coalesce(col("gfr"), lit(0L))).as("gf"))
-        val stopF = math.max(16.0, stopGramFraction * (ls.count() + rs.count()))
-        val (rareL, statsL) = classifyGrams(ls, gl, freq, stopF, q)
-        val (rareR, statsR) = classifyGrams(rs, gr, freq, stopF, q)
-        val ra = rareL.select(col("id").as("id_l"), col("len").as("ll"),
-          col("pos").as("pl"), col("gram").as("gl"))
-        val rb = rareR.select(col("id").as("id_r"), col("len").as("lr"),
-          col("pos").as("pr"), col("gram").as("gr"))
-        val joined = ra.join(rb,
-            col("gl") === col("gr") && abs(col("ll") - col("lr")) <= k &&
-              abs(col("pl") - col("pr")) <= k)
-          .groupBy("id_l", "id_r").agg(count(lit(1)).as("matches"))
-        val sa = statsL.select(col("id").as("id_l"), col("n").as("nl"),
-          col("d").as("dl"))
-        val sb = statsR.select(col("id").as("id_r"), col("n").as("nr"),
-          col("d").as("dr"))
-        val gramCands = joined.join(sa, "id_l").join(sb, "id_r")
-          .filter(col("matches") >= greatest(
-            greatest(col("nl"), col("nr")) - (q * k) - least(col("dl"), col("dr")),
-            lit(1L)))
-          .select("id_l", "id_r")
-        val poolL = statsL.filter(col("r") <= q * k)
-          .join(ls.select(col("id"), col("len")), "id")
-          .select(col("id").as("id_l"), col("len").as("ll"))
-        val poolR = statsR.filter(col("r") <= q * k)
-          .join(rs.select(col("id"), col("len")), "id")
-          .select(col("id").as("id_r"), col("len").as("lr"))
-        val poolCands = poolL.join(poolR, abs(col("ll") - col("lr")) <= k)
-          .select("id_l", "id_r")
-        gramCands.unionAll(poolCands).distinct()
-      }
-    val vl = ls.select(col("id").as("id_l"), col("str").as("strl"))
-    val vr = rs.select(col("id").as("id_r"), col("str").as("strr"))
-    val joinedOut = cands
-      .join(vl, "id_l").join(vr, "id_r")
-      // r17 opt: thresholded levenshtein (see editDistanceJoin)
-      .withColumn("dist", levenshtein(col("strl"), col("strr"), k))
-      .filter(col("dist").between(0, k))
-      .select(col("id_l"), col("id_r"), col("dist").cast("long").as("dist"))
-    // materialize=false keeps the lazy DAG inspectable for plan pins
-    // (eager localCheckpoint would hide it); nothing was persisted in
-    // that mode, so there is nothing to leak
-    if (!materialize) return joinedOut
-    try joinedOut.localCheckpoint(eager = true)
+    val ls = prepStrings(left, leftStr, leftId, persist = materialize)
+    val rs = prepStrings(right, rightStr, rightId, persist = materialize)
+    val out = verified(editCandidates(ls, rs, maxDist, self = false), ls, rs, maxDist)
+      .select(col("id_a").as("id_l"), col("id_b").as("id_r"), col("dist"))
+    if (!materialize) return out
+    try out.localCheckpoint(eager = true)
     finally { ls.unpersist(blocking = false); rs.unpersist(blocking = false) }
   }
 
-  /** Filter-health diagnostic for the k ≥ 3 q-gram path: how much of the
-    * corpus drains into the quadratic all-pairs fallback pool (strings
-    * with ≤ q·k rare grams). Returns (poolSize, totalStrings) — a pool
-    * fraction near 1 means the corpus shape defeats the count filter
-    * (the SCALE.md j03 negative result) and the join will go quadratic;
-    * near 0 means the filter carries the corpus. Costs one gram-count
-    * pass, no candidate join.
+  /** (id, str, len) of a string column, nulls dropped; persisted when
+    * `persist`, for the caller to release.
     */
-  def qgramPoolStats(df: DataFrame, strCol: String, idCol: String,
-                     maxDist: Int, q: Int = 2,
-                     stopGramFraction: Double = 0.05): (Long, Long) = {
+  private def prepStrings(df: DataFrame, strCol: String, idCol: String,
+                          persist: Boolean): DataFrame = {
     val strs = df.select(col(idCol).as("id"), col(strCol).cast("string").as("str"))
       .filter(col("str").isNotNull)
       .withColumn("len", length(col("str")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // finally (r15 persist audit): release even when a count job throws
-    try {
-      val (_, stats) = gramStats(strs, q, stopGramFraction)
-      val pool = stats.filter(col("r") <= q * maxDist).count()
-      val total = strs.count()
-      (pool, total)
-    } finally strs.unpersist(blocking = false)
+    if (persist) strs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    else strs
+  }
+
+  /** Exact verify of (id_a, id_b) candidates between prepped sides `a`
+    * and `b`: (id_a, id_b, dist), dist ≤ k. The levenshtein is
+    * THRESHOLDED — banded O(len·k) DP with early exit instead of the full
+    * O(len²) matrix; returns −1 past the threshold, so `between 0 and k`
+    * keeps exactly the `<= k` rows with their exact distances.
+    */
+  private def verified(cands: DataFrame, a: DataFrame, b: DataFrame, k: Int): DataFrame =
+    cands.join(a.select(col("id").as("id_a"), col("str").as("stra")), "id_a")
+      .join(b.select(col("id").as("id_b"), col("str").as("strb")), "id_b")
+      .withColumn("dist", levenshtein(col("stra"), col("strb"), k))
+      .filter(col("dist").between(0, k))
+      .select(col("id_a"), col("id_b"), col("dist").cast("long").as("dist"))
+
+  /** Distinct (id_a, id_b) candidates: a superset of the pairs of
+    * prepped `a` × `b` strings within edit distance k — complete at every
+    * step. With `self` (`a` and `b` are one frame) each unordered pair
+    * comes once, id_a < id_b. The generator is chosen by k:
+    *
+    * k ≤ 2 → DELETION NEIGHBORHOODS (FastSS): each string explodes to
+    * every variant reachable by ≤ k character deletions (k=1: len+1
+    * variants; k=2: O(len²)); candidates are pairs sharing a variant.
+    * Complete: an alignment with ≤ k edits leaves a common subsequence
+    * reachable from BOTH strings by ≤ k deletions. Variants are near-full
+    * strings, so a constant region shared by the corpus does not make
+    * them collide. That is why FastSS owns k ≤ 2: on j03's sf0.01 names
+    * ("Customer#000…") PassJoin at k=1 produced 1,124,250 candidates —
+    * every pair, against 19,500 true pairs — because the constant first
+    * segment matches every other name of a compatible length.
+    *
+    * k ≥ 3 → PARTITION FILTER (PassJoin pigeonhole — Li, Deng, Wang,
+    * Feng, VLDB 2011; kernels in [[graft.functions.EditDistanceExpressions]]):
+    * split the shorter string of a pair into k+1 contiguous segments —
+    * ≤ k edits cannot touch all of them, so one segment appears EXACTLY
+    * in the longer string within ±k of its home position. Candidates are
+    * one equi-join on (shorter length l, segment index i, content g) of
+    * one side's segments against the other side's probe substrings
+    * (O(k³) short slices per string, generated in-row); two tables join
+    * both ways, since either side may hold the shorter string. Deletion
+    * neighborhoods would be O(len³) variants a string here. A string
+    * shorter than k+1 code points owns zero-length segments (which would
+    * match everywhere), and a pair whose shorter string has ≤ k code
+    * points has both lengths ≤ 2k (ed ≥ |len diff|): such pairs come from
+    * a bounded all-pairs pool.
+    */
+  private def editCandidates(a: DataFrame, b: DataFrame, k: Int,
+                             self: Boolean): DataFrame = {
+    def pairs(cond: Column): Column = if (self) cond && col("id_a") < col("id_b") else cond
+    if (k <= 2) {
+      def variants(df: DataFrame, s: String) = df.select(col("id").as(s"id_$s"),
+        col("len").as(s"l$s"), explode(expr(variantsExpr(k))).as(s"v$s"))
+      return variants(a, "a").join(variants(b, "b"),
+          pairs(col("va") === col("vb") && abs(col("la") - col("lb")) <= k))
+        .select("id_a", "id_b").distinct()
+    }
+    val m = k + 1
+    // segments of `s`'s strings hit by probe substrings of `p`'s strings
+    def hits(s: DataFrame, sid: String, p: DataFrame, pid: String) = {
+      val segs = s.filter(col("len") >= m)
+        .select(col("id").as(sid),
+          explode(graft.functions.VectorFunctions.edSegments(col("str"), k)).as("sg"),
+          col("len").as("l"))
+        .select(col(sid), col("l"), col("sg.i").as("i"), col("sg.g").as("g"))
+      p.filter(col("len") >= m)
+        .select(col("id").as(pid),
+          explode(graft.functions.VectorFunctions.edSegmentProbes(col("str"), k)).as("pb"))
+        .select(col(pid), col("pb.l").as("l"), col("pb.i").as("i"), col("pb.g").as("g"))
+        .join(segs, Seq("l", "i", "g"))
+    }
+    val main =
+      if (self) hits(a, "id_s", a, "id_t")
+        .filter(col("id_s") =!= col("id_t"))
+        .select(
+          when(col("id_s") < col("id_t"), col("id_s")).otherwise(col("id_t")).as("id_a"),
+          when(col("id_s") < col("id_t"), col("id_t")).otherwise(col("id_s")).as("id_b"))
+      else hits(a, "id_a", b, "id_b").select("id_a", "id_b")
+        .unionAll(hits(b, "id_b", a, "id_a").select("id_a", "id_b"))
+    def short(df: DataFrame, s: String) =
+      df.filter(col("len") <= 2 * k).select(col("id").as(s"id_$s"), col("len").as(s"l$s"))
+    val pool = short(a, "a").join(short(b, "b"), pairs(
+        least(col("la"), col("lb")) <= k && abs(col("la") - col("lb")) <= k))
+      .select("id_a", "id_b")
+    main.unionAll(pool).distinct()
   }
 
   /** `concat(prefix before i, suffix after i)` — delete char `i` (1-based). */
@@ -420,29 +274,6 @@ object SetJoin {
                  |    s1 -> ${d1("s1", "j")}))))""".stripMargin
     case other => throw new IllegalArgumentException(
       s"deletion variants support k <= 2, got $other")
-  }
-
-  /** FastSS candidate generation + exact verify for k ≤ 2. */
-  private def deletionJoin(strs: DataFrame, k: Int): DataFrame = {
-    val exploded = strs
-      .select(col("id"), col("len"), explode(expr(variantsExpr(k))).as("v"))
-    val ea = exploded.select(col("id").as("id_a"), col("len").as("la"), col("v").as("va"))
-    val eb = exploded.select(col("id").as("id_b"), col("len").as("lb"), col("v").as("vb"))
-    val va = strs.select(col("id").as("id_a"), col("str").as("stra"))
-    val vb = strs.select(col("id").as("id_b"), col("str").as("strb"))
-    // finally: the prep cache releases whether the checkpoint lands or
-    // the join throws (r15 persist audit)
-    try ea.join(eb,
-        col("va") === col("vb") && col("id_a") < col("id_b") &&
-          abs(col("la") - col("lb")) <= k)
-      .select("id_a", "id_b").distinct()
-      .join(va, "id_a").join(vb, "id_b")
-      // r17 opt: thresholded levenshtein (see editDistanceJoin)
-      .withColumn("dist", levenshtein(col("stra"), col("strb"), k))
-      .filter(col("dist").between(0, k))
-      .select(col("id_a"), col("id_b"), col("dist").cast("long").as("dist"))
-      .localCheckpoint(eager = true)
-    finally strs.unpersist(blocking = false)
   }
 
   /** Sorted-neighborhood record linkage (Hernández–Stolfo SNM): rank
@@ -506,7 +337,7 @@ object SetJoin {
         explode(array(expr(s"rnk div $w"), expr(s"rnk div $w - 1"))).as("b"))
     probe.join(build, "b")
       .filter(col("rb") > col("ra") && col("rb") - col("ra") <= w)
-      // r17 opt: thresholded levenshtein (see editDistanceJoin); the
+      // r17 opt: thresholded levenshtein (see verified); the
       // max(1, ·) keeps the threshold form defined at maxDist = 0 — the
       // between-filter still admits only dist ≤ maxDist
       .withColumn("dist", levenshtein(col("ka"), col("kb"), math.max(1, maxDist)))

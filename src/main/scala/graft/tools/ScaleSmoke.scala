@@ -725,9 +725,9 @@ object ScaleSmoke {
               base.select((col("c_custkey") + lit(i * span)).as("k")))
             .reduce(_ unionAll _)
             .select(col("k"), format_string("Customer#%09d", col("k")).as("name"))
-          // k=1 → the FastSS deletion-neighborhood path (the q-gram
-          // filter pools this corpus at any q: the constant name prefix
-          // swallows the count bound — see editDistanceJoin scaladoc)
+          // k=1 → the FastSS deletion-neighborhood path (the constant
+          // name prefix defeats substring signatures — see
+          // SetJoin.editCandidates)
           graft.pipeline.SetJoin.editDistanceJoin(blown, "name", "k", maxDist = 1)
             .count()
         }),
@@ -748,16 +748,13 @@ object ScaleSmoke {
             window = 10, maxDist = 1).count()
         }),
         "edit_dist_join_k3(j04)" -> (() => {
-          // the k ≥ 3 q-gram path's POSITIVE-case measurement (r10
-          // measured this path only failing, on the zero-padded corpus
-          // that structurally defeats it): j04's md5-derived 20-char
-          // 16-letter corpus — rich gram vocabulary (16⁴ at q=4), no
-          // constant region, groups of 4 siblings at planted distances
-          // 0–3 so true pairs (6/group) grow LINEARLY with the corpus
-          // (an algebraic base recipe leaks shift/negation collisions
-          // and goes output-quadratic — measured before this cut).
-          // Filter health = fallback-pool fraction (printed) + the
-          // per-verified-pair cost derived from the row.
+          // the k ≥ 3 PassJoin path's POSITIVE-case measurement: j04's
+          // md5-derived 20-char 16-letter corpus — no constant region,
+          // groups of 4 siblings at planted distances 0–3 so true pairs
+          // (6/group) grow LINEARLY with the corpus (an algebraic base
+          // recipe leaks shift/negation collisions and goes
+          // output-quadratic). Filter health = the per-verified-pair
+          // cost derived from the row.
           val n = 15000L * f
           val corpus = spark.range(n)
             .select(col("id").as("k"), expr("id div 4").as("g"),
@@ -774,17 +771,14 @@ object ScaleSmoke {
               "substring(s2, 1, pmod(g*7 + 10, 20)), chr(97 + pmod(g + 10, 16)), " +
               "substring(s2, pmod(g*7 + 10, 20) + 2, 100)) ELSE s2 END"))
             .select(col("k"), col("s3").as("name"))
-          val (pool, total) = graft.pipeline.SetJoin.qgramPoolStats(
-            corpus, "name", "k", maxDist = 3, q = 4)
-          println(f"[j04] f=$f pool=$pool/$total (${pool.toDouble / total}%.4f)")
-          graft.pipeline.SetJoin.editDistanceJoin(corpus, "name", "k",
-            maxDist = 3, q = 4).count()
+          graft.pipeline.SetJoin.editDistanceJoin(corpus, "name", "k", maxDist = 3)
+            .count()
         }),
         "edit_lookup_k3(j06)" -> (() => {
           // the LOOKUP production shape: the probe batch stays FIXED
           // (today's ingest doesn't grow with the canon) while the
           // canonical corpus blows with f — cost should track the canon
-          // side's gram postings, not the probe count
+          // side's segment and probe rows, not the probe count
           def strCol(idCol: String) = Seq(
             ("s0", "translate(substring(md5(concat('b', cast(g AS string))), " +
               "1, 20), '0123456789abcdef', 'abcdefghijklmnop')"),
@@ -807,7 +801,7 @@ object ScaleSmoke {
               "chr(97 + pmod(g + 3, 16)), substring(s0, pmod(g*3 + 7, 20) + 2, 100))"))
             .select("pk", "pname")
           graft.pipeline.SetJoin.editDistanceLookup(probes, "pname", "pk",
-            canon, "name", "k", maxDist = 3, q = 4).count()
+            canon, "name", "k", maxDist = 3).count()
         }),
         // ---- r17 (verdict ask #5): decades for the r16 families ----
         // ht01: pure per-row expression chain — the sum(length) sink

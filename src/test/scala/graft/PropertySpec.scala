@@ -217,26 +217,23 @@ class PropertySpec extends SparkTestBase {
   test("property: editDistanceJoin ≡ brute force on random low-alphabet corpora") {
     import spark.implicits._
     // 3-letter alphabet + short lengths maximize both true pairs and
-    // pruning-filter stress (repeats, near-anagrams, shared substrings);
-    // random stopGramFraction exercises the stop-gram/pool routing
+    // pruning-filter stress (repeats, near-anagrams, shared substrings)
     val strGen = Gen.chooseNum(0, 8).flatMap(n =>
       Gen.listOfN(n, Gen.oneOf('a', 'b', 'c')).map(_.mkString))
     for (seed <- 1L to 3L) {
       val strs = (1L to 60L).map(i => (i, draw(strGen, seed * 1000 + i)))
       val df = strs.toDF("id", "str")
       val k = draw(Gen.chooseNum(1, 3), seed + 500)
-      val frac = draw(Gen.oneOf(0.05, 0.2, 0.9), seed + 600)
       val a = df.select($"id".as("ia"), $"str".as("sa"))
       val b = df.select($"id".as("ib"), $"str".as("sb"))
       val brute = a.crossJoin(b).filter($"ia" < $"ib")
         .withColumn("d", levenshtein($"sa", $"sb")).filter($"d" <= k)
         .select($"ia", $"ib", $"d".cast("long"))
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-      val mine = graft.pipeline.SetJoin.editDistanceJoin(df, "str", "id",
-          maxDist = k, stopGramFraction = frac)
+      val mine = graft.pipeline.SetJoin.editDistanceJoin(df, "str", "id", maxDist = k)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
       assert(mine == brute,
-        s"seed=$seed k=$k frac=$frac missing=${brute -- mine} extra=${mine -- brute}")
+        s"seed=$seed k=$k missing=${brute -- mine} extra=${mine -- brute}")
     }
   }
 

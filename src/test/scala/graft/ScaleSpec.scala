@@ -192,6 +192,15 @@ class ScaleSpec extends SparkTestBase {
     assert(!plan.contains("CartesianProduct") &&
       !plan.contains("BroadcastNestedLoopJoin"),
       s"FastSS lookup candidates must come from an equi join on variants:\n$plan")
+    // k = 3 → PassJoin: each side's segments against the other side's
+    // probes, two equi-joins on (l, i, g); the short-string pool is a
+    // bounded nested-loop join by design, so it is not pinned here
+    val k3 = graft.pipeline.SetJoin.editDistanceLookup(left, "s", "id",
+      right, "s", "id", maxDist = 3, materialize = false)
+      .queryExecution.executedPlan.toString
+    val segJoin = raw"(SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin) \[l#\d+, i#\d+, g#\d+\]".r
+    assert(segJoin.findAllIn(k3).size == 2,
+      s"PassJoin lookup candidates must come from two equi joins on (l, i, g):\n$k3")
   }
 
   test("incrementalExactBloom: one anti-join; bloom probe gates both branches") {

@@ -65,10 +65,10 @@ class SetJoinSpec extends SparkTestBase {
     assert(r.getLong(0) == 1L && r.getLong(1) == 2L && r.getDouble(2) == 0.6)
   }
 
-  test("editDistanceLookup == brute force on both paths (FastSS and q-grams)") {
-    // low alphabet + short words: dense near-pairs, and at q=2 the 16
-    // gram types all go stop-frequent so the poolL × poolR fallback path
-    // carries part of the corpus — both candidate generators exercised
+  test("editDistanceLookup == brute force on both paths (FastSS and PassJoin)") {
+    // low alphabet + short words: dense near-pairs; strings of length
+    // 0..4 on both sides feed PassJoin's short-string pool from either
+    // side, and equal lengths hit both segment/probe directions
     def lev(a: String, b: String): Int = {
       val d = Array.tabulate(a.length + 1, b.length + 1)((i, j) => i + j)
       for (i <- 1 to a.length; j <- 1 to b.length)
@@ -78,15 +78,17 @@ class SetJoinSpec extends SparkTestBase {
     }
     val rng = new scala.util.Random(23)
     val alpha = "abcd"
-    def word() = (0 until 6 + rng.nextInt(4))
+    def word(n: Int = 6 + rng.nextInt(4)) = (0 until n)
       .map(_ => alpha(rng.nextInt(alpha.length))).mkString
-    val rightRows = (0 until 60).map(i => (i.toLong, word()))
-    val leftRows = (100 until 125).map(i => (i.toLong, word()))
+    val rightWords = (0 until 60).map(i => (i.toLong, word()))
+    val leftWords = (100 until 125).map(i => (i.toLong, word()))
+    val rightRows = rightWords ++ (60 until 70).map(i => (i.toLong, word(i % 5)))
+    val leftRows = leftWords ++ (125 until 135).map(i => (i.toLong, word(i % 5)))
     val right = rightRows.toDF("id", "s")
     val left = leftRows.toDF("id", "s")
-    for (k <- Seq(1, 2, 3)) { // k ≤ 2 → FastSS; k = 3 → q-gram + pool
+    for (k <- Seq(1, 2, 3, 4)) { // k ≤ 2 → FastSS; k ≥ 3 → PassJoin + pool
       val mine = SetJoin.editDistanceLookup(left, "s", "id", right, "s", "id",
-          maxDist = k, q = 2)
+          maxDist = k)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
       val truth = (for {
         (il, sl) <- leftRows; (ir, sr) <- rightRows
@@ -100,10 +102,10 @@ class SetJoinSpec extends SparkTestBase {
   test("editDistanceJoin == brute force incl. repeats, shared prefixes, short strings") {
     import spark.implicits._
     // the corpus bakes in every known pruning trap:
-    //  - "aaaaaa"/"aaaaab": repeated grams (a DISTINCT-gram count filter
-    //    would false-negative this pair — positional occurrences must)
-    //  - "Customer#…": long shared prefix (stop-gram path)
-    //  - "a"/"ab"/"b": shorter than q — must route via the fallback pool
+    //  - "aaaaaa"/"aaaaab": repeated substrings (a DISTINCT-gram count
+    //    filter would false-negative this pair)
+    //  - "Customer#…": long shared prefix (constant leading segments)
+    //  - "a"/"ab"/"b": very short strings
     val docs = Seq(
       (1L, "aaaaaa"), (2L, "aaaaab"), (3L, "aaaaba"),
       (4L, "Customer#000000001"), (5L, "Customer#000000002"),
@@ -122,8 +124,7 @@ class SetJoinSpec extends SparkTestBase {
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     }
     for (k <- Seq(1, 2)) {
-      val mine = SetJoin.editDistanceJoin(docs, "str", "id", maxDist = k,
-          stopGramFraction = 0.3) // "Customer#…" prefix grams hit 4/14 > 0.3
+      val mine = SetJoin.editDistanceJoin(docs, "str", "id", maxDist = k)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
       assert(mine == brute(k), s"k=$k: $mine vs ${brute(k)}")
     }
