@@ -1,245 +1,136 @@
 package graft
 
+import com.fasterxml.jackson.core.StreamWriteFeature
+import com.fasterxml.jackson.databind.{DeserializationFeature, JsonNode}
+import com.fasterxml.jackson.databind.cfg.JsonNodeFeature
+import com.fasterxml.jackson.databind.json.JsonMapper
+import com.fasterxml.jackson.databind.node.{BooleanNode, DecimalNode, IntNode, LongNode, MissingNode,
+  ObjectNode, TextNode}
+import java.lang.management.ManagementFactory
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
-/** Benchmark main: headline queries at SPARK_GRAFT_SF_DIR, ONE JSON line
-  * on stdout. The headline set covers each engine subsystem: scan+agg,
-  * shuffle join, broadcast join, window, sketch stats, dedup (hash +
-  * minhash), ANN, text enrichment, and the events rollup.
+/** Benchmark main: the headline queries at SPARK_GRAFT_SF_DIR in this JVM,
+  * then the sf1 and x10 tiers in a forked one ([[BenchSf1]]). The full
+  * artifact goes to `bench_result.json`; stdout gets one compact JSON line
+  * (1.9-2.2 KB with the sf1 tier on), printed last.
   *
-  * Noise attribution: this host intermittently starves the JVM for
-  * minutes (identical jobs vary 2 s ↔ 250 s; the round-2 bench logged
-  * executor-heartbeat RPC timeouts, and the round-3 "57 s" d02 reruns at
-  * 1.7 s in isolation). Per query we therefore report the MIN of the
-  * samples as the headline number, plus diagnostics so a spike is
-  * attributable from the JSON alone:
-  *   - `samples`: every wall-clock sample (a 57/1.8/1.9 triple = noise;
-  *     5 similar slow samples = a real regression);
-  *   - `util`: process-CPU-seconds ÷ (wall × cores) for the best run —
-  *     starvation shows as near-zero utilization, real work doesn't;
-  *   - `converged`: whether the min plateaued (see below). Round 6's
-  *     a01 regression-that-wasn't had strictly decreasing samples — the
-  *     harness now ACTS on that signal instead of just recording it.
-  *
-  * Convergence (round-8 harness change): a query's min is `converged`
-  * when (a) the LAST sample did not set a new min (more runs stopped
-  * helping) and (b) at least two samples lie within 10% of the min (the
-  * min is reproducible, not a lucky scheduler window). Unconverged
-  * queries keep sampling up to SPARK_GRAFT_MAX_RUNS (default 9). A
-  * `converged: false` in the output means the number is an upper bound
-  * on the query's true cost on a quiet host.
-  *
-  * sf1 tier: when the main dir is sf0.1 and SPARK_GRAFT_SF1=1 (the
-  * driver default), a 10×-blown corpus (6 M lineitem / 50 k docs / 20 k
-  * vectors — ScaleSmoke's offset-and-perturb recipe, written to a temp
-  * dir in the standard layout) runs a TPC-H + dedup + ANN subset
-  * min-of-SPARK_GRAFT_SF1_RUNS (default 3) as `queries_sf1`. At sf0.1
-  * most headliners cost 0.2–1 s — inside this host's noise floor; the
-  * sf1 numbers move round-over-round only when the CODE changes.
-  *
-  * Contention detection (round-9 harness change): the round-8
-  * convergence rule could not tell a *contended* plateau from a quiet
-  * one — r8's committed run stamped `converged: true` on a01 at 4× its
-  * quiet-host value because every sample ran in the same starved window.
-  * Now a fixed CPU-bound calibration probe (a deterministic 20 M-step
-  * LCG spin, ~25 ms quiet; since r14 it runs on EVERY core at once —
-  * the single-thread form always found one idle core while a busy
-  * neighbor squeezed the other 31 the query actually uses, see
-  * probeOnce's scaladoc) runs immediately before every sample. The
-  * probe's quiet-host floor is the min probe time seen across the whole
-  * bench process; a sample whose probe exceeded 1.5× that floor (+5 ms
-  * absolute slack) was taken while the host was starving this JVM and is
-  * REJECTED: it cannot set the query's min and does not count toward
-  * convergence. Per query the JSON reports `rejected` (how many samples
-  * the probe threw out) and `contended: true` when every sample was
-  * rejected — in that case the reported min is an upper bound taken
-  * from the contended samples and must not be read as a regression.
-  * The floor is re-evaluated globally at the end of the run, so an
-  * inflated startup calibration cannot mask later contention.
-  *
-  * Heap integrity (round-14 harness change, verdict asks #1/#2):
-  * BENCH_r13's sf1 d11 row read 26.15 s "converged" with 11 s of GC
-  * while a fresh JVM ran the identical query on the identical corpus in
-  * 3.50 s — the CPU probe is blind to heap pressure, and the
-  * convergence rule happily converged onto a GC-thrash plateau. Two
-  * structural fixes: (1) the sf1 tier runs in a FORKED fresh JVM
-  * ([[BenchSf1]]; SPARK_GRAFT_SF1_FORK=0 or fork failure falls back to
-  * in-process after a drain), so the 10× measurements never see the
-  * headline tier's heap; (2) every sample records the GC ms inside its
-  * timed region, and a sample whose GC exceeds 25% of wall (min 500 ms)
-  * is rejected like a starved one — it cannot set the min or count
-  * toward convergence, a query left with no clean sample is flagged
-  * `gc_thrash` (never `converged`) and joins `suspect`. Between queries
-  * the harness drains the heap fully (residual blocks + a GC pair for
-  * the ContextCleaner queue), outside every timed region.
-  *
-  * Output split (round-10 harness change): the FULL artifact (samples,
-  * probes, util, gc) goes to `bench_result.json`; stdout carries one
-  * COMPACT line (per-query seconds, totals, contended/unconverged query
-  * names, ≤1.5 KB) printed last, sized to survive the driver's
-  * 2000-char stdout tail-scrape intact. `bench_result.json` is TRACKED
-  * (r13, verdict ask #8): the compact line elides the per-row vs_anchor
-  * map when every row is in-band, so the committed full artifact is the
-  * audit trail — commit it with each round. The sf1 tier also warms each
-  * query once untimed before sampling (r9's q80 was still JIT/page-cache
-  * descending at the 9-sample cap) with its own SPARK_GRAFT_SF1_MAX_RUNS
-  * cap (default 12).
+  * Every tier is a list of [[Row]]s, a query's samples and the GC ms of its
+  * sampling window. One [[summarize]] turns a tier into its verdicts,
+  * anchor ratios, suspects and retry rows, and one Jackson writer renders
+  * every tier. The rules, each with its reason:
+  *   - A query reports the min of its clean samples, because this host
+  *     stalls the JVM for seconds at a time and a stall only adds time.
+  *   - The min is `converged` when the last clean sample set no new min and
+  *     two lie within 10% + 30 ms of it, because a still-falling min is only
+  *     an upper bound; an unconverged query samples on to its cap.
+  *   - A sample is rejected when its all-core ALU probe or its
+  *     memory-bandwidth probe ran 1.5× over the quietest one this JVM saw,
+  *     because a busy neighbour slows the query without showing in its own
+  *     CPU time.
+  *   - A sample is rejected when GC took over 25% of its wall and 500 ms,
+  *     because it then measured a polluted heap rather than the query.
+  *   - A query left with no clean sample is flagged `contended` or
+  *     `gc_thrash` and never `converged`.
+  *   - A suspect row is re-run once after its tier, so the artifact itself
+  *     says whether a slowdown reproduces; its official number stays the
+  *     original measurement.
+  *   - The sf1 and x10 tiers run in a fresh JVM, because residue from the
+  *     headline tier once made a 3.5 s sf1 query read 26 s.
+  *   - Every query is warmed once untimed, and the heap is drained between
+  *     queries, outside every timed region.
   */
 object Bench {
-  /** The sf0.1 headline tier, REBUILT in round 15 (r14 verdict ask #1):
-    * three same-day clean-flag r14 runs spread 1.12–1.23× geomean and
-    * sub-second rows jittered up to 2× on this host — 26 of 46 sf0.1
-    * rows sat under 0.5 s, below the signal floor. The sf0.1 tier now
-    * keeps ONLY rows that measured ≥ 1 s in BENCH_r14 (where 10% is
-    * above scheduler jitter); every other family's representative moved
-    * to the forked-JVM sf1 tier (below), where q10-class rows repeat
-    * within ±10%. Two documented exceptions ride along sub-second:
-    * m02/m05 exercise the REAL PNG decode chain over a fixed image set
-    * whose size is part of the oracle contract — their work cannot blow
-    * with the corpus, and dropping them would blind the bench to the
-    * most expensive per-row op in the repo. Read their ratios with the
-    * sub-second caveat.
-    *
-    * r16 (r15 verdict ask #3): d02/d11 left this tier — their 1-1.7 s
-    * GC-heavy sf0.1 rows flapped `unconverged` across clean same-day
-    * runs all round while their sf1 twins (still in [[sf1Set]], where
-    * each runs multi-second in a fresh JVM) converged every time. The
-    * sf0.1 duplicates carried no signal the sf1 rows lack.
+  /** The sf0.1 headline tier: only rows that take ≥ 1 s at sf0.1, where 10%
+    * is above scheduler jitter. m02/m05 are the exception: they decode a
+    * fixed image set whose size is part of their oracle contract, so they
+    * cannot grow with the corpus, and they watch the costliest per-row op.
     */
   private[graft] val headline = Seq(
-    // ≥1 s at sf0.1 (BENCH_r14): composed builds, edit-distance joins,
-    // graph, DSIR, and the heaviest TPC-H shape
     "p05_curation_corpus_build", "j04_edit_distance_join_k3", "g05_kcore",
     "ds01_dsir_weights", "j03_edit_distance_join", "p08_mixture_recipe_build",
     "g02_triangle_count", "q80_tpch_q9",
-    // fixed-size image-codec micro rows (see scaladoc — sub-second by
-    // construction, kept for decode-path regression watch)
     "m02_image_roundtrip", "m05_image_neardup")
 
-  /** The forked-JVM sf1 tier (10×-blown corpus): since r15 this is the
-    * PRIMARY regression record — one representative per engine family,
-    * each multi-second (or q10-class: ~0.2–0.9 s, which repeats within
-    * ±10% in the fresh JVM). The r15 promotion moved every family whose
-    * sf0.1 representative measured under 1 s in BENCH_r14 up here; the
-    * sf0.1 tier keeps only its ≥1 s rows. p05 stays sf0.1-only: at 10×
-    * the bench suite blankets the synthetic trigram space and its
-    * decontamination stage legitimately drains the selection to zero
-    * docs (r13 finding), so its composed-row slot at sf1 is p07.
+  /** The sf1 tier on the 10×-blown corpus, the primary regression record:
+    * one representative per engine family. p05 is not here because at 10×
+    * its decontamination stage drains the selection to zero docs; p07 is
+    * its composed-build slot.
     */
   private[graft] val sf1Set = Seq(
-    // the pre-r15 spine: TPC-H scan/join/agg, dedup, tokens, ANN,
-    // sketches, the E2E pipeline, span dedup, the composed graph report
     "q10_tpch_q1", "q12_tpch_q3", "q80_tpch_q9", "d01_dedup_exact",
     "d02_dedup_minhash", "d11_incremental_minhash_fast", "t14_token_ids",
     "a01_ann_brute", "q85_quantiles_sketch", "p01_pipeline_e2e",
     "t09_span_dedup", "p07_graph_curation_report",
-    // r15 promotions — one per family previously watched only at sf0.1:
-    // joins/windows/events spine
     "q21_join_multikey", "q40_summary", "q63_window_runsum",
     "q64_events_hourly", "e03_json_extract", "s01_sessionize", "j01_asof_join",
-    // text quality + relevance
     "t01_text_enrich", "t04_decontaminate", "t17_contamination_matrix",
     "t23_ngram_novelty_fast", "c01_tfidf_topterms", "c06_bm25_retrieve",
-    // ANN/semantic + selection/budgets + time series + release mgmt + eval.
-    // r16 (r15 verdict ask #5): the semantic-dedup slot is the 16·f
-    // PRODUCTION contract (a20: cells grow with the corpus, broadcast-
-    // join assignment past 48 cells) — a05's fixed-16-centroid kernel
-    // at sf1 was a ~1.2 G-pair arithmetic microbench whose wall sat on
-    // per-JVM C2-JIT shelves (1.9–3.9 s, tools/ProbeA05), useless as a
-    // regression tripwire; it remains a probe, not a headline row.
     "a20_semantic_dedup_scaled", "a11_ivf_int8_rerank", "q92_budget_select",
     "q94_budget_select_by_group", "ts01_resample_gapfill",
     "c15_snapshot_diff", "ml09_auc_by_group",
-    // r15's new family: the composed URL-curation build (normalize →
-    // registered domain → blocklist → per-domain cap)
     "w03_domain_cap_build")
 
-  /** The 10×-corpus SCALING tier (r18, verdict ask #7): every sf0.1
-    * headline row measured FASTER at 8 cores than 32 in PERF_r17's
-    * scaling block (ratios 0.31–1.04) — at sf0.1 the whole headline set
-    * is scheduler/shuffle-overhead-bound and parallel speedup is
-    * invisible. These heavy rows re-run on the blown 10× corpus (built
-    * once, in the forked sf1 JVM) and land in the headline `queries`
-    * map as `x10_<name>`, so the driver's two-CPU-count runs measure
-    * ratios at a scale where parallelism can show. ADDITIVE: no
-    * existing row is removed or renamed; `value` (total) grows by the
-    * x10 rows' sum — the round-over-round comparison lives in the
-    * per-query map, not the total. p05's composed-row slot at 10× is
-    * p07 (p05's decontamination legitimately drains the blown corpus to
-    * zero docs — the r13 finding).
+  /** The x10 scaling tier: heavy headline rows re-run on the 10× corpus and
+    * added to the headline `queries` map as `x10_<name>`, because at sf0.1
+    * every row is overhead-bound and a run at two core counts cannot show
+    * parallel speedup.
     */
   private[graft] val x10Set = Seq(
     "j04_edit_distance_join_k3", "g05_kcore", "ds01_dsir_weights",
     "g02_triangle_count", "p07_graph_curation_report")
 
-  private val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
+  /** A SPARK_GRAFT_* knob; the headline process and [[BenchSf1]] read every
+    * knob through here, the child from the environment it inherits.
+    */
+  private[graft] def knob(name: String, default: String): String = sys.env.getOrElse(name, default)
+
+  /** A comma-list knob as a name set; unset means every query. */
+  private[graft] def knobSet(name: String): Option[Set[String]] =
+    sys.env.get(name).map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+
+  /** The quiet-host anchor each row's time is divided by (`vs_anchor`). */
+  private[graft] def anchorPath: String = knob("SPARK_GRAFT_ANCHOR", "BENCH_anchor_r17.json")
+  /** The previous round's anchor, reported beside the current one as
+    * `vs_prev_anchor` so a recut anchor carries any drift on its face.
+    */
+  private[graft] def prevAnchorPath: String = knob("SPARK_GRAFT_PREV_ANCHOR", "BENCH_anchor_r16.json")
+
+  private val osBean = ManagementFactory.getOperatingSystemMXBean
     .asInstanceOf[com.sun.management.OperatingSystemMXBean]
-  private[graft] def gcMs: Long = {
-    import scala.jdk.CollectionConverters._
-    java.lang.management.ManagementFactory.getGarbageCollectorMXBeans.asScala
-      .map(_.getCollectionTime).sum
-  }
+  private[graft] def gcMs: Long =
+    ManagementFactory.getGarbageCollectorMXBeans.asScala.map(_.getCollectionTime).sum
 
-  /** Drop every block a query left behind — cached plans AND pinned
-    * RDDs (returned localCheckpoints are persisted RDDs invisible to
-    * the CacheManager). Round-11's official artifact showed why this is
-    * load-bearing: 38 queries × 5–9 samples of accumulated residue
-    * drove headline GC from the anchor's 3.2 s to 11.7 s and five
-    * queries to 5–21× their anchor (all ≤2.1× in isolation). Runs
-    * BETWEEN queries, outside every timed region.
+  /** The per-query map under `key` of an anchor artifact, or empty when the
+    * file is missing or unreadable, or was measured at another `sf` than
+    * `sfDir`: ratios mean nothing across scale factors.
     */
-  private def clearResidual(spark: SparkSession): Unit = {
-    spark.sharedState.cacheManager.clearCache()
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-  }
-
-  /** Per-query numbers from a prior quiet-host anchor artifact (flat
-    * `"key":{"name":sec,…}` map extracted textually — the artifact is
-    * this file's own output format). Missing/unreadable anchor → empty
-    * map → the vs_anchor diagnostics quietly vanish.
-    */
-  private[graft] def anchorMap(path: String, key: String): Map[String, Double] =
+  private[graft] def anchorMap(path: String, key: String, sfDir: String): Map[String, Double] =
     try {
-      val txt = new String(
-        java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path)),
-        java.nio.charset.StandardCharsets.UTF_8)
-      val at = txt.indexOf("\"" + key + "\":{")
-      if (at < 0) Map.empty
-      else {
-        val open = txt.indexOf('{', at)
-        val body = txt.substring(open + 1, txt.indexOf('}', open))
-        """"([A-Za-z0-9_]+)":([0-9.eE+\-]+)""".r.findAllMatchIn(body)
-          .map(m => m.group(1) -> m.group(2).toDouble).toMap
-      }
-    } catch { case _: Throwable => Map.empty }
+      val doc = om.readTree(new java.io.File(path))
+      if (doc.path("sf").asText != sfDir) Map.empty
+      else entries(doc.path(key)).map { case (k, v) => k -> v.asDouble }.toMap
+    } catch { case _: java.io.IOException => Map.empty }
 
-  /** The anchor artifact's own `"sf"` field (the dir it was measured at). */
-  private[graft] def anchorSfDir(path: String): Option[String] =
-    try {
-      val txt = new String(
-        java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path)),
-        java.nio.charset.StandardCharsets.UTF_8)
-      """"sf":"([^"]+)"""".r.findFirstMatchIn(txt).map(_.group(1))
-    } catch { case _: Throwable => None }
-
-  /** Short display key for compact-line maps ("q10_tpch_q1" → "q10");
-    * falls back to the full name if the prefix would collide.
+  /** Short display keys for compact-line names ("q10_tpch_q1" → "q10"),
+    * or the full names if two prefixes would collide.
     */
-  private[graft] def shortNames(names: Seq[String]): Map[String, String] = {
+  private lazy val short: Map[String, String] = {
+    val names = (headline ++ sf1Set).distinct
     val pref = names.map(n => n -> n.takeWhile(_ != '_')).toMap
-    if (pref.values.toSeq.distinct.size == names.size) pref
-    else names.map(n => n -> n).toMap
+    if (pref.values.toSeq.distinct.size == names.size) pref else names.map(n => n -> n).toMap
   }
+  /** A query's compact-line name; an x10 row keeps its `x10_` prefix. */
+  private[graft] def shortOf(n: String): String =
+    if (n.startsWith("x10_")) "x10_" + shortOf(n.drop(4)) else short.getOrElse(n, n)
 
-  /** min plateaued: last sample did not set a STRICTLY new min AND ≥2
-    * samples within 10% + 30 ms of the min. Monotone-decreasing samples
-    * (round 6's a01) fail (a); a single lucky window fails (b). The
-    * 30 ms absolute slack keeps the flag meaningful for sub-0.3 s
-    * queries, where 10% is under this host's scheduler jitter (r8 first
-    * run: d01 sampled 0.19/0.22/0.23 — a real plateau the pure-ratio
-    * rule rejected). An exact tie with an earlier min counts as
-    * converged — a reproduced time is plateau evidence, not a new min.
+  /** The min plateaued: the last sample set no strictly new min, and ≥ 2
+    * samples lie within 10% + 30 ms of it. The 30 ms keeps the rule
+    * meaningful under 0.3 s, where 10% is below scheduler jitter; an exact
+    * tie with an earlier min is a reproduced time, so it converges.
     */
   private def isConverged(samples: Seq[Double]): Boolean =
     samples.size >= 2 && {
@@ -248,56 +139,40 @@ object Bench {
         samples.count(_ <= m * 1.10 + 0.03) >= 2
     }
 
-  /** One sample of one query: wall seconds, best-run CPU utilization,
-    * the calibration-probe seconds measured immediately before it, the
-    * GC milliseconds this JVM collected DURING the sample (r14), the
-    * memory-bandwidth probe seconds (r17; 0.0 = not measured, never
-    * rejects), and the generated classes Spark compiled during it (0
-    * once the query's plan shapes sit in the codegen cache).
+  /** One sample of one query: wall seconds, CPU utilization of the whole
+    * box, the ALU probe seconds taken just before it, the GC ms collected
+    * during it, the memory-bandwidth probe seconds (0.0 = not measured,
+    * never rejects), and the generated classes Spark compiled during it.
     */
   private[graft] case class Sample(wall: Double, util: Double, probe: Double,
                                    gcMs: Long = 0L, memProbe: Double = 0.0,
                                    compiles: Long = 0L)
 
-  /** Generated classes compiled by this JVM so far (cache misses of
-    * Spark's codegen cache; hits do not count).
-    */
+  /** Generated classes compiled by this JVM so far (codegen cache misses). */
   private def codegenCompiles: Long =
     org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
-  /** A sample is GC-thrash when garbage collection ate more than 25% of
-    * its wall time AND at least half a second absolute (routine young-gen
-    * pauses on sub-second queries are tens of ms — not thrash). Such a
-    * sample measured the allocator fighting a polluted heap, not the
-    * query: BENCH_r13's sf1 d11 row "converged" at 26.15 s with ~2.8 s
-    * of GC per sample while a fresh JVM ran the identical query on the
-    * identical corpus in 3.50 s. Like starved samples, gc-thrash samples
-    * can neither set a query's min nor count toward convergence (r14,
-    * verdict ask #2).
+  /** GC ate over 25% of the sample's wall and at least 500 ms: it measured
+    * the allocator fighting a polluted heap, not the query. Young-gen
+    * pauses on sub-second queries are tens of ms and do not count.
     */
   private[graft] def isGcThrash(s: Sample): Boolean =
     s.gcMs > 500 && s.gcMs > 0.25 * s.wall * 1000.0
 
-  /** Per-query verdict from the FINAL global probe floor: best sample
-    * (min over clean samples; all-rejected queries fall back to the min
-    * over everything, flagged), rejection counts by cause, `contended`
-    * when starvation left no clean sample, `gcThrash` when GC pressure
-    * did, and convergence over the clean subsequence. A query with no
-    * clean sample is NEVER `converged` — a polluted row cannot read as
-    * a trustworthy number again.
+  /** Per-query verdict: the best sample (min over clean samples, or over all
+    * of them when none is clean), rejection counts by cause, `contended`
+    * when starvation left no clean sample, `gcThrash` when GC did, and
+    * convergence over the clean samples. A query with no clean sample is
+    * never `converged`.
     */
   private[graft] case class QueryVerdict(best: Sample, rejected: Int,
                                          gcRejected: Int, contended: Boolean,
                                          gcThrash: Boolean, converged: Boolean)
 
-  /** A sample is rejected when EITHER calibration signal says the host
-    * was not quiet: the ALU spin (CPU starvation) or, since r17, the
-    * memory-bandwidth sweep (bus/LLC contention the ALU spin cannot
-    * see — the r16→r15 anchor-drift postmortem measured p08 swinging
-    * 1.9 s ↔ 6-10 s within one hour at IDENTICAL ALU-probe floors;
-    * see SCALE.md "r17 anchor-drift attribution"). memFloor defaults
-    * to infinity so Sample rows without a mem probe (unit tests, old
-    * artifacts) never reject on the new signal.
+  /** Either calibration probe says the host was not quiet: the ALU spin
+    * (CPU starvation) or the memory sweep (bus contention the spin cannot
+    * see). memFloor defaults to infinity, so samples without a memory probe
+    * never reject on it.
     */
   private[graft] def isRejected(s: Sample, probeFloor: Double,
                                 memFloor: Double = Double.PositiveInfinity): Boolean =
@@ -319,36 +194,12 @@ object Bench {
   }
 
   @volatile private var probeSink = 0L // defeat dead-code elimination
-  /** Fixed CPU-bound calibration spin: 20 M LCG steps on EVERY core
-    * (one thread per processor, each running the full spin), ~25-30 ms
-    * wall on this host when quiet — on an idle machine the threads run
-    * truly in parallel, so the wall equals the single-thread time plus
-    * scheduling jitter. Pure ALU work with no allocation.
-    *
-    * ALL-cores, not single-threaded (r14, second revision): the warm
-    * r14 re-run showed q12's sf1 samples swinging 1.5 → 8.9 s while
-    * every pre-sample probe sat within 15% of the process floor — a
-    * single spinning thread always found one idle core, but the QUERY
-    * runs on all 32, and a busy neighbor tenant squeezing the other
-    * cores inflates it invisibly. Saturating the box for one spin makes
-    * the probe see exactly the capacity the query is about to use: with
-    * competitors on k cores, some probe thread shares a core and the
-    * max-over-threads wall stretches proportionally.
-    */
   private val probeThreads = math.max(2, Runtime.getRuntime.availableProcessors())
-  private def spinAllCores(): Double = {
+  /** Wall seconds of `work(t)` on one thread per core, all at once. */
+  private def onAllCores(work: Int => Long): Double = {
     val t0 = System.nanoTime()
     val ts = (0 until probeThreads).map { t =>
-      val th = new Thread(() => {
-        var x = 0x9E3779B97F4A7C15L + t
-        var i = 0
-        while (i < 20000000) {
-          x = x * 6364136223846793005L + 1442695040888963407L
-          x ^= (x >>> 33)
-          i += 1
-        }
-        probeSink = x
-      })
+      val th = new Thread(() => probeSink = work(t))
       th.setDaemon(true)
       th.start()
       th
@@ -356,28 +207,32 @@ object Bench {
     ts.foreach(_.join())
     (System.nanoTime() - t0) / 1e9
   }
-  /** One probe = settle, then min of two all-core spins. The settle +
-    * min-of-2 discriminates SELF-noise from NEIGHBOR-noise: right after
-    * a Spark job this JVM's own executor/cleaner threads are still
-    * winding down and steal probe cores for a few ms (transient — the
-    * second spin runs on a settled box), while a busy neighbor tenant
-    * inflates both spins. Without this the all-core probe flagged its
-    * own just-finished queries as contention.
+
+  /** Fixed CPU-bound calibration spin: 20 M LCG steps on every core at once,
+    * ~25-30 ms wall on a quiet 32-core host, no allocation. All cores,
+    * because the query uses all of them: a single spinning thread always
+    * finds one idle core while a neighbour squeezes the rest.
+    */
+  private def spinAllCores(): Double = onAllCores { t =>
+    var x = 0x9E3779B97F4A7C15L + t
+    var i = 0
+    while (i < 20000000) {
+      x = x * 6364136223846793005L + 1442695040888963407L
+      x ^= (x >>> 33)
+      i += 1
+    }
+    x
+  }
+  /** One probe = settle, then min of two all-core spins, so this JVM's own
+    * threads winding down after a job are not read as a neighbour.
     */
   private def probeOnce(): Double = settledProbe(() => spinAllCores())
 
-  /** Memory-bandwidth calibration sweep (r17): every core streams its
-    * own slice of one shared 256 MiB long array (sequential sum — the
-    * slice exceeds any per-core cache share, so the sweep is DRAM-bound
-    * aggregate-bandwidth work, ~10-25 ms quiet on this host). This is
-    * the contention class the ALU spin is BLIND to: the r15→r16 anchor
-    * drift (p08 +44%, g05 +27% at identical ALU-probe floors) did not
-    * reproduce in same-host A/B runs, and the same binary later swung
-    * p08 1.9 s ↔ 6-10 s within an hour while ALU probes stayed clean on
-    * half the inflated rows — a neighbor saturating the memory bus slows
-    * every shuffle/scan-heavy query but not a register-resident LCG.
-    * The array is allocated and touched once per JVM (filling it also
-    * pages it in); contents are irrelevant to timing.
+  /** Memory-bandwidth calibration sweep: every core streams its slice of
+    * one shared 256 MiB long array, DRAM-bound work of ~10-25 ms when quiet.
+    * A neighbour saturating the memory bus slows every shuffle- and
+    * scan-heavy query but not a register-resident spin. The array is
+    * filled once per JVM, which also pages it in.
     */
   private val memProbeWords = 32 * 1024 * 1024 // 256 MiB of longs
   private lazy val memProbeArr: Array[Long] = {
@@ -389,92 +244,63 @@ object Bench {
   private def memSweepAllCores(): Double = {
     val arr = memProbeArr
     val slice = arr.length / probeThreads
-    val t0 = System.nanoTime()
-    val ts = (0 until probeThreads).map { t =>
-      val th = new Thread(() => {
-        val from = t * slice
-        val until = if (t == probeThreads - 1) arr.length else from + slice
-        var s = 0L
-        var i = from
-        while (i < until) { s += arr(i); i += 1 }
-        probeSink = s
-      })
-      th.setDaemon(true)
-      th.start()
-      th
+    onAllCores { t =>
+      val until = if (t == probeThreads - 1) arr.length else t * slice + slice
+      var s = 0L
+      var i = t * slice
+      while (i < until) { s += arr(i); i += 1 }
+      s
     }
-    ts.foreach(_.join())
-    (System.nanoTime() - t0) / 1e9
   }
-  /** min-of-2 like the ALU probe, but no extra settle sleep — it runs
-    * immediately after [[probeOnce]]'s settled pair, on a box that pair
-    * already settled.
-    */
+  /** min-of-2 with no settle of its own: it runs right after [[probeOnce]]. */
   private def memProbeOnce(): Double = math.min(memSweepAllCores(), memSweepAllCores())
 
-  /** Mem-probe rejection rule: same 1.5× ratio as the ALU probe but
-    * with a larger 10 ms absolute slack — DRAM bandwidth under this
-    * JVM's own page-cache churn jitters more than a register spin. A
-    * zero/absent memProbe (old Sample rows, unit tests) never rejects.
+  /** The ALU rule's 1.5× with a 10 ms slack, because DRAM bandwidth under
+    * this JVM's own page-cache churn jitters more than a register spin. A
+    * zero memProbe or an infinite floor never rejects.
     */
   private[graft] def isMemStarved(memProbe: Double, floor: Double): Boolean =
     memProbe > 0.0 && floor != Double.PositiveInfinity &&
       memProbe > floor * 1.5 + 0.010
 
-  /** The settle + min-of-2 rule as a pure(ish) function over an injected
-    * spin, so BenchVerdictSpec can pin the discrimination logic without
-    * burning cores (r14 verdict ask #8): self-noise decays between the
-    * two spins (min takes the settled second), neighbor contention
-    * inflates both (min stays high and the sample is correctly
-    * rejected).
+  /** Settle, then min of two spins: self-noise decays between the spins (the
+    * min takes the settled second), neighbour contention inflates both (the
+    * min stays high and the sample is rejected).
     */
   private[graft] def settledProbe(spin: () => Double, settleMs: Long = 30): Double = {
     Thread.sleep(settleMs)
     math.min(spin(), spin())
   }
 
-  /** A sample is starved when its probe ran ≥1.5× slower than the
-    * quietest probe this process has seen (+5 ms absolute slack for
-    * sub-30 ms probe jitter). Threshold per VERDICT r8's ask.
+  /** The probe ran ≥ 1.5× slower than the quietest this JVM has seen, with
+    * 5 ms of slack for sub-30 ms probe jitter.
     */
   private[graft] def isStarved(probe: Double, floor: Double): Boolean =
     probe > floor * 1.5 + 0.005
 
-  /** Materialization-proof sink: hash EVERY output column into one
-    * aggregate. `count()` (the pre-round-5 sink) let Catalyst prune
-    * the computed columns entirely for projection-shaped queries —
-    * t01's enrichment pipeline benched at 0.07 s because none of it
-    * ran. The hash forces every column of every row to be produced,
-    * uniformly across query shapes, while collecting one row.
-    * (Round-5 harness change: numbers for previously-prunable queries
-    * are HIGHER than round-4's for the same code — they now measure
-    * the work the query name promises.)
+  /** Hash every output column into one aggregate, so Catalyst cannot prune
+    * the computed columns of a projection-shaped query the way `count()`
+    * let it.
     */
   private[graft] def materialize(df: DataFrame): Unit =
     df.select(xxhash64(df.columns.map(col): _*).as("__h"))
       .agg(expr("bit_xor(__h)")).collect()
 
-  /** The per-process sampling machinery shared by the headline tier and
-    * the (now separately-JVM'd) sf1 tier: the monotone probe floor, the
-    * timed single run with its pre-sample probe and per-sample GC delta,
-    * and the converge-or-cap sampling loop. One instance per JVM.
+  /** One JVM's sampling machinery: the monotone probe floors, the timed
+    * single run with its pre-sample probes and GC delta, and the
+    * converge-or-cap sampling loop.
     */
   private[graft] final class Sampler(
       spark: SparkSession,
       qs: Map[String, (SparkSession, String) => DataFrame]) {
-    // Seed the probe floors before any timed work; they only ever drop as
-    // quieter windows are observed (classification at the end uses the
-    // final global floors, so an inflated startup cannot hide contention).
+    // seeded before any timed work; they only drop as quieter windows are
+    // seen, and verdicts read the final floors, so an inflated startup
+    // cannot hide contention
     @volatile var probeFloor: Double = (1 to 5).map(_ => probeOnce()).min
     @volatile var memFloor: Double = (1 to 5).map(_ => memProbeOnce()).min
 
     def warm(name: String, dir: String): Unit = materialize(qs(name)(spark, dir))
 
-    /** One run → wall sec, cpu-utilization fraction of the whole box,
-      * the pre-sample calibration probes (ALU + memory bandwidth), and
-      * the GC ms collected inside the timed region (r14: a sample
-      * records its own heap pressure).
-      */
     def timed(name: String, dir: String): Sample = {
       val p = probeOnce()
       probeFloor = math.min(probeFloor, p)
@@ -484,25 +310,18 @@ object Bench {
       val g0 = gcMs
       val c0 = codegenCompiles
       val t0 = System.nanoTime()
-      // fail FAST: swallowing the error would report the (often very
-      // fast) failure path as a legitimate best-of-N time — a broken
-      // query must break the bench, not improve it
+      // fail fast: a swallowed error would report the failure path's time
+      // as a legitimate best-of-N
       try materialize(qs(name)(spark, dir))
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] $name FAILED: $e"); throw e
-      }
+      catch { case e: Throwable => System.err.println(s"[bench] $name FAILED: $e"); throw e }
       val wall = (System.nanoTime() - t0) / 1e9
       val cpuSec = (osBean.getProcessCpuTime - cpu0) / 1e9
       Sample(wall, cpuSec / (wall * Runtime.getRuntime.availableProcessors()),
         p, gcMs - g0, mp, codegenCompiles - c0)
     }
 
-    /** Sample `name` at least `base` times, extending to `cap` until the
-      * min over CLEAN samples (not starved, not gc-thrash) converges.
-      * Rejected samples neither satisfy nor block convergence — a
-      * contended or heap-polluted window keeps the query sampling, up
-      * to the cap. base == 1 skips extension entirely: SPARK_GRAFT_RUNS=1
-      * is the fast-local-iteration contract and must mean one run.
+    /** Sample `name` at least `base` times, extending to `cap` until the min
+      * over clean samples converges. base == 1 means exactly one run.
       */
     def sampleQuery(name: String, dir: String, base: Int, cap: Int): Seq[Sample] = {
       var ss = Seq.fill(base)(timed(name, dir))
@@ -514,565 +333,352 @@ object Bench {
     }
   }
 
-  /** The bench SparkSession for both JVMs (the headline process and the
-    * forked sf1 process): the engine's one recipe,
+  /** The bench SparkSession for both JVMs: the engine's one recipe,
     * [[graft.core.DDFManager.localSession]], at SPARK_GRAFT_CPUS cores.
     */
   private[graft] def benchSession(): SparkSession =
-    graft.core.DDFManager.localSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
+    graft.core.DDFManager.localSession(knob("SPARK_GRAFT_CPUS", "32").toInt)
+
+  // ---- the tier record ----
+
+  /** One query of a tier: its timed samples and the GC ms of its sampling window. */
+  private[graft] case class Row(name: String, samples: Seq[Sample], gcMs: Long)
+
+  /** A tier after [[summarize]]: each row with its verdict, the ratios of
+    * best walls to the anchor and the previous anchor, the suspects, and a
+    * (name, wall, ratio) retry row per retried suspect.
+    */
+  private[graft] case class Tier(rows: Seq[(Row, QueryVerdict)], vsAnchor: Seq[(String, Double)],
+      vsPrevAnchor: Seq[(String, Double)], suspects: Seq[String], retry: Seq[(String, Double, Double)]) {
+    def best: Seq[(String, Double)] = rows.map { case (r, v) => r.name -> v.best.wall }
+    def total: Double = rows.map(_._2.best.wall).sum
+    private def where(p: QueryVerdict => Boolean) = rows.collect { case (r, v) if p(v) => r.name }
+    /** The flagged names by class; `unconverged` excludes the other two. */
+    def flags: Seq[(String, Seq[String])] = Seq("contended" -> where(_.contended),
+      "gc_thrash" -> where(_.gcThrash),
+      "unconverged" -> where(v => !v.converged && !v.contended && !v.gcThrash))
+  }
+
+  /** A tier's verdicts under the given probe floors, its anchor ratios, its
+    * suspects, and the retry rows `retryRun` returns for them. A suspect is
+    * over 2× its anchor, or GC-thrashed in every sample, or unconverged or
+    * contended at ≥ 1.3× its anchor: such a row alone shows neither a
+    * regression nor its absence, so each earns the in-record retry.
+    */
+  private[graft] def summarize(rows: Seq[Row], probeFloor: Double, memFloor: Double,
+      anchor: Map[String, Double] = Map.empty, prevAnchor: Map[String, Double] = Map.empty,
+      retryRun: Seq[String] => Seq[(String, Double, Double)] = _ => Seq.empty): Tier = {
+    val vs = rows.map(r => r -> verdict(r.samples, probeFloor, memFloor))
+    def ratios(a: Map[String, Double]) = vs.collect {
+      case (r, v) if a.get(r.name).exists(_ > 0) => r.name -> v.best.wall / a(r.name)
+    }
+    val vsAnchor = ratios(anchor)
+    val byName = vs.map { case (r, v) => r.name -> v }.toMap
+    val suspects = (vsAnchor.collect { case (k, x) if x > 2.0 => k } ++
+      vs.collect { case (r, v) if v.gcThrash => r.name } ++
+      vsAnchor.collect { case (k, x)
+        if x >= 1.3 && (!byName(k).converged || byName(k).contended) => k }).distinct
+    Tier(vs, vsAnchor, ratios(prevAnchor), suspects, retryRun(suspects))
+  }
+
+  // ---- the one JSON writer ----
+
+  private val om = JsonMapper.builder()
+    .enable(StreamWriteFeature.WRITE_BIGDECIMAL_AS_PLAIN)
+    // a child's document is read back digit for digit ("2.000" stays 2.000)
+    .enable(DeserializationFeature.USE_BIG_DECIMAL_FOR_FLOATS)
+    .configure(JsonNodeFeature.STRIP_TRAILING_BIGDECIMAL_ZEROES, false)
+    .build()
+
+  /** `d` rounded half-up to `places` decimals, as `%.{places}f` prints it. */
+  private def fixed(d: Double, places: Int): java.math.BigDecimal =
+    java.math.BigDecimal.valueOf(d).setScale(places, java.math.RoundingMode.HALF_UP)
+  private def secs(xs: Seq[(String, Double)]) = obj(xs.map { case (k, s) => k -> fixed(s, 3) })
+  private def ratioMap(xs: Seq[(String, Double)], short: String => String = identity) =
+    obj(xs.map { case (k, r) => short(k) -> fixed(r, 2) })
+
+  /** A JSON object from ordered pairs. A value is a JSON node, a rounded
+    * BigDecimal, a Boolean, Int, Long or String, or a Seq of these; a bare
+    * Double is refused, so every number states its rounding.
+    */
+  private[graft] def obj(kvs: Iterable[(String, Any)]): ObjectNode = {
+    val o = om.createObjectNode()
+    kvs.foreach { case (k, v) => o.replace(k, node(v)) }
+    o
+  }
+  private def node(v: Any): JsonNode = v match {
+    case n: JsonNode => n
+    case d: java.math.BigDecimal => DecimalNode.valueOf(d)
+    case b: Boolean => BooleanNode.valueOf(b)
+    case i: Int => IntNode.valueOf(i)
+    case l: Long => LongNode.valueOf(l)
+    case s: String => TextNode.valueOf(s)
+    case xs: Seq[_] => val a = om.createArrayNode(); xs.foreach(x => a.add(node(x))); a
+  }
+  private[graft] def write(n: JsonNode): String = om.writeValueAsString(n)
+  private def entries(n: JsonNode): Seq[(String, JsonNode)] =
+    n.properties.asScala.toSeq.map(e => e.getKey -> e.getValue)
+  private def names(n: JsonNode): Seq[String] = n.asScala.map(_.asText).toSeq
+  private def merge(into: ObjectNode, from: JsonNode): Unit =
+    entries(from).foreach { case (k, v) => into.replace(k, v) }
+  /** A fragment that splices after other fields: `,"k":v,…`. */
+  private def fragment(o: ObjectNode): String = "," + write(o).drop(1).dropRight(1)
+
+  /** The per-query fields a measured tier writes to `bench_result.json`,
+    * each key suffixed by `sfx`.
+    */
+  private def fullFields(t: Tier, sfx: String): Seq[(String, Any)] = {
+    def per(f: (Row, QueryVerdict) => Any) = obj(t.rows.map { case (r, v) => r.name -> f(r, v) })
+    def each(f: Sample => Any) = per((r, _) => r.samples.map(f))
+    Seq("samples" -> each(s => fixed(s.wall, 2)), "probes" -> each(s => fixed(s.probe, 3)),
+      "mem_probes" -> each(s => fixed(s.memProbe, 3)), "codegen_compiles" -> each(_.compiles),
+      "converged" -> per((_, v) => v.converged), "contended" -> per((_, v) => v.contended),
+      "gc_thrash" -> per((_, v) => v.gcThrash), "rejected" -> per((_, v) => v.rejected),
+      "gc_rejected" -> per((_, v) => v.gcRejected), "gc_q_ms" -> per((r, _) => r.gcMs),
+      "vs_anchor" -> ratioMap(t.vsAnchor), "vs_prev_anchor" -> ratioMap(t.vsPrevAnchor),
+      "suspect" -> t.suspects, "retry" -> retryNode(t.retry)
+    ).map { case (k, v) => (k + sfx) -> v }
+  }
+
+  /** A tier's part of the compact line: its flagged names by class, `mid`,
+    * its suspects and its retry ratios, names shortened. `extra(cls)` adds
+    * another tier's names of that class (the x10 rows the headline carries).
+    */
+  private def compactFields(t: Tier, sfx: String, short: String => String, mid: Seq[(String, Any)],
+      extra: String => Seq[String] = _ => Nil): Seq[(String, Any)] =
+    t.flags.map { case (cls, ns) => (cls + sfx) -> (ns ++ extra(cls)).map(short) } ++ mid ++ Seq(
+      "suspect" + sfx -> t.suspects.map(short),
+      "retry" + sfx -> ratioMap(t.retry.map { case (k, _, r) => k -> r }, short))
+
+  /** The sf1 tier's fields for `bench_result.json` and for the compact line. */
+  private[graft] def sf1Nodes(t: Tier, short: String => String, gcTier: Long,
+      forked: Boolean): (ObjectNode, ObjectNode) = {
+    val q = Seq("queries_sf1" -> secs(t.best))
+    val total = "total_sf1" -> fixed(t.total, 3)
+    (obj(q ++ fullFields(t, "_sf1") ++ Seq(total, "gc_ms_sf1" -> gcTier, "sf1_forked" -> forked)),
+      obj(q ++ Seq(total) ++ compactFields(t, "_sf1", short,
+        Seq("vs_anchor_sf1" -> ratioMap(t.vsAnchor, short)))))
+  }
+
+  /** The x10 scaling tier's block: its rows summarized as `x10_<name>`. */
+  private[graft] def x10Node(rows: Seq[Row], probeFloor: Double, memFloor: Double): ObjectNode = {
+    val t = summarize(rows.map(r => r.copy(name = "x10_" + r.name)), probeFloor, memFloor)
+    val kept = Set("samples_x10", "codegen_compiles_x10", "converged_x10")
+    obj(Seq("queries_x10" -> secs(t.best)) ++ fullFields(t, "_x10").filter(f => kept(f._1)) ++
+      t.flags.map { case (cls, ns) => (cls + "_x10") -> ns })
+  }
+  private def x10Queries(x10: JsonNode): Seq[(String, Double)] =
+    entries(x10.path("queries_x10")).map { case (k, v) => k -> v.asDouble }
+
+  private def retryNode(rows: Seq[(String, Double, Double)]): ObjectNode =
+    obj(rows.map { case (k, w, r) => k -> obj(Seq("value" -> fixed(w, 3),
+      "vs_anchor" -> fixed(r, 2), "attribution" -> retryAttribution(r))) })
+
+  // views of the record as strings, for callers that splice or parse JSON text
+  /** `{"name":{"value":s,"vs_anchor":r,"attribution":"…"},…}`. */
+  private[graft] def retryJson(rows: Seq[(String, Double, Double)]): String = write(retryNode(rows))
+  /** Per query, each timed sample's codegen compiles in sample order. */
+  private[graft] def compilesMap(xs: Seq[(String, Seq[Sample])]): String =
+    write(obj(xs.map { case (k, ss) => k -> ss.map(_.compiles) }))
+  /** The x10 block as one JSON object. */
+  private[graft] def x10Render(triples: Seq[(String, Seq[Sample], Long)], probeFloor: Double,
+      memFloor: Double): String =
+    write(x10Node(triples.map(Row.tupled), probeFloor, memFloor))
+  /** An x10 block's (per-query seconds, unconverged names, contended names);
+    * an empty block reads as empty.
+    */
+  private[graft] def parseX10(line: String): (Seq[(String, Double)], Seq[String], Seq[String]) = {
+    val x = om.readTree(line)
+    (x10Queries(x), names(x.path("unconverged_x10")), names(x.path("contended_x10")))
+  }
+  /** The sf1 tier's (full, compact) fields as fragments that each splice
+    * after other fields. `retryRun` gets the tier's suspects.
+    */
+  private[graft] def sf1Render(triples1: Seq[(String, Seq[Sample], Long)], probeFloor: Double,
+      anchorQ1: Map[String, Double], shortOf: String => String, gcTier: Long, forked: Boolean,
+      retryRun: Seq[String] => Seq[(String, Double, Double)] = _ => Seq.empty,
+      memFloor: Double = Double.PositiveInfinity,
+      prevAnchorQ1: Map[String, Double] = Map.empty): (String, String) = {
+    val (full, compact) = sf1Nodes(summarize(triples1.map(Row.tupled), probeFloor, memFloor, anchorQ1,
+      prevAnchorQ1, retryRun), shortOf, gcTier, forked)
+    (fragment(full), fragment(compact))
+  }
+
+  private val Harness = "hash-materialized; r9: per-sample CPU calibration probe rejects starved " +
+    "samples; r14: per-sample GC delta rejects gc-thrash samples, sf1 tier runs in a forked fresh " +
+    "JVM; r17: per-sample memory-bandwidth probe rejects bus-contended samples; r18: x10_* rows " +
+    "are the heavy operators on the 10x corpus, measured in the forked JVM (see Bench.scala scaladoc)"
+
+  /** The run's full artifact and compact line: the headline tier `head`
+    * around the forked JVM's document `fork` (missing before the fork has
+    * run or with the sf1 tier off). `queries` and `value` carry the x10 rows
+    * too. The compact line keeps the anchor geomeans; the per-row ratios are
+    * in the detail file.
+    */
+  private[graft] def render(head: Tier, fork: JsonNode, sfDir: String, runs: Int,
+      probeFloor: Double, memFloor: Double, gcHeadline: Long, detail: String): (ObjectNode, ObjectNode) = {
+    val x10 = fork.path("x10")
+    val x10Q = x10Queries(x10)
+    val top = Seq("metric" -> "total", "value" -> fixed(head.total + x10Q.map(_._2).sum, 3),
+      "unit" -> "sec", "queries" -> secs(head.best ++ x10Q), "sf" -> sfDir, "runs" -> runs)
+    val full = obj(top ++ Seq("harness" -> Harness, "probe_base" -> fixed(probeFloor, 3),
+      "mem_probe_base" -> fixed(memFloor, 3), "gc_ms" -> gcHeadline, "anchor" -> anchorPath,
+      "prev_anchor" -> prevAnchorPath, "best_run_cpu_util" ->
+      obj(head.rows.map { case (r, v) => r.name -> fixed(v.best.util, 2) })) ++ fullFields(head, ""))
+    merge(full, fork.path("full"))
+    full.replace("x10", if (x10.isObject) x10 else obj(Nil))
+    def geomean(xs: Seq[(String, Double)]): Double =
+      if (xs.isEmpty) 1.0 else math.exp(xs.map(x => math.log(x._2)).sum / xs.size)
+    val compact = obj(top ++ compactFields(head, "", shortOf, Seq(
+      "rejected_total" -> head.rows.map(_._2.rejected).sum,
+      "vs_anchor_geomean" -> fixed(geomean(head.vsAnchor), 2),
+      "vs_prev_anchor_geomean" -> fixed(geomean(head.vsPrevAnchor), 2)),
+      cls => names(x10.path(cls + "_x10"))) ++ Seq(
+      // the queries whose sampling window collected > 2 s of GC
+      "gc_hot" -> obj(head.rows.collect { case (r, _) if r.gcMs > 2000 => shortOf(r.name) -> r.gcMs })))
+    merge(compact, fork.path("compact"))
+    compact.replace("detail", TextNode.valueOf(detail))
+    (full, compact)
+  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val runs = sys.env.getOrElse("SPARK_GRAFT_RUNS", "5").toInt
-    val maxRuns = sys.env.getOrElse("SPARK_GRAFT_MAX_RUNS", "9").toInt
+    val runs = knob("SPARK_GRAFT_RUNS", "5").toInt
     require(runs >= 1, s"SPARK_GRAFT_RUNS must be >= 1, got $runs")
+    val cap = math.max(runs, knob("SPARK_GRAFT_MAX_RUNS", "9").toInt)
     val spark = benchSession()
-
     val qs = SparkEntry.queries
     val sampler = new Sampler(spark, qs)
-    def verdict(ss: Seq[Sample]): QueryVerdict =
-      Bench.verdict(ss, sampler.probeFloor, sampler.memFloor)
-    // JVM/codegen warmup outside the timed region
-    sampler.warm("q10_tpch_q1", sfDir)
-
-    // SPARK_GRAFT_ONLY=d01,d02 narrows the set for local iteration; the
-    // driver never sets it, so the per-round bench always runs everything
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    sampler.warm("q10_tpch_q1", sfDir) // JVM/codegen warmup outside the timed region
+    // narrows the set for local iteration and skips the sf1 tier
+    val only = knobSet("SPARK_GRAFT_ONLY")
     val gc0 = gcMs
-    val triples = headline.filter(qs.contains)
-      .filter(n => only.forall(_.contains(n)))
-      .map { name =>
-        // round 11: one untimed warmup per headline query (the sf1 tier
-        // has done this since r10) — ds01 was the last row still JIT/
-        // page-cache descending at the sample cap in BENCH_r10
-        sampler.warm(name, sfDir)
-        val g0 = gcMs
-        val ss = sampler.sampleQuery(name, sfDir, runs, math.max(runs, maxRuns))
-        val gq = gcMs - g0
-        // round 12: drop residual blocks BETWEEN queries (outside every
-        // timed region) so one query's leftovers can't throttle the next;
-        // r14: full drain — r13's drift cluster (t17/a05/j04/p05 at
-        // 1.2-1.3× with untouched code) tracked accumulated heap, not code
-        drainHeap(spark)
-        (name, ss, gq)
-      }
-    val results = triples.map { case (n, ss, _) => n -> ss }
-    val gcQ = triples.map { case (n, _, g) => n -> g }
-    // verdicts use the FINAL probe floor — quietest window of the whole
-    // run — so these are defs: later probes can retroactively
-    // reclassify headline samples taken in a window that only LOOKED quiet
-    def vs = results.map { case (k, ss) => k -> verdict(ss) }
-    def qJson = numMap(vs.map { case (k, v) => k -> v.best.wall })
-    val samplesJson = samplesMap(results)
-    val probesJson = probesMap(results)
-    def utilJson = vs.map { case (k, v) => "\"" + k + f"\":${v.best.util}%.2f" }
-      .mkString("{", ",", "}")
-    def convJson = boolMap(vs.map { case (k, v) => k -> v.converged })
-    def contJson = boolMap(vs.map { case (k, v) => k -> v.contended })
-    def rejJson = intMap(vs.map { case (k, v) => k -> v.rejected })
-    def total = vs.map(_._2.best.wall).sum
-    // headline gc BEFORE the sf1 tier: the 10x corpus build + sf1 runs
-    // would otherwise dominate the headline noise-attribution field
+    val rows = measureSet(spark, sampler, sfDir, runs, cap,
+      headline.filter(qs.contains).filter(n => only.forall(_.contains(n))))
     val gcHeadline = gcMs - gc0
+    val anchorQ = anchorMap(anchorPath, "queries", sfDir)
+    val retried = summarize(rows, sampler.probeFloor, sampler.memFloor, anchorQ,
+      retryRun = sus => retrySuspects(spark, sampler, sfDir, sus, anchorQ, runs, cap)).retry
+    // verdicts under the final probe floors, which the retries may have lowered
+    val head = summarize(rows, sampler.probeFloor, sampler.memFloor, anchorQ,
+      anchorMap(prevAnchorPath, "queries", sfDir), _ => retried)
 
-    // round 12: anchor self-diagnosis. The r11 driver artifact sat at
-    // 20.6× the anchor with `contended: []` because the CPU probe cannot
-    // see GC pressure — so the bench now reads the committed quiet-host
-    // anchor at start and reports each query's ratio against it, plus a
-    // `suspect` list of >2× rows and per-query GC deltas: a contaminated
-    // run names itself in its own artifact.
-    // r16 anchor: recut for the r16 layout (d02/d11 retired from the
-    // sf0.1 tier; a05's degenerate sf1 kernel replaced by a20's 16·f
-    // production contract — 10 sf0.1 rows incl. the two documented
-    // micros + 33 sf1 family representatives). Cut from the quietest of
-    // three same-day full runs: the anchor run carries ZERO
-    // contended/gc-thrash/suspect flags and every headline row
-    // converged; only two sub-second sf1 rows (a20 0.86 s, ts01 0.27 s)
-    // were unconverged, the documented sub-second-jitter class. The
-    // same day's third run hit a contended window (4 contended rows, 2
-    // suspects at 2.1-2.15×) and both suspects' in-record retries read
-    // 1.21-1.35× transient_host_noise — the self-heal working as
-    // designed. a05's JIT-shelf read-rule is retired with its bench
-    // row; a20 repeats at 0.72-0.86 s across all three runs.
-    val anchorPath = sys.env.getOrElse("SPARK_GRAFT_ANCHOR", "BENCH_anchor_r17.json")
-    // r17 (verdict ask #1): the PREVIOUS round's anchor rides along so a
-    // recut can never again absorb a cross-round drift — every run
-    // reports vs_prev_anchor beside vs_anchor, and a recut anchor whose
-    // own vs_prev_anchor geomean is off 1.0 carries its drift on its
-    // face instead of resetting the baseline silently.
-    val prevAnchorPath = sys.env.getOrElse("SPARK_GRAFT_PREV_ANCHOR",
-      "BENCH_anchor_r16.json")
-    // ratios are only meaningful at the anchor's own scale factor — a
-    // quick sf0.001 iteration run must not flag "suspects" against sf0.1
-    // anchor numbers
-    val anchorSf = anchorSfDir(anchorPath)
-    val sfMatches = anchorSf.contains(sfDir)
-    val prevMatches = anchorSfDir(prevAnchorPath).contains(sfDir)
-    val anchorQ = if (sfMatches) anchorMap(anchorPath, "queries") else Map.empty[String, Double]
-    val anchorQ1 = if (sfMatches) anchorMap(anchorPath, "queries_sf1") else Map.empty[String, Double]
-    val prevQ = if (prevMatches) anchorMap(prevAnchorPath, "queries") else Map.empty[String, Double]
-    val prevQ1 = if (prevMatches) anchorMap(prevAnchorPath, "queries_sf1") else Map.empty[String, Double]
-    def ratios(cur: Seq[(String, Double)], anchor: Map[String, Double]): Seq[(String, Double)] =
-      cur.collect { case (k, v) if anchor.get(k).exists(_ > 0) => k -> v / anchor(k) }
-    def vsAnchor = ratios(vs.map { case (k, v) => k -> v.best.wall }, anchorQ)
-    def vsPrevAnchor = ratios(vs.map { case (k, v) => k -> v.best.wall }, prevQ)
-    // suspect = over 2× anchor, OR nothing but gc-thrash samples (r14),
-    // OR — r17, verdict ask #2: a11's 1.88× unconverged row escaped the
-    // net — unconverged/contended at ≥1.5× anchor; r18 (verdict ask #3):
-    // the bar drops to 1.3× — j04's official record rode unconverged two
-    // rounds without a retry. Every flag class earns the in-record retry.
-    def suspects = (vsAnchor.collect { case (k, r) if r > 2.0 => k } ++
-      vs.collect { case (k, v) if v.gcThrash => k } ++
-      vsAnchor.collect { case (k, r)
-        if r >= 1.3 && vs.exists { case (k2, v) =>
-          k2 == k && (!v.converged || v.contended) } => k }).distinct
-    def gcQJson = intMap(gcQ.map { case (k, g) => k -> g.toInt })
-    def vaJson = numMap2(vsAnchor)
-    def suspectJson = nameList(suspects)
-    // r16 (verdict ask #2): every suspect headline row is re-run once
-    // right here — the artifact carries {value, vs_anchor, attribution}
-    // for each, so a noisy row no longer needs git archaeology. The
-    // official per-query numbers above stay the ORIGINAL measurements.
-    val headRetry =
-      if (!sfMatches) Seq.empty[(String, Double, Double)]
-      else retrySuspects(spark, sampler, sfDir, suspects, anchorQ,
-        runs, math.max(runs, maxRuns))
-    def headRetryJson = retryJson(headRetry)
-    // compact-line variants use SHORT query keys ("q10" for
-    // "q10_tpch_q1" — unique across the sets) to keep the line inside
-    // the driver's 2000-char stdout tail window
-    val short = shortNames((headline ++ sf1Set).distinct)
-    def shortOf(n: String): String = short.getOrElse(n, n)
-    def shortRatioMap(xs: Seq[(String, Double)]): String =
-      xs.map { case (k, v) => "\"" + shortOf(k) + f"\":$v%.2f" }.mkString("{", ",", "}")
-
-    def gcThrashJson = boolMap(vs.map { case (k, v) => k -> v.gcThrash })
-    def gcRejJson = intMap(vs.map { case (k, v) => k -> v.gcRejected })
-    def vpaJson = numMap2(vsPrevAnchor)
-    // xp: the x10 scaling rows spliced into `queries`/`value` (r18 — the
-    // pre-sf1 degraded write passes none; the final writes pass the
-    // fork's parsed rows)
-    def assemble(extra: String, xp: Seq[(String, Double)] = Seq.empty): String = {
-      val qj = numMap(vs.map { case (k, v) => k -> v.best.wall } ++ xp)
-      val tot = total + xp.map(_._2).sum
-      f"""{"metric":"total","value":$tot%.3f,"unit":"sec","queries":$qj,"sf":"$sfDir","runs":$runs,"harness":"hash-materialized; r9: per-sample CPU calibration probe rejects starved samples; r14: per-sample GC delta rejects gc-thrash samples, sf1 tier runs in a forked fresh JVM; r17: per-sample memory-bandwidth probe rejects bus-contended samples; r18: x10_* rows are the heavy operators on the 10x corpus, measured in the forked JVM (see Bench.scala scaladoc)","samples":$samplesJson,"probes":$probesJson,"probe_base":${sampler.probeFloor}%.3f,"mem_probes":${memProbesMap(results)},"codegen_compiles":${compilesMap(results)},"mem_probe_base":${sampler.memFloor}%.3f,"best_run_cpu_util":$utilJson,"converged":$convJson,"contended":$contJson,"gc_thrash":$gcThrashJson,"rejected":$rejJson,"gc_rejected":$gcRejJson,"gc_ms":$gcHeadline,"gc_q_ms":$gcQJson,"anchor":"$anchorPath","vs_anchor":$vaJson,"prev_anchor":"$prevAnchorPath","vs_prev_anchor":$vpaJson,"suspect":$suspectJson,"retry":$headRetryJson$extra}"""
+    val out = knob("SPARK_GRAFT_BENCH_OUT", "bench_result.json")
+    def writeOut(fork: JsonNode): ObjectNode = {
+      val (full, compact) = render(head, fork, sfDir, runs, sampler.probeFloor, sampler.memFloor,
+        gcHeadline, out)
+      Files.write(Paths.get(out), (write(full) + "\n").getBytes(UTF_8))
+      compact
     }
+    // written before the sf1 tier, so an sf1 failure keeps the headline tier
+    writeOut(MissingNode.getInstance)
 
-    // the stdout line interleaves with sbt/Spark logging and has arrived
-    // truncated in past rounds ("parsed": null) — ALSO write the JSON to
-    // its own file so the artifact is machine-readable regardless of
-    // what the launcher does to stdout
-    val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_result.json")
-    def writeOut(line: String): Unit =
-      java.nio.file.Files.write(java.nio.file.Paths.get(outFile),
-        (line + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    // persist the headline tier BEFORE attempting sf1: a failure in the
-    // 10× corpus build or an sf1 query must degrade the artifact to
-    // headline-only, not discard a completed round of measurements
-    writeOut(assemble(""))
-
-    // ---- sf1 tier ----
-    // r14 (verdict ask #1): the tier runs in a FORKED FRESH JVM by
-    // default. BENCH_r13's d11 row read 26.15 s "converged" with 11 s of
-    // GC because the headline tier (42 rows × 5-9 samples) plus the 10×
-    // corpus build had filled this JVM's heap with residue clearResidual
-    // cannot see (broadcast state, ContextCleaner backlog, listener/
-    // codegen accumulation) — while a fresh JVM ran the identical query
-    // on the identical corpus in 3.50 s. Forking removes the mechanism
-    // instead of chasing its symptoms; the child replicates this JVM's
-    // flags/classpath/env and writes its two JSON fragments to a file.
-    // SPARK_GRAFT_SF1_FORK=0 (or a fork failure) falls back to the
-    // in-process path — same measurement code via sf1Measure/sf1Render,
-    // after a best-effort heap drain.
-    val wantSf1 = sys.env.getOrElse("SPARK_GRAFT_SF1", "1") != "0" &&
-      sfDir.contains("sf0.1") && only.isEmpty
-    val wantFork = sys.env.getOrElse("SPARK_GRAFT_SF1_FORK", "1") != "0"
-    def sf1InProcess(): (String, String, String) = {
-      val sf1Runs = sys.env.getOrElse("SPARK_GRAFT_SF1_RUNS", "3").toInt
-      require(sf1Runs >= 1, s"SPARK_GRAFT_SF1_RUNS must be >= 1, got $sf1Runs")
-      // r9's q80 sampled 6.45→1.25 still descending at the 9-sample cap
-      // (codegen/JIT tiering + OS page cache warming across runs on the
-      // fresh 10× corpus). Round-10 fix, per the verdict's ask: every
-      // sf1 query gets ONE untimed warmup pass before sampling, and the
-      // sf1 cap is its own knob with more headroom than the headline cap.
-      val sf1Cap = sys.env.getOrElse("SPARK_GRAFT_SF1_MAX_RUNS", "12").toInt
-      drainHeap(spark) // shed what the headline tier left before measuring
-      val gc1 = gcMs
-      val dir = buildSf1(spark, sfDir)
-      try {
-        val triples1 = sf1Measure(spark, sampler, qs, dir, sf1Runs, sf1Cap)
-        val (f1, c1) = sf1Render(triples1, sampler.probeFloor, anchorQ1, shortOf,
-          gcMs - gc1, forked = false,
-          retryRun = sus => retrySuspects(spark, sampler, dir, sus, anchorQ1,
-            sf1Runs, math.max(sf1Runs, sf1Cap)),
-          memFloor = sampler.memFloor, prevAnchorQ1 = prevQ1)
-        val wantX10 = sys.env.getOrElse("SPARK_GRAFT_X10", "1") != "0" &&
-          sys.env.get("SPARK_GRAFT_SF1_ONLY").isEmpty
-        val x10 =
-          if (!wantX10) "{}"
-          else x10Render(measureSet(spark, sampler, dir, sf1Runs, sf1Cap,
-            x10Set.filter(qs.contains)), sampler.probeFloor, sampler.memFloor)
-        (f1, c1, x10)
-      } finally graft.tools.Cleanup.deleteRecursively(dir) // ~10x sf0.1 on disk
-    }
-    val (sf1Json, sf1Compact, x10Line) =
-      if (!wantSf1) ("", "", "{}")
-      else try {
-        (if (wantFork) runSf1Forked(sfDir, anchorPath) else None)
-          .getOrElse(sf1InProcess())
-      } catch { case e: Throwable =>
+    val wantSf1 = knob("SPARK_GRAFT_SF1", "1") != "0" && sfDir.contains("sf0.1") && only.isEmpty
+    val compact = writeOut(
+      if (!wantSf1) MissingNode.getInstance
+      else try runSf1Forked(sfDir)
+      catch { case e: Throwable =>
         System.err.println(s"[bench] sf1 tier FAILED (headline tier kept): $e")
-        val err = ",\"sf1_error\":\"" + (e.getClass.getName + ": " +
-          String.valueOf(e.getMessage).take(300))
-            .replace("\\", "\\\\").replace("\"", "\\\"")
-            .flatMap(c => if (c < ' ') f"\\u${c.toInt}%04x" else c.toString) + "\""
-        (err, err, "{}")
-      }
-    // r18 (verdict ask #7): splice the x10 SCALING rows into the
-    // headline `queries` map (and total) — the driver's two-CPU-count
-    // runs compute parallel-speedup ratios over `queries`, and at sf0.1
-    // alone every row is overhead-bound. Additive only: existing rows
-    // keep their names and meaning.
-    val (x10Pairs, x10Unconv, x10Cont) = parseX10(x10Line)
-
-    // full artifact (samples, probes, util, gc — everything) → file only
-    writeOut(assemble(sf1Json + ",\"x10\":" + x10Line, x10Pairs))
-    // stdout gets ONE compact line (≤1.5 KB): per-query seconds, totals,
-    // and the attribution FLAGS (which queries were contended/unconverged)
-    // without the per-sample arrays. The driver scrapes a 2000-char stdout
-    // tail — 9 rounds of the full line arrived truncated ("parsed": null);
-    // this line is the LAST thing printed and fits the window whole.
-    // gc_hot: only queries whose sampling window collected >2 s of GC —
-    // near-empty on a clean run, names the victims on a contaminated one
-    val gcHot = gcQ.collect { case (k, g) if g > 2000 =>
-      "\"" + shortOf(k) + "\":" + g }.mkString("{", ",", "}")
-    def geomean(xs: Seq[Double]): Double =
-      if (xs.isEmpty) 1.0 else math.exp(xs.map(math.log).sum / xs.size)
-    def compactWith(va: String): String = {
-      val qjAll = numMap(vs.map { case (k, v) => k -> v.best.wall } ++ x10Pairs)
-      val totAll = total + x10Pairs.map(_._2).sum
-      f"""{"metric":"total","value":$totAll%.3f,"unit":"sec","queries":$qjAll,"sf":"$sfDir","runs":$runs,"contended":${nameList(vs.collect { case (k, v) if v.contended => shortOf(k) } ++ x10Cont)},"gc_thrash":${nameList(vs.collect { case (k, v) if v.gcThrash => shortOf(k) })},"unconverged":${nameList(vs.collect { case (k, v) if !v.converged && !v.contended && !v.gcThrash => shortOf(k) } ++ x10Unconv)},"rejected_total":${vs.map(_._2.rejected).sum},$va"suspect":${nameList(suspects.map(shortOf))},"retry":${shortRatioMap(headRetry.map { case (k, _, r) => k -> r })},"gc_hot":$gcHot$sf1Compact,"detail":"$outFile"}"""
-    }
-    // length guard: the tail window is a hard 2000 chars and the full
-    // 38-row ratio map does not fit next to the sf1 tier — so the
-    // compact line carries the geomean plus every row ≥1.2× anchor
-    // (near-empty on a clean run; names the victims with their ratios
-    // on a contaminated one), degrading to full-map or geomean-only as
-    // space allows. The complete map is always in the detail file.
-    val geo = f""""vs_anchor_geomean":${geomean(vsAnchor.map(_._2))}%.2f,""" +
-      f""""vs_prev_anchor_geomean":${geomean(vsPrevAnchor.map(_._2))}%.2f,"""
-    val withFullMap = compactWith(s""""vs_anchor":${shortRatioMap(vsAnchor)},""" + geo)
-    val withHotMap = compactWith(
-      s""""vs_anchor":${shortRatioMap(vsAnchor.filter(_._2 >= 1.2))},""" + geo)
-    val compactLine =
-      if (withFullMap.length <= 1900) withFullMap
-      else if (withHotMap.length <= 1900) withHotMap
-      else compactWith(geo)
-    // This is the LAST stdout write of the process: Spark logs to stderr
-    // (r10's tail shows its WARNs arriving [error]-tagged, i.e. via the
-    // forked JVM's stderr), and build.sbt's StdoutOutput + showSuccess :=
-    // false strip the "[info] " prefix and the "[success]" epilogue that
-    // defeated the driver's tail-scrape for 10 rounds. Printed exactly
-    // once so any parse style (whole-tail json.loads, first-'{' seek,
-    // last-line scan) finds one bare JSON line at the end.
-    println(compactLine)
+        val err = obj(Seq("sf1_error" ->
+          (e.getClass.getName + ": " + String.valueOf(e.getMessage).take(300))))
+        obj(Seq("full" -> err, "compact" -> err))
+      })
+    // the compact line goes last on stdout: Spark logs to stderr, so any
+    // parse (whole tail, first '{', last line) finds one bare JSON line
+    println(write(compact))
     System.out.flush()
     spark.stop()
   }
 
-  private def nameList(xs: Seq[String]): String =
-    xs.map("\"" + _ + "\"").mkString("[", ",", "]")
-
-  // ---- JSON fragment builders (shared by the headline process and the
-  // forked sf1 process, so the two tiers render identically) ----
-  private[graft] def numMap(xs: Seq[(String, Double)]): String =
-    xs.map { case (k, v) => "\"" + k + f"\":$v%.3f" }.mkString("{", ",", "}")
-  private[graft] def numMap2(xs: Seq[(String, Double)]): String =
-    xs.map { case (k, v) => "\"" + k + f"\":$v%.2f" }.mkString("{", ",", "}")
-  private[graft] def boolMap(xs: Seq[(String, Boolean)]): String =
-    xs.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-  private[graft] def intMap(xs: Seq[(String, Int)]): String =
-    xs.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-  private[graft] def samplesMap(xs: Seq[(String, Seq[Sample])]): String =
-    xs.map { case (k, ss) =>
-      "\"" + k + "\":" + ss.map(s => f"${s.wall}%.2f").mkString("[", ",", "]")
-    }.mkString("{", ",", "}")
-  private[graft] def probesMap(xs: Seq[(String, Seq[Sample])]): String =
-    xs.map { case (k, ss) =>
-      "\"" + k + "\":" + ss.map(s => f"${s.probe}%.3f").mkString("[", ",", "]")
-    }.mkString("{", ",", "}")
-  private[graft] def memProbesMap(xs: Seq[(String, Seq[Sample])]): String =
-    xs.map { case (k, ss) =>
-      "\"" + k + "\":" + ss.map(s => f"${s.memProbe}%.3f").mkString("[", ",", "]")
-    }.mkString("{", ",", "}")
-  /** Per query, the codegen compiles of each timed sample, in sample
-    * order: a nonzero entry after the first sample means the codegen
-    * cache is evicting that query's classes between runs.
-    */
-  private[graft] def compilesMap(xs: Seq[(String, Seq[Sample])]): String =
-    xs.map { case (k, ss) =>
-      "\"" + k + "\":" + ss.map(_.compiles).mkString("[", ",", "]")
-    }.mkString("{", ",", "}")
-
-  // ---- suspect-row self-healing (r16, r15 verdict ask #2) ----
-  // BENCH_r15's official p05 row read 2.91× the anchor while an in-repo
-  // check run minutes earlier read 1.14× — the attribution lived in git
-  // archaeology instead of the artifact. Now every suspect row (>2×
-  // anchor or gc-thrash-only) is RE-RUN once after its tier, and the
-  // artifact records both numbers plus a mechanical attribution. The
-  // official row stays the ORIGINAL measurement (a retry is evidence
-  // about noise, not a license to keep the better number).
-
-  /** Mechanical read of a suspect row's retry ratio: a retry back at
-    * ≤1.5× names the original a transient host artifact; a retry still
-    * >2× says the slowdown reproduces — look at the code; between the
-    * two, the row stays ambiguous and needs a third look.
+  /** Mechanical read of a suspect's retry ratio: back at ≤ 1.5× names the
+    * original a transient host artifact; still > 2× says the slowdown
+    * reproduces; in between the row stays ambiguous.
     */
   private[graft] def retryAttribution(ratio: Double): String =
     if (ratio <= 1.5) "transient_host_noise"
     else if (ratio > 2.0) "persistent_over_2x"
     else "borderline"
 
-  /** `{"name":{"value":s,"vs_anchor":r,"attribution":"…"},…}` from
-    * (name, retryWall, retryRatio) rows.
+  /** Re-run each anchored suspect once with the tier's own sample budget,
+    * heap drained around it. Suspects without an anchor row are skipped.
     */
-  private[graft] def retryJson(rows: Seq[(String, Double, Double)]): String =
-    rows.map { case (k, w, r) =>
-      "\"" + k + "\":{" + f""""value":$w%.3f,"vs_anchor":$r%.2f,""" +
-        "\"attribution\":\"" + retryAttribution(r) + "\"}"
-    }.mkString("{", ",", "}")
-
-  /** Re-run each anchored suspect once with the tier's own sample
-    * budget, heap drained around it (the retry must neither inherit the
-    * suite's residue nor leave its own). Suspects without an anchor row
-    * (nothing to ratio against) are skipped.
-    */
-  private[graft] def retrySuspects(spark: SparkSession, sampler: Sampler,
-                                   dir: String, suspects: Seq[String],
-                                   anchor: Map[String, Double], runs: Int,
-                                   cap: Int): Seq[(String, Double, Double)] =
-    suspects.flatMap { name =>
-      anchor.get(name).filter(_ > 0).map { a =>
-        drainHeap(spark)
-        sampler.warm(name, dir)
-        val ss = sampler.sampleQuery(name, dir, runs, cap)
-        drainHeap(spark)
-        val v = verdict(ss, sampler.probeFloor, sampler.memFloor)
-        (name, v.best.wall, v.best.wall / a)
-      }
+  private[graft] def retrySuspects(spark: SparkSession, sampler: Sampler, dir: String,
+      suspects: Seq[String], anchor: Map[String, Double], runs: Int,
+      cap: Int): Seq[(String, Double, Double)] =
+    suspects.filter(n => anchor.get(n).exists(_ > 0)).map { name =>
+      drainHeap(spark)
+      val ss = measureSet(spark, sampler, dir, runs, cap, Seq(name)).head.samples
+      val wall = verdict(ss, sampler.probeFloor, sampler.memFloor).best.wall
+      (name, wall, wall / anchor(name))
     }
 
-  /** Best-effort heap drain between queries/tiers, OUTSIDE every timed
-    * region: drop cached/pinned blocks, then give the ContextCleaner's
-    * weak-reference machinery a GC cycle to find dead broadcasts and
-    * shuffle state, and a moment to process them. BENCH_r13's sf1 d11
-    * row (26 s "converged", 11 s GC, vs 3.5 s in a fresh JVM on the same
-    * corpus) is the motivating failure: clearResidual alone frees RDD
-    * blocks but not the accumulated rest. A full System.gc pair costs
-    * ~0.1-0.3 s per call here — wall-only, never inside a sample.
+  /** Heap drain between queries, outside every timed region: drop cached
+    * plans and pinned RDDs (a returned localCheckpoint is a persisted RDD
+    * the CacheManager cannot see), then a GC pair with a pause between, so
+    * the ContextCleaner frees dead broadcasts and shuffle state. One query's
+    * residue must not slow the next.
     */
   private[graft] def drainHeap(spark: SparkSession): Unit = {
-    clearResidual(spark)
+    spark.sharedState.cacheManager.clearCache()
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
     System.gc()
     Thread.sleep(50) // let ContextCleaner drain its reference queue
     System.gc()
   }
 
-  /** Fork the sf1 tier into a fresh JVM (r14, verdict ask #1): launch
-    * `graft.BenchSf1` with THIS JVM's flags (-Xmx, --add-opens, -D) and
-    * classpath, inherit the environment (all SPARK_GRAFT_* knobs flow
-    * through), and read back the two JSON fragments it writes. The
-    * child's stdout/stderr go to a log file — the parent's stdout must
-    * stay clean for the driver's tail-scrape — whose tail is echoed to
-    * stderr on failure. Returns None on ANY failure (spawn error,
-    * timeout, nonzero exit, unreadable fragments) so the caller can fall
-    * back to the in-process path.
+  /** Run the sf1 and x10 tiers in a fresh JVM ([[BenchSf1]]) with this
+    * JVM's flags, classpath and environment (so the same knobs), and read
+    * back the JSON document it writes. The child's output goes to a log, echoed to stderr on
+    * failure, because this process's stdout must stay clean. This process
+    * owns the ~10× sf0.1 corpus dir, because a timed-out child dies by
+    * SIGKILL. Throws when the child fails to spawn, times out, exits
+    * nonzero or writes no tiers.
     */
-  private def runSf1Forked(sfDir: String, anchorPath: String)
-      : Option[(String, String, String)] = {
-    import scala.jdk.CollectionConverters._
-    val frag = java.nio.file.Files.createTempFile("graft_sf1_frag", ".json")
-    val log = java.nio.file.Files.createTempFile("graft_sf1_fork", ".log")
-    // the PARENT owns the blown-corpus dir: a timed-out child dies by
-    // SIGKILL with no chance to clean up, and the corpus is ~10x sf0.1
-    // on disk — leaked once per failed round it would fill /tmp
-    val corpusDir = java.nio.file.Files.createTempDirectory("graft_sf1").toString
+  private def runSf1Forked(sfDir: String): JsonNode = {
+    val out = Files.createTempFile("graft_sf1_out", ".json")
+    val log = Files.createTempFile("graft_sf1_fork", ".log")
+    val corpusDir = Files.createTempDirectory("graft_sf1").toString
+    def fail(why: String): Nothing = {
+      val tail = try Files.readAllLines(log).asScala.takeRight(15).mkString("\n")
+        catch { case _: Throwable => "<log unreadable>" }
+      System.err.println(s"[bench] $why (log tail):\n$tail")
+      throw new RuntimeException(why)
+    }
     try {
-      val javaBin = java.nio.file.Paths.get(
-        System.getProperty("java.home"), "bin", "java").toString
-      val jvmArgs = java.lang.management.ManagementFactory.getRuntimeMXBean
-        .getInputArguments.asScala.toSeq
+      val jvmArgs = ManagementFactory.getRuntimeMXBean.getInputArguments.asScala.toSeq
         .filterNot(a => a.startsWith("-agentlib") || a.startsWith("-javaagent"))
-      val cmd = Seq(javaBin) ++ jvmArgs ++
-        Seq("-cp", System.getProperty("java.class.path"),
-          "graft.BenchSf1", sfDir, frag.toString, anchorPath, corpusDir)
-      val pb = new ProcessBuilder(cmd.asJava)
-      pb.redirectErrorStream(true)
-      pb.redirectOutput(log.toFile)
-      val proc = pb.start()
-      val timeoutSec = sys.env.getOrElse("SPARK_GRAFT_SF1_TIMEOUT_SEC", "3000").toLong
-      val done = proc.waitFor(timeoutSec, java.util.concurrent.TimeUnit.SECONDS)
-      def logTail(): String = try {
-        val ls = java.nio.file.Files.readAllLines(log).asScala
-        ls.takeRight(15).mkString("\n")
-      } catch { case _: Throwable => "<log unreadable>" }
-      if (!done) {
+      val cmd = Seq(Paths.get(System.getProperty("java.home"), "bin", "java").toString) ++
+        jvmArgs ++ Seq("-cp", System.getProperty("java.class.path"),
+          "graft.BenchSf1", sfDir, out.toString, corpusDir)
+      val proc = new ProcessBuilder(cmd.asJava).redirectErrorStream(true)
+        .redirectOutput(log.toFile).start()
+      val timeoutSec = knob("SPARK_GRAFT_SF1_TIMEOUT_SEC", "3000").toLong
+      if (!proc.waitFor(timeoutSec, java.util.concurrent.TimeUnit.SECONDS)) {
         proc.destroyForcibly()
-        System.err.println(s"[bench] sf1 fork TIMED OUT after $timeoutSec s " +
-          s"(log tail):\n${logTail()}")
-        None
-      } else if (proc.exitValue() != 0) {
-        System.err.println(s"[bench] sf1 fork exited ${proc.exitValue()} " +
-          s"(log tail):\n${logTail()}")
-        None
-      } else {
-        val lines = java.nio.file.Files.readAllLines(frag).asScala
-          .filter(_.nonEmpty)
-        if (lines.size >= 2)
-          Some((lines(0), lines(1), lines.lift(2).getOrElse("{}")))
-        else { System.err.println("[bench] sf1 fork wrote no fragments"); None }
+        fail(s"sf1 fork timed out after $timeoutSec s")
       }
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] sf1 fork failed to launch: $e")
-      None
+      if (proc.exitValue() != 0) fail(s"sf1 fork exited ${proc.exitValue()}")
+      val doc = om.readTree(out.toFile)
+      if (!doc.has("full")) fail("sf1 fork wrote no tiers")
+      doc
     } finally {
-      try java.nio.file.Files.deleteIfExists(frag) catch { case _: Throwable => () }
-      try java.nio.file.Files.deleteIfExists(log) catch { case _: Throwable => () }
+      Seq(out, log).foreach(f => try Files.deleteIfExists(f) catch { case _: Throwable => () })
       try graft.tools.Cleanup.deleteRecursively(corpusDir) catch { case _: Throwable => () }
     }
   }
 
-  /** Measure the sf1 tier over an already-built blown corpus `dir`:
-    * per-query untimed warmup, converge-or-cap sampling, per-query GC
-    * attribution, heap drain between queries. Shared verbatim by the
-    * forked sf1 process (the default) and the in-process fallback.
+  /** Warm, sample to convergence or `cap`, attribute GC and drain, per
+    * query of `set`: the loop of every tier.
     */
-  private[graft] def sf1Measure(spark: SparkSession, sampler: Sampler,
-                                qs: Map[String, (SparkSession, String) => DataFrame],
-                                dir: String, sf1Runs: Int,
-                                sf1Cap: Int): Seq[(String, Seq[Sample], Long)] = {
-    // warm the new dir's table registrations outside the timed region
-    sampler.warm("q10_tpch_q1", dir)
-    // SPARK_GRAFT_SF1_ONLY narrows the tier for local iteration (the
-    // SPARK_GRAFT_ONLY pattern); the driver never sets it, so the
-    // per-round bench always measures the full tier
-    val only1 = sys.env.get("SPARK_GRAFT_SF1_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    measureSet(spark, sampler, dir, sf1Runs, sf1Cap,
-      sf1Set.filter(qs.contains).filter(n => only1.forall(_.contains(n))))
-  }
-
-  /** The shared warm → converge-or-cap sample → gc-attribute → drain
-    * loop over an explicit query-name set ([[sf1Measure]], the x10
-    * scaling tier).
-    */
-  private[graft] def measureSet(spark: SparkSession, sampler: Sampler,
-                                dir: String, runs: Int, cap: Int,
-                                set: Seq[String]): Seq[(String, Seq[Sample], Long)] =
+  private[graft] def measureSet(spark: SparkSession, sampler: Sampler, dir: String, runs: Int,
+      cap: Int, set: Seq[String]): Seq[Row] =
     set.map { n =>
-      sampler.warm(n, dir) // untimed per-query warmup
+      sampler.warm(n, dir)
       val g0 = gcMs
-      val ss = sampler.sampleQuery(n, dir, runs, math.max(runs, cap))
-      val gq = gcMs - g0
-      drainHeap(spark) // r12: no residue across sf1 queries; r14: full drain
-      (n, ss, gq)
+      val row = Row(n, sampler.sampleQuery(n, dir, runs, math.max(runs, cap)), gcMs - g0)
+      drainHeap(spark)
+      row
     }
-
-  /** Render the x10 scaling tier's fragment — ONE JSON OBJECT line the
-    * parent splices into the headline `queries` map (names prefixed
-    * `x10_`).
-    */
-  private[graft] def x10Render(triples: Seq[(String, Seq[Sample], Long)],
-                               probeFloor: Double, memFloor: Double): String = {
-    val vsX = triples.map { case (n, ss, _) =>
-      ("x10_" + n) -> verdict(ss, probeFloor, memFloor) }
-    val sx = triples.map { case (n, ss, _) => ("x10_" + n) -> ss }
-    s"""{"queries_x10":${numMap(vsX.map { case (k, v) => k -> v.best.wall })},""" +
-      s""""samples_x10":${samplesMap(sx)},""" +
-      s""""codegen_compiles_x10":${compilesMap(sx)},""" +
-      s""""converged_x10":${boolMap(vsX.map { case (k, v) => k -> v.converged })},""" +
-      s""""unconverged_x10":${nameList(vsX.collect {
-        case (k, v) if !v.converged && !v.contended && !v.gcThrash => k })},""" +
-      s""""contended_x10":${nameList(vsX.collect { case (k, v) if v.contended => k })},""" +
-      s""""gc_thrash_x10":${nameList(vsX.collect { case (k, v) if v.gcThrash => k })}}"""
-  }
-
-  /** Parse an [[x10Render]] fragment back into (per-query seconds,
-    * unconverged names, contended names) — textual, like [[anchorMap]]
-    * (the fragment is this file's own output format). An empty/absent
-    * fragment parses to empty.
-    */
-  private[graft] def parseX10(line: String): (Seq[(String, Double)], Seq[String], Seq[String]) = {
-    def mapAt(key: String): Seq[(String, Double)] = {
-      val at = line.indexOf("\"" + key + "\":{")
-      if (at < 0) Seq.empty
-      else {
-        val open = line.indexOf('{', at + key.length + 3)
-        val body = line.substring(open + 1, line.indexOf('}', open))
-        """"([A-Za-z0-9_]+)":([0-9.eE+\-]+)""".r.findAllMatchIn(body)
-          .map(m => m.group(1) -> m.group(2).toDouble).toSeq
-      }
-    }
-    def listAt(key: String): Seq[String] = {
-      val at = line.indexOf("\"" + key + "\":[")
-      if (at < 0) Seq.empty
-      else {
-        val open = line.indexOf('[', at + key.length + 3)
-        val body = line.substring(open + 1, line.indexOf(']', open))
-        """"([A-Za-z0-9_]+)"""".r.findAllMatchIn(body).map(_.group(1)).toSeq
-      }
-    }
-    (mapAt("queries_x10"), listAt("unconverged_x10"), listAt("contended_x10"))
-  }
-
-  /** Render the sf1 tier's (full, compact) JSON fragments — both start
-    * with "," and splice directly after the headline fields. `retryRun`
-    * (r16, verdict ask #2) receives the tier's suspect names and
-    * returns (name, retryWall, retryRatio) rows — callers wire it to
-    * [[retrySuspects]] so suspect sf1 rows carry an in-record retry
-    * like the headline tier's; the default records none (unit tests,
-    * anchorless runs).
-    */
-  private[graft] def sf1Render(triples1: Seq[(String, Seq[Sample], Long)],
-                               probeFloor: Double,
-                               anchorQ1: Map[String, Double],
-                               shortOf: String => String,
-                               gcTier: Long, forked: Boolean,
-                               retryRun: Seq[String] => Seq[(String, Double, Double)] =
-                                 _ => Seq.empty,
-                               memFloor: Double = Double.PositiveInfinity,
-                               prevAnchorQ1: Map[String, Double] = Map.empty): (String, String) = {
-    val r1 = triples1.map { case (n, ss, _) => n -> ss }
-    val gcQ1 = triples1.map { case (n, _, g) => n -> g.toInt }
-    val v1 = r1.map { case (k, ss) => k -> verdict(ss, probeFloor, memFloor) }
-    def ratios(cur: Seq[(String, Double)], anchor: Map[String, Double]): Seq[(String, Double)] =
-      cur.collect { case (k, v) if anchor.get(k).exists(_ > 0) => k -> v / anchor(k) }
-    val vsAnchor1 = ratios(v1.map { case (k, v) => k -> v.best.wall }, anchorQ1)
-    val vsPrev1 = ratios(v1.map { case (k, v) => k -> v.best.wall }, prevAnchorQ1)
-    // suspect = over 2× the committed anchor, OR nothing but gc-thrash
-    // samples, OR (r17, verdict ask #2; bar 1.5× → 1.3× in r18, verdict
-    // ask #3 — j04's unconverged record escaped two rounds running)
-    // unconverged/contended at ≥1.3× anchor. Either way the row is not
-    // evidence of a regression-free (or regressed) engine on its own.
-    val suspects1 = (vsAnchor1.collect { case (k, r) if r > 2.0 => k } ++
-      v1.collect { case (k, v) if v.gcThrash => k } ++
-      vsAnchor1.collect { case (k, r)
-        if r >= 1.3 && v1.exists { case (k2, v) =>
-          k2 == k && (!v.converged || v.contended) } => k }).distinct
-    val retried = retryRun(suspects1)
-    val q1 = numMap(v1.map { case (k, v) => k -> v.best.wall })
-    val t1 = v1.map(_._2.best.wall).sum
-    val full =
-      f""","queries_sf1":$q1,"samples_sf1":${samplesMap(r1)},"probes_sf1":${probesMap(r1)},"mem_probes_sf1":${memProbesMap(r1)},"codegen_compiles_sf1":${compilesMap(r1)},"converged_sf1":${boolMap(v1.map { case (k, v) => k -> v.converged })},"contended_sf1":${boolMap(v1.map { case (k, v) => k -> v.contended })},"gc_thrash_sf1":${boolMap(v1.map { case (k, v) => k -> v.gcThrash })},"rejected_sf1":${intMap(v1.map { case (k, v) => k -> v.rejected })},"gc_rejected_sf1":${intMap(v1.map { case (k, v) => k -> v.gcRejected })},"total_sf1":$t1%.3f,"gc_ms_sf1":$gcTier,"gc_q_ms_sf1":${intMap(gcQ1)},"vs_anchor_sf1":${numMap2(vsAnchor1)},"vs_prev_anchor_sf1":${numMap2(vsPrev1)},"suspect_sf1":${nameList(suspects1)},"retry_sf1":${retryJson(retried)},"sf1_forked":$forked"""
-    val compact = f""","queries_sf1":$q1,"total_sf1":$t1%.3f""" +
-      s""","contended_sf1":${nameList(v1.collect { case (k, v) if v.contended => shortOf(k) })}""" +
-      s""","gc_thrash_sf1":${nameList(v1.collect { case (k, v) if v.gcThrash => shortOf(k) })}""" +
-      s""","unconverged_sf1":${nameList(v1.collect { case (k, v) if !v.converged && !v.contended && !v.gcThrash => shortOf(k) })}""" +
-      s""","vs_anchor_sf1":${numMap2(vsAnchor1.map { case (k, v) => shortOf(k) -> v })},"suspect_sf1":${nameList(suspects1.map(shortOf))}""" +
-      s""","retry_sf1":${numMap2(retried.map { case (k, _, r) => shortOf(k) -> r })}"""
-    (full, compact)
-  }
 
   /** 10×-blown corpus in the standard `<dir>/<table>.parquet` layout so
     * the SAME query closures run unchanged against it. Facts blow with
@@ -1085,8 +691,7 @@ object Bench {
     */
   private[graft] def buildSf1(spark: SparkSession, sfDir: String,
                               intoDir: Option[String] = None): String = {
-    val tmp = intoDir.getOrElse(
-      java.nio.file.Files.createTempDirectory("graft_sf1").toString)
+    val tmp = intoDir.getOrElse(Files.createTempDirectory("graft_sf1").toString)
     val f = 10
     def read(t: String) = spark.read.parquet(s"$sfDir/$t.parquet")
     def blow(df: DataFrame, offs: Map[String, Long]): DataFrame =
@@ -1135,74 +740,48 @@ object Bench {
   }
 }
 
-/** The sf1 tier as a standalone main, launched by [[Bench]] in a FRESH
-  * JVM (r14, verdict ask #1) so the 10×-corpus measurements never run
-  * on a heap the 42-row headline tier has already filled. args:
-  * (0) the base sf dir (e.g. /root/testdata/sf0.1), (1) the fragment
-  * output file — line 1 the full JSON fragment, line 2 the compact one,
-  * both starting with "," — and (2) the anchor artifact path. All
-  * SPARK_GRAFT_* knobs arrive via the inherited environment. Exits
-  * nonzero on any failure; the parent falls back to in-process.
+/** The sf1 and x10 tiers as a standalone main, launched by [[Bench]] in a
+  * fresh JVM so the 10×-corpus measurements never share a heap with the
+  * headline tier. args: the base sf dir, the output file, and the dir to
+  * build the corpus in, which the parent owns and cleans up. Writes one JSON document,
+  * `{"full":…,"compact":…,"x10":…}`; knobs arrive through the inherited
+  * environment. Exits nonzero on any failure.
   */
 object BenchSf1 {
+  import Bench._
+
   def main(args: Array[String]): Unit = {
-    require(args.length == 3 || args.length == 4,
-      s"BenchSf1 <sfDir> <fragOut> <anchorPath> [corpusDir], got ${args.toSeq}")
-    val sfDir = args(0); val fragOut = args(1); val anchorPath = args(2)
-    // when the parent supplies the corpus dir it also OWNS its cleanup
-    // (this process can die by SIGKILL on the parent's timeout)
-    val parentDir = args.lift(3)
-    val sf1Runs = sys.env.getOrElse("SPARK_GRAFT_SF1_RUNS", "3").toInt
-    require(sf1Runs >= 1, s"SPARK_GRAFT_SF1_RUNS must be >= 1, got $sf1Runs")
-    val sf1Cap = sys.env.getOrElse("SPARK_GRAFT_SF1_MAX_RUNS", "12").toInt
-    val spark = Bench.benchSession()
+    require(args.length == 3, s"BenchSf1 <sfDir> <out> <corpusDir>, got ${args.toSeq}")
+    val Array(sfDir, out, corpusDir) = args
+    val runs = knob("SPARK_GRAFT_SF1_RUNS", "3").toInt
+    require(runs >= 1, s"SPARK_GRAFT_SF1_RUNS must be >= 1, got $runs")
+    // a higher cap than the headline's: on the fresh 10× corpus JIT and the
+    // page cache keep warming across runs
+    val cap = math.max(runs, knob("SPARK_GRAFT_SF1_MAX_RUNS", "12").toInt)
+    // narrows the sf1 tier for local iteration and skips the x10 tier
+    val only = knobSet("SPARK_GRAFT_SF1_ONLY")
+    val spark = benchSession()
     val qs = SparkEntry.queries
-    val sampler = new Bench.Sampler(spark, qs)
-    val gc1 = Bench.gcMs
-    val dir = Bench.buildSf1(spark, sfDir, parentDir)
+    val sampler = new Sampler(spark, qs)
+    val gc1 = gcMs
+    val dir = buildSf1(spark, sfDir, Some(corpusDir))
     try {
-      val triples1 = Bench.sf1Measure(spark, sampler, qs, dir, sf1Runs, sf1Cap)
-      // ratios only against an anchor measured at this base scale factor
-      val anchorQ1 =
-        if (Bench.anchorSfDir(anchorPath).contains(sfDir))
-          Bench.anchorMap(anchorPath, "queries_sf1")
-        else Map.empty[String, Double]
-      // the prev-anchor knob flows through the inherited environment,
-      // same default as the parent (r17)
-      val prevAnchorPath = sys.env.getOrElse("SPARK_GRAFT_PREV_ANCHOR",
-        "BENCH_anchor_r16.json")
-      val prevQ1 =
-        if (Bench.anchorSfDir(prevAnchorPath).contains(sfDir))
-          Bench.anchorMap(prevAnchorPath, "queries_sf1")
-        else Map.empty[String, Double]
-      val short = Bench.shortNames((Bench.headline ++ Bench.sf1Set).distinct)
-      val (full, compact) = Bench.sf1Render(triples1, sampler.probeFloor,
-        anchorQ1, n => short.getOrElse(n, n), Bench.gcMs - gc1, forked = true,
-        retryRun = sus => Bench.retrySuspects(spark, sampler, dir, sus,
-          anchorQ1, sf1Runs, math.max(sf1Runs, sf1Cap)),
-        memFloor = sampler.memFloor, prevAnchorQ1 = prevQ1)
-      // r18 (verdict ask #7): the 10× SCALING tier rides this fork (same
-      // corpus, same fresh heap) — line 3 of the fragment; the parent
-      // splices it into the headline `queries` map as x10_<name> rows.
-      // SPARK_GRAFT_X10=0 skips it; a narrowed SPARK_GRAFT_SF1_ONLY
-      // iteration run skips it too.
-      val wantX10 = sys.env.getOrElse("SPARK_GRAFT_X10", "1") != "0" &&
-        sys.env.get("SPARK_GRAFT_SF1_ONLY").isEmpty
-      val x10Line =
-        if (!wantX10) "{}"
-        else Bench.x10Render(
-          Bench.measureSet(spark, sampler, dir, sf1Runs, sf1Cap,
-            Bench.x10Set.filter(qs.contains)),
-          sampler.probeFloor, sampler.memFloor)
-      java.nio.file.Files.write(java.nio.file.Paths.get(fragOut),
-        (full + "\n" + compact + "\n" + x10Line + "\n")
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    } finally {
-      if (parentDir.isEmpty) graft.tools.Cleanup.deleteRecursively(dir)
-      spark.stop()
-    }
-    // local-mode Spark occasionally leaves non-daemon threads; the
-    // parent reads only the fragment file, so exit decisively
+      sampler.warm("q10_tpch_q1", dir) // the new dir's table registrations
+      val rows = measureSet(spark, sampler, dir, runs, cap,
+        sf1Set.filter(qs.contains).filter(n => only.forall(_.contains(n))))
+      val gcTier = gcMs - gc1
+      val anchorQ1 = anchorMap(anchorPath, "queries_sf1", sfDir)
+      val tier = summarize(rows, sampler.probeFloor, sampler.memFloor, anchorQ1,
+        anchorMap(prevAnchorPath, "queries_sf1", sfDir),
+        sus => retrySuspects(spark, sampler, dir, sus, anchorQ1, runs, cap))
+      val (full, compact) = sf1Nodes(tier, shortOf, gcTier, forked = true)
+      val x10 = if (only.isDefined) obj(Nil) else x10Node(measureSet(spark, sampler, dir, runs,
+        cap, x10Set.filter(qs.contains)), sampler.probeFloor, sampler.memFloor)
+      Files.write(Paths.get(out),
+        write(obj(Seq("full" -> full, "compact" -> compact, "x10" -> x10))).getBytes(UTF_8))
+    } finally spark.stop()
+    // local-mode Spark occasionally leaves non-daemon threads; the parent
+    // reads only the output file, so exit decisively
     sys.exit(0)
   }
 }
