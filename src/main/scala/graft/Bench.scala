@@ -686,12 +686,11 @@ object Bench {
     * linear); documents append a per-replica token (near-dup structure
     * per content group stays bounded: 10-doc sibling groups); embeddings
     * cyclic-shift (norm-preserving, replicas ~orthogonal → constant dup
-    * rate); dims copy as-is. Written ONCE per bench run; the write is
-    * outside every timed region.
+    * rate); dims copy as-is. Written ONCE per bench run into `corpusDir`,
+    * which the caller owns and deletes; the write is outside every timed
+    * region.
     */
-  private[graft] def buildSf1(spark: SparkSession, sfDir: String,
-                              intoDir: Option[String] = None): String = {
-    val tmp = intoDir.getOrElse(Files.createTempDirectory("graft_sf1").toString)
+  private[graft] def buildSf1(spark: SparkSession, sfDir: String, corpusDir: String): String = {
     val f = 10
     def read(t: String) = spark.read.parquet(s"$sfDir/$t.parquet")
     def blow(df: DataFrame, offs: Map[String, Long]): DataFrame =
@@ -710,14 +709,14 @@ object Bench {
       // realistic shape of a dimension growing with the fact table.
       ("customer", Map("c_custkey" -> 10000000L))
     ).foreach { case (t, offs) =>
-      blow(read(t), offs).write.mode("overwrite").parquet(s"$tmp/$t.parquet")
+      blow(read(t), offs).write.mode("overwrite").parquet(s"$corpusDir/$t.parquet")
     }
     (0 until f).map(i => read("documents")
         .select((col("doc_id") + lit(i * 1000000L)).as("doc_id"),
           concat(col("text"), lit(" v" + i)).as("text"),
           col("lang"), col("source"), col("n_chars")))
       .reduce(_ unionAll _)
-      .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
+      .write.mode("overwrite").parquet(s"$corpusDir/documents.parquet")
     (0 until f).map { i =>
       val emb = read("embeddings")
       val rot =
@@ -727,16 +726,16 @@ object Bench {
       emb.select((col("vec_id") + lit(i * 1000000L)).as("vec_id"),
         rot.as("embedding"), col("label"))
     }.reduce(_ unionAll _)
-      .write.mode("overwrite").parquet(s"$tmp/embeddings.parquet")
+      .write.mode("overwrite").parquet(s"$corpusDir/embeddings.parquet")
     (0 until f).map(i => EntryShared.loadEvents(spark, sfDir)
         .select((col("event_id") + lit(i * 1000000000L)).as("event_id"),
           col("ts"), (col("user_id") + lit(i * 10000000L)).as("user_id"),
           col("event_type"), col("value"), col("props")))
       .reduce(_ unionAll _)
-      .write.mode("overwrite").parquet(s"$tmp/events.parquet")
+      .write.mode("overwrite").parquet(s"$corpusDir/events.parquet")
     Seq("region", "nation", "supplier").foreach(t =>
-      read(t).write.mode("overwrite").parquet(s"$tmp/$t.parquet"))
-    tmp
+      read(t).write.mode("overwrite").parquet(s"$corpusDir/$t.parquet"))
+    corpusDir
   }
 }
 
@@ -764,7 +763,7 @@ object BenchSf1 {
     val qs = SparkEntry.queries
     val sampler = new Sampler(spark, qs)
     val gc1 = gcMs
-    val dir = buildSf1(spark, sfDir, Some(corpusDir))
+    val dir = buildSf1(spark, sfDir, corpusDir)
     try {
       sampler.warm("q10_tpch_q1", dir) // the new dir's table registrations
       val rows = measureSet(spark, sampler, dir, runs, cap,

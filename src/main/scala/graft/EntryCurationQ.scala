@@ -513,9 +513,11 @@ private[graft] object EntryCurationQ {
         // K = 160 and the assignment takes the broadcast-join path
         // (past the 48-cell inline cutover) — the shape a real corpus
         // owner runs, and the bench row that replaced a05's
-        // JIT-shelf-bound degenerate kernel in the sf1 tier (a05 stays
-        // available as tools/ProbeA05's probe). Centroids are the first
-        // K vectors by vec_id, exactly replicable in SQL.
+        // JIT-shelf-bound degenerate kernel in the sf1 tier (a05 stays in
+        // the registry; `graft.tools.Profile --sf1` runs it). The shelf was
+        // measured with graft.tools' a05 probe main, deleted after c5df852:
+        // `git show c5df852:src/main/scala/graft/tools/`. Centroids are
+        // the first K vectors by vec_id, exactly replicable in SQL.
         val n = all.count()
         val k = math.max(16L, n / 125L)
         val centroids = all.filter(col("vec_id") < k).orderBy("vec_id")

@@ -784,7 +784,9 @@ private[graft] object EntryPipelineBQ {
             concat(col("text"), lit(" caf\u00e9")).as("text") +: keep: _*))
         val canon = variants.withColumn("text",
           functions.VectorFunctions.unicodeNormalize(col("text")))
-        // r14 (verdict ask #7, measured in P08Probe): BOTH multi-read
+        // r14 (verdict ask #7; measured with graft.tools' p08 probe main,
+        // deleted after c5df852:
+        // `git show c5df852:src/main/scala/graft/tools/`): BOTH multi-read
         // stages materialize once. The survivor frame feeds the budget
         // selector's regime-detection count plus its window pass; the
         // selection feeds matchDistribution's stats pass plus its two
@@ -1662,12 +1664,14 @@ private[graft] object EntryPipelineBQ {
         // Cells with (u+i)%4==0 are held out; ALS (rank 6 ≥ the true
         // matrix rank 3, 40 iters, reg 0.01, fixed seed) predicts them.
         // Output: top-1 held-out item per user, for users whose true
-        // best-vs-second margin ≥ 8 r10-units. Thresholds measured in
-        // tools/ProbeAls: at the pinned config max |pred − true| is 0.23
-        // rating units (2.3 r10), so even two worst-case errors (4.6)
-        // cannot invert an 8-unit margin; every user at margin ≥ 4
-        // already agreed, and the only disagreements were the margin-0
-        // exact ties (where argmax is genuinely arbitrary). Weaker
+        // best-vs-second margin ≥ 8 r10-units. Thresholds measured with
+        // graft.tools' ALS probe main, deleted after c5df852
+        // (`git show c5df852:src/main/scala/graft/tools/`): at the pinned
+        // config max |pred − true| is 0.23 rating units (2.3 r10), so
+        // even two worst-case errors (4.6) cannot invert an 8-unit
+        // margin; every user at margin ≥ 4 already agreed, and the only
+        // disagreements were the margin-0 exact ties (where argmax is
+        // genuinely arbitrary). Weaker
         // configs DO break this gate — rank 4 at 20 iters mis-ranks
         // 12/50 users — which is exactly the drift-detection the round-9
         // verdict asked for. The margin gate uses the TRUE integer

@@ -407,7 +407,9 @@ case class MatrixProject(child: Expression, matrix: Array[Array[Double]],
   * which is CodegenFallback and therefore disables whole-stage codegen
   * for the entire corpus-sized projection that derives the int8
   * sidecar. That interpreted stage is what put a11_ivf_int8_rerank on
-  * per-JVM C2-JIT shelves (r16 verdict ask #2 — ProbeA11 measured every
+  * per-JVM C2-JIT shelves (r16 verdict ask #2 — graft.tools' a11 probe
+  * main, deleted after c5df852
+  * (`git show c5df852:src/main/scala/graft/tools/`), measured every
   * fresh JVM descending 7 s → 2 s over 4-6 runs with wsc=0 in the
   * plan; the bench's warmup+3 samples land mid-descent, reproducing
   * the recorded 1.9-4.2 s bimodality).

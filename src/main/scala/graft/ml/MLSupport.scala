@@ -61,8 +61,10 @@ object MLSupport {
         // ALS doubles its RDD lineage every iteration; without a
         // checkpoint dir its own checkpointInterval=10 is silently
         // skipped and deserialization overflows the stack around ~20
-        // iters (observed in tools/ProbeAls). Mandatory for iterative
-        // ALS at any scale — set one if the session has none.
+        // iters (observed with graft.tools' ALS probe main, deleted after
+        // c5df852: `git show c5df852:src/main/scala/graft/tools/`).
+        // Mandatory for iterative ALS at any scale — set one if the
+        // session has none.
         val sc = df.sparkSession.sparkContext
         if (sc.getCheckpointDir.isEmpty)
           sc.setCheckpointDir(

@@ -221,31 +221,16 @@ object Dedup {
     spread(df.select(col(idCol).as("id"), col(textCol)))
       .select(col("id"), shingleExpr(textCol, shingleN).as("sh"))
 
-  /** k MinHash values per document as columns h0..h{k-1}.
-    *
-    * Implementation history (measured, not theoretical): a nested HOF
-    * array expression (array of k array_min(transform(...))) re-evaluates
-    * the interpreted shingle tree per reference — 10+ minutes for 500
-    * docs. Rounds 1-5 used explode → hash-once → partial-aggregated min
-    * (every heavy expression once per (doc, shingle), one k-long row per
-    * doc shuffled). Round 6 replaces that with ONE native codegen'd pass
-    * over the shingle array the row already holds
-    * (functions.MinHashAffine): same arithmetic, same minima, but no
-    * exploded rows, no aggregation hash map, and no signature shuffle at
-    * all — the first shuffle in the minhash pipeline is now the band
-    * self-join itself.
-    */
-  def minhashSignatures(df: DataFrame, textCol: String, idCol: String,
-                        shingleN: Int = 3, k: Int = 32): DataFrame =
-    minhashSignaturesFromShingles(shingled(df, textCol, idCol, shingleN), k)
-
-  /** Signatures from a precomputed (id, sh) frame: ONE native codegen'd
-    * pass per row over the shingle array (graft.functions.MinHashAffine)
-    * — no exploded (doc, shingle) rows, no aggregation hash map, no
-    * shuffle; the round-6 replacement for the explode→hash-once→
-    * partial-agg shape kept below as [[minhashSignaturesAgg]] (identical
-    * minima, TextExprSpec-pinned, so the d07/d10 DuckDB oracle replicas
-    * are unaffected).
+  /** k MinHash values per document as columns h0..h{k-1}, from a
+    * precomputed (id, sh) frame: ONE native codegen'd pass per row over
+    * the shingle array (graft.functions.MinHashAffine) — no exploded
+    * (doc, shingle) rows, no aggregation hash map, no shuffle; the
+    * round-6 replacement for the explode→hash-once→partial-agg shape kept
+    * below as [[minhashSignaturesAgg]] (identical minima, TextExprSpec-
+    * pinned, so the d07/d10 DuckDB oracle replicas are unaffected). A
+    * nested HOF array expression (k array_min(transform(...))) is no
+    * alternative: it re-evaluates the interpreted shingle tree per
+    * reference, 10+ minutes for 500 docs.
     */
   def minhashSignaturesFromShingles(sh: DataFrame, k: Int = 32): DataFrame =
     signaturesNative(sh, k, portable = false)
@@ -313,21 +298,6 @@ object Dedup {
     exploded.groupBy("id").agg(mins.head, mins.tail: _*)
   }
 
-  /** MinHash-LSH candidate pairs (id1 < id2), deduplicated across bands.
-    * Shuffle profile at scale: signature groupBy (1 row/doc out), one
-    * join keyed on (band, sig) — a short key — then a distinct on
-    * (id1, id2). No cartesian anywhere; band-bucket skew is AQE-split.
-    *
-    * Recall tuning: P(candidate | J) = 1 − (1 − J^r)^bands with
-    * r = k/bands. Defaults (k=32, bands=8, r=4): J=0.9→0.9996, 0.8→0.985,
-    * 0.7→0.89, 0.5→0.40 — sized for near-dup thresholds ≥0.7. For lower
-    * thresholds use more/narrower bands (bands=16, r=2 → 0.99 at J=0.5)
-    * at the price of more false-positive candidates to verify.
-    */
-  def minhashCandidates(df: DataFrame, textCol: String, idCol: String,
-                        shingleN: Int = 3, k: Int = 32, bands: Int = 8): DataFrame =
-    minhashCandidatesFromSignatures(minhashSignatures(df, textCol, idCol, shingleN, k), k, bands)
-
   /** (id, band, sig) band rows of a signature frame — the unit the LSH
     * self-join keys on, and the PERSISTED INDEX SHAPE for incremental
     * dedup (see [[incrementalMinhash]]): compact (bands rows per doc,
@@ -357,12 +327,19 @@ object Dedup {
       .distinct()
   }
 
-  /** Candidate pairs from a precomputed signature frame. EAGER: the result
-    * is `localCheckpoint`ed — this (a) lets the temporary band table be
+  /** MinHash-LSH candidate pairs (id1 < id2) from a precomputed signature
+    * frame, deduplicated across bands. EAGER: the result is
+    * `localCheckpoint`ed — this (a) lets the temporary band table be
     * unpersisted HERE instead of leaking into the caller's session
     * (round-1/2 advice), and (b) means the caller's multiple references to
     * the candidate set (members union + two verify joins) read materialized
     * rows instead of re-running the LSH join per reference.
+    *
+    * Recall tuning: P(candidate | J) = 1 − (1 − J^r)^bands with
+    * r = k/bands. Defaults (k=32, bands=8, r=4): J=0.9→0.9996, 0.8→0.985,
+    * 0.7→0.89, 0.5→0.40 — sized for near-dup thresholds ≥0.7. For lower
+    * thresholds use more/narrower bands (bands=16, r=2 → 0.99 at J=0.5)
+    * at the price of more false-positive candidates to verify.
     */
   def minhashCandidatesFromSignatures(sig: DataFrame, k: Int = 32, bands: Int = 8,
       bandSig: Seq[Column] => Column = cs => xxhash64(concat_ws(",", cs: _*))): DataFrame = {
@@ -415,7 +392,7 @@ object Dedup {
     * Jaccard → threshold filter. EAGER (localCheckpoint) so the shingle
     * cache can be released before returning — no persist leaks across
     * invocations. At extreme corpus scale where persisting shingle sets is
-    * too much storage, compose minhashCandidates + jaccardOnPairs instead
+    * too much storage, compose minhashCandidatesFromSignatures + jaccardOnPairs instead
     * (re-shingles candidate members only).
     */
   def minhashDedup(df: DataFrame, textCol: String, idCol: String,
@@ -533,7 +510,7 @@ object Dedup {
     * stores signatures, not shingles (storing corpus shingles would be
     * corpus-sized), so cross-batch decisions carry LSH's false-positive
     * rate — P(collision | J) = 1 − (1 − J^r)^bands, the same curve the
-    * caller tuned k/bands for (see [[minhashCandidates]]).
+    * caller tuned k/bands for (see [[minhashCandidatesFromSignatures]]).
     *
     * Returns (survivors of the batch, their band rows) — append the
     * band rows to the index for the next batch. Scale shape: the batch
@@ -647,7 +624,7 @@ object Dedup {
 
   /** nBits-wide SimHash fingerprints (id, fp): per bit, sum +1/−1 token
     * votes; sign per bit → fingerprint. Same explode-then-aggregate shape
-    * as minhashSignatures — each token hashed once, nBits codegen'd
+    * as [[minhashSignaturesAgg]] — each token hashed once, nBits codegen'd
     * conditional sums, one partial-aggregated shuffle of nBits longs per
     * doc. (A single nested-HOF expression re-splits the text per bit —
     * 64× the work — so don't "simplify" this back.)

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Content manifest for parquet corpora — the reproducibility/audit
@@ -95,12 +95,22 @@ object Manifest {
   def writeManifestFor(spark: SparkSession, path: String,
                        partitionDepth: Int = 0): DataFrame = {
     val summary = shardSummary(spark.read.parquet(path), partitionDepth)
-    val entries = summary.collect() // one row per FILE — config-sized
+    // one row per FILE — config-sized
+    storeManifest(spark, path, summary.collect(), "file", partitionDepth)
+    summary
+  }
+
+  /** Write the manifest JSON of the collected per-file entries (file name
+    * under `fileCol`, plus `rows`, `content_hash` and `content_sum`) to the
+    * corpus's [[ManifestFile]]: the corpus totals, then the shards by file.
+    */
+  private def storeManifest(spark: SparkSession, path: String, entries: Array[Row],
+                            fileCol: String, partitionDepth: Int): Unit = {
     val totalRows = entries.map(_.getAs[Long]("rows")).sum
     val corpusHash = entries.map(_.getAs[Long]("content_hash")).foldLeft(0L)(_ ^ _)
     val corpusSum = entries.map(r => BigInt(r.getAs[String]("content_sum"))).sum
-    val json = entries.sortBy(_.getAs[String]("file")).map { r =>
-      s"""{"file":"${r.getAs[String]("file")}","rows":${r.getAs[Long]("rows")},""" +
+    val json = entries.sortBy(_.getAs[String](fileCol)).map { r =>
+      s"""{"file":"${r.getAs[String](fileCol)}","rows":${r.getAs[Long]("rows")},""" +
         s""""content_hash":${r.getAs[Long]("content_hash")},""" +
         s""""content_sum":"${r.getAs[String]("content_sum")}"}"""
     }.mkString(
@@ -112,7 +122,6 @@ object Manifest {
     val out = fs.create(p, true)
     try out.write(json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
-    summary
   }
 
   /** [[writeWithManifest]] + stored column profile from ONE read-back
@@ -178,22 +187,7 @@ object Manifest {
           sum(col("__h").cast("decimal(38,0)")).cast("string").as("content_sum")) ++
           profAggs): _*)
       .collect()
-    // manifest JSON from the same collected rows writeManifestFor builds
-    val totalRows = entries.map(_.getAs[Long]("rows")).sum
-    val corpusHash = entries.map(_.getAs[Long]("content_hash")).foldLeft(0L)(_ ^ _)
-    val corpusSum = entries.map(r => BigInt(r.getAs[String]("content_sum"))).sum
-    val json = entries.sortBy(_.getAs[String]("__file")).map { r =>
-      s"""{"file":"${r.getAs[String]("__file")}","rows":${r.getAs[Long]("rows")},""" +
-        s""""content_hash":${r.getAs[Long]("content_hash")},""" +
-        s""""content_sum":"${r.getAs[String]("content_sum")}"}"""
-    }.mkString(
-      s"""{"total_rows":$totalRows,"corpus_hash":$corpusHash,"corpus_sum":"$corpusSum",""" +
-        s""""partition_depth":$depth,"shards":[""",
-      ",", "]}\n")
-    val mp = new org.apache.hadoop.fs.Path(path, ManifestFile)
-    val out = fs.create(mp, true)
-    try out.write(json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
+    storeManifest(spark, path, entries, "__file", depth)
     // per-(file, column) profile rows in Sketches.profile's exact schema
     import org.apache.spark.sql.types._
     val profSchema = StructType(Seq(

@@ -1,87 +1,215 @@
 package graft.tools
 
-import graft.core.DDFManager
-import graft.pipeline.{Dedup, Similarity, TextAnalysis}
-import org.apache.spark.sql.functions._
+import graft.{Bench, SparkEntry}
+import java.nio.file.{Files, Paths}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.ui.{SQLPlanMetric, SparkPlanGraphNode}
+import org.apache.spark.sql.graftbridge.Bridge
+import scala.collection.mutable
 
-/** Scratch profiler for the heavy pipeline queries (d02 minhash, a01
-  * brute ANN, t01 text enrich) — times each stage separately (3 runs
-  * each; min + all samples printed) so regressions are attributable and
-  * host-noise spikes are visible. Not part of the driver contract.
+/** The query profiler: runs registry queries by name in the bench's
+  * session and sink, and prints where each query's best run spent its
+  * time, read from Spark's own job and stage events and its SQL status
+  * store, so no query is hand-split or wrapped in a timer of its own.
+  *
+  * {{{
+  * runMain graft.tools.Profile [--sf1] [--plans <dir> <suffix>] <sfDir> <q1,q2,…>
+  * }}}
+  *
+  * Per query: every run's wall time and the minimum (`SPARK_GRAFT_RUNS`
+  * runs, default 3, at `SPARK_GRAFT_CPUS` cores); for the best run its
+  * job, stage and task counts and summed task time, each SQL execution it
+  * caused with its top physical nodes, each job outside any SQL execution
+  * by call site, and the join strategies of the AQE-final plans. `--sf1`
+  * runs on [[Bench.buildSf1]]'s 10× corpus, built in a temp dir and
+  * deleted afterwards. `--plans` writes `<dir>/<q>_<suffix>.txt`, the
+  * formatted AQE-final plan of every SQL execution of the best run, in
+  * order.
   */
 object Profile {
+
+  /** Jobs, completed stages, tasks, summed task run time and shuffle
+    * records written by a set of jobs.
+    */
+  final case class Work(jobs: Int, stages: Int, tasks: Long, taskMs: Long, shuffleRecords: Long) {
+    def +(o: Work): Work = Work(jobs + o.jobs, stages + o.stages, tasks + o.tasks,
+      taskMs + o.taskMs, shuffleRecords + o.shuffleRecords)
+  }
+  private val NoWork = Work(0, 0, 0L, 0L, 0L)
+  private def sum(ws: Iterable[Work]): Work = ws.foldLeft(NoWork)(_ + _)
+
+  /** A physical plan node's totals over its tasks: timing metrics summed,
+    * rows out, shuffle bytes written and spill bytes.
+    */
+  final case class Node(name: String, desc: String, ms: Double, rows: Double,
+      shuffleBytes: Double, spillBytes: Double)
+
+  /** One SQL execution: the first line of its description, its duration,
+    * the work of its jobs, its plan nodes and its formatted plan, the
+    * AQE-final one once it ended.
+    */
+  final case class Execution(id: Long, description: String, ms: Long, work: Work,
+      nodes: Seq[Node], plan: String)
+
+  /** One run of a body: its wall time, the work of all its jobs, the SQL
+    * executions it caused, and its jobs outside any SQL execution grouped
+    * by call site.
+    */
+  final case class Recording(wallS: Double, total: Work, executions: Seq[Execution],
+      outside: Seq[(String, Work)]) {
+    /** The work the executions and the outside jobs account for; equal to
+      * `total` when every job is attributed.
+      */
+    def attributed: Work = sum(executions.map(_.work) ++ outside.map(_._2))
+    /** Join node counts over the executions' plans, by strategy. */
+    def joins: Seq[(String, Int)] =
+      Seq("BroadcastHashJoin", "SortMergeJoin", "ShuffledHashJoin")
+        .map(j => j -> executions.map(_.nodes.count(_.name == j)).sum)
+  }
+
+  /** Every job started while attached, with its SQL execution id if it has
+    * one and its call site; a completed stage counts for the first job
+    * that lists it.
+    */
+  private final class Jobs extends SparkListener {
+    final class Job(val exec: Option[Long], val site: String) {
+      var work = Work(1, 0, 0L, 0L, 0L)
+    }
+    val jobs = mutable.LinkedHashMap.empty[Int, Job]
+    private val stageJob = mutable.HashMap.empty[Int, Int]
+
+    override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
+      val exec = Option(e.properties).flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+      jobs(e.jobId) = new Job(exec.map(_.toLong), e.stageInfos.maxBy(_.stageId).name)
+      e.stageIds.foreach(stageJob.getOrElseUpdate(_, e.jobId))
+    }
+
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit = synchronized {
+      val s = e.stageInfo
+      val m = Option(s.taskMetrics)
+      val w = Work(0, 1, s.numTasks, m.map(_.executorRunTime).getOrElse(0L),
+        m.map(_.shuffleWriteMetrics.recordsWritten).getOrElse(0L))
+      stageJob.get(s.stageId).flatMap(jobs.get).foreach(j => j.work += w)
+    }
+  }
+
+  /** Runs `body` once and records it. The listener bus is drained before
+    * and after, so the recording holds exactly the body's jobs and the
+    * status store holds the final metrics and plans of its executions.
+    */
+  def record(spark: SparkSession)(body: => Unit): Recording = {
+    val sc = spark.sparkContext
+    val store = spark.sharedState.statusStore
+    Bridge.drainListenerBus(sc)
+    val before = store.executionsList().map(_.executionId).maxOption.getOrElse(-1L)
+    val l = new Jobs
+    sc.addSparkListener(l)
+    val wallS =
+      try { val t0 = System.nanoTime(); body; (System.nanoTime() - t0) / 1e9 }
+      finally { Bridge.drainListenerBus(sc); sc.removeSparkListener(l) }
+    // the store writes an ended execution's final metrics on its own async
+    // writer, after the bus has delivered the end event
+    def ended = store.executionsList().filter(_.executionId > before)
+    val deadline = System.nanoTime() + 60000000000L
+    while (ended.exists(_.metricValues == null) && System.nanoTime() < deadline) Thread.sleep(5)
+    val jobs = l.synchronized(l.jobs.values.toSeq)
+    val executions = ended.sortBy(_.executionId).map { e =>
+      val values = store.executionMetrics(e.executionId)
+      // a reused exchange or cached plan lists its subtree once per use,
+      // with the same accumulators: keep the first
+      val nodes = store.planGraph(e.executionId).allNodes.distinctBy(n =>
+        if (n.metrics.isEmpty) Left(n.id) else Right(n.metrics.map(_.accumulatorId)))
+      Execution(e.executionId, e.description.linesIterator.nextOption().getOrElse(""),
+        e.completionTime.map(_.getTime - e.submissionTime).getOrElse(-1L),
+        sum(jobs.filter(_.exec.contains(e.executionId)).map(_.work)),
+        nodes.map(node(_, values)).toSeq, e.physicalPlanDescription)
+    }
+    val outside = jobs.filter(_.exec.isEmpty)
+    Recording(wallS, sum(jobs.map(_.work)), executions,
+      outside.map(_.site).distinct.map(s => s -> sum(outside.filter(_.site == s).map(_.work))))
+  }
+
+  private def node(n: SparkPlanGraphNode, values: Map[Long, String]): Node = {
+    def total(p: SQLPlanMetric => Boolean) =
+      n.metrics.filter(p).flatMap(m => values.get(m.accumulatorId)).map(amount).sum
+    Node(n.name, n.desc, total(m => m.metricType == "timing" || m.metricType == "nsTiming"),
+      total(_.name == "number of output rows"), total(_.name == "shuffle bytes written"),
+      total(_.name == "spill size"))
+  }
+
+  private val Units = Map("" -> 1.0, "B" -> 1.0, "KiB" -> 1024.0, "MiB" -> 1048576.0,
+    "GiB" -> 1073741824.0, "TiB" -> 1099511627776.0, "ms" -> 1.0, "s" -> 1e3, "m" -> 6e4,
+    "h" -> 3.6e6)
+
+  /** A status-store metric string in its base unit (rows, bytes or ms):
+    * the total, alone or first on the last line of the
+    * "total (min, med, max …)" form.
+    */
+  private def amount(s: String): Double = {
+    val t = s.linesIterator.toSeq.last.takeWhile(_ != '(').trim.replace(",", "").split(' ')
+    t.head.toDouble * Units.getOrElse(t.lift(1).getOrElse(""), sys.error(s"unparsed metric '$s'"))
+  }
+
+  private val TopNodes = 6
+
+  private def report(q: String, runs: Seq[Recording], best: Recording): Unit = {
+    def p(s: String): Unit = println(s"[profile] $s")
+    def work(w: Work) =
+      f"${w.jobs} jobs, ${w.stages} stages, ${w.tasks} tasks, task ${w.taskMs / 1e3}%.2f s"
+    val mib = 1048576.0
+    p(f"$q wall ${runs.map(r => f"${r.wallS}%.3f").mkString(" ")}  min ${best.wallS}%.3f s")
+    p(s"  best run: ${work(best.total)}, shuffle ${best.total.shuffleRecords} records; " +
+      s"${best.executions.size} sql executions, ${best.outside.map(_._2.jobs).sum} jobs outside; " +
+      s"attributed ${best.attributed.jobs} of ${best.total.jobs} jobs")
+    p("  joins: " + best.joins.map { case (j, n) => s"$j $n" }.mkString(", "))
+    best.executions.foreach { e =>
+      p(f"  sql ${e.id} ${e.ms / 1e3}%.3f s, ${work(e.work)}: ${e.description}")
+      e.nodes.filter(n => n.ms + n.rows + n.shuffleBytes + n.spillBytes > 0)
+        .sortBy(n => (-n.ms, -n.rows, -n.shuffleBytes, -n.spillBytes)).take(TopNodes)
+        .foreach(n => p(f"    ${n.ms / 1e3}%8.3f s ${n.rows}%12.0f rows " +
+          f"${n.shuffleBytes / mib}%9.2f MiB shuffle ${n.spillBytes / mib}%8.2f MiB spill  " +
+          n.name))
+    }
+    best.outside.foreach { case (site, w) => p(s"  outside sql: ${work(w)}: $site") }
+  }
+
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = DDFManager.localSession(32)
-
-    def timed[T](name: String)(f: => T): T = {
-      var last: Option[T] = None
-      val samples = (1 to 3).map { _ =>
-        val t0 = System.nanoTime()
-        last = Some(f)
-        (System.nanoTime() - t0) / 1e9
+    val usage = "Profile [--sf1] [--plans <dir> <suffix>] <sfDir> <q1,q2,…>"
+    def parse(as: List[String], sf1: Boolean, plans: Option[(String, String)])
+        : (Boolean, Option[(String, String)], String, Seq[String]) = as match {
+      case "--sf1" :: rest => parse(rest, sf1 = true, plans)
+      case "--plans" :: dir :: suffix :: rest => parse(rest, sf1, Some((dir, suffix)))
+      case List(sfDir, qs) => (sf1, plans, sfDir, qs.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
+      case _ => throw new IllegalArgumentException(s"usage: $usage; got ${args.mkString(" ")}")
+    }
+    val (sf1, plans, sfDir, names) = parse(args.toList, sf1 = false, None)
+    val unknown = names.filterNot(SparkEntry.queries.contains)
+    require(unknown.isEmpty, s"not in the query registry: ${unknown.mkString(", ")}")
+    val runs = Bench.knob("SPARK_GRAFT_RUNS", "3").toInt
+    require(runs >= 1, s"SPARK_GRAFT_RUNS must be >= 1, got $runs")
+    val spark = Bench.benchSession()
+    val dir = if (sf1) Files.createTempDirectory("graft_sf1").toString else sfDir
+    try {
+      if (sf1) Bench.buildSf1(spark, sfDir, dir)
+      names.foreach { q =>
+        val recs = (1 to runs).map { _ =>
+          Bench.drainHeap(spark)
+          record(spark)(Bench.materialize(SparkEntry.queries(q)(spark, dir)))
+        }
+        val best = recs.minBy(_.wallS)
+        report(q, recs, best)
+        plans.foreach { case (out, suffix) =>
+          val path = Paths.get(out, s"${q}_$suffix.txt")
+          Files.createDirectories(path.getParent)
+          Files.writeString(path, best.executions
+            .map(e => s"=== sql ${e.id}: ${e.description}\n${e.plan}").mkString("\n"))
+          println(s"[profile]   wrote $path")
+        }
       }
-      println(f"[profile] $name%-28s min ${samples.min}%8.2f s   " +
-        samples.map(s => f"$s%.2f").mkString("(", ", ", ")"))
-      last.get
+    } finally {
+      if (sf1) Cleanup.deleteRecursively(dir)
+      spark.stop()
     }
-
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-    timed("docs read+count")(docs.count())
-
-    // --- d02 minhash stages ---
-    timed("shingled")(Dedup.shingled(docs, "text", "doc_id").count())
-    timed("signatures")(Dedup.minhashSignatures(docs, "text", "doc_id").count())
-    // candidates/full are EAGER (localCheckpoint inside) — time construction
-    timed("candidates")(Dedup.minhashCandidates(docs, "text", "doc_id").count())
-    timed("full_dedup")(Dedup.minhashDedup(docs, "text", "doc_id", threshold = 0.5).count())
-    spark.sharedState.cacheManager.clearCache()
-
-    // --- d11 incremental-minhash stages (50/50 split — the worst case:
-    // index and batch each hold half the corpus) ---
-    {
-      val old = docs.filter(col("doc_id") % 2 === 0)
-      val batch = docs.filter(col("doc_id") % 2 === 1)
-      timed("d11 index build")(Dedup.bandRows(
-        Dedup.minhashSignaturesFromShingles(Dedup.shingled(old, "text", "doc_id"))).count())
-      val index = Dedup.bandRows(
-        Dedup.minhashSignaturesFromShingles(Dedup.shingled(old, "text", "doc_id")))
-        .localCheckpoint()
-      timed("d11 probe (incl. in-batch)")(
-        Dedup.incrementalMinhash(batch, index, "text", "doc_id", threshold = 0.5)._1.count())
-      spark.sharedState.cacheManager.clearCache()
-    }
-
-    // --- t01 text-enrich stages ---
-    // count() lets Catalyst PRUNE the computed columns — force each
-    // metric to materialize by hashing it into an aggregate instead.
-    def force(df: org.apache.spark.sql.DataFrame): Long =
-      df.select(xxhash64(df.columns.map(col): _*).as("h"))
-        .agg(expr("bit_xor(h)")).collect()(0).getLong(0)
-    val toksCol = expr(TextAnalysis.tokensExpr("text")).as("__toks")
-    timed("t01 full select")(force(
-      TextAnalysis.enrich(docs, "text").select(col("doc_id"), col("token_count"),
-        col("subword_count"), col("lang_pred"), round(col("quality"), 6), col("fingerprint"))))
-    timed("tokens only")(force(docs.select(toksCol)))
-    timed("langId HOF (ref)")(force(docs.select(toksCol).select(TextAnalysis.langIdOf("__toks").as("v"))))
-    timed("langId native")(force(docs.select(toksCol).select(TextAnalysis.langIdCol(col("__toks")).as("v"))))
-    timed("subword only")(force(docs.select(toksCol).select(TextAnalysis.subwordCountEstimateOf("__toks").as("v"))))
-    timed("quality only")(force(docs.select(col("text"), toksCol)
-      .select(TextAnalysis.qualityScoreOf("text", "__toks").as("v"))))
-    timed("fingerprint only")(force(docs.select(TextAnalysis.fingerprintMd5("text").as("v"))))
-
-    // --- a01 brute ANN stages ---
-    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-      .select(col("vec_id"), expr("transform(embedding, x -> cast(x as double))").as("embedding"))
-    timed("emb cast+count")(emb.count())
-    val queries = emb.filter(col("vec_id") < 3).withColumnRenamed("vec_id", "qid")
-    timed("ann_brute")(
-      Similarity.bruteForceTopK(emb, queries, "embedding", "vec_id", "qid", 10).count())
-    val embF = spark.read.parquet(s"$sfDir/embeddings.parquet")
-    val queriesF = embF.filter(col("vec_id") < 3).withColumnRenamed("vec_id", "qid")
-    timed("ann_brute(float,no-cast)")(
-      Similarity.bruteForceTopK(embF, queriesF, "embedding", "vec_id", "qid", 10).count())
-
-    spark.stop()
   }
 }

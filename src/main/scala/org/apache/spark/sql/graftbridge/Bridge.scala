@@ -46,4 +46,10 @@ object Bridge {
     */
   def toScala(dt: org.apache.spark.sql.types.DataType): Any => Any =
     org.apache.spark.sql.catalyst.CatalystTypeConverters.createToScalaConverter(dt)
+
+  /** Blocks until every listener has handled every event posted so far
+    * (at most 60 s): `SparkContext.listenerBus` is `private[spark]`.
+    */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty(60000L)
 }

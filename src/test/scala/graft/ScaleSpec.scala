@@ -399,32 +399,17 @@ class ScaleSpec extends SparkTestBase {
       .withColumn("q", (col("id") * 37) % 1000)
       .withColumn("cost", (col("id") % 97) + 1)
     val order = Seq(col("q").desc, col("id").asc)
-    @volatile var shuffleRecords = 0L
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onStageCompleted(
-          sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-        val tm = sc.stageInfo.taskMetrics
-        if (tm != null) shuffleRecords += tm.shuffleWriteMetrics.recordsWritten
-      }
-    }
-    // drain in-flight events from earlier tests before counting
-    def waitBus(): Unit = {
-      val busM = spark.sparkContext.getClass.getMethod("listenerBus")
-      val bus = busM.invoke(spark.sparkContext)
-      bus.getClass.getMethods.find(m =>
-        m.getName == "waitUntilEmpty" && m.getParameterCount == 0)
-        .foreach(_.invoke(bus))
-    }
-    waitBus()
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    val rec = graft.tools.Profile.record(spark) {
       val got = operators.Views.budgetSelect(df, order, "cost", 600000L)
       got.write.format("noop").mode("overwrite").save() // the lazy filter too
-      waitBus()
-      assert(shuffleRecords == 0L,
-        s"sampled budgetSelect wrote $shuffleRecords shuffle records — " +
-          "the r18 shape must be map-only passes + driver finish")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    val shuffleRecords = rec.total.shuffleRecords
+    assert(shuffleRecords == 0L,
+      s"sampled budgetSelect wrote $shuffleRecords shuffle records — " +
+        "the r18 shape must be map-only passes + driver finish")
+    // two map-only driver collects (the pass-1 sample, the boundary
+    // range) and the sink's own job
+    assert(rec.total.jobs == 3, s"budgetSelect + sink ran ${rec.total.jobs} jobs, expected 3")
   }
 
   test("budgetSelectByGroup == per-group window; payload never rides the window") {
