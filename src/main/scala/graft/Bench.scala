@@ -9,7 +9,7 @@ import com.fasterxml.jackson.databind.node.{BooleanNode, DecimalNode, IntNode, L
 import java.lang.management.ManagementFactory
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import scala.jdk.CollectionConverters._
 
@@ -680,21 +680,25 @@ object Bench {
       row
     }
 
-  /** 10×-blown corpus in the standard `<dir>/<table>.parquet` layout so
-    * the SAME query closures run unchanged against it. Facts blow with
-    * per-replica key offsets (ScaleSmoke's recipe: join fan-outs stay
-    * linear); documents append a per-replica token (near-dup structure
-    * per content group stays bounded: 10-doc sibling groups); embeddings
-    * cyclic-shift (norm-preserving, replicas ~orthogonal → constant dup
-    * rate); dims copy as-is. Written ONCE per bench run into `corpusDir`,
-    * which the caller owns and deletes; the write is outside every timed
-    * region.
+  /** The corpus at `sfDir` blown up `factor`× into `corpusDir`, in the
+    * standard `<dir>/<table>.parquet` layout so the SAME query closures run
+    * unchanged against it; [[BenchSf1]] builds the sf1 and x10 tiers' corpus
+    * at factor 10. Facts blow with per-replica key offsets, so join
+    * fan-outs stay linear; documents append a per-replica token, so
+    * near-dup structure per content group stays bounded (`factor`-doc
+    * sibling groups); embeddings take replica `i` as the base rotated by
+    * `i` ([[rotated]]: norm-preserving, replicas ~orthogonal, so a constant
+    * dup rate); dims copy as-is. This is the recipe of the scaling smoke
+    * deleted after f1da5bb (`git show f1da5bb:src/main/scala/graft/tools/`),
+    * whose measurements SCALE.md keeps. Written once; the caller owns
+    * `corpusDir` and deletes it, and the write is outside every timed region.
     */
-  private[graft] def buildSf1(spark: SparkSession, sfDir: String, corpusDir: String): String = {
-    val f = 10
+  private[graft] def blowUp(spark: SparkSession, sfDir: String, corpusDir: String,
+      factor: Int): String = {
+    require(factor >= 1, s"blow-up factor must be >= 1, got $factor")
     def read(t: String) = spark.read.parquet(s"$sfDir/$t.parquet")
     def blow(df: DataFrame, offs: Map[String, Long]): DataFrame =
-      (0 until f).map(i => df.select(df.columns.map(c =>
+      (0 until factor).map(i => df.select(df.columns.map(c =>
         offs.get(c).map(o => (col(c) + lit(i * o)).as(c)).getOrElse(col(c))): _*))
         .reduce(_ unionAll _)
     Seq(
@@ -705,29 +709,24 @@ object Bench {
       // within a segment) grows with the corpus. The 10 M stride keeps
       // replica key ranges disjoint (no cross-replica edges) and leaves
       // the original custkeys intact, so orders→customer joins still
-      // match replica 0; the 9× extra customers are unmatched scan — the
+      // match replica 0; the extra customers are unmatched scan — the
       // realistic shape of a dimension growing with the fact table.
       ("customer", Map("c_custkey" -> 10000000L))
     ).foreach { case (t, offs) =>
       blow(read(t), offs).write.mode("overwrite").parquet(s"$corpusDir/$t.parquet")
     }
-    (0 until f).map(i => read("documents")
+    (0 until factor).map(i => read("documents")
         .select((col("doc_id") + lit(i * 1000000L)).as("doc_id"),
           concat(col("text"), lit(" v" + i)).as("text"),
           col("lang"), col("source"), col("n_chars")))
       .reduce(_ unionAll _)
       .write.mode("overwrite").parquet(s"$corpusDir/documents.parquet")
-    (0 until f).map { i =>
-      val emb = read("embeddings")
-      val rot =
-        if (i == 0) col("embedding")
-        else expr(s"concat(slice(embedding, ${i + 1}, size(embedding) - $i), " +
-          s"slice(embedding, 1, $i))")
-      emb.select((col("vec_id") + lit(i * 1000000L)).as("vec_id"),
-        rot.as("embedding"), col("label"))
-    }.reduce(_ unionAll _)
+    (0 until factor).map(i => read("embeddings")
+        .select((col("vec_id") + lit(i * 1000000L)).as("vec_id"),
+          rotated(i).as("embedding"), col("label")))
+      .reduce(_ unionAll _)
       .write.mode("overwrite").parquet(s"$corpusDir/embeddings.parquet")
-    (0 until f).map(i => EntryShared.loadEvents(spark, sfDir)
+    (0 until factor).map(i => EntryShared.loadEvents(spark, sfDir)
         .select((col("event_id") + lit(i * 1000000000L)).as("event_id"),
           col("ts"), (col("user_id") + lit(i * 10000000L)).as("user_id"),
           col("event_type"), col("value"), col("props")))
@@ -736,6 +735,16 @@ object Bench {
     Seq("region", "nation", "supplier").foreach(t =>
       read(t).write.mode("overwrite").parquet(s"$corpusDir/$t.parquet"))
     corpusDir
+  }
+
+  /** The `embedding` column cyclically shifted left by `shift` mod its
+    * length. A raw shift past the length would make the slice length
+    * negative and kill the job on the executor; modulo it, replicas `i`
+    * and `i + dim` share a rotation (distinct ids, equal vectors).
+    */
+  private[graft] def rotated(shift: Int): Column = {
+    val s = s"($shift % size(embedding))"
+    expr(s"concat(slice(embedding, $s + 1, size(embedding) - $s), slice(embedding, 1, $s))")
   }
 }
 
@@ -763,7 +772,7 @@ object BenchSf1 {
     val qs = SparkEntry.queries
     val sampler = new Sampler(spark, qs)
     val gc1 = gcMs
-    val dir = buildSf1(spark, sfDir, corpusDir)
+    val dir = blowUp(spark, sfDir, corpusDir, 10)
     try {
       sampler.warm("q10_tpch_q1", dir) // the new dir's table registrations
       val rows = measureSet(spark, sampler, dir, runs, cap,

@@ -514,7 +514,7 @@ private[graft] object EntryCurationQ {
         // (past the 48-cell inline cutover) — the shape a real corpus
         // owner runs, and the bench row that replaced a05's
         // JIT-shelf-bound degenerate kernel in the sf1 tier (a05 stays in
-        // the registry; `graft.tools.Profile --sf1` runs it). The shelf was
+        // the registry; `graft.tools.Profile --scale 10` runs it). The shelf was
         // measured with graft.tools' a05 probe main, deleted after c5df852:
         // `git show c5df852:src/main/scala/graft/tools/`. Centroids are
         // the first K vectors by vec_id, exactly replicable in SQL.

@@ -25,24 +25,9 @@ object Verify {
         failures(name) = s"${e.getClass.getName}: ${String.valueOf(e.getMessage).take(500)}"
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    writeJson(s"$outDir/oracle_sql.json", SparkEntry.oracleSql)
     if (failures.nonEmpty) {
-      val ej = failures.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-      Files.writeString(Paths.get(s"$outDir/errors.json"), ej)
+      writeJson(s"$outDir/errors.json", failures)
       System.err.println(s"[verify] ${failures.size}/${selected.size} queries failed")
     }
     spark.stop()
@@ -54,4 +39,10 @@ object Verify {
     // so exit decisively
     sys.exit(0)
   }
+
+  /** A name → string map as one JSON object, written by [[Bench]]'s Jackson
+    * writer: a tab or CR in an oracle's SQL must not break the reader.
+    */
+  private[graft] def writeJson(path: String, m: Iterable[(String, String)]): Unit =
+    Files.writeString(Paths.get(path), Bench.write(Bench.obj(m)))
 }

@@ -168,7 +168,8 @@ case class VectorCosine(left: Expression, right: Expression) extends VectorBinar
   * a |vecs| × |cells| joined ROW set through a partial aggregate — at
   * 200 k × 1 600 that is 320 M rows of row-iterator overhead for what
   * is arithmetically ~20 GFLOP of fused multiply-add (measured 78 s
-  * join vs ~2 s in-loop, ScaleSmoke a12 f=100). This expression keeps
+  * join vs ~2 s in-loop, a12 at f=100 in the scaling smoke deleted after
+  * f1da5bb: `git show f1da5bb:src/main/scala/graft/tools/`). This expression keeps
   * the flat argmax as ONE tight generated loop over a `double[]`
   * (dim-major) reference object: no literals in the tree, no join, no
   * per-pair row.

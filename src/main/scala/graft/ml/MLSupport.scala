@@ -64,11 +64,11 @@ object MLSupport {
         // iters (observed with graft.tools' ALS probe main, deleted after
         // c5df852: `git show c5df852:src/main/scala/graft/tools/`).
         // Mandatory for iterative ALS at any scale — set one if the
-        // session has none.
+        // session has none; Spark deletes it when the JVM exits.
         val sc = df.sparkSession.sparkContext
         if (sc.getCheckpointDir.isEmpty)
           sc.setCheckpointDir(
-            java.nio.file.Files.createTempDirectory("graft_als_ckpt").toString)
+            org.apache.spark.sql.graftbridge.Bridge.shutdownDeletedTempDir("graft_als_ckpt"))
         val est = new ALS()
           .setUserCol(params.getOrElse("userCol", "user").toString)
           .setItemCol(params.getOrElse("itemCol", "item").toString)

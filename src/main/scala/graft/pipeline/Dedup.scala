@@ -566,7 +566,8 @@ object Dedup {
         // the checkpoint each reference re-runs the LSH self-join — 3× the
         // dominant cost on dup-heavy batches (measured 42 s → 25 s at a
         // 25k/25k split of 10× sf0.1, and superlinear → linear scaling
-        // across 1×..10×, in tools/ScaleSmoke)
+        // across 1×..10×, in the scaling smoke deleted after f1da5bb:
+        // `git show f1da5bb:src/main/scala/graft/tools/`)
         val cand = candidatePairsFromBandRows(rows).localCheckpoint()
         val members = cand.select(col("id1").as("id"))
           .unionAll(cand.select(col("id2").as("id"))).distinct()

@@ -1,8 +1,10 @@
 package graft.tools
 
-/** Best-effort recursive delete for dev-tool temp directories (the
-  * blown-corpus parquet copies are gigabytes at f=10 and used to accrete
-  * across runs). Dev tools only — never called from operator code.
+/** Best-effort recursive delete of a temp directory, used on every path
+  * that writes scratch data: the registry's publish and stream queries'
+  * workspaces, the bench's and the profiler's blown corpora (gigabytes at
+  * factor 10), the benchmark's publish dir and the test specs. Never
+  * throws; a file it cannot delete stays.
   */
 object Cleanup {
   def deleteRecursively(dir: String): Unit =

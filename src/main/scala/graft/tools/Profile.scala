@@ -14,18 +14,25 @@ import scala.collection.mutable
   * store, so no query is hand-split or wrapped in a timer of its own.
   *
   * {{{
-  * runMain graft.tools.Profile [--sf1] [--plans <dir> <suffix>] <sfDir> <q1,q2,…>
+  * runMain graft.tools.Profile [--scale <f1,f2,…>] [--plans <dir> <suffix>] <sfDir> <q1,q2,…>
   * }}}
   *
   * Per query: every run's wall time and the minimum (`SPARK_GRAFT_RUNS`
   * runs, default 3, at `SPARK_GRAFT_CPUS` cores); for the best run its
   * job, stage and task counts and summed task time, each SQL execution it
   * caused with its top physical nodes, each job outside any SQL execution
-  * by call site, and the join strategies of the AQE-final plans. `--sf1`
-  * runs on [[Bench.buildSf1]]'s 10× corpus, built in a temp dir and
-  * deleted afterwards. `--plans` writes `<dir>/<q>_<suffix>.txt`, the
-  * formatted AQE-final plan of every SQL execution of the best run, in
-  * order.
+  * by call site, and the join strategies of the AQE-final plans.
+  *
+  * `--scale` runs the queries on [[Bench.blowUp]]'s corpus at each factor,
+  * built in a temp dir and deleted afterwards; `--scale 10` is the bench's
+  * sf1 corpus. With two or more factors a last line per query gives its
+  * min wall and the rows out of its `Scan` nodes at each factor, and the
+  * least-squares exponent b of t ≈ a·f^b: b ≈ 1 is linear, b < 1 means
+  * cores absorbed the growth, b near 2 is a pair explosion, and scan rows
+  * that stay flat mean the query's input does not grow with the corpus.
+  *
+  * `--plans` writes `<dir>/<q>_<suffix>.txt`, the formatted AQE-final plan
+  * of every SQL execution of the best run, in order (one corpus only).
   */
 object Profile {
 
@@ -174,42 +181,75 @@ object Profile {
     best.outside.foreach { case (site, w) => p(s"  outside sql: ${work(w)}: $site") }
   }
 
+  /** Rows out of a recording's `Scan` nodes: its storage reads and its scans of
+    * checkpointed RDDs.
+    */
+  private def scanRows(r: Recording): Double =
+    r.executions.flatMap(_.nodes).filter(_.name.startsWith("Scan")).map(_.rows).sum
+
+  /** Least-squares slope of log t over log f: the scaling exponent b. */
+  private def exponent(pts: Seq[(Int, Double)]): Double = {
+    val xy = pts.map { case (f, t) => (math.log(f.toDouble), math.log(t)) }
+    val n = xy.size
+    val (sx, sy) = (xy.map(_._1).sum, xy.map(_._2).sum)
+    val sxx = xy.map(p => p._1 * p._1).sum
+    val sxy = xy.map(p => p._1 * p._2).sum
+    (n * sxy - sx * sy) / (n * sxx - sx * sx)
+  }
+
   def main(args: Array[String]): Unit = {
-    val usage = "Profile [--sf1] [--plans <dir> <suffix>] <sfDir> <q1,q2,…>"
-    def parse(as: List[String], sf1: Boolean, plans: Option[(String, String)])
-        : (Boolean, Option[(String, String)], String, Seq[String]) = as match {
-      case "--sf1" :: rest => parse(rest, sf1 = true, plans)
-      case "--plans" :: dir :: suffix :: rest => parse(rest, sf1, Some((dir, suffix)))
-      case List(sfDir, qs) => (sf1, plans, sfDir, qs.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
+    val usage = "Profile [--scale <f1,f2,…>] [--plans <dir> <suffix>] <sfDir> <q1,q2,…>"
+    def parse(as: List[String], scale: Seq[Int], plans: Option[(String, String)])
+        : (Seq[Int], Option[(String, String)], String, Seq[String]) = as match {
+      case "--scale" :: fs :: rest => parse(rest, fs.split(",").map(_.trim.toInt).toSeq, plans)
+      case "--plans" :: dir :: suffix :: rest => parse(rest, scale, Some((dir, suffix)))
+      case List(sfDir, qs) => (scale, plans, sfDir, qs.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
       case _ => throw new IllegalArgumentException(s"usage: $usage; got ${args.mkString(" ")}")
     }
-    val (sf1, plans, sfDir, names) = parse(args.toList, sf1 = false, None)
+    val (scale, plans, sfDir, names) = parse(args.toList, Nil, None)
     val unknown = names.filterNot(SparkEntry.queries.contains)
     require(unknown.isEmpty, s"not in the query registry: ${unknown.mkString(", ")}")
+    require(plans.isEmpty || scale.size <= 1, "--plans takes one corpus: give --scale one factor")
     val runs = Bench.knob("SPARK_GRAFT_RUNS", "3").toInt
     require(runs >= 1, s"SPARK_GRAFT_RUNS must be >= 1, got $runs")
     val spark = Bench.benchSession()
-    val dir = if (sf1) Files.createTempDirectory("graft_sf1").toString else sfDir
+
+    // each query's min wall and scan rows on the corpus at `dir`
+    def profile(dir: String): Map[String, (Double, Double)] = names.map { q =>
+      val recs = (1 to runs).map { _ =>
+        Bench.drainHeap(spark)
+        record(spark)(Bench.materialize(SparkEntry.queries(q)(spark, dir)))
+      }
+      val best = recs.minBy(_.wallS)
+      report(q, recs, best)
+      plans.foreach { case (out, suffix) =>
+        val path = Paths.get(out, s"${q}_$suffix.txt")
+        Files.createDirectories(path.getParent)
+        Files.writeString(path, best.executions
+          .map(e => s"=== sql ${e.id}: ${e.description}\n${e.plan}").mkString("\n"))
+        println(s"[profile]   wrote $path")
+      }
+      q -> (best.wallS, scanRows(best))
+    }.toMap
+
     try {
-      if (sf1) Bench.buildSf1(spark, sfDir, dir)
-      names.foreach { q =>
-        val recs = (1 to runs).map { _ =>
-          Bench.drainHeap(spark)
-          record(spark)(Bench.materialize(SparkEntry.queries(q)(spark, dir)))
+      if (scale.isEmpty) profile(sfDir)
+      else {
+        val byFactor = scale.map { f =>
+          val dir = Files.createTempDirectory(s"graft_scale$f").toString
+          try {
+            Bench.blowUp(spark, sfDir, dir, f)
+            println(s"[profile] factor $f")
+            f -> profile(dir)
+          } finally Cleanup.deleteRecursively(dir)
         }
-        val best = recs.minBy(_.wallS)
-        report(q, recs, best)
-        plans.foreach { case (out, suffix) =>
-          val path = Paths.get(out, s"${q}_$suffix.txt")
-          Files.createDirectories(path.getParent)
-          Files.writeString(path, best.executions
-            .map(e => s"=== sql ${e.id}: ${e.description}\n${e.plan}").mkString("\n"))
-          println(s"[profile]   wrote $path")
+        if (scale.distinct.size >= 2) names.foreach { q =>
+          val at = byFactor.map { case (f, bests) => f -> bests(q) }
+          println(f"[profile] scale $q%-32s " + at.map { case (f, (wall, rows)) =>
+            f"f=$f: $wall%.3f s $rows%.0f scan rows" }.mkString("  ") +
+            f"  b=${exponent(at.map { case (f, (wall, _)) => f -> wall })}%.2f")
         }
       }
-    } finally {
-      if (sf1) Cleanup.deleteRecursively(dir)
-      spark.stop()
-    }
+    } finally spark.stop()
   }
 }

@@ -52,4 +52,11 @@ object Bridge {
     */
   def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
     sc.listenerBus.waitUntilEmpty(60000L)
+
+  /** A new dir `<java.io.tmpdir>/<prefix>-<uuid>` that Spark's shutdown
+    * hook deletes, with its contents, when the JVM exits:
+    * `Utils.createTempDir` is `private[spark]`.
+    */
+  def shutdownDeletedTempDir(prefix: String): String =
+    org.apache.spark.util.Utils.createTempDir(namePrefix = prefix).getAbsolutePath
 }

@@ -86,21 +86,22 @@ class CoreSpec extends SparkTestBase {
   test("persist catalog: listNamespaces / listPersisted mirror the layout") {
     val m = freshManager
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft_catalog").toString
-    // nothing persisted yet → both listings empty, no error
-    assert(m.listNamespaces(root).isEmpty)
-    assert(m.listPersisted(root, "nope").isEmpty)
-    val a = m.register(Seq((1, "x")).toDF("a", "b"), "item_a")
-    val b = m.register(Seq((2, "y")).toDF("a", "b"), "item_b")
-    m.persist(a, root) // default namespace
-    m.persist(b, root, namespace = "training")
-    m.persist(a, root, namespace = "training")
-    assert(m.listNamespaces(root) == Seq("default", "training"))
-    assert(m.listPersisted(root) == Seq("item_a"))
-    assert(m.listPersisted(root, "training") == Seq("item_a", "item_b"))
-    // listed path round-trips through unpersist
-    val back = m.unpersist(s"$root/training/item_b", "restored_cat")
-    assert(back.numRows == 1)
+    withTempDir("graft_catalog") { root =>
+      // nothing persisted yet → both listings empty, no error
+      assert(m.listNamespaces(root).isEmpty)
+      assert(m.listPersisted(root, "nope").isEmpty)
+      val a = m.register(Seq((1, "x")).toDF("a", "b"), "item_a")
+      val b = m.register(Seq((2, "y")).toDF("a", "b"), "item_b")
+      m.persist(a, root) // default namespace
+      m.persist(b, root, namespace = "training")
+      m.persist(a, root, namespace = "training")
+      assert(m.listNamespaces(root) == Seq("default", "training"))
+      assert(m.listPersisted(root) == Seq("item_a"))
+      assert(m.listPersisted(root, "training") == Seq("item_a", "item_b"))
+      // listed path round-trips through unpersist
+      val back = m.unpersist(s"$root/training/item_b", "restored_cat")
+      assert(back.numRows == 1)
+    }
   }
 
   test("loadJson reads JSONL with inferred and declared schemas") {
@@ -184,64 +185,68 @@ class CoreSpec extends SparkTestBase {
   test("manifest: published profiles merge to corpus stats without rescans") {
     import spark.implicits._
     import graft.sources.Manifest
-    val root = Files.createTempDirectory("graft_prof").toString
-    // two "ingest epochs" published separately
-    val a = (1L to 300L).map(i => (i, s"w${i % 11}")).toDF("id", "w")
-    val b = (301L to 500L).map(i => (i, s"w${i % 11}")).toDF("id", "w")
-    Manifest.writeWithManifest(a, s"$root/e1")
-    Manifest.writeWithManifest(b, s"$root/e2")
-    Manifest.writeProfileFor(spark, s"$root/e1")
-    Manifest.writeProfileFor(spark, s"$root/e2")
-    // the profile dir must be invisible to corpus reads
-    assert(spark.read.parquet(s"$root/e1").count() == 300L)
-    val merged = Manifest.mergedProfile(spark, Seq(s"$root/e1", s"$root/e2"))
-      .collect().map(r => r.getString(0) -> r).toMap
-    assert(merged("id").getAs[Long]("row_count") == 500L)
-    assert(merged("id").getAs[Long]("null_count") == 0L)
-    assert(merged("id").getAs[Double]("max_num") == 500.0)
-    assert(merged("w").getAs[Long]("ndv_estimate") == 11L)
-    // distinct ids across both epochs: 500 exact, estimate within bound
-    val est = merged("id").getAs[Long]("ndv_estimate").toDouble
-    assert(math.abs(est - 500.0) <= 500.0 * 6 * graft.stats.Sketches.hllRse(12))
+    withTempDir("graft_prof") { root =>
+      // two "ingest epochs" published separately
+      val a = (1L to 300L).map(i => (i, s"w${i % 11}")).toDF("id", "w")
+      val b = (301L to 500L).map(i => (i, s"w${i % 11}")).toDF("id", "w")
+      Manifest.writeWithManifest(a, s"$root/e1")
+      Manifest.writeWithManifest(b, s"$root/e2")
+      Manifest.writeProfileFor(spark, s"$root/e1")
+      Manifest.writeProfileFor(spark, s"$root/e2")
+      // the profile dir must be invisible to corpus reads
+      assert(spark.read.parquet(s"$root/e1").count() == 300L)
+      val merged = Manifest.mergedProfile(spark, Seq(s"$root/e1", s"$root/e2"))
+        .collect().map(r => r.getString(0) -> r).toMap
+      assert(merged("id").getAs[Long]("row_count") == 500L)
+      assert(merged("id").getAs[Long]("null_count") == 0L)
+      assert(merged("id").getAs[Double]("max_num") == 500.0)
+      assert(merged("w").getAs[Long]("ndv_estimate") == 11L)
+      // distinct ids across both epochs: 500 exact, estimate within bound
+      val est = merged("id").getAs[Long]("ndv_estimate").toDouble
+      assert(math.abs(est - 500.0) <= 500.0 * 6 * graft.stats.Sketches.hllRse(12))
+    }
   }
 
   test("manifest: publish-verify roundtrip; tampered and vanished shards both surface") {
     import spark.implicits._
     import org.apache.spark.sql.functions.{col, sum}
     import graft.sources.Manifest
-    val dir = Files.createTempDirectory("graft_manifest").toString + "/corpus"
-    val df = (1L to 500L).map(i => (i, s"doc $i")).toDF("id", "text").repartition(4)
-    val summary = Manifest.writeWithManifest(df, dir)
-    assert(summary.count() == 4, "one manifest entry per shard")
-    assert(summary.agg(sum("rows")).first().getLong(0) == 500L)
-    // pristine corpus verifies clean
-    val v1 = Manifest.verifyManifest(spark, dir)
-    assert(v1.count() == 4 && v1.filter(!col("ok")).count() == 0)
-    // tamper: rewrite one shard with different content, same name
-    val shard = new java.io.File(dir).listFiles()
-      .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-      .minBy(_.getName)
-    val replacement = Seq((999999L, "evil")).toDF("id", "text").coalesce(1)
-    val tmpOut = Files.createTempDirectory("graft_manifest_t").toString
-    replacement.write.mode("overwrite").parquet(tmpOut)
-    val newFile = new java.io.File(tmpOut).listFiles()
-      .filter(_.getName.endsWith(".parquet")).head
-    Files.copy(newFile.toPath, shard.toPath,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    // drop Hadoop LocalFS's .crc sidecar — otherwise the read fails on
-    // the checksum BEFORE our content verify runs (object stores, the
-    // production target, have no such sidecar)
-    new java.io.File(shard.getParentFile, s".${shard.getName}.crc").delete()
-    val v2 = Manifest.verifyManifest(spark, dir)
-    val bad = v2.filter(!col("ok")).collect()
-    assert(bad.length == 1 && bad.head.getAs[String]("file") == shard.getName,
-      s"tampered shard must be the one flagged: ${bad.mkString(",")}")
-    // vanish: delete the shard entirely — verify must surface it with a
-    // null actual side, not silently pass on the survivors
-    assert(shard.delete())
-    val v3 = Manifest.verifyManifest(spark, dir)
-    val gone = v3.filter(!col("ok")).collect()
-    assert(gone.length == 1 && gone.head.isNullAt(gone.head.fieldIndex("actual_rows")))
+    withTempDir("graft_manifest") { tmp =>
+      val dir = s"$tmp/corpus"
+      val df = (1L to 500L).map(i => (i, s"doc $i")).toDF("id", "text").repartition(4)
+      val summary = Manifest.writeWithManifest(df, dir)
+      assert(summary.count() == 4, "one manifest entry per shard")
+      assert(summary.agg(sum("rows")).first().getLong(0) == 500L)
+      // pristine corpus verifies clean
+      val v1 = Manifest.verifyManifest(spark, dir)
+      assert(v1.count() == 4 && v1.filter(!col("ok")).count() == 0)
+      // tamper: rewrite one shard with different content, same name
+      val shard = new java.io.File(dir).listFiles()
+        .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
+        .minBy(_.getName)
+      val replacement = Seq((999999L, "evil")).toDF("id", "text").coalesce(1)
+      withTempDir("graft_manifest_t") { tmpOut =>
+        replacement.write.mode("overwrite").parquet(tmpOut)
+        val newFile = new java.io.File(tmpOut).listFiles()
+          .filter(_.getName.endsWith(".parquet")).head
+        Files.copy(newFile.toPath, shard.toPath,
+          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+        // drop Hadoop LocalFS's .crc sidecar — otherwise the read fails on
+        // the checksum BEFORE our content verify runs (object stores, the
+        // production target, have no such sidecar)
+        new java.io.File(shard.getParentFile, s".${shard.getName}.crc").delete()
+        val v2 = Manifest.verifyManifest(spark, dir)
+        val bad = v2.filter(!col("ok")).collect()
+        assert(bad.length == 1 && bad.head.getAs[String]("file") == shard.getName,
+          s"tampered shard must be the one flagged: ${bad.mkString(",")}")
+        // vanish: delete the shard entirely — verify must surface it with a
+        // null actual side, not silently pass on the survivors
+        assert(shard.delete())
+        val v3 = Manifest.verifyManifest(spark, dir)
+        val gone = v3.filter(!col("ok")).collect()
+        assert(gone.length == 1 && gone.head.isNullAt(gone.head.fieldIndex("actual_rows")))
+      }
+    }
   }
 
   test("persistVerified catalog item: tamper flags on verify and blocks unpersist; clean item round-trips") {
@@ -249,40 +254,42 @@ class CoreSpec extends SparkTestBase {
     import org.apache.spark.sql.functions.col
     import graft.sources.Manifest
     val m = freshManager
-    val root = Files.createTempDirectory("graft_catalog_v").toString
-    val ddf = m.register(
-      (1L to 400L).map(i => (i, s"row $i")).toDF("id", "text").repartition(4),
-      "cat_item")
-    // persist lands in the SAME catalog layout persist() uses…
-    val path = m.persistVerified(ddf, root)
-    assert(m.listNamespaces(root) == Seq("default"))
-    assert(m.listPersisted(root) == Seq("cat_item"))
-    // …and the clean item round-trips through the verified unpersist
-    val back = m.unpersistVerified(path, "cat_back")
-    assert(back.numRows == 400 &&
-      back.df.orderBy("id").collect().toSeq == ddf.df.orderBy("id").collect().toSeq)
-    // tamper one shard in place (row-count preserved: 1 replacement row
-    // would also be caught, but keep the stronger case — content change
-    // only), same machinery as the publish-path tamper test above
-    val shard = new java.io.File(path).listFiles()
-      .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-      .minBy(_.getName)
-    val tmpOut = Files.createTempDirectory("graft_catalog_t").toString
-    Seq((999999L, "evil")).toDF("id", "text").coalesce(1)
-      .write.mode("overwrite").parquet(tmpOut)
-    val newFile = new java.io.File(tmpOut).listFiles()
-      .filter(_.getName.endsWith(".parquet")).head
-    Files.copy(newFile.toPath, shard.toPath,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    new java.io.File(shard.getParentFile, s".${shard.getName}.crc").delete()
-    // verify surfaces exactly the tampered shard…
-    val bad = Manifest.verifyManifest(spark, path).filter(!col("ok")).collect()
-    assert(bad.length == 1 && bad.head.getAs[String]("file") == shard.getName)
-    // …and the verified unpersist REFUSES to serve the item, naming it
-    val e = intercept[IllegalArgumentException] {
-      m.unpersistVerified(path, "cat_bad")
+    withTempDir("graft_catalog_v") { root =>
+      val ddf = m.register(
+        (1L to 400L).map(i => (i, s"row $i")).toDF("id", "text").repartition(4),
+        "cat_item")
+      // persist lands in the SAME catalog layout persist() uses…
+      val path = m.persistVerified(ddf, root)
+      assert(m.listNamespaces(root) == Seq("default"))
+      assert(m.listPersisted(root) == Seq("cat_item"))
+      // …and the clean item round-trips through the verified unpersist
+      val back = m.unpersistVerified(path, "cat_back")
+      assert(back.numRows == 400 &&
+        back.df.orderBy("id").collect().toSeq == ddf.df.orderBy("id").collect().toSeq)
+      // tamper one shard in place (row-count preserved: 1 replacement row
+      // would also be caught, but keep the stronger case — content change
+      // only), same machinery as the publish-path tamper test above
+      val shard = new java.io.File(path).listFiles()
+        .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
+        .minBy(_.getName)
+      withTempDir("graft_catalog_t") { tmpOut =>
+        Seq((999999L, "evil")).toDF("id", "text").coalesce(1)
+          .write.mode("overwrite").parquet(tmpOut)
+        val newFile = new java.io.File(tmpOut).listFiles()
+          .filter(_.getName.endsWith(".parquet")).head
+        Files.copy(newFile.toPath, shard.toPath,
+          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+        new java.io.File(shard.getParentFile, s".${shard.getName}.crc").delete()
+        // verify surfaces exactly the tampered shard…
+        val bad = Manifest.verifyManifest(spark, path).filter(!col("ok")).collect()
+        assert(bad.length == 1 && bad.head.getAs[String]("file") == shard.getName)
+        // …and the verified unpersist REFUSES to serve the item, naming it
+        val e = intercept[IllegalArgumentException] {
+          m.unpersistVerified(path, "cat_bad")
+        }
+        assert(e.getMessage.contains(shard.getName))
+      }
     }
-    assert(e.getMessage.contains(shard.getName))
   }
 
   test("manifest: even-multiplicity swap (xor blind spot) is still caught by the sum fold") {
@@ -291,24 +298,27 @@ class CoreSpec extends SparkTestBase {
     import graft.sources.Manifest
     // [a, a] vs [b, b]: same row count, and both xor-folds cancel to 0 —
     // only the sum fold distinguishes them
-    val dir = Files.createTempDirectory("graft_manifest_xor").toString + "/corpus"
-    Manifest.writeWithManifest(
-      Seq((1L, "x"), (1L, "x")).toDF("id", "text").coalesce(1), dir)
-    val evil = Files.createTempDirectory("graft_manifest_xor_e").toString
-    Seq((2L, "y"), (2L, "y")).toDF("id", "text").coalesce(1)
-      .write.mode("overwrite").parquet(evil)
-    val shard = new java.io.File(dir).listFiles()
-      .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).head
-    val donor = new java.io.File(evil).listFiles()
-      .filter(_.getName.endsWith(".parquet")).head
-    Files.copy(donor.toPath, shard.toPath,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    new java.io.File(shard.getParentFile, s".${shard.getName}.crc").delete()
-    val v = Manifest.verifyManifest(spark, dir).collect()
-    assert(v.length == 1 && !v.head.getAs[Boolean]("ok"),
-      "the duplicated-row swap must fail verification via content_sum")
-    assert(v.head.getAs[Long]("manifest_rows") == v.head.getAs[Long]("actual_rows"),
-      "precondition: the tamper preserves the row count (xor+rows alone would pass)")
+    withTempDir("graft_manifest_xor") { tmp =>
+      val dir = s"$tmp/corpus"
+      Manifest.writeWithManifest(
+        Seq((1L, "x"), (1L, "x")).toDF("id", "text").coalesce(1), dir)
+      withTempDir("graft_manifest_xor_e") { evil =>
+        Seq((2L, "y"), (2L, "y")).toDF("id", "text").coalesce(1)
+          .write.mode("overwrite").parquet(evil)
+        val shard = new java.io.File(dir).listFiles()
+          .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).head
+        val donor = new java.io.File(evil).listFiles()
+          .filter(_.getName.endsWith(".parquet")).head
+        Files.copy(donor.toPath, shard.toPath,
+          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+        new java.io.File(shard.getParentFile, s".${shard.getName}.crc").delete()
+        val v = Manifest.verifyManifest(spark, dir).collect()
+        assert(v.length == 1 && !v.head.getAs[Boolean]("ok"),
+          "the duplicated-row swap must fail verification via content_sum")
+        assert(v.head.getAs[Long]("manifest_rows") == v.head.getAs[Long]("actual_rows"),
+          "precondition: the tamper preserves the row count (xor+rows alone would pass)")
+      }
+    }
   }
 
   test("publishing an EMPTY partitioned corpus stays readable, verifiable, profilable") {
@@ -319,27 +329,25 @@ class CoreSpec extends SparkTestBase {
     // everything) must still produce a valid corpus: partitionBy + zero
     // rows writes NO data files, and before r13 every downstream read —
     // manifest read-back, profile, consumers — died UNABLE_TO_INFER_SCHEMA
-    val dir = java.nio.file.Files.createTempDirectory("graft_manifest_empty")
-      .toString + "/corpus"
-    val empty = Seq((1L, "x", 0L)).toDF("id", "text", "shard").limit(0)
-    Manifest.writeWithManifest(empty, dir, partitionCols = Seq("shard"))
-    val back = spark.read.parquet(dir)
-    assert(back.count() == 0)
-    assert(back.columns.toSet == Set("id", "text", "shard"),
-      s"published empty corpus must carry the FULL schema, got ${back.columns.toSeq}")
-    assert(Manifest.verifyManifest(spark, dir).filter(!col("ok")).count() == 0)
-    Manifest.writeProfileFor(spark, dir)
-    val prof = Manifest.mergedProfile(spark, Seq(dir))
-    assert(prof.filter(col("col_name") === "id")
-      .select("row_count").head().getLong(0) == 0L)
+    withTempDir("graft_manifest_empty") { tmp =>
+      val dir = s"$tmp/corpus"
+      val empty = Seq((1L, "x", 0L)).toDF("id", "text", "shard").limit(0)
+      Manifest.writeWithManifest(empty, dir, partitionCols = Seq("shard"))
+      val back = spark.read.parquet(dir)
+      assert(back.count() == 0)
+      assert(back.columns.toSet == Set("id", "text", "shard"),
+        s"published empty corpus must carry the FULL schema, got ${back.columns.toSeq}")
+      assert(Manifest.verifyManifest(spark, dir).filter(!col("ok")).count() == 0)
+      Manifest.writeProfileFor(spark, dir)
+      val prof = Manifest.mergedProfile(spark, Seq(dir))
+      assert(prof.filter(col("col_name") === "id")
+        .select("row_count").head().getLong(0) == 0L)
+    }
   }
 
   test("a repeated plan shape is compiled once: the codegen cache holds the working set") {
     import org.apache.spark.metrics.source.CodegenMetrics
-    // the sf0.001 corpus that entry()'s smoke query reads
-    val lineitem = new java.io.File(new java.net.URI(SparkEntry.entry(spark).inputFiles.head))
-    val sfDir = Iterator.iterate(lineitem)(_.getParentFile)
-      .find(_.getName == "lineitem.parquet").get.getParent
+    val sfDir = smokeSfDir
     // 183 distinct code bodies in a fresh JVM, past Spark's default cache
     // of 100: with that default the LRU evicts each body before its next
     // use, and the second pass compiles 174 classes again. These queries'

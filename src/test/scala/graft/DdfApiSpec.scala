@@ -129,9 +129,10 @@ class DdfApiSpec extends SparkTestBase {
     assert(docs.bpeEncode("text", Seq(("a", "a"))).df
       .first().getSeq[String](2).toList == List("aa", "a", "b", "aa", "a", "b", "aa"))
 
-    val dir = java.nio.file.Files.createTempDirectory("ddf_zpub").toString
-    ddf.publishZOrdered(s"$dir/z", Seq("year", "month"), numFiles = 2)
-    assert(spark.read.parquet(s"$dir/z").count() == 5)
+    withTempDir("ddf_zpub") { dir =>
+      ddf.publishZOrdered(s"$dir/z", Seq("year", "month"), numFiles = 2)
+      assert(spark.read.parquet(s"$dir/z").count() == 5)
+    }
   }
 
   test("round-11 facade: editDistanceLookup / jaccardRetrieve+rrfFuse / profileDrift / byte BPE") {

@@ -68,12 +68,14 @@ class DemoSpec extends SparkTestBase {
         org.apache.spark.sql.functions.max("tid")).first()
     assert(idBounds.getInt(0) >= -1 && idBounds.getInt(1) < vocabSize)
 
-    val dir = java.nio.file.Files.createTempDirectory("graft_demo_pub").toString + "/out"
-    val pub = m.register(docs).c4Filter("text", "doc_id", requireTerminalPunct = false)
-      .publish(dir)
-    assert(pub.df.agg(org.apache.spark.sql.functions.sum("rows")).first().getLong(0) ==
-      spark.read.parquet(dir).count())
-    val verify = graft.sources.Manifest.verifyManifest(spark, dir)
-    assert(verify.filter(!col("ok")).count() == 0, "fresh publish must verify clean")
+    withTempDir("graft_demo_pub") { tmp =>
+      val dir = s"$tmp/out"
+      val pub = m.register(docs).c4Filter("text", "doc_id", requireTerminalPunct = false)
+        .publish(dir)
+      assert(pub.df.agg(org.apache.spark.sql.functions.sum("rows")).first().getLong(0) ==
+        spark.read.parquet(dir).count())
+      val verify = graft.sources.Manifest.verifyManifest(spark, dir)
+      assert(verify.filter(!col("ok")).count() == 0, "fresh publish must verify clean")
+    }
   }
 }

@@ -254,8 +254,7 @@ class PipelineSpec extends SparkTestBase {
         .select("query_id", "id", "cosine", "rk").orderBy("query_id", "rk")
         .collect().toSeq
     val before = search(idx)
-    val tmp = java.nio.file.Files.createTempDirectory("graft_ivf_sl").toString
-    try {
+    withTempDir("graft_ivf_sl") { tmp =>
       IvfIndex.save(idx, s"$tmp/ivf")
       val loaded = IvfIndex.load(spark, s"$tmp/ivf")
       assert(loaded.centroids.map(_.toSeq).toSeq == cents.map(_.toSeq).toSeq,
@@ -298,7 +297,7 @@ class PipelineSpec extends SparkTestBase {
       val loaded2 = IvfIndex.load(spark, s"$tmp/ivf2")
       assert(loaded2.rawVecs.isEmpty)
       assert(search(loaded2) == before, "corpus-tier search matches too")
-    } finally graft.tools.Cleanup.deleteRecursively(tmp)
+    }
   }
 
   test("knnClassify: majority vote over ranked neighbors, ties to smallest label, k-bound respected") {
@@ -1057,20 +1056,22 @@ class PipelineSpec extends SparkTestBase {
   }
 
   test("multimodal: loadBinaryDir reads files distributed with glob and size cap") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_bin")
-    java.nio.file.Files.write(dir.resolve("a.img"), "image bytes here".getBytes)
-    java.nio.file.Files.write(dir.resolve("b.img"), "tiny".getBytes)
-    java.nio.file.Files.write(dir.resolve("skip.txt"), "not an image".getBytes)
-    val out = Multimodal.loadBinaryDir(spark, dir.toString, "image", "*.img", maxBytes = 10)
-    val rows = out.collect()
-    assert(rows.length == 1, "glob excludes .txt; size cap excludes the 16-byte file")
-    assert(rows.head.getAs[org.apache.spark.sql.Row]("meta")
-      .getAs[String]("modality") == "image")
-    assert(new String(rows.head.getAs[Array[Byte]]("payload")) == "tiny")
-    // payloads feed the standard plumbing unchanged
-    val feats = Multimodal.extractFeatures(
-      out.withColumn("id", lit(1L)), "id", "payload")
-    assert(feats.count() == 1)
+    withTempDir("graft_bin") { d =>
+      val dir = java.nio.file.Paths.get(d)
+      java.nio.file.Files.write(dir.resolve("a.img"), "image bytes here".getBytes)
+      java.nio.file.Files.write(dir.resolve("b.img"), "tiny".getBytes)
+      java.nio.file.Files.write(dir.resolve("skip.txt"), "not an image".getBytes)
+      val out = Multimodal.loadBinaryDir(spark, dir.toString, "image", "*.img", maxBytes = 10)
+      val rows = out.collect()
+      assert(rows.length == 1, "glob excludes .txt; size cap excludes the 16-byte file")
+      assert(rows.head.getAs[org.apache.spark.sql.Row]("meta")
+        .getAs[String]("modality") == "image")
+      assert(new String(rows.head.getAs[Array[Byte]]("payload")) == "tiny")
+      // payloads feed the standard plumbing unchanged
+      val feats = Multimodal.extractFeatures(
+        out.withColumn("id", lit(1L)), "id", "payload")
+      assert(feats.count() == 1)
+    }
   }
 
   test("multimodal: capPayloads caps bytes and refreshes the content hash") {

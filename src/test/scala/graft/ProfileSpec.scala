@@ -8,10 +8,7 @@ import graft.tools.Profile
 class ProfileSpec extends SparkTestBase {
 
   test("Profile.record: scan rows match the table, outside-SQL jobs show, every job is attributed") {
-    // the sf0.001 corpus that entry()'s smoke query reads
-    val lineitem = new java.io.File(new java.net.URI(SparkEntry.entry(spark).inputFiles.head))
-    val sfDir = Iterator.iterate(lineitem)(_.getParentFile)
-      .find(_.getName == "lineitem.parquet").get.getParent
+    val sfDir = smokeSfDir
     def run(q: String) =
       Profile.record(spark)(Bench.materialize(SparkEntry.queries(q)(spark, sfDir)))
 

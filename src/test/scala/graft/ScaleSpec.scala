@@ -109,16 +109,18 @@ class ScaleSpec extends SparkTestBase {
 
   test("writeSharded caps rows per output file without an extra shuffle") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_shard").toString + "/out"
-    val df = (1L to 1000L).toDF("id").coalesce(1)
-    Bucketing.writeSharded(df, dir, maxRecordsPerFile = 300L)
-    val files = new java.io.File(dir).listFiles().filter(_.getName.endsWith(".parquet"))
-    assert(files.length == 4, s"1000 rows / 300 cap = 4 shards, got ${files.length}")
-    val back = spark.read.parquet(dir)
-    assert(back.count() == 1000L)
-    // no file exceeds the cap
-    files.foreach { f =>
-      assert(spark.read.parquet(f.getAbsolutePath).count() <= 300L)
+    withTempDir("graft_shard") { tmp =>
+      val dir = s"$tmp/out"
+      val df = (1L to 1000L).toDF("id").coalesce(1)
+      Bucketing.writeSharded(df, dir, maxRecordsPerFile = 300L)
+      val files = new java.io.File(dir).listFiles().filter(_.getName.endsWith(".parquet"))
+      assert(files.length == 4, s"1000 rows / 300 cap = 4 shards, got ${files.length}")
+      val back = spark.read.parquet(dir)
+      assert(back.count() == 1000L)
+      // no file exceeds the cap
+      files.foreach { f =>
+        assert(spark.read.parquet(f.getAbsolutePath).count() <= 300L)
+      }
     }
   }
 
@@ -865,6 +867,8 @@ class ScaleSpec extends SparkTestBase {
         df.write.mode("overwrite").parquet(s"$dir/$n")
         spark.read.parquet(s"$dir/$n").createOrReplaceTempView(n)
       }
+    // these views replace the registry's own: make its next query register them again
+    EntryShared.activeDir.remove(spark.hashCode)
     dir
   }
 
@@ -1350,5 +1354,41 @@ class ScaleSpec extends SparkTestBase {
     val plan = out.queryExecution.executedPlan.toString.split("== Initial Plan ==").head
     assert("BroadcastExchange".r.findAllIn(plan).size >= 2,
       s"both total frames must broadcast (they are O(#sources) rows):\n$plan")
+  }
+
+  test("Bench.blowUp at factor 2: facts double, dims copy, keys stay disjoint, replicas rotate") {
+    val base = smokeSfDir
+    withTempDir("graft_blowup") { dir =>
+      Bench.blowUp(spark, base, dir, 2)
+      def read(d: String, t: String) =
+        if (t == "events") EntryShared.loadEvents(spark, d) else spark.read.parquet(s"$d/$t.parquet")
+      val keys = Seq("lineitem" -> Seq("l_orderkey", "l_linenumber"), "orders" -> Seq("o_orderkey"),
+        "part" -> Seq("p_partkey"), "customer" -> Seq("c_custkey"), "documents" -> Seq("doc_id"),
+        "embeddings" -> Seq("vec_id"), "events" -> Seq("event_id"))
+      keys.foreach { case (t, k) =>
+        val (b, blown) = (read(base, t), read(dir, t))
+        assert(blown.count() == 2 * b.count(), s"$t rows")
+        // no replica's key lands on another replica's
+        def distinctKeys(df: org.apache.spark.sql.DataFrame) = df.select(k.map(col): _*).distinct().count()
+        assert(distinctKeys(blown) == 2 * distinctKeys(b), s"$t keys collide")
+      }
+      Seq("region", "nation", "supplier").foreach(t =>
+        assert(read(dir, t).count() == read(base, t).count(), s"$t rows"))
+
+      def vectors(df: org.apache.spark.sql.DataFrame): Map[Long, Seq[Any]] = df.select("vec_id", "embedding")
+        .collect().map(r => r.getLong(0) -> r.getSeq[Any](1)).toMap
+      val orig = vectors(read(base, "embeddings"))
+      val blown = vectors(read(dir, "embeddings"))
+      orig.foreach { case (id, v) =>
+        assert(blown(id) == v, s"replica 0 of $id")
+        assert(blown(id + 1000000L) == v.tail :+ v.head, s"replica 1 of $id")
+      }
+      // the shift wraps at the vector length: past it, the raw shift made a
+      // negative slice length and failed the job
+      val dim = orig.head._2.size
+      val emb = read(base, "embeddings")
+      assert(emb.select(Bench.rotated(dim + 1)).collect().toSeq ==
+        emb.select(Bench.rotated(1)).collect().toSeq)
+    }
   }
 }

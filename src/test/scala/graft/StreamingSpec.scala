@@ -104,299 +104,310 @@ class StreamingSpec extends SparkTestBase {
   test("dedupedIngest: cross-batch content dedup against an epoch-partitioned index") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_ingest").toString + "/idx"
-    val stream = MemoryStream[(Long, String)]
-    val sunk = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-    val q = graft.streaming.CurationStreams.dedupedIngest(
-        stream.toDF().toDF("doc_id", "text"), "text", "doc_id", dir,
-        (df, epoch) => sunk.synchronized {
-          sunk ++= df.select("doc_id").collect().map(r => epoch -> r.getLong(0))
-        })
-      .start()
-    try {
-      stream.addData((1L, "alpha document"), (2L, "beta document"), (3L, "alpha document"))
-      q.processAllAvailable()
-      stream.addData((4L, "alpha document"), (5L, "gamma document"))
-      q.processAllAvailable()
-    } finally q.stop()
-    // in-batch dup (3) collapses to min id; cross-batch dup (4) dropped
-    assert(sunk.map(_._2).toSet == Set(1L, 2L, 5L), s"got $sunk")
-    // index holds exactly one fingerprint per distinct content
-    val idx = spark.read.parquet(dir)
-    assert(idx.select("fingerprint").distinct().count() == 3)
-    // epoch partitioning survives (replay-overwrite unit)
-    assert(idx.columns.contains("epoch"))
+    withTempDir("graft_ingest") { tmp =>
+      val dir = s"$tmp/idx"
+      val stream = MemoryStream[(Long, String)]
+      val sunk = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
+      val q = graft.streaming.CurationStreams.dedupedIngest(
+          stream.toDF().toDF("doc_id", "text"), "text", "doc_id", dir,
+          (df, epoch) => sunk.synchronized {
+            sunk ++= df.select("doc_id").collect().map(r => epoch -> r.getLong(0))
+          })
+        .start()
+      try {
+        stream.addData((1L, "alpha document"), (2L, "beta document"), (3L, "alpha document"))
+        q.processAllAvailable()
+        stream.addData((4L, "alpha document"), (5L, "gamma document"))
+        q.processAllAvailable()
+      } finally q.stop()
+      // in-batch dup (3) collapses to min id; cross-batch dup (4) dropped
+      assert(sunk.map(_._2).toSet == Set(1L, 2L, 5L), s"got $sunk")
+      // index holds exactly one fingerprint per distinct content
+      val idx = spark.read.parquet(dir)
+      assert(idx.select("fingerprint").distinct().count() == 3)
+      // epoch partitioning survives (replay-overwrite unit)
+      assert(idx.columns.contains("epoch"))
+    }
   }
 
   test("urlDedupIngest: canonical-URL dedup across batches; non-URLs never delivered") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_urlingest").toString + "/idx"
-    val stream = MemoryStream[(Long, String)]
-    val sunk = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-    val q = graft.streaming.CurationStreams.urlDedupIngest(
-        stream.toDF().toDF("doc_id", "url"), "url", "doc_id", dir,
-        (df, epoch) => sunk.synchronized {
-          sunk ++= df.select("doc_id").collect().map(r => epoch -> r.getLong(0))
-        })
-      .start()
-    try {
-      stream.addData(
-        (1L, "https://A.com/x?utm_source=f"),
-        (2L, "HTTPS://a.COM:443/x#frag"),   // same resource as 1 (in-batch)
-        (3L, "https://b.org/y"),
-        (4L, "not a url"))                  // excluded, never delivered
-      q.processAllAvailable()
-      stream.addData(
-        (5L, "https://a.com/x?fbclid=z"),   // same resource again (cross-batch)
-        (6L, "https://c.net/z"))
-      q.processAllAvailable()
-    } finally q.stop()
-    assert(sunk.map(_._2).toSet == Set(1L, 3L, 6L), s"got $sunk")
-    // one fingerprint per canonical resource, epoch-partitioned
-    val idx = spark.read.parquet(dir)
-    assert(idx.select("fingerprint").distinct().count() == 3)
-    assert(idx.columns.contains("epoch"))
+    withTempDir("graft_urlingest") { tmp =>
+      val dir = s"$tmp/idx"
+      val stream = MemoryStream[(Long, String)]
+      val sunk = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
+      val q = graft.streaming.CurationStreams.urlDedupIngest(
+          stream.toDF().toDF("doc_id", "url"), "url", "doc_id", dir,
+          (df, epoch) => sunk.synchronized {
+            sunk ++= df.select("doc_id").collect().map(r => epoch -> r.getLong(0))
+          })
+        .start()
+      try {
+        stream.addData(
+          (1L, "https://A.com/x?utm_source=f"),
+          (2L, "HTTPS://a.COM:443/x#frag"),   // same resource as 1 (in-batch)
+          (3L, "https://b.org/y"),
+          (4L, "not a url"))                  // excluded, never delivered
+        q.processAllAvailable()
+        stream.addData(
+          (5L, "https://a.com/x?fbclid=z"),   // same resource again (cross-batch)
+          (6L, "https://c.net/z"))
+        q.processAllAvailable()
+      } finally q.stop()
+      assert(sunk.map(_._2).toSet == Set(1L, 3L, 6L), s"got $sunk")
+      // one fingerprint per canonical resource, epoch-partitioned
+      val idx = spark.read.parquet(dir)
+      assert(idx.select("fingerprint").distinct().count() == 3)
+      assert(idx.columns.contains("epoch"))
+    }
   }
 
   test("htmlIngest: canonical-aware dedup keys on rel=canonical; survivors deliver extracted text") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_htmlingest").toString + "/idx"
-    val stream = MemoryStream[(Long, String, String)]
-    val sunk = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, String)]
-    val q = graft.streaming.CurationStreams.htmlIngest(
-        stream.toDF().toDF("doc_id", "url", "html"), "html", "url", "doc_id", dir,
-        (df, epoch) => sunk.synchronized {
-          sunk ++= df.select("doc_id", "text").collect()
-            .map(r => (epoch, r.getLong(0), r.getString(1)))
-        })
-      .start()
-    try {
-      stream.addData(
-        // 1 and 2 are DIFFERENT fetched urls declaring the SAME
-        // canonical — only the canonical-aware key collapses them
-        (1L, "https://m.ex.com/p?sid=9",
-          """<link rel="canonical" href="https://ex.com/p"><p>A &amp; B</p>"""),
-        (2L, "https://ex.com/p?utm_source=f",
-          """<link rel="canonical" href="https://ex.com/p"><p>dup</p>"""),
-        (3L, "https://other.org/q", "<p>no canonical</p>"))
-      q.processAllAvailable()
-      stream.addData(
-        // cross-batch: same canonical as 1/2 under yet another url
-        (4L, "https://ex.com/p/print", """<link rel=canonical href=/p><p>x</p>"""),
-        (5L, "https://new.net/r", "<p>fresh</p>"))
-      q.processAllAvailable()
-    } finally q.stop()
-    assert(sunk.map(_._2).toSet == Set(1L, 3L, 5L), s"got $sunk")
-    // the delivered payload is EXTRACTED text, not markup
-    assert(sunk.find(_._2 == 1L).get._3 == "A & B")
-    val idx = spark.read.parquet(dir)
-    assert(idx.select("fingerprint").distinct().count() == 3)
-    assert(idx.columns.contains("epoch"))
+    withTempDir("graft_htmlingest") { tmp =>
+      val dir = s"$tmp/idx"
+      val stream = MemoryStream[(Long, String, String)]
+      val sunk = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, String)]
+      val q = graft.streaming.CurationStreams.htmlIngest(
+          stream.toDF().toDF("doc_id", "url", "html"), "html", "url", "doc_id", dir,
+          (df, epoch) => sunk.synchronized {
+            sunk ++= df.select("doc_id", "text").collect()
+              .map(r => (epoch, r.getLong(0), r.getString(1)))
+          })
+        .start()
+      try {
+        stream.addData(
+          // 1 and 2 are DIFFERENT fetched urls declaring the SAME
+          // canonical — only the canonical-aware key collapses them
+          (1L, "https://m.ex.com/p?sid=9",
+            """<link rel="canonical" href="https://ex.com/p"><p>A &amp; B</p>"""),
+          (2L, "https://ex.com/p?utm_source=f",
+            """<link rel="canonical" href="https://ex.com/p"><p>dup</p>"""),
+          (3L, "https://other.org/q", "<p>no canonical</p>"))
+        q.processAllAvailable()
+        stream.addData(
+          // cross-batch: same canonical as 1/2 under yet another url
+          (4L, "https://ex.com/p/print", """<link rel=canonical href=/p><p>x</p>"""),
+          (5L, "https://new.net/r", "<p>fresh</p>"))
+        q.processAllAvailable()
+      } finally q.stop()
+      assert(sunk.map(_._2).toSet == Set(1L, 3L, 5L), s"got $sunk")
+      // the delivered payload is EXTRACTED text, not markup
+      assert(sunk.find(_._2 == 1L).get._3 == "A & B")
+      val idx = spark.read.parquet(dir)
+      assert(idx.select("fingerprint").distinct().count() == 3)
+      assert(idx.columns.contains("epoch"))
+    }
   }
 
   test("aggMaintain: rollup equals the direct aggregate; replay overwrites its partial") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_rollup").toString + "/r"
-    val spec = "g, n=count(*), sv=sum(v), mx=max(v)"
-    val stream = MemoryStream[(String, Double)]
-    val q = graft.streaming.CurationStreams.aggMaintain(
-      stream.toDF().toDF("g", "v"), spec, dir).start()
-    val e0 = Seq(("a", 1.0), ("a", 2.0), ("b", 10.0))
-    val e1 = Seq(("a", 4.0), ("c", 7.0))
-    try {
-      stream.addData(e0: _*); q.processAllAvailable()
-      stream.addData(e1: _*); q.processAllAvailable()
-    } finally q.stop()
-    val roll = graft.streaming.CurationStreams.readRollup(spark, dir, spec)
-      .collect().map(r => r.getString(0) -> (r.getLong(1), r.getDouble(2), r.getDouble(3))).toMap
-    assert(roll == Map("a" -> ((3L, 7.0, 4.0)), "b" -> ((1L, 10.0, 10.0)),
-      "c" -> ((1L, 7.0, 7.0))), s"got $roll")
-    // store is O(epochs × groups), not event-sized
-    val stored = spark.read.parquet(dir)
-    assert(stored.count() == 4, "two epochs x two groups of partials")
-    // replaying an epoch (same batch, same epoch id) overwrites its own
-    // partition bit-identically — the at-least-once foreachBatch contract
-    graft.operators.Aggregations.aggregateDf(e1.toDF("g", "v"), spec)
-      .withColumn("epoch", lit(1L))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("epoch").parquet(dir)
-    val roll2 = graft.streaming.CurationStreams.readRollup(spark, dir, spec)
-      .collect().map(r => r.getString(0) -> (r.getLong(1), r.getDouble(2), r.getDouble(3))).toMap
-    assert(roll2 == roll, "replay must not change the rollup")
-    // unmergeable specs refuse at WIRING time, before any epoch runs
-    intercept[IllegalArgumentException] {
-      graft.streaming.CurationStreams.aggMaintain(
-        MemoryStream[(String, Double)].toDF().toDF("g", "v"),
-        "g, m=mean(v)", dir + "2")
+    withTempDir("graft_rollup") { tmp =>
+      val dir = s"$tmp/r"
+      val spec = "g, n=count(*), sv=sum(v), mx=max(v)"
+      val stream = MemoryStream[(String, Double)]
+      val q = graft.streaming.CurationStreams.aggMaintain(
+        stream.toDF().toDF("g", "v"), spec, dir).start()
+      val e0 = Seq(("a", 1.0), ("a", 2.0), ("b", 10.0))
+      val e1 = Seq(("a", 4.0), ("c", 7.0))
+      try {
+        stream.addData(e0: _*); q.processAllAvailable()
+        stream.addData(e1: _*); q.processAllAvailable()
+      } finally q.stop()
+      val roll = graft.streaming.CurationStreams.readRollup(spark, dir, spec)
+        .collect().map(r => r.getString(0) -> (r.getLong(1), r.getDouble(2), r.getDouble(3))).toMap
+      assert(roll == Map("a" -> ((3L, 7.0, 4.0)), "b" -> ((1L, 10.0, 10.0)),
+        "c" -> ((1L, 7.0, 7.0))), s"got $roll")
+      // store is O(epochs × groups), not event-sized
+      val stored = spark.read.parquet(dir)
+      assert(stored.count() == 4, "two epochs x two groups of partials")
+      // replaying an epoch (same batch, same epoch id) overwrites its own
+      // partition bit-identically — the at-least-once foreachBatch contract
+      graft.operators.Aggregations.aggregateDf(e1.toDF("g", "v"), spec)
+        .withColumn("epoch", lit(1L))
+        .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+        .partitionBy("epoch").parquet(dir)
+      val roll2 = graft.streaming.CurationStreams.readRollup(spark, dir, spec)
+        .collect().map(r => r.getString(0) -> (r.getLong(1), r.getDouble(2), r.getDouble(3))).toMap
+      assert(roll2 == roll, "replay must not change the rollup")
+      // unmergeable specs refuse at WIRING time, before any epoch runs
+      intercept[IllegalArgumentException] {
+        graft.streaming.CurationStreams.aggMaintain(
+          MemoryStream[(String, Double)].toDF().toDF("g", "v"),
+          "g, m=mean(v)", dir + "2")
+      }
     }
-    graft.tools.Cleanup.deleteRecursively(dir)
   }
 
   test("nearDupIngest: cross-batch NEAR-dup dedup against an epoch-partitioned band index") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_ndingest").toString + "/bandidx"
-    // last-word variants: 12/14 word-3-shingles shared, Jaccard ~0.85 —
-    // same fixture shape CurationSpec's incrementalMinhash test pins
-    val base = "the quick brown fox jumps over the lazy dog near the river bank today"
-    val stream = MemoryStream[(Long, String)]
-    val sunk = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-    val q = graft.streaming.CurationStreams.nearDupIngest(
-        stream.toDF().toDF("doc_id", "text"), "text", "doc_id", dir,
-        (df, epoch) => sunk.synchronized {
-          sunk ++= df.select("doc_id").collect().map(r => epoch -> r.getLong(0))
-        },
-        threshold = 0.5)
-      .start()
-    try {
-      // batch 1: 2 is a near-dup of 1 (last word changed); 10 is distinct
-      stream.addData((1L, base), (2L, base.replace("today", "tonight")),
-        (10L, "completely different text about spark partitions and shuffles this year"))
-      q.processAllAvailable()
-      // batch 2: 3 is a near-dup of the SURVIVOR of batch 1 (index hit);
-      // 11 is new
-      stream.addData((3L, base.replace("today", "tonite")),
-        (11L, "yet another unrelated document on columnar storage formats right here"))
-      q.processAllAvailable()
-    } finally q.stop()
-    assert(sunk.map(_._2).toSet == Set(1L, 10L, 11L), s"got $sunk")
-    // the band index holds rows only for survivors, epoch-partitioned
-    val idx = spark.read.parquet(dir)
-    assert(idx.columns.toSet == Set("id", "band", "sig", "epoch"))
-    assert(idx.select("id").distinct().collect().map(_.getLong(0)).toSet
-      == Set(1L, 10L, 11L))
+    withTempDir("graft_ndingest") { tmp =>
+      val dir = s"$tmp/bandidx"
+      // last-word variants: 12/14 word-3-shingles shared, Jaccard ~0.85 —
+      // same fixture shape CurationSpec's incrementalMinhash test pins
+      val base = "the quick brown fox jumps over the lazy dog near the river bank today"
+      val stream = MemoryStream[(Long, String)]
+      val sunk = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
+      val q = graft.streaming.CurationStreams.nearDupIngest(
+          stream.toDF().toDF("doc_id", "text"), "text", "doc_id", dir,
+          (df, epoch) => sunk.synchronized {
+            sunk ++= df.select("doc_id").collect().map(r => epoch -> r.getLong(0))
+          },
+          threshold = 0.5)
+        .start()
+      try {
+        // batch 1: 2 is a near-dup of 1 (last word changed); 10 is distinct
+        stream.addData((1L, base), (2L, base.replace("today", "tonight")),
+          (10L, "completely different text about spark partitions and shuffles this year"))
+        q.processAllAvailable()
+        // batch 2: 3 is a near-dup of the SURVIVOR of batch 1 (index hit);
+        // 11 is new
+        stream.addData((3L, base.replace("today", "tonite")),
+          (11L, "yet another unrelated document on columnar storage formats right here"))
+        q.processAllAvailable()
+      } finally q.stop()
+      assert(sunk.map(_._2).toSet == Set(1L, 10L, 11L), s"got $sunk")
+      // the band index holds rows only for survivors, epoch-partitioned
+      val idx = spark.read.parquet(dir)
+      assert(idx.columns.toSet == Set("id", "band", "sig", "epoch"))
+      assert(idx.select("id").distinct().collect().map(_.getLong(0)).toSet
+        == Set(1L, 10L, 11L))
+    }
   }
 
   test("dedupedIngest: crash mid-epoch + checkpoint restart replays bit-identically") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val base = java.nio.file.Files.createTempDirectory("graft_restart")
-    val idxDir = base.toString + "/idx"
-    val ckpt = base.toString + "/ckpt"
-    val stream = MemoryStream[(Long, String)]
-    val sunk = scala.collection.mutable.ArrayBuffer.empty[(Long, Seq[Long])]
-    @volatile var failNext = false
-    def writer() = graft.streaming.CurationStreams.dedupedIngest(
-        stream.toDF().toDF("doc_id", "text"), "text", "doc_id", idxDir,
-        (df, epoch) => {
-          val ids = df.select("doc_id").collect().map(_.getLong(0)).toSeq.sorted
-          sunk.synchronized { sunk += epoch -> ids }
-          if (failNext) {
-            failNext = false
-            // the worst crash window: sink delivered, index write never ran
-            throw new RuntimeException("injected crash after sink, before index write")
-          }
-        })
-      .option("checkpointLocation", ckpt)
+    withTempDir("graft_restart") { base =>
+      val idxDir = base.toString + "/idx"
+      val ckpt = base.toString + "/ckpt"
+      val stream = MemoryStream[(Long, String)]
+      val sunk = scala.collection.mutable.ArrayBuffer.empty[(Long, Seq[Long])]
+      @volatile var failNext = false
+      def writer() = graft.streaming.CurationStreams.dedupedIngest(
+          stream.toDF().toDF("doc_id", "text"), "text", "doc_id", idxDir,
+          (df, epoch) => {
+            val ids = df.select("doc_id").collect().map(_.getLong(0)).toSeq.sorted
+            sunk.synchronized { sunk += epoch -> ids }
+            if (failNext) {
+              failNext = false
+              // the worst crash window: sink delivered, index write never ran
+              throw new RuntimeException("injected crash after sink, before index write")
+            }
+          })
+        .option("checkpointLocation", ckpt)
 
-    // epoch 0 commits cleanly
-    val q1 = writer().start()
-    stream.addData((1L, "alpha document"), (2L, "beta document"))
-    q1.processAllAvailable(); q1.stop()
+      // epoch 0 commits cleanly
+      val q1 = writer().start()
+      stream.addData((1L, "alpha document"), (2L, "beta document"))
+      q1.processAllAvailable(); q1.stop()
 
-    // epoch 1 crashes mid-epoch (after sink, before index write)
-    failNext = true
-    stream.addData((3L, "alpha document"), (4L, "gamma document"))
-    val q2 = writer().start()
-    intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
-      q2.processAllAvailable()
+      // epoch 1 crashes mid-epoch (after sink, before index write)
+      failNext = true
+      stream.addData((3L, "alpha document"), (4L, "gamma document"))
+      val q2 = writer().start()
+      intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+        q2.processAllAvailable()
+      }
+      q2.stop()
+      // ...and (worse) the crash left PARTIAL index rows in our epoch's
+      // partition — the replay must overwrite them, not probe them
+      Seq("partialjunk").toDF("fingerprint").write.mode("append")
+        .parquet(idxDir + "/epoch=1")
+
+      // restart from the checkpoint: epoch 1 replays; then epoch 2 must
+      // dedup against the content the REPLAY indexed
+      val q3 = writer().start()
+      try {
+        q3.processAllAvailable()
+        stream.addData((5L, "gamma document"), (6L, "delta document"))
+        q3.processAllAvailable()
+      } finally q3.stop()
+
+      // both attempts of epoch 1 delivered the IDENTICAL survivor set
+      // (3=alpha is a cross-batch dup both times), and epoch 2 dropped
+      // 5=gamma against the replayed index — no dup, no loss
+      assert(sunk.toList == List(0L -> Seq(1L, 2L), 1L -> Seq(4L), 1L -> Seq(4L), 2L -> Seq(6L)),
+        s"got $sunk")
+      val idx = spark.read.parquet(idxDir)
+      // the partial-write junk was overwritten by the replay
+      assert(idx.filter(col("fingerprint") === "partialjunk").isEmpty,
+        "replay must dynamically overwrite its own epoch partition")
+      // exactly one fingerprint per distinct delivered content
+      assert(idx.select("fingerprint").distinct().count() == 4)
     }
-    q2.stop()
-    // ...and (worse) the crash left PARTIAL index rows in our epoch's
-    // partition — the replay must overwrite them, not probe them
-    Seq("partialjunk").toDF("fingerprint").write.mode("append")
-      .parquet(idxDir + "/epoch=1")
-
-    // restart from the checkpoint: epoch 1 replays; then epoch 2 must
-    // dedup against the content the REPLAY indexed
-    val q3 = writer().start()
-    try {
-      q3.processAllAvailable()
-      stream.addData((5L, "gamma document"), (6L, "delta document"))
-      q3.processAllAvailable()
-    } finally q3.stop()
-
-    // both attempts of epoch 1 delivered the IDENTICAL survivor set
-    // (3=alpha is a cross-batch dup both times), and epoch 2 dropped
-    // 5=gamma against the replayed index — no dup, no loss
-    assert(sunk.toList == List(0L -> Seq(1L, 2L), 1L -> Seq(4L), 1L -> Seq(4L), 2L -> Seq(6L)),
-      s"got $sunk")
-    val idx = spark.read.parquet(idxDir)
-    // the partial-write junk was overwritten by the replay
-    assert(idx.filter(col("fingerprint") === "partialjunk").isEmpty,
-      "replay must dynamically overwrite its own epoch partition")
-    // exactly one fingerprint per distinct delivered content
-    assert(idx.select("fingerprint").distinct().count() == 4)
   }
 
   test("quotaIngest: lifetime quotas across epochs; crash restart replays bit-identically") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val base = java.nio.file.Files.createTempDirectory("graft_quota")
-    val ledger = base.toString + "/ledger"
-    val ckpt = base.toString + "/ckpt"
-    val stream = MemoryStream[(Long, String, Long)]
-    val sunk = scala.collection.mutable.ArrayBuffer.empty[(Long, Seq[Long])]
-    @volatile var failNext = false
-    def writer() = graft.streaming.CurationStreams.quotaIngest(
-        stream.toDF().toDF("id", "src", "cost"), "src",
-        Seq(col("cost").desc, col("id").asc), "cost",
-        budgets = Map("a" -> 100L), defaultBudget = 50L, ledgerDir = ledger,
-        (df, epoch) => {
-          val ids = df.select("id").collect().map(_.getLong(0)).toSeq.sorted
-          sunk.synchronized { sunk += epoch -> ids }
-          if (failNext) {
-            failNext = false
-            // the worst crash window: sink delivered, ledger never written
-            throw new RuntimeException("injected crash after sink, before ledger write")
-          }
-        })
-      .option("checkpointLocation", ckpt)
+    withTempDir("graft_quota") { base =>
+      val ledger = base.toString + "/ledger"
+      val ckpt = base.toString + "/ckpt"
+      val stream = MemoryStream[(Long, String, Long)]
+      val sunk = scala.collection.mutable.ArrayBuffer.empty[(Long, Seq[Long])]
+      @volatile var failNext = false
+      def writer() = graft.streaming.CurationStreams.quotaIngest(
+          stream.toDF().toDF("id", "src", "cost"), "src",
+          Seq(col("cost").desc, col("id").asc), "cost",
+          budgets = Map("a" -> 100L), defaultBudget = 50L, ledgerDir = ledger,
+          (df, epoch) => {
+            val ids = df.select("id").collect().map(_.getLong(0)).toSeq.sorted
+            sunk.synchronized { sunk += epoch -> ids }
+            if (failNext) {
+              failNext = false
+              // the worst crash window: sink delivered, ledger never written
+              throw new RuntimeException("injected crash after sink, before ledger write")
+            }
+          })
+        .option("checkpointLocation", ckpt)
 
-    // epoch 0: a admits 60+30 = 90 of 100; b admits 40 of the default 50
-    val q1 = writer().start()
-    stream.addData((1L, "a", 60L), (2L, "a", 30L), (3L, "b", 40L))
-    q1.processAllAvailable(); q1.stop()
+      // epoch 0: a admits 60+30 = 90 of 100; b admits 40 of the default 50
+      val q1 = writer().start()
+      stream.addData((1L, "a", 60L), (2L, "a", 30L), (3L, "b", 40L))
+      q1.processAllAvailable(); q1.stop()
 
-    // epoch 1 crashes mid-epoch. Intended admissions: a remaining 10 →
-    // the cost-10 row fits exactly, the cost-5 row is past the prefix
-    // cutoff (rs 15 > 10 — prefix-greedy counts the whole prefix);
-    // b remaining 10 → the cost-5 row fits
-    failNext = true
-    stream.addData((4L, "a", 10L), (5L, "a", 5L), (6L, "b", 5L))
-    val q2 = writer().start()
-    intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
-      q2.processAllAvailable()
+      // epoch 1 crashes mid-epoch. Intended admissions: a remaining 10 →
+      // the cost-10 row fits exactly, the cost-5 row is past the prefix
+      // cutoff (rs 15 > 10 — prefix-greedy counts the whole prefix);
+      // b remaining 10 → the cost-5 row fits
+      failNext = true
+      stream.addData((4L, "a", 10L), (5L, "a", 5L), (6L, "b", 5L))
+      val q2 = writer().start()
+      intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+        q2.processAllAvailable()
+      }
+      q2.stop()
+      // ...and the crash left PARTIAL ledger rows in our epoch's partition
+      // — the replay must overwrite them, never count them as spend
+      Seq(("a", 999L)).toDF("grp", "spent").write.mode("append")
+        .parquet(ledger + "/epoch=1")
+
+      // restart: epoch 1 replays bit-identically, then epoch 2 runs
+      // against the REPLAYED ledger: a is exactly exhausted (90+10), so
+      // its cost-1 row is refused; b has 5 left, so its cost-4 row fits
+      val q3 = writer().start()
+      try {
+        q3.processAllAvailable()
+        stream.addData((7L, "a", 1L), (8L, "b", 4L))
+        q3.processAllAvailable()
+      } finally q3.stop()
+
+      assert(sunk.toList == List(0L -> Seq(1L, 2L, 3L), 1L -> Seq(4L, 6L),
+        1L -> Seq(4L, 6L), 2L -> Seq(8L)), s"got $sunk")
+      val led = spark.read.parquet(ledger)
+      assert(led.filter(col("spent") === 999L).isEmpty,
+        "replay must dynamically overwrite its own epoch partition")
+      // the lifetime invariant the operator sells: admitted cost per
+      // source never exceeds its budget
+      val spent = led.groupBy("grp").agg(sum("spent").as("s")).collect()
+        .map(r => r.getString(0) -> r.getLong(1)).toMap
+      assert(spent == Map("a" -> 100L, "b" -> 49L), s"got $spent")
     }
-    q2.stop()
-    // ...and the crash left PARTIAL ledger rows in our epoch's partition
-    // — the replay must overwrite them, never count them as spend
-    Seq(("a", 999L)).toDF("grp", "spent").write.mode("append")
-      .parquet(ledger + "/epoch=1")
-
-    // restart: epoch 1 replays bit-identically, then epoch 2 runs
-    // against the REPLAYED ledger: a is exactly exhausted (90+10), so
-    // its cost-1 row is refused; b has 5 left, so its cost-4 row fits
-    val q3 = writer().start()
-    try {
-      q3.processAllAvailable()
-      stream.addData((7L, "a", 1L), (8L, "b", 4L))
-      q3.processAllAvailable()
-    } finally q3.stop()
-
-    assert(sunk.toList == List(0L -> Seq(1L, 2L, 3L), 1L -> Seq(4L, 6L),
-      1L -> Seq(4L, 6L), 2L -> Seq(8L)), s"got $sunk")
-    val led = spark.read.parquet(ledger)
-    assert(led.filter(col("spent") === 999L).isEmpty,
-      "replay must dynamically overwrite its own epoch partition")
-    // the lifetime invariant the operator sells: admitted cost per
-    // source never exceeds its budget
-    val spent = led.groupBy("grp").agg(sum("spent").as("s")).collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(spent == Map("a" -> 100L, "b" -> 49L), s"got $spent")
   }
 
   test("quotaIngest property: random epochs ≡ epoch-sequential prefix-greedy reference") {
@@ -442,25 +453,26 @@ class StreamingSpec extends SparkTestBase {
         }
         admitted.toSet
       }
-      val base = java.nio.file.Files.createTempDirectory(s"graft_quota_prop$seed")
-      val stream = MemoryStream[(Long, String, Long, Long)]
-      val got = scala.collection.mutable.Map.empty[Long, Set[Long]]
-      val order = if (tieBreak) Seq(col("pri").desc, col("id").asc) else Seq(col("pri").desc)
-      val q = CurationStreams.quotaIngest(
-          stream.toDF().toDF("id", "grp", "pri", "cost"), "grp", order, "cost",
-          budgets, defaultBudget = 0L, base.toString + "/ledger",
-          (df, epoch) => got.synchronized {
-            got(epoch) = df.select("id").collect().map(_.getLong(0)).toSet
-          })
-        .start()
-      try (0 until nEpochs).foreach { e =>
-        stream.addData(rows.filter(_._5 == e).map(r => (r._1, r._2, r._3, r._4)): _*)
-        q.processAllAvailable()
-      } finally q.stop()
-      (0 until nEpochs).foreach { e =>
-        assert(got(e.toLong) == wantByEpoch(e),
-          s"seed=$seed epoch=$e missing=${wantByEpoch(e) -- got(e.toLong)} " +
-            s"extra=${got(e.toLong) -- wantByEpoch(e)}")
+      withTempDir(s"graft_quota_prop$seed") { base =>
+        val stream = MemoryStream[(Long, String, Long, Long)]
+        val got = scala.collection.mutable.Map.empty[Long, Set[Long]]
+        val order = if (tieBreak) Seq(col("pri").desc, col("id").asc) else Seq(col("pri").desc)
+        val q = CurationStreams.quotaIngest(
+            stream.toDF().toDF("id", "grp", "pri", "cost"), "grp", order, "cost",
+            budgets, defaultBudget = 0L, base.toString + "/ledger",
+            (df, epoch) => got.synchronized {
+              got(epoch) = df.select("id").collect().map(_.getLong(0)).toSet
+            })
+          .start()
+        try (0 until nEpochs).foreach { e =>
+          stream.addData(rows.filter(_._5 == e).map(r => (r._1, r._2, r._3, r._4)): _*)
+          q.processAllAvailable()
+        } finally q.stop()
+        (0 until nEpochs).foreach { e =>
+          assert(got(e.toLong) == wantByEpoch(e),
+            s"seed=$seed epoch=$e missing=${wantByEpoch(e) -- got(e.toLong)} " +
+              s"extra=${got(e.toLong) -- wantByEpoch(e)}")
+        }
       }
     }
   }
@@ -695,55 +707,56 @@ class StreamingSpec extends SparkTestBase {
       bos.toByteArray
     }
     val pA = 0x3C5A96E187D24B0FL; val pB = 0x12489ABCDEF01357L
-    val base = java.nio.file.Files.createTempDirectory("graft_imgrestart")
-    val idxDir = base.toString + "/idx"
-    val ckpt = base.toString + "/ckpt"
-    val stream = MemoryStream[(Long, Array[Byte])]
-    val sunk = scala.collection.mutable.ArrayBuffer.empty[(Long, Seq[Long])]
-    @volatile var failNext = false
-    def writer() = CurationStreams.imageDedupIngest(
-        stream.toDF().toDF("id", "payload"), "id", "payload", idxDir,
-        (df, epoch) => {
-          val ids = df.select("id").collect().map(_.getLong(0)).toSeq.sorted
-          sunk.synchronized { sunk += epoch -> ids }
-          if (failNext) {
-            failNext = false
-            throw new RuntimeException("injected crash after sink, before index write")
-          }
-        })
-      .option("checkpointLocation", ckpt)
+    withTempDir("graft_imgrestart") { base =>
+      val idxDir = base.toString + "/idx"
+      val ckpt = base.toString + "/ckpt"
+      val stream = MemoryStream[(Long, Array[Byte])]
+      val sunk = scala.collection.mutable.ArrayBuffer.empty[(Long, Seq[Long])]
+      @volatile var failNext = false
+      def writer() = CurationStreams.imageDedupIngest(
+          stream.toDF().toDF("id", "payload"), "id", "payload", idxDir,
+          (df, epoch) => {
+            val ids = df.select("id").collect().map(_.getLong(0)).toSeq.sorted
+            sunk.synchronized { sunk += epoch -> ids }
+            if (failNext) {
+              failNext = false
+              throw new RuntimeException("injected crash after sink, before index write")
+            }
+          })
+        .option("checkpointLocation", ckpt)
 
-    val q1 = writer().start()
-    stream.addData((1L, mkImg(pA)), (2L, mkImg(pB)))
-    q1.processAllAvailable(); q1.stop()
+      val q1 = writer().start()
+      stream.addData((1L, mkImg(pA)), (2L, mkImg(pB)))
+      q1.processAllAvailable(); q1.stop()
 
-    // epoch 1 crashes after sink, before index write; the crash also
-    // leaves a PARTIAL index row in our epoch's partition
-    failNext = true
-    stream.addData((3L, mkImg(pA ^ 1L)), (4L, mkImg(0x5A5A5A5A5A5A5A5AL)))
-    val q2 = writer().start()
-    intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
-      q2.processAllAvailable()
+      // epoch 1 crashes after sink, before index write; the crash also
+      // leaves a PARTIAL index row in our epoch's partition
+      failNext = true
+      stream.addData((3L, mkImg(pA ^ 1L)), (4L, mkImg(0x5A5A5A5A5A5A5A5AL)))
+      val q2 = writer().start()
+      intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+        q2.processAllAvailable()
+      }
+      q2.stop()
+      Seq(Tuple1(12345L)).toDF("dhash").write.mode("append").parquet(idxDir + "/epoch=1")
+
+      val q3 = writer().start()
+      try {
+        q3.processAllAvailable()
+        // epoch 2 must dedup against what the REPLAY indexed (Hamming 1 of id 4)
+        stream.addData((5L, mkImg(0x5A5A5A5A5A5A5A5BL)), (6L, mkImg(pB ^ (0x3FL << 50))))
+        q3.processAllAvailable()
+      } finally q3.stop()
+
+      // both attempts of epoch 1 delivered the identical survivor set
+      // (3 is Hamming-1 of indexed 1 both times), epoch 2 dropped 5
+      // against the replayed index and kept the far pattern 6
+      assert(sunk.toList == List(0L -> Seq(1L, 2L), 1L -> Seq(4L), 1L -> Seq(4L), 2L -> Seq(6L)),
+        s"got $sunk")
+      val idx = spark.read.parquet(idxDir)
+      assert(idx.filter(col("dhash") === 12345L).isEmpty,
+        "replay must dynamically overwrite its own epoch partition")
     }
-    q2.stop()
-    Seq(Tuple1(12345L)).toDF("dhash").write.mode("append").parquet(idxDir + "/epoch=1")
-
-    val q3 = writer().start()
-    try {
-      q3.processAllAvailable()
-      // epoch 2 must dedup against what the REPLAY indexed (Hamming 1 of id 4)
-      stream.addData((5L, mkImg(0x5A5A5A5A5A5A5A5BL)), (6L, mkImg(pB ^ (0x3FL << 50))))
-      q3.processAllAvailable()
-    } finally q3.stop()
-
-    // both attempts of epoch 1 delivered the identical survivor set
-    // (3 is Hamming-1 of indexed 1 both times), epoch 2 dropped 5
-    // against the replayed index and kept the far pattern 6
-    assert(sunk.toList == List(0L -> Seq(1L, 2L), 1L -> Seq(4L), 1L -> Seq(4L), 2L -> Seq(6L)),
-      s"got $sunk")
-    val idx = spark.read.parquet(idxDir)
-    assert(idx.filter(col("dhash") === 12345L).isEmpty,
-      "replay must dynamically overwrite its own epoch partition")
   }
 
   test("imageDedupIngest: cross-epoch near-dup dropped, poison rows pass through") {
@@ -766,30 +779,31 @@ class StreamingSpec extends SparkTestBase {
       bos.toByteArray
     }
     val p0 = 0x3C5A96E187D24B0FL
-    val base = java.nio.file.Files.createTempDirectory("graft_imgingest").toString
-    val stream = MemoryStream[(Long, Array[Byte])]
-    val q = CurationStreams.imageDedupIngest(
-        stream.toDF().toDF("id", "payload"), "id", "payload", s"$base/idx",
-        (df, epoch) => df.select(col("id"), lit(epoch).as("epoch"))
-          .write.mode("append").parquet(s"$base/out"))
-      .start()
-    try {
-      // epoch 0: two exact dups (1 dominates 4) + one far pattern
-      stream.addData((1L, mkImg(p0)), (4L, mkImg(p0)), (5L, mkImg(p0 ^ (0xFFL << 32))))
-      q.processAllAvailable()
-      // epoch 1: Hamming-1 of the epoch-0 survivor (drops via the index),
-      // a genuinely new pattern, and an undecodable payload (passes through)
-      stream.addData((7L, mkImg(p0 ^ 1L)), (8L, mkImg(0x12489ABCDEF01357L)),
-        (9L, "not a png".getBytes("UTF-8")))
-      q.processAllAvailable()
-      val out = spark.read.parquet(s"$base/out")
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(out == Map(1L -> 0L, 5L -> 0L, 8L -> 1L, 9L -> 1L), s"got $out")
-      // the index holds only decoded survivor hashes (3 rows, 8 bytes each)
-      val idx = spark.read.parquet(s"$base/idx").select("dhash")
-        .collect().map(_.getLong(0)).toSet
-      assert(idx == Set(p0, p0 ^ (0xFFL << 32), 0x12489ABCDEF01357L), s"got $idx")
-    } finally q.stop()
+    withTempDir("graft_imgingest") { base =>
+      val stream = MemoryStream[(Long, Array[Byte])]
+      val q = CurationStreams.imageDedupIngest(
+          stream.toDF().toDF("id", "payload"), "id", "payload", s"$base/idx",
+          (df, epoch) => df.select(col("id"), lit(epoch).as("epoch"))
+            .write.mode("append").parquet(s"$base/out"))
+        .start()
+      try {
+        // epoch 0: two exact dups (1 dominates 4) + one far pattern
+        stream.addData((1L, mkImg(p0)), (4L, mkImg(p0)), (5L, mkImg(p0 ^ (0xFFL << 32))))
+        q.processAllAvailable()
+        // epoch 1: Hamming-1 of the epoch-0 survivor (drops via the index),
+        // a genuinely new pattern, and an undecodable payload (passes through)
+        stream.addData((7L, mkImg(p0 ^ 1L)), (8L, mkImg(0x12489ABCDEF01357L)),
+          (9L, "not a png".getBytes("UTF-8")))
+        q.processAllAvailable()
+        val out = spark.read.parquet(s"$base/out")
+          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+        assert(out == Map(1L -> 0L, 5L -> 0L, 8L -> 1L, 9L -> 1L), s"got $out")
+        // the index holds only decoded survivor hashes (3 rows, 8 bytes each)
+        val idx = spark.read.parquet(s"$base/idx").select("dhash")
+          .collect().map(_.getLong(0)).toSet
+        assert(idx == Set(p0, p0 ^ (0xFFL << 32), 0x12489ABCDEF01357L), s"got $idx")
+      } finally q.stop()
+    }
   }
 
   test("annIngest: streamed index equals at-once build; cell-partitioned on disk") {
@@ -798,39 +812,39 @@ class StreamingSpec extends SparkTestBase {
     val vecs = (0L until 60L).map(i =>
       (i, Array((i % 3).toFloat + 1f, (i % 7).toFloat)))
     val cents = Array(Array(1.0, 0.0), Array(2.0, 3.0), Array(3.0, 6.0))
-    val base = java.nio.file.Files.createTempDirectory("graft_anningest").toString
-    val stream = MemoryStream[(Long, Array[Float])]
-    val q = CurationStreams.annIngest(stream.toDF().toDF("vec_id", "embedding"),
-        "embedding", "vec_id", cents, s"$base/idx")
-      .start()
-    try {
-      Seq(vecs.filter(_._1 < 20), vecs.filter(v => v._1 >= 20 && v._1 < 45),
-        vecs.filter(_._1 >= 45)).foreach { b =>
-        stream.addData(b: _*)
-        q.processAllAvailable()
-      }
-    } finally q.stop()
-    val streamed = spark.read.parquet(s"$base/idx")
-    assert(streamed.count() == 60)
-    // streamed-in-any-epoch ≡ built-at-once: cells AND int8 sidecar match
-    val batchIdx = graft.pipeline.IvfIndex.buildFromCentroids(
-      vecs.toDF("vec_id", "embedding"), "embedding", "vec_id", cents)
-    val batchSide = graft.pipeline.IvfIndex.quantizedSidecar(batchIdx)
-      .select(col("id"), col("cell").as("bcell"), col("q8").as("bq8"))
-    val joined = streamed.join(batchSide, "id")
-    assert(joined.count() == 60)
-    assert(joined.filter(col("cell") =!= col("bcell")).count() == 0,
-      "streamed assignment equals batch assignment")
-    assert(joined.filter(col("q8.scale") =!= col("bq8.scale")).count() == 0,
-      "int8 sidecar scale matches")
-    // epoch dirs partition the writes; cell dirs give probe-side pruning
-    val idxDir = new java.io.File(s"$base/idx")
-    val epochDirs = idxDir.listFiles().filter(_.getName.startsWith("epoch="))
-    assert(epochDirs.map(_.getName).sorted.sameElements(
-      Array("epoch=0", "epoch=1", "epoch=2")), "one partition dir per epoch")
-    assert(epochDirs.head.listFiles().exists(_.getName.startsWith("cell=")),
-      "cell subdirectories present for probe pruning")
-    graft.tools.Cleanup.deleteRecursively(base)
+    withTempDir("graft_anningest") { base =>
+      val stream = MemoryStream[(Long, Array[Float])]
+      val q = CurationStreams.annIngest(stream.toDF().toDF("vec_id", "embedding"),
+          "embedding", "vec_id", cents, s"$base/idx")
+        .start()
+      try {
+        Seq(vecs.filter(_._1 < 20), vecs.filter(v => v._1 >= 20 && v._1 < 45),
+          vecs.filter(_._1 >= 45)).foreach { b =>
+          stream.addData(b: _*)
+          q.processAllAvailable()
+        }
+      } finally q.stop()
+      val streamed = spark.read.parquet(s"$base/idx")
+      assert(streamed.count() == 60)
+      // streamed-in-any-epoch ≡ built-at-once: cells AND int8 sidecar match
+      val batchIdx = graft.pipeline.IvfIndex.buildFromCentroids(
+        vecs.toDF("vec_id", "embedding"), "embedding", "vec_id", cents)
+      val batchSide = graft.pipeline.IvfIndex.quantizedSidecar(batchIdx)
+        .select(col("id"), col("cell").as("bcell"), col("q8").as("bq8"))
+      val joined = streamed.join(batchSide, "id")
+      assert(joined.count() == 60)
+      assert(joined.filter(col("cell") =!= col("bcell")).count() == 0,
+        "streamed assignment equals batch assignment")
+      assert(joined.filter(col("q8.scale") =!= col("bq8.scale")).count() == 0,
+        "int8 sidecar scale matches")
+      // epoch dirs partition the writes; cell dirs give probe-side pruning
+      val idxDir = new java.io.File(s"$base/idx")
+      val epochDirs = idxDir.listFiles().filter(_.getName.startsWith("epoch="))
+      assert(epochDirs.map(_.getName).sorted.sameElements(
+        Array("epoch=0", "epoch=1", "epoch=2")), "one partition dir per epoch")
+      assert(epochDirs.head.listFiles().exists(_.getName.startsWith("cell=")),
+        "cell subdirectories present for probe pruning")
+    }
   }
 
   test("text enrichment is streaming-safe: stream result equals batch") {
