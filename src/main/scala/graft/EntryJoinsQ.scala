@@ -333,7 +333,7 @@ private[graft] object EntryJoinsQ {
         // greedy budget selection (round 12): the most valuable lineitems
         // whose quantities fit a 500k-unit budget, priority price DESC
         // with a unique (orderkey, linenumber) tie-break. The operator's
-        // two-pass range-partition + driver-prefix shape replaces the
+        // map-only sampled cutoff search + lazy filter replaces the
         // global single-task running-sum window the oracle uses — output
         // sets must be identical.
         val li = m.getDDFByName("lineitem").df

@@ -596,7 +596,7 @@ private[graft] object EntryUrlQ {
         // so the whole quota derivation is basic IEEE ops and the
         // oracle matches WITHOUT rounding; the remainder bump replays
         // as a row_number over (rem DESC, domain) — pinning
-        // budgetSelect's range-exchange greedy value-identical to the
+        // budgetSelect's sampled-cutoff greedy value-identical to the
         // window form, the ds03/q92 discipline on a second shape.
         val docs = m.getDDFByName("documents").df
           .select(syntheticUrl(5).as("url"))

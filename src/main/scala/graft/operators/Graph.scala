@@ -161,11 +161,18 @@ object Graph {
     * Scale shape: per iteration two edge-keyed join+aggregate rounds
     * plus two SINGLE-ROW max aggregates to the driver (the documented
     * scalar-collect class — 2·iterations rows total, injected back as
-    * literals so the plan stays deterministic). Same per-round persist
-    * /release discipline as [[pageRank]] (r15 audit).
+    * literals so the plan stays deterministic). Each normalized
+    * `auth`/`hub` frame is a `localCheckpoint`, so every round plans
+    * against the previous round's rows, not its lineage (a persisted
+    * frame keeps its whole plan: at 5 iterations the final plans held
+    * 254 broadcast joins), and a superseded round is freed through
+    * [[graft.core.Checkpoints.release]]. The result is a checkpoint of
+    * its own — already materialized; release it via
+    * [[graft.core.Checkpoints.release]] when done.
     */
   def hits(edges: DataFrame, srcCol: String, dstCol: String,
            iterations: Int, scale: Long = 1000000L): DataFrame = {
+    import graft.core.Checkpoints
     require(iterations >= 1, s"hits: iterations must be >= 1, got $iterations")
     require(scale >= 1, s"hits: scale must be >= 1, got $scale")
     val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst")).distinct()
@@ -180,44 +187,32 @@ object Graph {
           lit(mx.toDouble)).cast("long")
       else lit(0L)
       nodes.join(raw, Seq("node"), "left").select(col("node"), v.as(outCol))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .localCheckpoint()
     }
-    var hub = nodes.withColumn("hub", lit(scale))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    var hub: DataFrame = null
     var auth: DataFrame = null
     try {
+      hub = nodes.withColumn("hub", lit(scale)).localCheckpoint()
       for (_ <- 0 until iterations) {
         val araw = e.join(hub.withColumnRenamed("node", "src"), "src")
           .groupBy(col("dst").as("node")).agg(sum(col("hub")).as("ar"))
         val nextAuth = normalized(araw, "ar", "auth")
-        nextAuth.count()
-        if (auth != null) auth.unpersist(blocking = false)
+        if (auth != null) Checkpoints.release(auth)
         auth = nextAuth
         val hraw = e.join(auth.withColumnRenamed("node", "dst"), "dst")
           .groupBy(col("src").as("node")).agg(sum(col("auth")).as("hr"))
         val nextHub = normalized(hraw, "hr", "hub")
-        nextHub.count()
-        hub.unpersist(blocking = false)
+        Checkpoints.release(hub)
         hub = nextHub
       }
-      // materialize the result, then release the iteration frames — the
-      // returned frame is the caller-owned persisted materialization
-      // (the pageRank contract)
-      val out = nodes.join(auth, Seq("node"), "left")
+      nodes.join(auth, Seq("node"), "left")
         .join(hub, Seq("node"), "left")
         .select(col("node"), coalesce(col("auth"), lit(0L)).as("auth"),
           coalesce(col("hub"), lit(0L)).as("hub"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      out.count()
-      auth.unpersist(blocking = false)
-      hub.unpersist(blocking = false)
-      out
-    } catch {
-      case t: Throwable =>
-        if (auth != null) auth.unpersist(blocking = false)
-        hub.unpersist(blocking = false)
-        throw t
+        .localCheckpoint()
     } finally {
+      if (auth != null) Checkpoints.release(auth)
+      if (hub != null) Checkpoints.release(hub)
       e.unpersist(blocking = false)
       nodes.unpersist(blocking = false)
     }

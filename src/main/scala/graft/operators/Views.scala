@@ -143,47 +143,6 @@ object Views {
         (col("__pos") + 1).cast("int").as("rk"): _*)
   }
 
-  /** Greedy budget-constrained selection: keep rows in `order` priority
-    * while the running total of `costCol` stays ≤ `budget` — "pack the
-    * best documents into an N-token training budget", the corpus-
-    * selection step every data-mixture recipe ends with (with order =
-    * quality DESC it is the greedy knapsack heuristic; with order =
-    * value/cost DESC, greedy-by-density). A row is kept iff the sum of
-    * all strictly-prior costs plus its own is ≤ budget.
-    *
-    * The naive form — `sum(cost) OVER (ORDER BY priority)` then filter —
-    * is a GLOBAL un-partitioned window: at corpus scale one task sorts
-    * and scans everything. This shape never builds one: (1) ONE range
-    * exchange on the priority order carrying ONLY (order keys, cost);
-    * (2) per-partition cost sums — a config-sized (numShufflePartitions
-    * rows) collect — prefix-scanned on the driver into offsets; (3) one
-    * in-partition scan of the single BOUNDARY partition to find the
-    * cutoff key. Same two-pass discipline as MissingData.fillGlobal —
-    * and like it, window-free end to end.
-    *
-    * Determinism: `order` must be a TOTAL order (include a unique
-    * tie-break column) — ties at the budget cutoff are otherwise
-    * partition-layout-dependent. Costs must be non-negative (validated
-    * over the WHOLE input in pass 1, before any selection — invalid
-    * input throws, never silently mis-selects); null costs count 0.
-    * Costs are summed as LONGs (token/byte/row budgets are integral;
-    * float addition would make the cutoff order-dependent).
-    *
-    * Nothing pins (the r12 verdict's checkpoint-lifetime ask): because
-    * costs are non-negative the kept set is exactly a PREFIX of the
-    * total order, so the operator only needs the CUTOFF KEY — the order
-    * tuple of the last kept row. Pass 1 and pass 2 are two jobs on ONE
-    * shared RDD of [[budgetScanPlan]] (order keys + cost ONLY ride the
-    * range exchange, never the payload), so pass 2's map stage reuses
-    * pass 1's shuffle files (skipped stage: one data scan + one slim
-    * shuffle write total) and its reduce reads just the boundary
-    * partition. The result is the ORIGINAL frame filtered lazily by a
-    * lexicographic key-at-or-before-cutoff predicate — a plain Catalyst
-    * `Filter` (pushdown-eligible, no exchange, no window, no pinned
-    * storage; re-reads prune at the scan instead of hitting a
-    * materialized copy). Output: the original columns, no implied row
-    * order.
-    */
   /** Largest-remainder apportionment (Hamilton's method — public
     * knowledge) of an integer budget across keys proportional to
     * integer weights: quota_k = ⌊B·w_k/W⌋ plus one extra unit for the
@@ -203,8 +162,8 @@ object Views {
     * Scale shape: the input is a per-KEY weight table (the output of a
     * corpus aggregate, millions of rows at most). Two scalar aggregates
     * reach the driver (W and Σfloor — single rows, the documented
-    * config-sized-collect class); the remainder bump rides
-    * [[budgetSelect]]'s range-exchange machinery, so even a
+    * config-sized-collect class); the remainder bump is a
+    * [[budgetSelect]] on (remainder DESC, key), so even a
     * millions-of-keys table never sorts under one unpartitioned
     * window.
     */
@@ -235,219 +194,118 @@ object Views {
         (col("__floor") + coalesce(col("__bump"), lit(0L))).as("quota"))
   }
 
+  /** Greedy budget-constrained selection: keep rows in `order` priority
+    * while the running total of `costCol` stays ≤ `budget` — "pack the
+    * best documents into an N-token training budget", the corpus-
+    * selection step every data-mixture recipe ends with (with order =
+    * quality DESC it is the greedy knapsack heuristic; with order =
+    * value/cost DESC, greedy-by-density). A row is kept iff the sum of
+    * all strictly-prior costs plus its own is ≤ budget.
+    *
+    * The naive form — `sum(cost) OVER (ORDER BY priority)` then filter —
+    * is a GLOBAL un-partitioned window: at corpus scale one task sorts
+    * and scans everything. This shape sorts and shuffles nothing.
+    * Because costs are non-negative the kept set is exactly a PREFIX of
+    * the total order, so the operator only needs the CUTOFF KEY — the
+    * order tuple of the last kept row, a weighted quantile of the slim
+    * (order keys, long cost) projection. A sampled-split search finds it
+    * with map-only passes over that projection: (1) per-partition cost
+    * stats and a reservoir sample of keys, collected to the driver;
+    * (2) while the key range holding the cutoff has more than 2^18 rows
+    * (at most 3 rounds), per-candidate-range cost totals
+    * tree-aggregated to the driver, then a new sample inside the
+    * narrowed range; (3) the boundary range's rows collected and walked
+    * in order on the driver. Keys compare under Catalyst's own row
+    * ordering (a `LazilyGeneratedOrdering` over the keys' sort orders),
+    * so every orderable key type — numerics, strings of any collation,
+    * binary, structs, arrays — takes this path, and the cut key
+    * re-enters the plan as typed literals.
+    *
+    * Determinism: `order` must be a TOTAL order (include a unique
+    * tie-break column) — ties at the budget cutoff are otherwise
+    * partition-layout-dependent. A boundary range the sampler cannot
+    * split below 8 × 2^18 rows means that more than 2 M rows tie on the
+    * order; such input is refused with an IllegalArgumentException that
+    * asks for a tie-break column, never answered with a layout-dependent
+    * cut. Costs must be non-negative (validated over the WHOLE input in
+    * pass 1, before any selection — invalid input throws, never
+    * silently mis-selects); null costs count 0. Costs are summed as
+    * LONGs (token/byte/row budgets are integral; float addition would
+    * make the cutoff order-dependent).
+    *
+    * Nothing pins: the passes keep no storage. The result is the
+    * ORIGINAL frame filtered lazily by a lexicographic
+    * key-at-or-before-cutoff predicate — a plain Catalyst `Filter`
+    * (pushdown-eligible, no exchange, no window, no pinned storage;
+    * re-reads prune at the scan instead of hitting a materialized copy).
+    * Output: the original columns, no implied row order.
+    */
   def budgetSelect(df: DataFrame, order: Seq[Column], costCol: String,
                    budget: Long): DataFrame = {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.{Ascending, BoundReference, Descending,
+      Literal, NullsFirst, NullsLast, RowOrdering, SortOrder}
+    import org.apache.spark.sql.catalyst.expressions.codegen.LazilyGeneratedOrdering
+    import org.apache.spark.sql.graftbridge.Bridge
     require(order.nonEmpty, "budgetSelect: need at least one order column")
     require(budget >= 0, s"budgetSelect: budget must be >= 0, got $budget")
     val keys = sortKeysOf(order)
-    val keyed = budgetKeyedPlan(df, keys, costCol)
-    // r18 (guide §2.3): the cutoff KEY is a weighted-quantile — it does
-    // not need a range exchange at all. A sampled-split search finds it
-    // with map-only passes over the slim (keys, cost) projection:
-    // per-partition stats + a reservoir key sample, per-candidate-range
-    // cost totals tree-aggregated to the driver, then the boundary
-    // range's rows (sample-bounded, ~input/4096) collected and walked.
-    // Zero shuffles, zero sorts (the r17 shape paid the range
-    // partitioner's sample pass PLUS a full shuffle+sort of every slim
-    // row). Needs a driver-side total order on the key types; exotic
-    // key types (arrays, structs, maps) fall back to the range-exchange
-    // shape, as does a degenerate key distribution the sampler cannot
-    // split (a single key carrying millions of rows).
-    keyCmpsFor(keyed.schema, keys) match {
-      case Some(kc) => budgetSelectSampled(df, keyed, keys, kc, budget)
-        .getOrElse(budgetSelectRangeExchange(df, order, costCol, budget))
-      case None => budgetSelectRangeExchange(df, order, costCol, budget)
-    }
-  }
-
-  /** The slim (order keys, long cost) projection both budgetSelect
-    * shapes scan — no exchange, no payload.
-    */
-  private def budgetKeyedPlan(df: DataFrame, keys: Seq[(Column, Boolean, Boolean)],
-                              costCol: String): DataFrame =
-    df.select(
+    val m = keys.size
+    // the slim projection every pass scans: order keys k0..k(m-1), then cost
+    val keyed = df.select(
       keys.zipWithIndex.map { case ((k, _, _), i) => k.as(s"__k$i") } :+
         coalesce(col(costCol).cast("long"), lit(0L)).as("__cost"): _*)
-
-  /** The sampled path's per-key-field machinery over INTERNAL rows
-    * (guide §1.4: `.rdd` pays a catalyst→external decode per row; the
-    * sampled passes instead scan `queryExecution.toRdd` and compare
-    * primitives in place). `rowVsKey` compares a live InternalRow field
-    * against a RETAINED (boxed internal) key component without boxing
-    * the row side; `valCmp` orders retained key components on the
-    * driver; `extract` boxes (and copies — InternalRows are reused
-    * buffers) a field for retention. None when a key type has no safe
-    * driver comparison (nested types). Matches Spark's sort order:
-    * strings UTF8 binary, NaN largest, ±0.0 equal, internal date = int
-    * days / timestamp = long micros.
-    */
-  private case class KeyCmps(
-      rowVsKey: Array[(org.apache.spark.sql.catalyst.InternalRow, Any) => Int],
-      valCmp: Array[(Any, Any) => Int],
-      extract: Array[org.apache.spark.sql.catalyst.InternalRow => Any]) {
-    def compareRowKey(r: org.apache.spark.sql.catalyst.InternalRow,
-                      k: Array[Any]): Int = {
-      var i = 0
-      while (i < rowVsKey.length) {
-        val c = rowVsKey(i)(r, k(i))
-        if (c != 0) return c
-        i += 1
-      }
-      0
-    }
-    def keyOf(r: org.apache.spark.sql.catalyst.InternalRow): Array[Any] = {
-      val out = new Array[Any](extract.length)
-      var i = 0
-      while (i < extract.length) { out(i) = extract(i)(r); i += 1 }
-      out
-    }
-    val keyOrd: Ordering[Array[Any]] = new Ordering[Array[Any]] {
-      override def compare(x: Array[Any], y: Array[Any]): Int = {
-        var i = 0
-        while (i < valCmp.length) {
-          val c = valCmp(i)(x(i), y(i))
-          if (c != 0) return c
-          i += 1
-        }
-        0
-      }
-    }
-  }
-
-  private def keyCmpsFor(schema: org.apache.spark.sql.types.StructType,
-                         keys: Seq[(Column, Boolean, Boolean)]): Option[KeyCmps] = {
-    import org.apache.spark.sql.types._
-    import org.apache.spark.sql.catalyst.InternalRow
-    import org.apache.spark.unsafe.types.UTF8String
-    type RK = (InternalRow, Int, Any) => Int // non-null row field vs key value
-    type VV = (Any, Any) => Int              // non-null key value vs key value
-    type EX = (InternalRow, Int) => Any      // non-null boxed copy of row field
-    def base(dt: DataType): Option[(RK, VV, EX)] = dt match {
-      case ByteType => Some((
-        (r, i, k) => java.lang.Byte.compare(r.getByte(i), k.asInstanceOf[Byte]),
-        (a, b) => java.lang.Byte.compare(a.asInstanceOf[Byte], b.asInstanceOf[Byte]),
-        (r, i) => r.getByte(i)))
-      case ShortType => Some((
-        (r, i, k) => java.lang.Short.compare(r.getShort(i), k.asInstanceOf[Short]),
-        (a, b) => java.lang.Short.compare(a.asInstanceOf[Short], b.asInstanceOf[Short]),
-        (r, i) => r.getShort(i)))
-      case IntegerType | DateType => Some((
-        (r, i, k) => java.lang.Integer.compare(r.getInt(i), k.asInstanceOf[Int]),
-        (a, b) => java.lang.Integer.compare(a.asInstanceOf[Int], b.asInstanceOf[Int]),
-        (r, i) => r.getInt(i)))
-      case LongType | TimestampType | TimestampNTZType => Some((
-        (r, i, k) => java.lang.Long.compare(r.getLong(i), k.asInstanceOf[Long]),
-        (a, b) => java.lang.Long.compare(a.asInstanceOf[Long], b.asInstanceOf[Long]),
-        (r, i) => r.getLong(i)))
-      case FloatType => Some((
-        (r, i, k) => {
-          val x = r.getFloat(i); val y = k.asInstanceOf[Float]
-          if (x == y) 0 else java.lang.Float.compare(x, y) // ±0.0 equal, NaN largest
-        },
-        (a, b) => {
-          val x = a.asInstanceOf[Float]; val y = b.asInstanceOf[Float]
-          if (x == y) 0 else java.lang.Float.compare(x, y)
-        },
-        (r, i) => r.getFloat(i)))
-      case DoubleType => Some((
-        (r, i, k) => {
-          val x = r.getDouble(i); val y = k.asInstanceOf[Double]
-          if (x == y) 0 else java.lang.Double.compare(x, y)
-        },
-        (a, b) => {
-          val x = a.asInstanceOf[Double]; val y = b.asInstanceOf[Double]
-          if (x == y) 0 else java.lang.Double.compare(x, y)
-        },
-        (r, i) => r.getDouble(i)))
-      case StringType => Some((
-        (r, i, k) => r.getUTF8String(i).compareTo(k.asInstanceOf[UTF8String]),
-        (a, b) => a.asInstanceOf[UTF8String].compareTo(b.asInstanceOf[UTF8String]),
-        (r, i) => UTF8String.fromBytes(r.getUTF8String(i).getBytes)))
-      case BooleanType => Some((
-        (r, i, k) => java.lang.Boolean.compare(r.getBoolean(i), k.asInstanceOf[Boolean]),
-        (a, b) => java.lang.Boolean.compare(a.asInstanceOf[Boolean], b.asInstanceOf[Boolean]),
-        (r, i) => r.getBoolean(i)))
-      case d: DecimalType => Some((
-        (r, i, k) => r.getDecimal(i, d.precision, d.scale)
-          .compareTo(k.asInstanceOf[org.apache.spark.sql.types.Decimal]),
-        (a, b) => a.asInstanceOf[org.apache.spark.sql.types.Decimal]
-          .compareTo(b.asInstanceOf[org.apache.spark.sql.types.Decimal]),
-        (r, i) => r.getDecimal(i, d.precision, d.scale)))
-      case _ => None
-    }
-    val parts = schema.fields.take(keys.size).zipWithIndex.zip(keys).map {
-      case ((f, i), (_, asc, nf)) =>
-        base(f.dataType).map { case (rk, vv, ex) =>
-          val rowVsKey: (InternalRow, Any) => Int = { (r, k) =>
-            val rn = r.isNullAt(i); val kn = k == null
-            if (rn && kn) 0
-            else if (rn) { if (nf) -1 else 1 }
-            else if (kn) { if (nf) 1 else -1 }
-            else if (asc) rk(r, i, k) else -rk(r, i, k)
+    val keyTypes = keyed.schema.fields.take(m).map(_.dataType)
+    val unorderable = keyTypes.filterNot(RowOrdering.isOrderable)
+    require(unorderable.isEmpty,
+      s"budgetSelect: order keys of type ${unorderable.mkString(", ")} have no sort order")
+    // Spark's own sort order over the first m fields of a keyed row; the
+    // retained keys are copies of keyed rows, compared the same way
+    val ord: Ordering[InternalRow] = new LazilyGeneratedOrdering(
+      keys.zip(keyTypes).zipWithIndex.map { case (((_, asc, nf), dt), i) =>
+        SortOrder(BoundReference(i, dt, nullable = true),
+          if (asc) Ascending else Descending, if (nf) NullsFirst else NullsLast, Seq.empty)
+      })
+    // `r` lies in the range (lo, hi]; a null bound is open
+    def within(r: InternalRow, lo: InternalRow, hi: InternalRow): Boolean =
+      (lo == null || ord.compare(r, lo) > 0) && (hi == null || ord.compare(r, hi) <= 0)
+    val rdd = Bridge.internalRdd(keyed)
+    val perPart = math.max(4, 4096 / math.max(1, rdd.getNumPartitions))
+    // one map-only pass: per partition, the (cost sum, min cost, row count)
+    // of the rows in (lo, hi] and a deterministic reservoir sample of them
+    def sample(lo: InternalRow, hi: InternalRow, round: Int)
+        : Array[(Long, Long, Long, Seq[InternalRow])] =
+      rdd.mapPartitionsWithIndex { (pid, it) =>
+        val rng = new java.util.Random(0x9E3779B97F4A7C15L ^ (pid.toLong * 7919L + round))
+        val res = new Array[InternalRow](perPart)
+        var s = 0L; var mn = Long.MaxValue; var c = 0L
+        it.foreach { r =>
+          if (within(r, lo, hi)) {
+            val v = r.getLong(m); s += v; if (v < mn) mn = v; c += 1
+            if (c <= perPart) res((c - 1).toInt) = r.copy()
+            else {
+              val j = (rng.nextDouble() * c).toLong
+              if (j < perPart) res(j.toInt) = r.copy()
+            }
           }
-          val valCmp: (Any, Any) => Int = { (a, b) =>
-            if (a == null && b == null) 0
-            else if (a == null) { if (nf) -1 else 1 }
-            else if (b == null) { if (nf) 1 else -1 }
-            else if (asc) vv(a, b) else -vv(a, b)
-          }
-          val extract: InternalRow => Any =
-            r => if (r.isNullAt(i)) null else ex(r, i)
-          (rowVsKey, valCmp, extract)
         }
+        Iterator.single((s, mn, c, res.take(math.min(c, perPart.toLong).toInt).toSeq))
+      }.collect()
+    def sortedDistinct(ks: Seq[InternalRow]): IndexedSeq[InternalRow] = {
+      val out = scala.collection.mutable.ArrayBuffer.empty[InternalRow]
+      ks.sorted(ord).foreach(k => if (out.isEmpty || ord.compare(out.last, k) != 0) out += k)
+      out.toIndexedSeq
     }
-    if (parts.exists(_.isEmpty)) None
-    else Some(KeyCmps(parts.map(_.get._1).toArray, parts.map(_.get._2).toArray,
-      parts.map(_.get._3).toArray))
-  }
-
-  /** The sampled-split cutoff search. Returns None when the key
-    * distribution defeats the sampler (boundary range will not shrink
-    * under the collect limit — a single key duplicated millions of
-    * times); the caller then falls back to the range-exchange shape.
-    */
-  private def budgetSelectSampled(df: DataFrame, keyed: DataFrame,
-                                  keys: Seq[(Column, Boolean, Boolean)],
-                                  kc: KeyCmps,
-                                  budget: Long): Option[DataFrame] = {
-    val m = keys.size
-    val rdd = org.apache.spark.sql.graftbridge.Bridge.internalRdd(keyed)
-    val ord = kc.keyOrd
-    val nParts = math.max(1, rdd.getNumPartitions)
-    val perPart = math.max(4, 4096 / nParts)
-    // PASS 1 (map-only): per-partition (sum, min, count) validation
-    // stats + a deterministic per-partition reservoir key sample
-    val stats = rdd.mapPartitionsWithIndex { (pid, it) =>
-      var s = 0L; var mn = Long.MaxValue; var c = 0L
-      val rng = new java.util.Random(0x9E3779B97F4A7C15L ^ pid)
-      val res = new Array[Array[Any]](perPart)
-      var filled = 0
-      it.foreach { r =>
-        val v = r.getLong(m); s += v; if (v < mn) mn = v; c += 1
-        if (filled < perPart) { res(filled) = kc.keyOf(r); filled += 1 }
-        else {
-          val j = (rng.nextDouble() * c).toLong
-          if (j < perPart) res(j.toInt) = kc.keyOf(r)
-        }
-      }
-      Iterator.single((s, mn, c, res.take(filled).toSeq))
-    }.collect()
+    // PASS 1: validation stats over the whole input + the first sample
+    val stats = sample(null, null, 0)
     val badMin = stats.collect { case (_, mn, c, _) if c > 0 && mn < 0 => mn }
     require(badMin.isEmpty,
       s"budgetSelect: negative cost ${badMin.min} — costs must be >= 0")
-    val total = stats.iterator.map(_._1).sum
-    if (total <= budget) return Some(df) // every row fits; no cutoff exists
-    def sortedDistinct(ks: Seq[Array[Any]]): IndexedSeq[Array[Any]] = {
-      val s = ks.sorted(ord)
-      val out = scala.collection.mutable.ArrayBuffer.empty[Array[Any]]
-      s.foreach(k => if (out.isEmpty || ord.compare(out.last, k) != 0) out += k)
-      out.toIndexedSeq
-    }
-    var cands = sortedDistinct(stats.iterator.flatMap(_._4).toSeq)
-    // cutoff range (lo, hi] — rows at-or-before lo are fully accounted
-    // in `off`; null bounds are open
-    var lo: Array[Any] = null
-    var hi: Array[Any] = null
+    if (stats.iterator.map(_._1).sum <= budget) return df // every row fits; no cutoff exists
+    var cands = sortedDistinct(stats.toSeq.flatMap(_._4))
+    // cutoff range (lo, hi] — rows at-or-before lo are fully accounted in `off`
+    var lo: InternalRow = null
+    var hi: InternalRow = null
     var off = 0L
     var rangeRows = stats.iterator.map(_._3).sum
     val collectLimit = 1L << 18
@@ -460,13 +318,12 @@ object Views {
       // per-candidate-range (cost sum, row count), combined on executors
       val (sums, cnts) = rdd.treeAggregate((new Array[Long](B + 1), new Array[Long](B + 1)))(
         seqOp = { case (acc @ (s, c), r) =>
-          if ((loB == null || kc.compareRowKey(r, loB) > 0) &&
-              (hiB == null || kc.compareRowKey(r, hiB) <= 0)) {
+          if (within(r, loB, hiB)) {
             // first index j with key <= cs(j), else B
             var loI = 0; var hiI = B
             while (loI < hiI) {
               val mid = (loI + hiI) >>> 1
-              if (kc.compareRowKey(r, cs(mid)) <= 0) hiI = mid else loI = mid + 1
+              if (ord.compare(r, cs(mid)) <= 0) hiI = mid else loI = mid + 1
             }
             s(loI) += r.getLong(m); c(loI) += 1
           }
@@ -484,122 +341,30 @@ object Views {
       if (j > 0) lo = cs(j - 1)
       if (j < B) hi = cs(j)
       rangeRows = cnts(j)
-      if (rangeRows > collectLimit) {
-        // re-sample WITHIN the boundary range for the next split
-        val loS = lo; val hiS = hi; val round = rounds
-        val samples = rdd.mapPartitionsWithIndex { (pid, it) =>
-          val rng = new java.util.Random(0x51ED ^ (pid.toLong * 7919L + round))
-          val res = new Array[Array[Any]](perPart)
-          var filled = 0; var c = 0L
-          it.foreach { r =>
-            if ((loS == null || kc.compareRowKey(r, loS) > 0) &&
-                (hiS == null || kc.compareRowKey(r, hiS) <= 0)) {
-              c += 1
-              if (filled < perPart) { res(filled) = kc.keyOf(r); filled += 1 }
-              else {
-                val j2 = (rng.nextDouble() * c).toLong
-                if (j2 < perPart) res(j2.toInt) = kc.keyOf(r)
-              }
-            }
-          }
-          Iterator.single(res.take(filled).toSeq)
-        }.collect()
-        cands = sortedDistinct(samples.toSeq.flatten)
-          .filter(k => hi == null || ord.compare(k, hi) < 0) // interior splits only
-      }
+      if (rangeRows > collectLimit) // re-sample WITHIN the boundary range; interior splits only
+        cands = sortedDistinct(sample(lo, hi, rounds).toSeq.flatMap(_._4))
+          .filter(k => hi == null || ord.compare(k, hi) < 0)
     }
-    if (rangeRows > 8L * collectLimit) return None // unsplittable; fall back
-    // FINAL: collect the boundary range's (key, cost) rows and walk the
-    // prefix from `off` on the driver
+    require(rangeRows <= 8L * collectLimit,
+      s"budgetSelect: $rangeRows rows at the budget cutoff tie on the order, which " +
+        "must be total: add a unique tie-break column (e.g. an id) as the last order column")
+    // FINAL: collect the boundary range's keyed rows and walk the prefix
+    // from `off` on the driver
     val loF = lo; val hiF = hi
-    val rows = rdd.mapPartitions(_.flatMap { r =>
-      if ((loF == null || kc.compareRowKey(r, loF) > 0) &&
-          (hiF == null || kc.compareRowKey(r, hiF) <= 0))
-        Iterator.single((kc.keyOf(r), r.getLong(m)))
-      else Iterator.empty
-    }).collect()
+    val rows = rdd.mapPartitions(_.filter(r => within(r, loF, hiF)).map(_.copy()))
+      .collect().sorted(ord)
     // non-empty: the boundary range's cost sum exceeds budget − off ≥ 0
-    val sortedRows = rows.sortBy(_._1)(ord)
     var cum = off
-    var lastKept: Array[Any] = null
-    var i = 0
-    var stop = false
-    while (!stop && i < sortedRows.length) {
-      cum += sortedRows(i)._2
-      if (cum <= budget) lastKept = sortedRows(i)._1 else stop = true
-      i += 1
+    var kept = 0
+    while (kept < rows.length && cum + rows(kept).getLong(m) <= budget) {
+      cum += rows(kept).getLong(m); kept += 1
     }
-    // retained keys are INTERNAL values — convert before literal injection
-    val toScala = keyed.schema.fields.take(m)
-      .map(f => org.apache.spark.sql.graftbridge.Bridge.toScala(f.dataType))
-    def ext(k: Array[Any]): Seq[Any] =
-      k.zip(toScala).map { case (v, conv) => conv(v) }.toSeq
-    Some(
-      if (lastKept != null) df.filter(lexAtOrBefore(keys, ext(lastKept), inclusive = true))
-      // nothing in the range fits: keep strictly before the range's first
-      // data key (rows at-or-before `lo` — no data keys lie in between)
-      else df.filter(lexAtOrBefore(keys, ext(sortedRows.head._1), inclusive = false)))
-  }
-
-  /** The r17 two-pass range-exchange shape — the fallback for key types
-    * without a driver-side ordering and for sampler-defeating key
-    * distributions.
-    */
-  private def budgetSelectRangeExchange(df: DataFrame, order: Seq[Column],
-                                        costCol: String, budget: Long): DataFrame = {
-    val spark = df.sparkSession
-    val keys = sortKeysOf(order)
-    val m = keys.size
-    // ONE RDD object for both passes — the second job's map stage reuses
-    // the first's shuffle files (Spark skips computed ShuffleMapStages
-    // for the same RDD graph), so the exchange is paid once.
-    val rdd = budgetScanPlan(df, order, costCol).rdd
-    // pass 1: per-partition (sum, min, count) — n result rows, config-sized
-    val stats = rdd.mapPartitionsWithIndex { (pid, it) =>
-      var s = 0L; var mn = Long.MaxValue; var c = 0L
-      it.foreach { r => val v = r.getLong(m); s += v; if (v < mn) mn = v; c += 1 }
-      Iterator.single((pid, s, mn, c))
-    }.collect().sortBy(_._1)
-    // complete validation BEFORE any selection: the previous scan-time
-    // require was best-effort (skipped whenever the budget cutoff landed
-    // before the negative row — silently wrong output; r12 ADVICE)
-    val badMin = stats.collect { case (_, _, mn, c) if c > 0 && mn < 0 => mn }
-    require(badMin.isEmpty,
-      s"budgetSelect: negative cost ${badMin.min} — costs must be >= 0")
-    val total = stats.iterator.map(_._2).sum
-    if (total <= budget) return df // every row fits; no cutoff exists
-    // prefix offsets → boundary partition p* = first whose inclusive
-    // prefix exceeds the budget. total > budget ⇒ p* exists, its offset
-    // ≤ budget, and its sum > 0 ⇒ it is non-empty.
-    var acc = 0L; var pStar = -1; var off = 0L
-    stats.foreach { case (pid, s, _, _) =>
-      if (pStar < 0 && acc + s > budget) { pStar = pid; off = acc }
-      acc += s
-    }
-    // pass 2: ONE in-partition scan of the boundary partition (runJob on
-    // that partition only; map stages skipped). Emits the partition's
-    // first key and the last key whose seeded running sum fits.
-    val budget0 = budget
-    val scan = spark.sparkContext.runJob(rdd, (it: Iterator[Row]) => {
-      var cum = off
-      var first: Seq[Any] = null
-      var lastKept: Seq[Any] = null
-      var stop = false
-      while (!stop && it.hasNext) {
-        val r = it.next()
-        val key = (0 until m).map(r.get)
-        if (first == null) first = key
-        cum += r.getLong(m)
-        if (cum <= budget0) lastKept = key else stop = true
-      }
-      (first, lastKept)
-    }, Seq(pStar))
-    val (firstKey, lastKept) = scan.head
-    // lazy re-filter of the ORIGINAL frame: keep rows at-or-before the
-    // cutoff in the total order (strictly-before p*'s first key when no
-    // row of p* fits — everything in earlier partitions is kept whole)
-    if (lastKept != null) df.filter(lexAtOrBefore(keys, lastKept, inclusive = true))
-    else df.filter(lexAtOrBefore(keys, firstKey, inclusive = false))
+    // keep through the last row that fits, or — when none does — strictly
+    // before the range's first row (no data keys lie between `lo` and it)
+    val cut = if (kept > 0) rows(kept - 1) else rows.head
+    df.filter(lexAtOrBefore(keys,
+      keyTypes.indices.map(i => Bridge.column(Literal(cut.get(i, keyTypes(i)), keyTypes(i)))),
+      inclusive = kept > 0))
   }
 
   /** (key expression, ascending?, nullsFirst?) per order column — bare
@@ -609,8 +374,8 @@ object Views {
     order.map(org.apache.spark.sql.graftbridge.Bridge.sortSpec)
 
   /** The `__k$i` sort columns for [[sortKeysOf]]'s triples, honoring
-    * each key's direction and null ordering — ONE definition for the
-    * range-exchange, window, and colossal paths, whose output
+    * each key's direction and null ordering — ONE definition for
+    * [[budgetSelectByGroup]]'s window and colossal paths, whose output
     * equivalence depends on sorting identically.
     */
   private def sortColsOf(keys: Seq[(Column, Boolean, Boolean)]): Seq[Column] =
@@ -624,65 +389,29 @@ object Views {
       }
     }
 
-  /** [[budgetSelect]]'s pass-1/2 construction, exposed for plan pins:
-    * order keys + long cost ONLY (the payload never rides the exchange),
-    * ONE range exchange on the order, in-partition sort. Rows are
-    * (k0..k(m-1), cost); partitions are globally ordered.
-    */
-  private[graft] def budgetScanPlan(df: DataFrame, order: Seq[Column],
-                                    costCol: String): DataFrame = {
-    val keys = sortKeysOf(order)
-    val keyed = df.select(
-      keys.zipWithIndex.map { case ((k, _, _), i) => k.as(s"__k$i") } :+
-        coalesce(col(costCol).cast("long"), lit(0L)).as("__cost"): _*)
-    val sortCols = sortColsOf(keys)
-    val n = df.sparkSession.sessionState.conf.numShufflePartitions
-    keyed.repartitionByRange(n, sortCols: _*).sortWithinPartitions(sortCols: _*)
-  }
-
   /** Lexicographic "sorts at-or-before the cutoff tuple" predicate over
     * the original key expressions, honoring each key's direction and
-    * null ordering (null cutoff components compare by null position:
-    * under nulls-first nothing sorts strictly before a null; under
-    * nulls-last every non-null does). Catalyst sees a plain boolean
-    * expression — pushdown and pruning apply.
+    * null ordering. The cutoff components are columns: typed literals for
+    * a cut found on the driver, per-row columns when the cutoffs arrive
+    * by a join (one tuple per group). A null cutoff component compares by
+    * null position: under nulls-first nothing sorts strictly before a
+    * null; under nulls-last every non-null does. Over literals the
+    * predicate constant-folds to a plain boolean over the keys, so
+    * pushdown and pruning apply.
     */
   private def lexAtOrBefore(keys: Seq[(Column, Boolean, Boolean)],
-                            cut: Seq[Any], inclusive: Boolean): Column = {
-    def beforeStrict(c: Column, asc: Boolean, nf: Boolean, v: Any): Column =
-      if (v == null) { if (nf) lit(false) else c.isNotNull }
-      else {
-        val base = if (asc) c < lit(v) else c > lit(v)
-        if (nf) c.isNull || base else c.isNotNull && base
-      }
-    val eqAll = keys.zip(cut).map { case ((c, _, _), v) => c <=> lit(v) }.reduce(_ && _)
-    val strict = keys.zip(cut).zipWithIndex.map { case (((c, asc, nf), v), i) =>
-      (keys.take(i).zip(cut.take(i)).map { case ((pc, _, _), pv) => pc <=> lit(pv) } :+
-        beforeStrict(c, asc, nf, v)).reduce(_ && _)
-    }.reduce(_ || _)
-    if (inclusive) strict || eqAll else strict
-  }
-
-  /** [[lexAtOrBefore]] with per-row cutoff COLUMNS instead of driver
-    * literals — the per-group variant's cutoffs arrive via a join, one
-    * tuple per group. Null cutoff components compare by null position
-    * dynamically: under nulls-first nothing sorts strictly before a
-    * null; under nulls-last every non-null does. Always inclusive (the
-    * cutoff is the last KEPT key).
-    */
-  private def lexAtOrBeforeCols(keys: Seq[(Column, Boolean, Boolean)],
-                                cut: Seq[Column]): Column = {
+                            cut: Seq[Column], inclusive: Boolean): Column = {
     def beforeStrict(c: Column, asc: Boolean, nf: Boolean, v: Column): Column = {
       val base = if (asc) c < v else c > v
       if (nf) v.isNotNull && (c.isNull || base)
       else c.isNotNull && (v.isNull || base)
     }
-    val eqAll = keys.zip(cut).map { case ((c, _, _), v) => c <=> v }.reduce(_ && _)
     val strict = keys.zip(cut).zipWithIndex.map { case (((c, asc, nf), v), i) =>
       (keys.take(i).zip(cut.take(i)).map { case ((pc, _, _), pv) => pc <=> pv } :+
         beforeStrict(c, asc, nf, v)).reduce(_ && _)
     }.reduce(_ || _)
-    strict || eqAll
+    if (!inclusive) strict
+    else strict || keys.zip(cut).map { case ((c, _, _), v) => c <=> v }.reduce(_ && _)
   }
 
   /** Per-group greedy budget-constrained selection: within each group,
@@ -725,8 +454,8 @@ object Views {
     * input ships nothing), and any group over the threshold leaves the
     * window path for a shared range-exchange prefix scan — ONE
     * `repartitionByRange` over all colossal groups together spreads
-    * each group's order across the cluster ([[budgetSelect]]'s shape,
-    * generalized to many groups and made peer-inclusive so the
+    * each group's order across the cluster (a prefix scan over range
+    * partitions, made peer-inclusive so the
     * tied-cohort-at-the-cutoff semantics match the window path
     * exactly), per-(partition, group) totals to the driver
     * (config-sized), and one boundary-partition scan per colossal
@@ -853,8 +582,8 @@ object Views {
       .agg(max_by(struct((0 until m).map(i => col(s"__k$i").as(s"f$i")): _*),
         col("__rn")).as("__cut"))
     val windowOut = df.join(cuts, col(groupCol) <=> col("__cg"), "inner")
-      .filter(lexAtOrBeforeCols(keys,
-        (0 until m).map(i => col("__cut").getField(s"f$i"))))
+      .filter(lexAtOrBefore(keys,
+        (0 until m).map(i => col("__cut").getField(s"f$i")), inclusive = true))
       .drop("__cg", "__cut")
     if (colossal.isEmpty) windowOut
     else {
@@ -877,8 +606,8 @@ object Views {
     * cohort-aware scan of each boundary partition yields the last kept
     * cohort key. Output = the original frame filtered per group by the
     * same at-or-before predicate the window path uses. Both passes
-    * reuse one RDD, so the exchange is paid once ([[budgetSelect]]'s
-    * shuffle-reuse trick).
+    * reuse one RDD, so the exchange is paid once (Spark skips a
+    * computed shuffle map stage of the same RDD graph).
     */
   private def colossalBudgetSelect(df: DataFrame, slimAll: DataFrame,
                                    groupCol: String,
@@ -1011,10 +740,10 @@ object Views {
       fullKeep.map(g => col(groupCol) <=> lit(g)) ++
         cutsByGroup.map { case (g, firstKey, lastKept) =>
           if (lastKept != null)
-            (col(groupCol) <=> lit(g)) && lexAtOrBefore(keys, lastKept, inclusive = true)
+            (col(groupCol) <=> lit(g)) && lexAtOrBefore(keys, lastKept.map(lit), inclusive = true)
           else // nothing of the boundary partition's prefix fit: keep
                // strictly before its first cohort (earlier partitions)
-            (col(groupCol) <=> lit(g)) && lexAtOrBefore(keys, firstKey, inclusive = false)
+            (col(groupCol) <=> lit(g)) && lexAtOrBefore(keys, firstKey.map(lit), inclusive = false)
         }
     if (perGroup.isEmpty) df.filter(lit(false))
     else df.filter(perGroup.reduce(_ || _))

@@ -1,7 +1,9 @@
 package graft.sources
 
+import com.fasterxml.jackson.databind.json.JsonMapper
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 /** Content manifest for parquet corpora — the reproducibility/audit
   * layer a training-data publish needs: after writing a curated corpus,
@@ -100,27 +102,32 @@ object Manifest {
     summary
   }
 
+  private val json = JsonMapper.builder().build()
+
   /** Write the manifest JSON of the collected per-file entries (file name
     * under `fileCol`, plus `rows`, `content_hash` and `content_sum`) to the
     * corpus's [[ManifestFile]]: the corpus totals, then the shards by file.
     */
   private def storeManifest(spark: SparkSession, path: String, entries: Array[Row],
                             fileCol: String, partitionDepth: Int): Unit = {
-    val totalRows = entries.map(_.getAs[Long]("rows")).sum
-    val corpusHash = entries.map(_.getAs[Long]("content_hash")).foldLeft(0L)(_ ^ _)
-    val corpusSum = entries.map(r => BigInt(r.getAs[String]("content_sum"))).sum
-    val json = entries.sortBy(_.getAs[String](fileCol)).map { r =>
-      s"""{"file":"${r.getAs[String](fileCol)}","rows":${r.getAs[Long]("rows")},""" +
-        s""""content_hash":${r.getAs[Long]("content_hash")},""" +
-        s""""content_sum":"${r.getAs[String]("content_sum")}"}"""
-    }.mkString(
-      s"""{"total_rows":$totalRows,"corpus_hash":$corpusHash,"corpus_sum":"$corpusSum",""" +
-        s""""partition_depth":$partitionDepth,"shards":[""",
-      ",", "]}\n")
+    val doc = json.createObjectNode()
+      .put("total_rows", entries.map(_.getAs[Long]("rows")).sum)
+      .put("corpus_hash", entries.map(_.getAs[Long]("content_hash")).foldLeft(0L)(_ ^ _))
+      .put("corpus_sum", entries.map(r => BigInt(r.getAs[String]("content_sum"))).sum.toString)
+      .put("partition_depth", partitionDepth)
+    val shards = doc.putArray("shards")
+    entries.sortBy(_.getAs[String](fileCol)).foreach { r =>
+      shards.addObject()
+        .put("file", r.getAs[String](fileCol))
+        .put("rows", r.getAs[Long]("rows"))
+        .put("content_hash", r.getAs[Long]("content_hash"))
+        .put("content_sum", r.getAs[String]("content_sum"))
+    }
     val p = new org.apache.hadoop.fs.Path(path, ManifestFile)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val out = fs.create(p, true)
-    try out.write(json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    try out.write((json.writeValueAsString(doc) + "\n")
+      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
   }
 
@@ -272,22 +279,15 @@ object Manifest {
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     require(fs.exists(p), s"no $ManifestFile under $path")
     val in = fs.open(p)
-    val text =
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    // r18 opt: the manifest is THIS object's own driver-written format
-    // (flat fields, no escapes in the values we emit) — parse it on the
-    // driver instead of paying a spark.read.json job + schema inference
-    // per verify. Manifests written before partitioned publish lack
-    // partition_depth — depth-0 by construction.
-    val depth = """"partition_depth":(-?\d+)""".r
-      .findFirstMatchIn(text).map(_.group(1).toInt).getOrElse(0)
-    val shardRe =
-      (""""file":"([^"]*)","rows":(-?\d+),""" +
-        """"content_hash":(-?\d+),"content_sum":"(-?\d+)"""").r
-    val stored = shardRe.findAllMatchIn(text).map(m =>
-        (m.group(1), m.group(2).toLong, m.group(3).toLong, m.group(4)))
-      .toSeq.toDF("file", "manifest_rows", "manifest_hash", "manifest_sum")
+    val doc = try json.readTree(in) finally in.close()
+    // parsed on the driver, no spark.read.json job. Manifests written
+    // before partitioned publish lack partition_depth — depth-0 by
+    // construction.
+    val depth = doc.path("partition_depth").asInt(0)
+    val stored = doc.path("shards").asScala.toSeq.map(s =>
+        (s.path("file").asText, s.path("rows").asLong, s.path("content_hash").asLong,
+          s.path("content_sum").asText))
+      .toDF("file", "manifest_rows", "manifest_hash", "manifest_sum")
     val actual = shardSummary(spark.read.parquet(path), depth)
       .withColumnRenamed("rows", "actual_rows")
       .withColumnRenamed("content_hash", "actual_hash")

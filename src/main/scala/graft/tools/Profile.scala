@@ -17,8 +17,9 @@ import scala.collection.mutable
   * runMain graft.tools.Profile [--scale <f1,f2,…>] [--plans <dir> <suffix>] <sfDir> <q1,q2,…>
   * }}}
   *
-  * Per query: every run's wall time and the minimum (`SPARK_GRAFT_RUNS`
-  * runs, default 3, at `SPARK_GRAFT_CPUS` cores); for the best run its
+  * Per query: one untimed warm-up run, then every timed run's wall time
+  * and the minimum (`SPARK_GRAFT_RUNS` runs, default 3, at
+  * `SPARK_GRAFT_CPUS` cores); for the best run its
   * job, stage and task counts and summed task time, each SQL execution it
   * caused with its top physical nodes, each job outside any SQL execution
   * by call site, and the join strategies of the AQE-final plans.
@@ -216,6 +217,9 @@ object Profile {
 
     // each query's min wall and scan rows on the corpus at `dir`
     def profile(dir: String): Map[String, (Double, Double)] = names.map { q =>
+      // one untimed run first: the first factor would otherwise time
+      // class loading, codegen and JIT warm-up as the query's cost
+      Bench.materialize(SparkEntry.queries(q)(spark, dir))
       val recs = (1 to runs).map { _ =>
         Bench.drainHeap(spark)
         record(spark)(Bench.materialize(SparkEntry.queries(q)(spark, dir)))

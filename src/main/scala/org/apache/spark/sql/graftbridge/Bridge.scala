@@ -41,12 +41,6 @@ object Bridge {
       : org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow] =
     df.queryExecution.toRdd
 
-  /** Internal (Catalyst) value → external Scala value for `dt` — for
-    * re-injecting driver-collected internal values as Column literals.
-    */
-  def toScala(dt: org.apache.spark.sql.types.DataType): Any => Any =
-    org.apache.spark.sql.catalyst.CatalystTypeConverters.createToScalaConverter(dt)
-
   /** Blocks until every listener has handled every event posted so far
     * (at most 60 s): `SparkContext.listenerBus` is `private[spark]`.
     */

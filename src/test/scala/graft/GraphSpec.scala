@@ -97,6 +97,17 @@ class GraphSpec extends SparkTestBase {
       s"hits must release its iteration frames, leaked ids: $leaked")
   }
 
+  test("hits: the result's plan does not grow with the iteration count") {
+    val e = Seq(("a", "b"), ("a", "c"), ("d", "c"), ("c", "a")).toDF("s", "t")
+    def planNodes(iterations: Int): Int = {
+      val out = Graph.hits(e, "s", "t", iterations)
+      try out.queryExecution.analyzed.collect { case p => p }.size
+      finally graft.core.Checkpoints.release(out)
+    }
+    val (two, six) = (planNodes(2), planNodes(6))
+    assert(six <= two, s"hits' analyzed plan has $two nodes at 2 iterations, $six at 6")
+  }
+
   test("triangleCount: K4 has 3 per node; direction/dups/self-loops erased") {
     // K4 = 4 triangles, each node in exactly 3
     val k4 = (for {

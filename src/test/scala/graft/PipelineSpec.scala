@@ -1424,4 +1424,81 @@ class PipelineSpec extends SparkTestBase {
         "vec", "id", "qid", "label", k = 1).collect()
     }
   }
+
+  test("manifest: a shard object with reordered keys still verifies") {
+    import spark.implicits._
+    import graft.sources.Manifest
+    withTempDir("graft_manifest_keys") { dir =>
+      val corpus = s"$dir/corpus"
+      Manifest.writeWithManifest(
+        (1L to 200L).map(i => (i, s"doc $i")).toDF("id", "text").repartition(3), corpus)
+      // rewrite every shard object with its keys in reverse order: JSON
+      // objects are unordered, so the manifest means the same thing
+      val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+      val file = new java.io.File(corpus, Manifest.ManifestFile)
+      val doc = mapper.readTree(file).asInstanceOf[
+        com.fasterxml.jackson.databind.node.ObjectNode]
+      val shards = doc.get("shards").asInstanceOf[
+        com.fasterxml.jackson.databind.node.ArrayNode]
+      (0 until shards.size).foreach { i =>
+        val s = shards.get(i)
+        val reordered = mapper.createObjectNode()
+        Seq("content_sum", "content_hash", "rows", "file")
+          .foreach(k => reordered.set[com.fasterxml.jackson.databind.JsonNode](k, s.get(k)))
+        shards.set(i, reordered)
+      }
+      mapper.writeValue(file, doc)
+      new java.io.File(corpus, s".${Manifest.ManifestFile}.crc").delete()
+      val v = Manifest.verifyManifest(spark, corpus)
+      assert(v.count() == 3 && v.filter(!col("ok")).count() == 0,
+        v.collect().mkString("\n"))
+    }
+  }
+
+  test("manifest: partition values with quote, backslash, space and é verify clean") {
+    import spark.implicits._
+    import graft.sources.Manifest
+    withTempDir("graft_manifest_esc") { dir =>
+      val corpus = s"$dir/corpus"
+      val keys = Seq("say \"hi\"", "back\\slash", "two words", "café")
+      val df = (0 until 120).map(i => (i.toLong, keys(i % keys.size), s"doc $i"))
+        .toDF("id", "src", "text")
+      Manifest.writeWithManifest(df, corpus, partitionCols = Seq("src"))
+      val dataFiles = java.nio.file.Files.walk(java.nio.file.Paths.get(corpus))
+        .filter(p => java.nio.file.Files.isRegularFile(p) &&
+          !p.getFileName.toString.startsWith("_") && !p.getFileName.toString.startsWith("."))
+        .count()
+      val v = Manifest.verifyManifest(spark, corpus)
+      assert(v.count() == dataFiles && dataFiles >= keys.size,
+        s"${v.count()} manifest shards for $dataFiles data files")
+      assert(v.filter(!col("ok")).count() == 0, v.collect().mkString("\n"))
+    }
+  }
+
+  test("manifest: a manifest in the original hand-written format still verifies") {
+    import spark.implicits._
+    import graft.sources.Manifest
+    withTempDir("graft_manifest_v1") { dir =>
+      val corpus = s"$dir/corpus"
+      val summary = Manifest.writeWithManifest(
+        (1L to 300L).map(i => (i, s"doc $i")).toDF("id", "text").repartition(2), corpus)
+        .collect()
+      // the format the manifest writer emitted by string interpolation
+      val shards = summary.sortBy(_.getAs[String]("file")).map { r =>
+        s"""{"file":"${r.getAs[String]("file")}","rows":${r.getAs[Long]("rows")},""" +
+          s""""content_hash":${r.getAs[Long]("content_hash")},""" +
+          s""""content_sum":"${r.getAs[String]("content_sum")}"}"""
+      }
+      val text = shards.mkString(
+        s"""{"total_rows":300,"corpus_hash":${summary.map(_.getAs[Long]("content_hash")).reduce(_ ^ _)},""" +
+          s""""corpus_sum":"${summary.map(r => BigInt(r.getAs[String]("content_sum"))).sum}",""" +
+          s""""partition_depth":0,"shards":[""", ",", "]}\n")
+      val file = new java.io.File(corpus, Manifest.ManifestFile)
+      java.nio.file.Files.writeString(file.toPath, text)
+      new java.io.File(corpus, s".${Manifest.ManifestFile}.crc").delete()
+      val v = Manifest.verifyManifest(spark, corpus)
+      assert(v.count() == 2 && v.filter(!col("ok")).count() == 0,
+        v.collect().mkString("\n"))
+    }
+  }
 }

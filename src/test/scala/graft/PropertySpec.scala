@@ -250,26 +250,48 @@ class PropertySpec extends SparkTestBase {
         val cost: java.lang.Long = if (rng.nextInt(10) == 0) null else rng.nextInt(40).toLong
         (f"s${rng.nextInt(30)}%02d", rng.nextInt(30).toLong, i.toLong, cost)
       }
-      val base0 = rows.toDF("qs", "qn", "id", "cost")
-        .select((if (stringKey) col("qs") else col("qn")).as("q"), col("id"), col("cost"))
-      val base = base0.repartition(1 + rng.nextInt(13)) // random physical layout
+      // a double key holding NaN (sorts last), -0.0 and 0.0 (equal) and nulls
+      val withDouble = rows.map { case (qs, qn, id, cost) =>
+        val qd: java.lang.Double = qn match {
+          case 0L => Double.NaN
+          case 1L => -0.0
+          case 2L => 0.0
+          case 3L => null
+          case k => k / 7.0
+        }
+        (qs, qn, qd, id, cost)
+      }
+      val base0 = withDouble.toDF("qs", "qn", "qd", "id", "cost")
+      val layout = 1 + rng.nextInt(13) // random physical layout
       val asc = rng.nextBoolean()
-      val order = if (asc) Seq(col("q").asc, col("id").asc)
-                  else Seq(col("q").desc, col("id").asc)
-      val w = (if (asc) Window.orderBy(col("q").asc, col("id").asc)
-               else Window.orderBy(col("q").desc, col("id").asc))
-        .rowsBetween(Long.MinValue, 0)
       val totalCost = rows.map(r => Option(r._4).fold(0L)(_.toLong)).sum
       // budget regimes: nothing fits / a slice / all-but-boundary / everything
-      for (budget <- Seq(0L, totalCost / 7 + rng.nextInt(20), totalCost - 1, totalCost + 5)) {
-        val got = Views.budgetSelect(base, order, "cost", budget)
-          .collect().map(_.getLong(1)).toSet
-        val want = base
-          .withColumn("c", sum(coalesce(col("cost"), lit(0L))).over(w))
-          .filter(col("c") <= budget)
-          .collect().map(_.getLong(1)).toSet
-        assert(got == want, s"seed=$seed stringKey=$stringKey asc=$asc " +
-          s"budget=$budget missing=${want -- got} extra=${got -- want}")
+      val budgets = Seq(0L, totalCost / 7 + rng.nextInt(20), totalCost - 1, totalCost + 5)
+      val qn = col("qn")
+      val keyKinds = Seq(
+        (if (stringKey) "string" else "long") -> (if (stringKey) col("qs") else qn),
+        // a struct with a null field and null structs
+        "struct" -> when(qn === 4L, lit(null)).otherwise(
+          struct(when(qn % 7 =!= 0L, qn % 5).as("a"), col("qs").as("b"))),
+        // arrays of two lengths sharing prefixes, and null arrays
+        "array" -> when(qn === 6L, lit(null)).otherwise(
+          when(qn % 3 === 0L, array(qn % 4)).otherwise(array(qn % 4, qn))),
+        "double" -> col("qd"))
+      for ((kind, key) <- keyKinds) {
+        val base = base0.select(key.as("q"), col("id"), col("cost")).repartition(layout)
+        val order = if (asc) Seq(col("q").asc, col("id").asc)
+                    else Seq(col("q").desc, col("id").asc)
+        val w = Window.orderBy(order: _*).rowsBetween(Long.MinValue, 0)
+        for (budget <- budgets) {
+          val got = Views.budgetSelect(base, order, "cost", budget)
+            .collect().map(_.getLong(1)).toSet
+          val want = base
+            .withColumn("c", sum(coalesce(col("cost"), lit(0L))).over(w))
+            .filter(col("c") <= budget)
+            .collect().map(_.getLong(1)).toSet
+          assert(got == want, s"seed=$seed key=$kind asc=$asc " +
+            s"budget=$budget missing=${want -- got} extra=${got -- want}")
+        }
       }
     }
   }
@@ -300,8 +322,8 @@ class PropertySpec extends SparkTestBase {
       if (tw > 0 && budget > 0)
         assert(got.values.sum == budget, s"seed=$seed sum != budget")
     }
-    // plan pin: the remainder bump rides budgetSelect's range-exchange
-    // machinery — a millions-of-keys weight table must never sort under
+    // plan pin: the remainder bump is a budgetSelect, whose passes sort
+    // nothing — a millions-of-keys weight table must never sort under
     // one unpartitioned Window
     val big = spark.range(5000).select(
       concat(lit("k"), $"id").as("key"), (pmod($"id" * 37, lit(997)) + 1).as("w"))
