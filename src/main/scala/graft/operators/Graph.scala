@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.Checkpoints
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -23,68 +24,24 @@ object Graph {
     * divisions). Nodes = src ∪ dst; dangling nodes (no out-edges)
     * contribute nothing (their mass evaporates — the standard simple
     * variant; build symmetric edges for undirected graphs and none are
-    * dangling).
+    * dangling). Duplicate (src, dst) rows count once.
     *
     * Scale shape per round: one join of edges to the O(nodes) rank
     * frame on src (both hash-partitioned on the join key; the rank side
     * is the small one and broadcasts when it fits), one partial-agg
     * groupBy dst — shuffled bytes O(edges) worst case, O(nodes) after
-    * map-side combine. Ranks persist per round (the previous round
-    * unpersists); `iterations` is the driver-loop budget exactly like
-    * `bpeTrain`'s merge count. The RETURNED frame is the final round's
-    * persisted ranks — already materialized, so reads are free; the
-    * caller owns `unpersist()` when done (dropping the cache inside
-    * this method would discard the materialization it just paid for).
+    * map-side combine. `iterations` is the driver-loop budget exactly
+    * like `bpeTrain`'s merge count. The result is a checkpoint, already
+    * materialized; release it via [[graft.core.Checkpoints.release]].
     */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
                iterations: Int, dampingPct: Int = 85,
-               scale: Long = 1000000L): DataFrame = {
-    require(iterations >= 1 && dampingPct >= 0 && dampingPct <= 100)
-    // r17 opt (guide §2.4): persist the edge frame HASH-PARTITIONED on
-    // the per-round join key — every iteration's e⋈pr and e⋈deg joins
-    // and the deg aggregate then reuse this one exchange, so the O(m)
-    // edge frame never reshuffles again; only the O(nodes) rank frame
-    // moves per round. (Previously each round re-exchanged the full
-    // edge frame for both joins.)
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst")).distinct()
-      .repartition(col("src"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val deg = e.groupBy("src").agg(count(lit(1)).as("outdeg"))
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val base = (100L - dampingPct) * scale / 100L
-    var pr = nodes.withColumn("pr", lit(scale))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // r15 persist audit: a mid-loop failure (lost executor, cancelled
-    // job) must not leak the round caches into the caller's session —
-    // e/nodes release on EVERY exit path; pr releases on the throw path
-    // only (on success it IS the returned materialization, caller-owned)
-    try {
-      for (_ <- 0 until iterations) {
-        val contribs = e
-          .join(pr.withColumnRenamed("node", "src"), "src")
-          .join(deg, "src")
-          .select(col("dst").as("node"), expr("pr div outdeg").as("c"))
-          .groupBy("node").agg(sum("c").as("contrib"))
-        val next = nodes
-          .join(contribs, Seq("node"), "left")
-          .select(col("node"),
-            (lit(base) + expr(s"($dampingPct * coalesce(contrib, 0L)) div 100"))
-              .as("pr"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        next.count() // materialize before dropping the parent
-        pr.unpersist(blocking = false)
-        pr = next
-      }
-      pr
-    } catch {
-      case t: Throwable => pr.unpersist(blocking = false); throw t
-    } finally {
-      e.unpersist(blocking = false)
-      nodes.unpersist(blocking = false)
-    }
-  }
+               scale: Long = 1000000L): DataFrame =
+    // w = 1 makes the weighted kernel's `(pr * w) div Σ w` exactly
+    // `pr div outdeg`, so the ranks are bit-identical to the unweighted
+    // recurrence
+    rank(edges.select(col(srcCol).as("src"), col(dstCol).as("dst")).distinct()
+      .withColumn("w", lit(1L)), iterations, dampingPct, scale)
 
   /** Weighted [[pageRank]]: each out-edge carries an integer weight and
     * a node's rank splits proportionally — contribution along (s, d, w)
@@ -94,29 +51,45 @@ object Graph {
     * non-positive-weight edges drop. Caller must keep
     * `max(pr) · max(w) < 2^63` — with the default scale (10⁶ micro-units
     * per node) that allows edge weights into the hundreds of millions
-    * before any overflow risk. Same per-round shape and persist
-    * discipline as [[pageRank]].
+    * before any overflow risk. Same per-round shape and result contract
+    * as [[pageRank]].
     */
   def pageRankWeighted(edges: DataFrame, srcCol: String, dstCol: String,
                        weightCol: String, iterations: Int,
-                       dampingPct: Int = 85, scale: Long = 1000000L): DataFrame = {
-    require(iterations >= 1 && dampingPct >= 0 && dampingPct <= 100)
-    // src-partitioned persist — the pageRank r17 shuffle-reuse shape
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
+                       dampingPct: Int = 85, scale: Long = 1000000L): DataFrame =
+    rank(edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
         col(weightCol).cast("long").as("w"))
       .filter(col("w") > 0)
-      .groupBy("src", "dst").agg(sum("w").as("w"))
-      .repartition(col("src"))
+      .groupBy("src", "dst").agg(sum("w").as("w")),
+      iterations, dampingPct, scale)
+
+  /** The PageRank loop over (src, dst, w) edges, one row per (src, dst),
+    * w > 0. Each round's ranks are a `localCheckpoint`, so every round
+    * plans against the previous round's rows, not its lineage (a
+    * persisted round would keep its whole plan, doubling it per round), and
+    * the superseded round is freed through
+    * [[graft.core.Checkpoints.release]] — the [[hits]] shape.
+    */
+  private def rank(edges: DataFrame, iterations: Int, dampingPct: Int,
+                   scale: Long): DataFrame = {
+    require(iterations >= 1 && dampingPct >= 0 && dampingPct <= 100)
+    // r17 opt (guide §2.4): persist the edge frame HASH-PARTITIONED on
+    // the per-round join key — every iteration's e⋈pr and e⋈deg joins
+    // and the deg aggregate then reuse this one exchange, so the O(m)
+    // edge frame never reshuffles again; only the O(nodes) rank frame
+    // moves per round
+    val e = edges.repartition(col("src"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val deg = e.groupBy("src").agg(sum("w").as("sw"))
     val nodes = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node"))).distinct()
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val base = (100L - dampingPct) * scale / 100L
-    var pr = nodes.withColumn("pr", lit(scale))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // same exit-path release discipline as [[pageRank]] (r15 audit)
+    var pr: DataFrame = null
+    // a mid-loop failure (lost executor, cancelled job) must not leak the
+    // round checkpoint or the caches into the caller's session
     try {
+      pr = nodes.withColumn("pr", lit(scale)).localCheckpoint()
       for (_ <- 0 until iterations) {
         val contribs = e
           .join(pr.withColumnRenamed("node", "src"), "src")
@@ -128,14 +101,13 @@ object Graph {
           .select(col("node"),
             (lit(base) + expr(s"($dampingPct * coalesce(contrib, 0L)) div 100"))
               .as("pr"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        next.count()
-        pr.unpersist(blocking = false)
+          .localCheckpoint()
+        Checkpoints.release(pr)
         pr = next
       }
       pr
     } catch {
-      case t: Throwable => pr.unpersist(blocking = false); throw t
+      case t: Throwable => if (pr != null) Checkpoints.release(pr); throw t
     } finally {
       e.unpersist(blocking = false)
       nodes.unpersist(blocking = false)
@@ -172,7 +144,6 @@ object Graph {
     */
   def hits(edges: DataFrame, srcCol: String, dstCol: String,
            iterations: Int, scale: Long = 1000000L): DataFrame = {
-    import graft.core.Checkpoints
     require(iterations >= 1, s"hits: iterations must be >= 1, got $iterations")
     require(scale >= 1, s"hits: scale must be >= 1, got $scale")
     val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst")).distinct()
@@ -238,25 +209,19 @@ object Graph {
     * Result is orientation-independent (the triangle SET is a property of
     * the undirected graph), so oracles may replay the simpler id-ordered
     * a<b<c formulation.
+    *
+    * The canonical and oriented edge frames are persisted across their
+    * multiple plan references and dropped before returning. The result
+    * is a checkpoint, already materialized; release it via
+    * [[graft.core.Checkpoints.release]].
     */
-  /** `materialize = true` (default) persists the edge frames across
-    * their multiple plan references and returns an eagerly checkpointed
-    * result (release via [[graft.core.Checkpoints.release]]); `false`
-    * returns the pure lazy plan with NO persist/checkpoint anywhere —
-    * for plan inspection and for composing into a larger DAG that
-    * manages its own materialization (the oriented edge frame is then
-    * referenced three times and recomputes per reference).
-    */
-  def triangleCount(edges: DataFrame, srcCol: String, dstCol: String,
-                    materialize: Boolean = true): DataFrame = {
-    def mat(df: DataFrame): DataFrame =
-      if (materialize) df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else df
-    val canon = mat(edges
+  def triangleCount(edges: DataFrame, srcCol: String, dstCol: String): DataFrame = {
+    val canon = edges
       .select(least(col(srcCol), col(dstCol)).as("a"),
         greatest(col(srcCol), col(dstCol)).as("b"))
       .filter(col("a") =!= col("b"))
-      .distinct())
+      .distinct()
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val deg = canon.select(col("a").as("node"))
       .unionAll(canon.select(col("b").as("node")))
       .groupBy("node").agg(count(lit(1)).as("deg"))
@@ -264,13 +229,14 @@ object Graph {
     val withDeg = canon
       .join(deg.withColumnRenamed("node", "a").withColumnRenamed("deg", "da"), "a")
       .join(deg.withColumnRenamed("node", "b").withColumnRenamed("deg", "db"), "b")
-    val oriented = mat(withDeg.select(
+    val oriented = withDeg.select(
         when(col("da") < col("db") ||
              (col("da") === col("db") && col("a") < col("b")), col("a"))
           .otherwise(col("b")).as("u"),
         when(col("da") < col("db") ||
              (col("da") === col("db") && col("a") < col("b")), col("b"))
-          .otherwise(col("a")).as("v")))
+          .otherwise(col("a")).as("v"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // r17 opt (guide §3.1): hint SHUFFLED HASH for the wedge and closing
     // joins — sort-merge would SORT the O(m^1.5) wedge stream; hashing
     // the O(m) oriented edge side instead streams the wedges unsorted.
@@ -285,17 +251,14 @@ object Graph {
     val counts = triangles
       .select(explode(array(col("x"), col("y"), col("z"))).as("node"))
       .groupBy("node").agg(count(lit(1)).as("triangles"))
-    if (!materialize) counts
-    else {
-      // materialize BEFORE dropping the edge caches — dropping them
-      // under the lazy plan would silently recompute everything; the
-      // finally also releases them when the checkpoint THROWS (r15
-      // persist audit)
-      try counts.localCheckpoint()
-      finally {
-        canon.unpersist(blocking = false)
-        oriented.unpersist(blocking = false)
-      }
+    // materialize BEFORE dropping the edge caches — dropping them
+    // under the lazy plan would silently recompute everything; the
+    // finally also releases them when the checkpoint THROWS (r15
+    // persist audit)
+    try counts.localCheckpoint()
+    finally {
+      canon.unpersist(blocking = false)
+      oriented.unpersist(blocking = false)
     }
   }
 
@@ -315,21 +278,15 @@ object Graph {
     * ONCE per round (r11 checkpointed twice) and the superseded round's
     * blocks are released as soon as the next round materializes, so a
     * deep cascade pins exactly one O(alive-nodes) block set at any
-    * moment. Rounds needed = the cascade depth, graph-dependent:
-    * `strict = true` (default) throws past `maxIter` rather than
-    * returning a silently-unfinished core.
+    * moment. Rounds needed = the cascade depth, graph-dependent: past
+    * `maxIter` rounds it throws rather than returning a silently
+    * unfinished core.
     *
-    * `materialize = true` (default) returns the final in-core degree
-    * pass eagerly checkpointed (release via
-    * [[graft.core.Checkpoints.release]]); `false` returns it as the
-    * lazy join+agg plan over the checkpointed fixpoint node set — the
-    * per-round DAG, inspectable by plan pins (the symmetric edge frame
-    * is unpersisted either way, so lazy-mode actions recompute it from
-    * `edges`).
+    * The result is the final round's degree checkpoint, already
+    * materialized; release it via [[graft.core.Checkpoints.release]].
     */
   def kCore(edges: DataFrame, srcCol: String, dstCol: String, k: Int,
-            maxIter: Int = 50, strict: Boolean = true,
-            materialize: Boolean = true): DataFrame = {
+            maxIter: Int = 50): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     val canon = edges
       .select(least(col(srcCol), col(dstCol)).as("a"),
@@ -353,7 +310,6 @@ object Graph {
     // both-endpoints-alive invariant, so groupBy(src) IS the in-core
     // degree, and peeling is order-independent (the k-core is unique).
     var alive = sym.repartition(col("src")).localCheckpoint()
-    var result: DataFrame = null
     // r18 (ADVICE): the forced-broadcast row bound derives from the
     // session's autoBroadcastJoinThreshold (≈16 B per built hash-relation
     // row, conservative) instead of a fixed 2 M rows — a small
@@ -363,70 +319,45 @@ object Graph {
       val thr = edges.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
       if (thr <= 0) 0L else thr / 16L
     }
-    // r18 (ADVICE): the CURRENT round's checkpoints are tracked so the
-    // catch can release them — an exception between deg's checkpoint and
-    // its release (dead.count(), the anti-join checkpoint) previously
-    // leaked that round's blocks until GC
-    var roundDeg: DataFrame = null
-    var roundNext: DataFrame = null
+    // r18 (ADVICE): the current round's degree checkpoint is tracked so
+    // the catch can release it — an exception between its checkpoint and
+    // its release (dead.count(), the anti-join checkpoint) would leak
+    // that round's blocks until GC
+    var deg: DataFrame = null
+    var nDead = -1L
     var iter = 0
     try {
-      while (result == null && iter < maxIter) {
-        val deg = alive.groupBy("src").agg(count(lit(1)).as("core_deg"))
+      while (nDead != 0L) {
+        if (iter >= maxIter) throw new IllegalStateException(
+          s"kCore: not converged after $maxIter peel rounds; raise maxIter")
+        deg = alive.groupBy("src").agg(count(lit(1)).as("core_deg"))
           .localCheckpoint()
-        roundDeg = deg
         val dead = deg.filter(col("core_deg") < k).select(col("src").as("__dead"))
-        val nDead = dead.count()
-        if (nDead == 0L) {
-          // fixpoint: every remaining endpoint has in-core degree ≥ k —
-          // deg (already materialized) IS the answer
-          result = deg.select(col("src").as("node"), col("core_deg"))
-        } else {
+        nDead = dead.count()
+        if (nDead > 0L) {
           // broadcast the frontier when it is clearly broadcast-sized;
           // otherwise let the planner shuffle (only giant peel rounds)
           val d = if (nDead <= bcastRows) broadcast(dead) else dead
-          val next = alive
+          val prev = alive
+          alive = prev
             .join(d, col("src") === col("__dead"), "left_anti")
             .join(d, col("dst") === col("__dead"), "left_anti")
             .localCheckpoint()
-          roundNext = next
-          graft.core.Checkpoints.release(alive) // superseded round
-          graft.core.Checkpoints.release(deg)
-          roundDeg = null
-          alive = next
-          roundNext = null
+          Checkpoints.release(prev) // superseded round
+          Checkpoints.release(deg)
+          deg = null
         }
         iter += 1
       }
-      if (result == null && strict) throw new IllegalStateException(
-        s"kCore: not converged after $maxIter peel rounds; raise maxIter " +
-          "(or pass strict = false to accept a partially peeled graph)")
-      if (!materialize) {
-        // lazy: the final degree pass as a LIVE aggregate over the final
-        // edge checkpoint (the per-round DAG shape, inspectable by plan
-        // pins). The edge checkpoint stays pinned for the caller's reads
-        // — the old lazy contract; the ContextCleaner reclaims it. The
-        // loop's own final deg checkpoint has no reader here: release it.
-        if (result != null) graft.core.Checkpoints.release(result)
-        alive.groupBy("src").agg(count(lit(1)).as("core_deg"))
-          .select(col("src").as("node"), col("core_deg"))
-      } else {
-        // eager: the (already materialized) final degree pass; the edge
-        // frame has no remaining reader
-        val out =
-          if (result != null) result
-          else alive.groupBy("src").agg(count(lit(1)).as("core_deg"))
-            .select(col("src").as("node"), col("core_deg"))
-            .localCheckpoint() // unconverged non-strict: one more pass
-        graft.core.Checkpoints.release(alive)
-        out
-      }
+      // fixpoint: every remaining endpoint has in-core degree ≥ k — deg
+      // (already materialized) IS the answer; the edge frame has no
+      // remaining reader
+      Checkpoints.release(alive)
+      deg.select(col("src").as("node"), col("core_deg"))
     } catch {
       case t: Throwable =>
-        graft.core.Checkpoints.release(alive)
-        if (roundDeg != null) graft.core.Checkpoints.release(roundDeg)
-        if (roundNext != null && (roundNext ne alive))
-          graft.core.Checkpoints.release(roundNext)
+        Checkpoints.release(alive)
+        if (deg != null) Checkpoints.release(deg)
         throw t
     }
   }
@@ -437,12 +368,12 @@ object Graph {
     * min-label core ([[graft.pipeline.Dedup.dupClusters]] — one-hop min
     * propagation + label-of-label per round, O(log diameter) rounds,
     * each round two edge-partitioned shuffles) — the general-graph face
-    * of the same operator the dedup pipeline uses for cluster labels.
+    * of the same operator the dedup pipeline uses for cluster labels,
+    * with its result contract: a checkpoint to release via
+    * [[graft.core.Checkpoints.release]], and a throw past `maxIter`.
     */
   def connectedComponents(edges: DataFrame, srcCol: String, dstCol: String,
-                          maxIter: Int = 20, strict: Boolean = true,
-                          materialize: Boolean = true): DataFrame =
+                          maxIter: Int = 20): DataFrame =
     graft.pipeline.Dedup.dupClusters(
-      edges.select(col(srcCol).as("id1"), col(dstCol).as("id2")),
-      maxIter = maxIter, strict = strict, materialize = materialize)
+      edges.select(col(srcCol).as("id1"), col(dstCol).as("id2")), maxIter = maxIter)
 }

@@ -706,28 +706,19 @@ object Dedup {
     * Catalyst analysis/plan-stringification is minutes of driver CPU
     * (measured on the r3 d06 graph). Checkpointing flattens each round to
     * a scan. Each round is two shuffles (join+groupBy, join) plus a count.
-    */
-  /** `strict = true` (default) throws if labels haven't converged after
-    * `maxIter` rounds: silently-partial labels would let near-dups
-    * straddle a [[leakageSafeSplit]] boundary — the exact bug the split
-    * exists to prevent. Pointer doubling converges in ~log2(diameter)
-    * rounds, so 20 covers diameters to ~10⁶; raise maxIter rather than
-    * disabling strict.
     *
-    * `materialize = true` (default) returns the final round's eagerly
-    * checkpointed labels — reads are free; release with
-    * [[graft.core.Checkpoints.release]] when done. `false` returns ONE
-    * lazy propagation round applied over that checkpoint: at the
-    * fixpoint an extra round is the identity, so values are unchanged,
-    * and the returned plan exposes the per-round join/agg DAG for plan
-    * pins and caller-managed composition. (Only with `strict = false`
-    * AND an unconverged graph does lazy mode differ: it applies one
-    * extra — strictly closer to the fixpoint — round.) Either way every
+    * Throws if labels haven't converged after `maxIter` rounds:
+    * silently-partial labels would let near-dups straddle a
+    * [[leakageSafeSplit]] boundary — the exact bug the split exists to
+    * prevent. Pointer doubling converges in ~log2(diameter) rounds, so
+    * 20 covers diameters to ~10⁶.
+    *
+    * Returns the final round's checkpointed labels — reads are free;
+    * release with [[graft.core.Checkpoints.release]] when done. Every
     * SUPERSEDED round's checkpoint is released as soon as the next round
     * materializes; only the final round's blocks survive the call.
     */
-  def dupClusters(pairs: DataFrame, maxIter: Int = 20,
-                  strict: Boolean = true, materialize: Boolean = true): DataFrame = {
+  def dupClusters(pairs: DataFrame, maxIter: Int = 20): DataFrame = {
     val edges = pairs.select(col("id1").as("src"), col("id2").as("dst"))
       .unionAll(pairs.select(col("id2").as("src"), col("id1").as("dst")))
       .distinct()
@@ -736,24 +727,22 @@ object Dedup {
     var labels = edges.select(col("src").as("id")).distinct()
       .withColumn("label", col("id"))
       .localCheckpoint() // eager + FLAT lineage for the loop below
-    // one propagation round: one-hop min over the edges, then pointer
-    // doubling (label ← label of the label) — LAZY; callers materialize
-    def round(ls: DataFrame): DataFrame = {
+    var converged = false
+    var iter = 0
+    while (!converged && iter < maxIter) {
+      // one propagation round: one-hop min over the edges, then pointer
+      // doubling (label ← label of the label)
       val viaNeighbors = edges
-        .join(ls.withColumnRenamed("id", "src"), "src")
+        .join(labels.withColumnRenamed("id", "src"), "src")
         .groupBy(col("dst").as("id")).agg(min("label").as("nlabel"))
-      val hop = ls.join(viaNeighbors, Seq("id"), "left")
+      val hop = labels.join(viaNeighbors, Seq("id"), "left")
         .select(col("id"), least(col("label"), coalesce(col("nlabel"), col("label"))).as("label"))
-      hop.alias("a")
+      val next = hop.alias("a")
         .join(hop.select(col("id").as("lid"), col("label").as("llabel")).alias("b"),
           col("a.label") === col("b.lid"), "left")
         .select(col("a.id").as("id"),
           least(col("a.label"), coalesce(col("llabel"), col("a.label"))).as("label"))
-    }
-    var converged = false
-    var iter = 0
-    while (!converged && iter < maxIter) {
-      val next = round(labels).localCheckpoint()
+        .localCheckpoint()
       val changed = next.alias("n").join(labels.alias("o"), "id")
         .filter(col("n.label") =!= col("o.label")).count()
       // `changed` was the superseded round's last reader — release its
@@ -764,15 +753,13 @@ object Dedup {
       converged = changed == 0
       iter += 1
     }
-    if (strict && !converged) throw new IllegalStateException(
-      s"dupClusters: labels not converged after $maxIter rounds — component " +
-        s"diameter exceeds ~2^$maxIter; raise maxIter (or pass strict = false " +
-        s"to accept partial labels)")
-    if (materialize) labels.withColumnRenamed("label", "cluster_id")
-    // lazy: one identity-at-fixpoint round over the final checkpoint —
-    // exposes the per-round DAG (see scaladoc). The edge cache below is
-    // dropped, so actions on the lazy plan recompute edges from `pairs`.
-    else round(labels).withColumnRenamed("label", "cluster_id")
+    if (!converged) {
+      graft.core.Checkpoints.release(labels)
+      throw new IllegalStateException(
+        s"dupClusters: labels not converged after $maxIter rounds — component " +
+          s"diameter exceeds ~2^$maxIter; raise maxIter")
+    }
+    labels.withColumnRenamed("label", "cluster_id")
     // finally, not inline: a mid-loop job failure must still release the
     // edge cache (every other persist in this file follows the pattern)
     } finally edges.unpersist(blocking = false)
@@ -917,9 +904,8 @@ object Dedup {
   def spanSegments(df: DataFrame, textCol: String, idCol: String, w: Int): DataFrame = {
     require(w > 0, s"span width must be positive, got $w")
     // n_total rides each row (r18): the per-doc segment count is in-row
-    // knowledge here — carrying it lets segmentDedup skip its whole
-    // totals aggregation + join (and with them the only second consumer
-    // of the segment frame, so the persist goes too)
+    // knowledge here, and segmentDedup takes it from the row instead of
+    // recounting the segment frame
     df.select(col(idCol).as("id"),
         expr(graft.pipeline.TextAnalysis.tokensExpr(textCol)).as("__tk"))
       .filter(size(col("__tk")) > 0)
@@ -937,7 +923,7 @@ object Dedup {
                         sep: String = "\n\n"): DataFrame = {
     val q = java.util.regex.Pattern.quote(sep)
     // n_total = the doc's NON-BLANK segment count, computed in-row (the
-    // spanSegments r18 contract — segmentDedup's totals stage replays it)
+    // segmentDedup contract, as in spanSegments)
     df.select(col(idCol).as("id"),
         size(filter(split(col(textCol), q), s => trim(s) =!= "")).cast("long")
           .as("n_total"),
@@ -952,22 +938,16 @@ object Dedup {
     * reassembled from their surviving segments in order. Docs whose
     * segments are all dropped disappear (C4 behavior).
     *
-    * Scale shape: winners come from ONE groupBy on the 16-byte md5 key
-    * shuffling only (fp, id, idx); the survivor join is keyed on the same
-    * fp, and reassembly is one partial-aggregated groupBy(id). The
-    * segment frame is persisted for its two consumers and released before
-    * returning (localCheckpoint), following minhashDedup.
+    * Scale shape: winners come from ONE groupBy on the 16-byte md5 key,
+    * and reassembly is one partial-aggregated groupBy(id); the result is
+    * checkpointed (release via [[graft.core.Checkpoints.release]]).
     *
-    * Output: (id, text, n_kept, n_total) — n_* count this doc's segments.
-    *
-    * `inRowTotals = true` declares that every row of `segments` carries
-    * its doc's segment count in an `n_total` column, as [[spanSegments]]
-    * and [[paragraphSegments]] produce it; the counts are then taken from
-    * the rows instead of recounted. Any other `n_total` column the caller
-    * passes is ignored.
+    * Every row of `segments` carries its doc's segment count in an
+    * `n_total` column, as [[spanSegments]] and [[paragraphSegments]]
+    * produce it. Output: (id, text, n_kept, n_total) — n_* count this
+    * doc's segments.
     */
-  def segmentDedup(segments: DataFrame, sep: String = " ",
-                   inRowTotals: Boolean = false): DataFrame = {
+  private[pipeline] def segmentDedup(segments: DataFrame, sep: String = " "): DataFrame = {
     // r18 opt (guide §2.4/§8): the winner's OWN segment rides the
     // min-struct — (id, idx) is unique per row, so the fp-group min
     // picks exactly the first-occurrence row AND carries its text,
@@ -975,57 +955,33 @@ object Dedup {
     // frame against the winner table (one whole-corpus text shuffle).
     // Map-side combine reduces the fp exchange to ~one candidate row
     // per fp per task; reassembly then shuffles only the kept
-    // (deduplicated) segments. When the producer supplies an in-row
-    // `n_total` (spanSegments/paragraphSegments do), the whole totals
-    // aggregation + join vanish too and the segment frame has ONE
-    // consumer — a single scan, no persist.
-    require(!inRowTotals || segments.columns.contains("n_total"),
-      "segmentDedup: inRowTotals needs an n_total column on every segment row")
-    val fp = md5(normText(col("seg")))
-    if (inRowTotals) {
-      segments.withColumn("fp", fp)
-        .groupBy("fp")
-        .agg(min(struct(col("id"), col("idx"), col("seg"), col("n_total"))).as("w"))
-        .select(col("w.id").as("id"), col("w.idx").as("idx"),
-          col("w.seg").as("seg"), col("w.n_total").as("n_total"))
-        .groupBy("id")
-        .agg(
-          array_join(transform(array_sort(collect_list(struct(col("idx"), col("seg")))),
-            x => x.getField("seg")), sep).as("text"),
-          count(lit(1)).as("n_kept"),
-          // every row of a doc carries the same n_total; max is the
-          // deterministic pick
-          max(col("n_total")).as("n_total"))
-        .localCheckpoint()
-    } else {
-      val segs = segments.withColumn("fp", fp)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        val winners = segs.groupBy("fp")
-          .agg(min(struct(col("id"), col("idx"), col("seg"))).as("w"))
-          .select(col("w.id").as("id"), col("w.idx").as("idx"),
-            col("w.seg").as("seg"))
-        val totals = segs.groupBy("id").agg(count(lit(1)).as("n_total"))
-        winners
-          .groupBy("id")
-          .agg(
-            array_join(transform(array_sort(collect_list(struct(col("idx"), col("seg")))),
-              x => x.getField("seg")), sep).as("text"),
-            count(lit(1)).as("n_kept"))
-          .join(totals, Seq("id"))
-          .localCheckpoint()
-      } finally segs.unpersist(blocking = false)
-    }
+    // (deduplicated) segments. The producer's in-row `n_total` spares a
+    // totals aggregation + join, so the segment frame has ONE consumer —
+    // a single scan, no persist.
+    segments.withColumn("fp", md5(normText(col("seg"))))
+      .groupBy("fp")
+      .agg(min(struct(col("id"), col("idx"), col("seg"), col("n_total"))).as("w"))
+      .select(col("w.id").as("id"), col("w.idx").as("idx"),
+        col("w.seg").as("seg"), col("w.n_total").as("n_total"))
+      .groupBy("id")
+      .agg(
+        array_join(transform(array_sort(collect_list(struct(col("idx"), col("seg")))),
+          x => x.getField("seg")), sep).as("text"),
+        count(lit(1)).as("n_kept"),
+        // every row of a doc carries the same n_total; max is the
+        // deterministic pick
+        max(col("n_total")).as("n_total"))
+      .localCheckpoint()
   }
 
   /** [[segmentDedup]] over fixed token spans of `w`. */
   def spanDedup(df: DataFrame, textCol: String, idCol: String, w: Int): DataFrame =
-    segmentDedup(spanSegments(df, textCol, idCol, w), inRowTotals = true)
+    segmentDedup(spanSegments(df, textCol, idCol, w))
 
   /** [[segmentDedup]] over separator-delimited paragraphs. */
   def paragraphDedup(df: DataFrame, textCol: String, idCol: String,
                      sep: String = "\n\n"): DataFrame =
-    segmentDedup(paragraphSegments(df, textCol, idCol, sep), sep, inRowTotals = true)
+    segmentDedup(paragraphSegments(df, textCol, idCol, sep), sep)
 
   /** SemDeDup-style semantic near-dup pairs: embeddings assigned to
     * k-means cells ([[IvfIndex]]), exact cosine scored WITHIN cells only

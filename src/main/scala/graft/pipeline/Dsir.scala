@@ -68,17 +68,14 @@ object Dsir {
     * Precondition: `raw` ids are UNIQUE. Weighting is per ROW (each
     * row's text scores independently); duplicate ids would each carry
     * their own row's weight, not a combined per-document weight.
-    */
-  /** `materialize = true` (default) shares the tokenized raw frame
-    * across its three consumers (persist) and returns an eagerly
-    * checkpointed result so no cache outlives the call; `false` returns
-    * the pure lazy plan — for plan inspection and for composing into a
-    * larger DAG that manages its own materialization.
+    *
+    * The result is a checkpoint, already materialized; release it via
+    * [[graft.core.Checkpoints.release]]. No cache or broadcast of the
+    * call outlives it.
     */
   def importanceWeights(raw: DataFrame, target: DataFrame,
                         textCol: String, idCol: String,
-                        buckets: Int = 10000, alpha: Double = 1.0,
-                        materialize: Boolean = true): DataFrame = {
+                        buckets: Int = 10000, alpha: Double = 1.0): DataFrame = {
     require(buckets > 0 && buckets <= (1 << 24),
       s"buckets must be in [1, 2^24], got $buckets")
     require(alpha > 0, s"alpha must be positive, got $alpha")
@@ -97,11 +94,9 @@ object Dsir {
     // shape paid one exchange of ~2·tokens (id, bucket) rows into the
     // per-doc groupBy plus a corpus-wide left join back to raw ids;
     // both are gone (every raw doc has exactly one pair row).
-    val rawBp0 = bucketPairs(raw, textCol, idCol, buckets)
-    val rawBp =
-      if (materialize)
-        rawBp0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else rawBp0
+    val rawBp = bucketPairs(raw, textCol, idCol, buckets)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    var lrBc: org.apache.spark.broadcast.Broadcast[Array[Double]] = null
     // try/finally (r15 persist audit): the loud requires below are
     // user-facing session-survivable errors — the tokenized cache must
     // release on that path too, not only before the success return
@@ -146,19 +141,21 @@ object Dsir {
       // the task binary for every stage that contains the expression
       // (128 MB per task at the 2^24 bucket bound); a broadcast ships
       // once per executor via the block manager.
-      val lrBc = raw.sparkSession.sparkContext.broadcast(lrArr)
-      val lazyOut = rawBp
+      lrBc = raw.sparkSession.sparkContext.broadcast(lrArr)
+      // materialize the (one-row-per-raw-doc) result inside the try so
+      // the finally drops the tokenized cache and the ratio broadcast
+      // only after the checkpoint holds the data (the SetJoin pattern)
+      rawBp
         .select(col("id"), graft.functions.VectorFunctions
           .bucketWeightSum(col("__bp"), lrBc).as("__s"))
         .select(col("id"),
           coalesce(col("__s").getField("n_feats"), lit(0L)).as("n_feats"),
           coalesce(col("__s").getField("weight"), lit(0.0)).as("weight"))
-      if (!materialize) lazyOut
-      // materialize the (one-row-per-raw-doc) result inside the try so
-      // the finally drops the tokenized cache only after the checkpoint
-      // holds the data (the SetJoin pattern)
-      else lazyOut.localCheckpoint(eager = true)
-    } finally if (materialize) rawBp.unpersist(blocking = false)
+        .localCheckpoint(eager = true)
+    } finally {
+      rawBp.unpersist(blocking = false)
+      if (lrBc != null) lrBc.destroy()
+    }
   }
 
   /** Select `k` raw documents by importance. Default is the

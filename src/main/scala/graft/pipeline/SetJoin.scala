@@ -123,7 +123,7 @@ object SetJoin {
                        maxDist: Int, q: Int = 2): DataFrame = {
     require(maxDist >= 1, s"maxDist must be >= 1, got $maxDist")
     require(q >= 1, s"q must be >= 1, got $q")
-    val strs = prepStrings(df, strCol, idCol, persist = true)
+    val strs = prepStrings(df, strCol, idCol)
     // finally: the corpus-sized cache is released whether the eager
     // checkpoint lands or a job throws (the Dedup.scala persist discipline)
     try verified(editCandidates(strs, strs, maxDist, self = true), strs, strs, maxDist)
@@ -137,36 +137,29 @@ object SetJoin {
     * table) that [[editDistanceJoin]]'s self-join form only reaches via
     * a wasteful union. Same candidate generators and the same NO-false-
     * negative guarantee. Output: (id_l, id_r, dist), dist ≤ maxDist.
-    *
-    * `materialize = false` returns the LAZY plan (for plan pins) and
-    * persists nothing: the prep frames are private locals, so a caller
-    * could never release them (the Dsir.importanceWeights rule). The
-    * lazy mode re-executes prep per consumer, which is the point.
+    * The result is a checkpoint, already materialized; release it via
+    * [[graft.core.Checkpoints.release]].
     */
   def editDistanceLookup(left: DataFrame, leftStr: String, leftId: String,
                          right: DataFrame, rightStr: String, rightId: String,
-                         maxDist: Int, materialize: Boolean = true): DataFrame = {
+                         maxDist: Int): DataFrame = {
     require(maxDist >= 1, s"maxDist must be >= 1, got $maxDist")
-    val ls = prepStrings(left, leftStr, leftId, persist = materialize)
-    val rs = prepStrings(right, rightStr, rightId, persist = materialize)
-    val out = verified(editCandidates(ls, rs, maxDist, self = false), ls, rs, maxDist)
+    val ls = prepStrings(left, leftStr, leftId)
+    val rs = prepStrings(right, rightStr, rightId)
+    try verified(editCandidates(ls, rs, maxDist, self = false), ls, rs, maxDist)
       .select(col("id_a").as("id_l"), col("id_b").as("id_r"), col("dist"))
-    if (!materialize) return out
-    try out.localCheckpoint(eager = true)
+      .localCheckpoint(eager = true)
     finally { ls.unpersist(blocking = false); rs.unpersist(blocking = false) }
   }
 
-  /** (id, str, len) of a string column, nulls dropped; persisted when
-    * `persist`, for the caller to release.
+  /** (id, str, len) of a string column, nulls dropped; persisted, for the
+    * caller to release.
     */
-  private def prepStrings(df: DataFrame, strCol: String, idCol: String,
-                          persist: Boolean): DataFrame = {
-    val strs = df.select(col(idCol).as("id"), col(strCol).cast("string").as("str"))
+  private def prepStrings(df: DataFrame, strCol: String, idCol: String): DataFrame =
+    df.select(col(idCol).as("id"), col(strCol).cast("string").as("str"))
       .filter(col("str").isNotNull)
       .withColumn("len", length(col("str")))
-    if (persist) strs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else strs
-  }
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
   /** Exact verify of (id_a, id_b) candidates between prepped sides `a`
     * and `b`: (id_a, id_b, dist), dist ≤ k. The levenshtein is

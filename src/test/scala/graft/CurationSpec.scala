@@ -481,7 +481,6 @@ class CurationSpec extends SparkTestBase {
       graft.pipeline.Dedup.dupClusters(pairs, maxIter = 0)
     }
     assert(e3.getMessage.contains("not converged"))
-    assert(graft.pipeline.Dedup.dupClusters(pairs, maxIter = 0, strict = false).count() == 2)
   }
 
   test("recallAt is a macro average over queries and rejects empty truth") {

@@ -69,19 +69,22 @@ class DsirSpec extends SparkTestBase {
   }
 
   test("plan: scoring is join-free and shuffle-free (r17 per-row weights)") {
-    // materialize=false exposes the lazy plan (default eagerly
-    // checkpoints, which reduces the visible plan to an RDD scan).
+    // the result is a checkpoint, so the scoring plan is read from the
+    // AQE-final plan of the checkpoint's SQL execution.
     // r17 opt: the per-doc weight is one compiled in-row pass over the
     // doc's bucket pairs with a config-sized log-ratio reference array —
     // the scoring stage must carry NO join and NO exchange at all (the
     // old shape broadcast-joined the ratio table and re-grouped by id).
-    val qe = Dsir.importanceWeights(raw, target, "text", "doc_id",
-        materialize = false).queryExecution
-    // the expression lives in the analyzed plan (ConvertToLocalRelation
-    // folds this local-relation fixture into a LocalTableScan physically)
-    assert(qe.analyzed.toString.contains("bucket_weight_sum"), qe.analyzed.toString)
-    val plan = qe.executedPlan.toString
-    assert(!plan.contains("Join") && !plan.contains("Exchange"), plan)
+    var out: org.apache.spark.sql.DataFrame = null
+    val rec = graft.tools.Profile.record(spark) {
+      out = Dsir.importanceWeights(raw, target, "text", "doc_id")
+    }
+    graft.core.Checkpoints.release(out)
+    val scoring = rec.executions.filter(_.plan.contains("bucket_weight_sum"))
+    assert(scoring.size == 1, rec.executions.map(_.plan).mkString("\n"))
+    val names = scoring.head.nodes.map(_.name)
+    assert(!names.exists(n => n.contains("Join") || n.contains("Exchange")),
+      scoring.head.plan)
   }
 
   test("guards: bad buckets/alpha/k, empty corpora") {
@@ -93,6 +96,23 @@ class DsirSpec extends SparkTestBase {
       Dsir.resample(raw, target, "text", "doc_id", k = 0))
     intercept[IllegalArgumentException](
       Dsir.importanceWeights(raw, raw.filter($"doc_id" < 0), "text", "doc_id"))
+  }
+
+  test("the ratio broadcast is destroyed once the weights are checkpointed") {
+    // a bucket count no other broadcast array in the session has
+    val buckets = 4099
+    val out = Dsir.importanceWeights(raw, target, "text", "doc_id", buckets = buckets)
+    try {
+      // Broadcast.destroy removes the driver's blocks asynchronously
+      def held = org.apache.spark.graftbridge.DriverBlocks.broadcastValues().count {
+        case a: Array[Double] => a.length == buckets
+        case _ => false
+      }
+      val deadline = System.nanoTime() + 10000000000L
+      while (held > 0 && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(held == 0, s"$held driver broadcast block(s) still hold the ratio array")
+      assert(out.count() == 5) // the checkpoint holds the rows without it
+    } finally graft.core.Checkpoints.release(out)
   }
 
   test("empty-corpus failure releases the tokenized cache (r15 persist audit)") {

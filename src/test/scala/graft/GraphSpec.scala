@@ -97,15 +97,22 @@ class GraphSpec extends SparkTestBase {
       s"hits must release its iteration frames, leaked ids: $leaked")
   }
 
-  test("hits: the result's plan does not grow with the iteration count") {
-    val e = Seq(("a", "b"), ("a", "c"), ("d", "c"), ("c", "a")).toDF("s", "t")
-    def planNodes(iterations: Int): Int = {
-      val out = Graph.hits(e, "s", "t", iterations)
+  test("hits and pageRank: the result's plan does not grow with the iterations") {
+    val e = Seq(("a", "b", 2L), ("a", "c", 1L), ("d", "c", 3L), ("c", "a", 1L))
+      .toDF("s", "t", "w")
+    val ops: Seq[(String, Int => org.apache.spark.sql.DataFrame)] = Seq(
+      "hits" -> (Graph.hits(e, "s", "t", _)),
+      "pageRank" -> (Graph.pageRank(e, "s", "t", _)),
+      "pageRankWeighted" -> (Graph.pageRankWeighted(e, "s", "t", "w", _)))
+    def planNodes(run: Int => org.apache.spark.sql.DataFrame, iterations: Int): Int = {
+      val out = run(iterations)
       try out.queryExecution.analyzed.collect { case p => p }.size
       finally graft.core.Checkpoints.release(out)
     }
-    val (two, six) = (planNodes(2), planNodes(6))
-    assert(six <= two, s"hits' analyzed plan has $two nodes at 2 iterations, $six at 6")
+    val grown = ops.map { case (name, run) => (name, planNodes(run, 2), planNodes(run, 6)) }
+      .filter { case (_, two, six) => six > two }
+    assert(grown.isEmpty, grown.map { case (name, two, six) =>
+      s"$name's analyzed plan has $two nodes at 2 iterations, $six at 6" }.mkString("; "))
   }
 
   test("triangleCount: K4 has 3 per node; direction/dups/self-loops erased") {
@@ -159,40 +166,29 @@ class GraphSpec extends SparkTestBase {
       s"got $cc")
   }
 
-  // --- round 12: materialize escape hatch + checkpoint-release hygiene ---
+  // --- round 12: checkpoint-release hygiene ---
 
   private def lollipop = {
     val k5 = for { a <- 1 to 5; b <- 1 to 5 if a < b } yield (a.toLong, b.toLong)
     (k5 ++ Seq((5L, 6L), (6L, 7L), (7L, 8L))).toDF("src", "dst")
   }
-  private def asMap(df: org.apache.spark.sql.DataFrame) =
-    df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
 
-  test("materialize = false exposes the lazy DAG; values identical to eager") {
-    import org.apache.spark.sql.execution.LogicalRDD
-    import org.apache.spark.sql.catalyst.plans.logical.Join
+  test("eager triangleCount, kCore and connectedComponents record their rounds") {
+    // the operators return checkpoints, so their per-round DAG is read
+    // from the AQE-final plans of the SQL executions the call ran
+    def recorded(run: => org.apache.spark.sql.DataFrame): Seq[String] = {
+      var out: org.apache.spark.sql.DataFrame = null
+      val rec = graft.tools.Profile.record(spark) { out = run }
+      graft.core.Checkpoints.release(out)
+      rec.executions.flatMap(_.nodes).map(_.name)
+    }
     val edges = lollipop
-    // triangleCount: pure lazy plan — joins visible, no checkpoint scan
-    val tcLazy = Graph.triangleCount(edges, "src", "dst", materialize = false)
-    assert(tcLazy.queryExecution.analyzed.collect { case j: Join => j }.nonEmpty,
-      "lazy triangleCount should expose its wedge/closing joins")
-    assert(!tcLazy.queryExecution.analyzed.exists(_.isInstanceOf[LogicalRDD]))
-    assert(asMap(tcLazy) == asMap(Graph.triangleCount(edges, "src", "dst")))
-    // kCore (r17 shrink-frame peel): the final in-core degree pass stays
-    // a LIVE aggregate over the final edge checkpoint — no join remains
-    // in the lazy plan because the peel now shrinks the edge frame
-    // itself (anti-joins happen inside the loop's checkpointed rounds)
-    val kcLazy = Graph.kCore(edges, "src", "dst", k = 2, materialize = false)
-    assert(kcLazy.queryExecution.analyzed.collect {
-      case a: org.apache.spark.sql.catalyst.plans.logical.Aggregate => a }.nonEmpty,
-      "lazy kCore should expose the degree aggregate")
-    assert(asMap(kcLazy) == asMap(Graph.kCore(edges, "src", "dst", k = 2)))
-    // connectedComponents: one identity-at-fixpoint propagation round,
-    // lazy — per-round join/agg DAG visible, labels unchanged
-    val ccLazy = Graph.connectedComponents(edges, "src", "dst", materialize = false)
-    assert(ccLazy.queryExecution.analyzed.collect { case j: Join => j }.nonEmpty,
-      "lazy connectedComponents should expose the propagation round")
-    assert(asMap(ccLazy) == asMap(Graph.connectedComponents(edges, "src", "dst")))
+    assert(recorded(Graph.triangleCount(edges, "src", "dst")).exists(_.endsWith("Join")),
+      "triangleCount should record its wedge/closing joins")
+    assert(recorded(Graph.kCore(edges, "src", "dst", k = 2)).exists(_.endsWith("Aggregate")),
+      "kCore should record the degree aggregate")
+    assert(recorded(Graph.connectedComponents(edges, "src", "dst")).exists(_.endsWith("Join")),
+      "connectedComponents should record the propagation round")
   }
 
   test("Checkpoints.release frees localCheckpoint blocks (Dataset.unpersist alone can't)") {
@@ -211,39 +207,42 @@ class GraphSpec extends SparkTestBase {
 
   test("iterative loops release superseded rounds: at most one block set survives") {
     def pinnedIds = spark.sparkContext.getPersistentRDDs.keySet
+    // runs `call`; at most the result's own blocks may stay pinned, and
+    // releasing the result must return the pinned set to its baseline.
+    // r13 (r12 ADVICE): connectedComponents/dupClusters return a Project
+    // (withColumnRenamed) OVER the final checkpoint, which the old
+    // root-only LogicalRDD match in release silently skipped.
+    def pinsOnlyResult(name: String)(call: => org.apache.spark.sql.DataFrame): Long = {
+      val before = pinnedIds
+      val out = call
+      val n = out.count()
+      val leaked = pinnedIds -- before
+      assert(leaked.size <= 1, s"$name left ${leaked.size} pinned RDDs " +
+        "(expected only the returned frame's checkpoint)")
+      graft.core.Checkpoints.release(out)
+      assert((pinnedIds -- before).isEmpty,
+        s"release($name result) must free its blocks; still pinned: ${pinnedIds -- before}")
+      n
+    }
     // a 64-node chain needs several pointer-doubling rounds; before the
     // r12 fix each round left one pinned checkpoint behind
     val chain = (1L until 64L).map(i => (i, i + 1)).toDF("src", "dst")
-    val before = pinnedIds
-    val cc = Graph.connectedComponents(chain, "src", "dst")
-    assert(cc.count() == 64)
-    val leakedCc = (pinnedIds -- before).size
-    assert(leakedCc <= 1, s"connectedComponents left $leakedCc pinned RDDs " +
-      "(expected only the returned frame's checkpoint)")
-    graft.core.Checkpoints.release(cc)
-    // r13 (r12 ADVICE): the release must actually SHRINK the pinned set.
-    // cc is a Project (withColumnRenamed) OVER the final checkpoint, so
-    // the old root-only LogicalRDD match made release(cc) a silent no-op
-    // — and this test, asserting nothing after the call, masked it.
-    assert((pinnedIds -- before).isEmpty,
-      "release(connectedComponents result) must free the final round's " +
-        s"checkpoint blocks; still pinned: ${pinnedIds -- before}")
-    // kCore on the lollipop peels a 3-round cascade; same discipline
-    val before2 = pinnedIds
-    val kc = Graph.kCore(lollipop, "src", "dst", k = 2)
-    assert(kc.count() == 5)
-    val leakedKc = (pinnedIds -- before2).size
-    assert(leakedKc <= 1, s"kCore left $leakedKc pinned RDDs")
-    graft.core.Checkpoints.release(kc)
-    assert((pinnedIds -- before2).isEmpty,
-      s"release(kCore result) must free its blocks; still pinned: ${pinnedIds -- before2}")
-    // dupClusters shares cc's Project-over-checkpoint return shape
-    val before3 = pinnedIds
+    assert(pinsOnlyResult("connectedComponents")(
+      Graph.connectedComponents(chain, "src", "dst")) == 64)
+    // kCore on the lollipop peels a 3-round cascade
+    assert(pinsOnlyResult("kCore")(Graph.kCore(lollipop, "src", "dst", k = 2)) == 5)
     val pairs = (1L until 20L).map(i => (i, i + 1)).toDF("id1", "id2")
-    val dc = graft.pipeline.Dedup.dupClusters(pairs)
-    assert(dc.count() == 20)
-    graft.core.Checkpoints.release(dc)
-    assert((pinnedIds -- before3).isEmpty,
-      s"release(dupClusters result) must free its blocks; still pinned: ${pinnedIds -- before3}")
+    assert(pinsOnlyResult("dupClusters")(graft.pipeline.Dedup.dupClusters(pairs)) == 20)
+    assert(pinsOnlyResult("pageRank")(Graph.pageRank(chain, "src", "dst", 4)) == 64)
+    assert(pinsOnlyResult("pageRankWeighted")(Graph.pageRankWeighted(
+      chain.withColumn("w", col("src") % 3 + 1), "src", "dst", "w", 4)) == 64)
+    assert(pinsOnlyResult("triangleCount")(Graph.triangleCount(lollipop, "src", "dst")) == 5)
+    val docs = Seq((1L, "the court held the contract void"), (2L, "whisk the eggs"))
+      .toDF("doc_id", "text")
+    assert(pinsOnlyResult("importanceWeights")(graft.pipeline.Dsir.importanceWeights(
+      docs, docs.filter(col("doc_id") === 1L), "text", "doc_id", buckets = 64)) == 2)
+    val names = Seq((1L, "graph"), (2L, "grape"), (3L, "giraffe")).toDF("id", "s")
+    assert(pinsOnlyResult("editDistanceLookup")(graft.pipeline.SetJoin.editDistanceLookup(
+      names, "s", "id", names, "s", "id", maxDist = 1)) == 5)
   }
 }

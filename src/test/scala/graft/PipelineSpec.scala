@@ -91,25 +91,6 @@ class PipelineSpec extends SparkTestBase {
     assert(sp(2L) == "epsilon zeta")
   }
 
-  test("segmentDedup recounts totals unless the caller declares them in-row") {
-    import spark.implicits._
-    // a caller's segment frame whose n_total means something else (here a
-    // corpus-wide count): it must not be read as the per-doc total
-    val segs = Seq(
-      (1L, 0, "shared", 99L), (1L, 1, "one only", 99L),
-      (2L, 0, "shared", 99L), (2L, 1, "two only", 99L), (2L, 2, "two again", 99L)
-    ).toDF("id", "idx", "seg", "n_total")
-    def totals(df: org.apache.spark.sql.DataFrame): Map[Long, (Long, Long)] =
-      df.collect().map(r => r.getAs[Long]("id") ->
-        (r.getAs[Long]("n_kept"), r.getAs[Long]("n_total"))).toMap
-    assert(totals(Dedup.segmentDedup(segs)) == Map(1L -> (2L, 2L), 2L -> (2L, 3L)))
-    // declared in-row totals are taken as given
-    assert(totals(Dedup.segmentDedup(segs, inRowTotals = true)) ==
-      Map(1L -> (2L, 99L), 2L -> (2L, 99L)))
-    intercept[IllegalArgumentException](
-      Dedup.segmentDedup(segs.drop("n_total"), inRowTotals = true))
-  }
-
   test("semanticDecontaminate: flags near-eval vectors, max is over the whole eval set") {
     import spark.implicits._
     val corpus = Seq(

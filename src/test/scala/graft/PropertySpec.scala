@@ -675,24 +675,38 @@ class PropertySpec extends SparkTestBase {
       val damping = Seq(50, 85, 100)(rng.nextInt(3))
       val scale = 1000000L
       val df = edges.toDF("s", "d").repartition(1 + rng.nextInt(5))
-      val ranks = graft.operators.Graph.pageRank(df, "s", "d", iters, damping, scale)
-      val got = ranks.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      ranks.unpersist(blocking = false)
-      // serial replay of the documented integer recurrence
-      val e = edges.distinct
-      val nodes = e.flatMap(x => Seq(x._1, x._2)).distinct
-      val outdeg = e.groupBy(_._1).map { case (s, xs) => s -> xs.size.toLong }
-      val base = (100L - damping) * scale / 100L
-      var pr = nodes.map(_ -> scale).toMap
-      for (_ <- 0 until iters) {
-        val contrib = scala.collection.mutable.Map[Long, Long]().withDefaultValue(0L)
-        e.foreach { case (s, d) =>
-          contrib(d) += Math.floorDiv(pr(s), outdeg(s))
+      // random positive integer weights; duplicate (s, d) rows sum
+      val weighted = edges.map { case (s, d) => (s, d, 1L + rng.nextInt(9)) }
+      val wdf = weighted.toDF("s", "d", "w").repartition(1 + rng.nextInt(5))
+      def ranks(out: org.apache.spark.sql.DataFrame): Map[Long, Long] =
+        try out.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+        finally graft.core.Checkpoints.release(out)
+      val got = ranks(graft.operators.Graph.pageRank(df, "s", "d", iters, damping, scale))
+      val gotW = ranks(graft.operators.Graph.pageRankWeighted(wdf, "s", "d", "w",
+        iters, damping, scale))
+      // serial replay of the documented integer recurrence over summed
+      // (s, d) weights: each edge carries (pr · w) div Σ_s w, which unit
+      // weights on the distinct edges make pr div outdeg
+      def replay(w: Map[(Long, Long), Long]): Map[Long, Long] = {
+        val nodes = w.keys.flatMap(x => Seq(x._1, x._2)).toSet
+        val sw = w.groupMapReduce(_._1._1)(_._2)(_ + _)
+        val base = (100L - damping) * scale / 100L
+        var pr = nodes.map(_ -> scale).toMap
+        for (_ <- 0 until iters) {
+          val contrib = scala.collection.mutable.Map[Long, Long]().withDefaultValue(0L)
+          w.foreach { case ((s, d), x) =>
+            contrib(d) += Math.floorDiv(pr(s) * x, sw(s))
+          }
+          pr = nodes.map(n => n -> (base + Math.floorDiv(damping * contrib(n), 100L))).toMap
         }
-        pr = nodes.map(n => n -> (base + Math.floorDiv(damping * contrib(n), 100L))).toMap
+        pr
       }
-      assert(got == pr, s"seed=$seed iters=$iters damping=$damping " +
-        s"diff=${(got.toSet diff pr.toSet) ++ (pr.toSet diff got.toSet)}")
+      val want = replay(edges.distinct.map(_ -> 1L).toMap)
+      assert(got == want, s"seed=$seed iters=$iters damping=$damping " +
+        s"diff=${(got.toSet diff want.toSet) ++ (want.toSet diff got.toSet)}")
+      val wantW = replay(weighted.groupMapReduce(e => (e._1, e._2))(_._3)(_ + _))
+      assert(gotW == wantW, s"weighted: seed=$seed iters=$iters damping=$damping " +
+        s"diff=${(gotW.toSet diff wantW.toSet) ++ (wantW.toSet diff gotW.toSet)}")
     }
   }
 

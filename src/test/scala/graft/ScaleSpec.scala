@@ -188,21 +188,27 @@ class ScaleSpec extends SparkTestBase {
     import spark.implicits._
     val left = (1 to 30).map(i => (i.toLong, s"word$i")).toDF("id", "s")
     val right = (1 to 50).map(i => (100L + i, s"word$i")).toDF("id", "s")
-    val out = graft.pipeline.SetJoin.editDistanceLookup(left, "s", "id",
-      right, "s", "id", maxDist = 2, materialize = false)
-    val plan = out.queryExecution.executedPlan.toString
-    assert(!plan.contains("CartesianProduct") &&
-      !plan.contains("BroadcastNestedLoopJoin"),
-      s"FastSS lookup candidates must come from an equi join on variants:\n$plan")
+    // the lookup returns a checkpoint: its plan is read from the AQE-final
+    // plan nodes of the SQL executions the eager call ran
+    def lookupNodes(k: Int): Seq[graft.tools.Profile.Node] = {
+      var out: org.apache.spark.sql.DataFrame = null
+      val rec = graft.tools.Profile.record(spark) {
+        out = graft.pipeline.SetJoin.editDistanceLookup(left, "s", "id",
+          right, "s", "id", maxDist = k)
+      }
+      graft.core.Checkpoints.release(out)
+      rec.executions.flatMap(_.nodes)
+    }
+    val k2 = lookupNodes(2)
+    assert(!k2.exists(n => n.name == "CartesianProduct" || n.name == "BroadcastNestedLoopJoin"),
+      s"FastSS lookup candidates must come from an equi join on variants:\n${k2.map(_.desc)}")
     // k = 3 → PassJoin: each side's segments against the other side's
     // probes, two equi-joins on (l, i, g); the short-string pool is a
     // bounded nested-loop join by design, so it is not pinned here
-    val k3 = graft.pipeline.SetJoin.editDistanceLookup(left, "s", "id",
-      right, "s", "id", maxDist = 3, materialize = false)
-      .queryExecution.executedPlan.toString
-    val segJoin = raw"(SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin) \[l#\d+, i#\d+, g#\d+\]".r
-    assert(segJoin.findAllIn(k3).size == 2,
-      s"PassJoin lookup candidates must come from two equi joins on (l, i, g):\n$k3")
+    val k3 = lookupNodes(3)
+    val segJoin = raw"(SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin) \[l#\d+, i#\d+, g#\d+\].*".r
+    assert(k3.count(n => segJoin.matches(n.desc)) == 2,
+      s"PassJoin lookup candidates must come from two equi joins on (l, i, g):\n${k3.map(_.desc)}")
   }
 
   test("incrementalExactBloom: one anti-join; bloom probe gates both branches") {
