@@ -796,11 +796,13 @@ private[graft] object EntryPipelineBQ {
         // caller contract in matchDistribution's scaladoc; the blocks
         // release on the session's next cache drain.
         // the text column's work is DONE once dedup picks survivors —
-        // drop it before materializing so the checkpoint holds only the
-        // four slim columns every later stage reads
-        val surv = pipeline.Dedup.exactSurvivors(canon, "text", "doc_id")
-          .select("doc_id", "lang", "source", "n_chars")
+        // the slim checkpoint holds only the four columns every later
+        // stage reads, and the survivors' own checkpoint (text included)
+        // is released once it exists, so the text is not pinned twice
+        val fullSurv = pipeline.Dedup.exactSurvivors(canon, "text", "doc_id")
+        val surv = fullSurv.select("doc_id", "lang", "source", "n_chars")
           .localCheckpoint(eager = true)
+        graft.core.Checkpoints.release(fullSurv)
         val sel = operators.Views.budgetSelectByGroup(surv, "source",
           Seq(col("n_chars").desc, col("doc_id").asc), "n_chars",
           budgets = Map("src1" -> 5000L, "src7" -> 0L), defaultBudget = 3000L)

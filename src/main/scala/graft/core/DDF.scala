@@ -183,6 +183,9 @@ final class DDF(
   // chain reads ddf.c4Filter(...).dedupExact(...).dedupNearDup(...).
   // enrichText(...). Each delegates to the graft.pipeline operator that
   // carries the scale contract.
+  /** Exact-dedup survivors; the result is materialized (a checkpoint:
+    * free it with [[graft.core.Checkpoints.release]] when done).
+    */
   def dedupExact(textCol: String, idCol: String): DDF =
     derive(graft.pipeline.Dedup.exactSurvivors(df, textCol, idCol))
   def dedupNearDup(textCol: String, idCol: String, threshold: Double = 0.8): DDF =

@@ -29,10 +29,30 @@ object Dedup {
     df.groupBy(md5(normText(col(textCol))).as("fingerprint"))
       .agg(min(col(idCol)).as("keep_id"), count(lit(1)).as("n_dups"))
 
-  /** Rows surviving exact dedup (the kept representatives). */
+  /** Rows surviving exact dedup: per normalized-text fingerprint, the
+    * row with the min id, `idCol` first and then the other columns in
+    * input order. ONE aggregate keeps the whole row (`min_by` over a
+    * struct of every column), so the input is scanned and its derived
+    * columns are computed once, with no join back to the corpus. A group
+    * whose ids are all NULL keeps nothing.
+    *
+    * EAGER: the result is `localCheckpoint`ed. Every caller reads the
+    * survivors at least twice (the near-dup pass, then an anti-join or a
+    * join back), and a lazy result re-ran scan → enrichment → gate →
+    * aggregate per read. Release it with
+    * [[graft.core.Checkpoints.release]] once every reader is done.
+    *
+    * Precondition: `idCol` is unique per row (the corpus contract) — the
+    * aggregate keeps ONE row per fingerprint, matching the old min-id
+    * join-back exactly when ids are unique.
+    */
   def exactSurvivors(df: DataFrame, textCol: String, idCol: String): DataFrame = {
-    val reps = exact(df, textCol, idCol).select(col("keep_id").as(idCol))
-    df.join(reps, idCol) // broadcast-able when the dup rate is high
+    val cols = idCol +: df.columns.filterNot(_ == idCol).toSeq
+    df.groupBy(md5(normText(col(textCol))))
+      .agg(min_by(struct(cols.map(col): _*), col(idCol)).as("__row"))
+      .filter(col("__row").isNotNull)
+      .select(cols.map(c => col("__row").getField(c).as(c)): _*)
+      .localCheckpoint(eager = true)
   }
 
   /** Incremental exact dedup: the production ingest shape — dedup a new

@@ -170,7 +170,15 @@ object Manifest {
       return (summary, prof)
     }
     val depth = partitionCols.size
-    val back = spark.read.parquet(path)
+    // read back with the data schema just written: inferring it runs a
+    // footer job outside any SQL execution. The partition columns come
+    // from the directory names, typed as a plain read types them, so the
+    // columns the content hash folds keep a plain read's order and types
+    // (data columns, then partition columns, all nullable).
+    val back = spark.read
+      .schema(org.apache.spark.sql.types.StructType(
+        df.schema.filterNot(f => partitionCols.contains(f.name)).map(_.copy(nullable = true))))
+      .parquet(path)
     val cs = back.columns.toSeq
     val byName = back.schema.fields.map(f => f.name -> f.dataType).toMap
     val segs = split(input_file_name(), "/")

@@ -244,5 +244,8 @@ class GraphSpec extends SparkTestBase {
     val names = Seq((1L, "graph"), (2L, "grape"), (3L, "giraffe")).toDF("id", "s")
     assert(pinsOnlyResult("editDistanceLookup")(graft.pipeline.SetJoin.editDistanceLookup(
       names, "s", "id", names, "s", "id", maxDist = 1)) == 5)
+    val texts = Seq((1L, "a b"), (2L, "A  b "), (3L, "c")).toDF("doc_id", "text")
+    assert(pinsOnlyResult("exactSurvivors")(
+      graft.pipeline.Dedup.exactSurvivors(texts, "text", "doc_id")) == 2)
   }
 }

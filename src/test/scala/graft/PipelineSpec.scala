@@ -27,6 +27,24 @@ class PipelineSpec extends SparkTestBase {
     assert(Dedup.exactSurvivors(docs(), "text", "doc_id").count() == 4)
   }
 
+  test("exactSurvivors: one aggregate over one scan of the input, no join back") {
+    withTempDir("graft_exact_plan") { dir =>
+      docs().write.parquet(s"$dir/docs")
+      val in = spark.read.parquet(s"$dir/docs")
+      var out: org.apache.spark.sql.DataFrame = null
+      val rec = graft.tools.Profile.record(spark) {
+        out = Dedup.exactSurvivors(in, "text", "doc_id")
+      }
+      try {
+        val nodes = rec.executions.flatMap(_.nodes).map(_.name)
+        assert(nodes.count(_.startsWith("Scan")) == 1, nodes.mkString(", "))
+        assert(!nodes.exists(_.contains("Join")), nodes.mkString(", "))
+        assert(out.columns.toSeq == Seq("doc_id", "text"))
+        assert(out.collect().map(_.getLong(0)).sorted.toSeq == Seq(1L, 2L, 3L, 5L))
+      } finally graft.core.Checkpoints.release(out)
+    }
+  }
+
   test("clusterRepresentativesBy keeps the max-score member, ties to max id") {
     import spark.implicits._
     val pairs = Seq((1L, 2L), (2L, 3L), (4L, 5L)).toDF("id1", "id2")
@@ -1480,6 +1498,34 @@ class PipelineSpec extends SparkTestBase {
       val v = Manifest.verifyManifest(spark, corpus)
       assert(v.count() == 2 && v.filter(!col("ok")).count() == 0,
         v.collect().mkString("\n"))
+    }
+  }
+
+  test("writeWithManifestAndProfile: verifies, profiles as writeProfileFor does, infers no schema") {
+    import spark.implicits._
+    import graft.sources.Manifest
+    // a long partition column with small values: a plain read types it
+    // int, and the content hash must fold it the same way on both sides
+    val df = (0 until 240).map(i => (i.toLong, if (i % 7 == 0) None else Some(s"doc ${i % 50}"),
+        i * 0.5, (i % 3).toLong))
+      .toDF("id", "text", "score", "shard").repartition(3)
+    def estimates(prof: org.apache.spark.sql.DataFrame) =
+      graft.stats.Sketches.estimate(prof).collect().map(_.toSeq).sortBy(_.head.toString).toSeq
+    withTempDir("graft_manifest_prof") { dir =>
+      for ((name, parts) <- Seq("flat" -> Nil, "sharded" -> Seq("shard"))) {
+        val corpus = s"$dir/$name"
+        var prof: org.apache.spark.sql.DataFrame = null
+        val rec = graft.tools.Profile.record(spark) {
+          prof = Manifest.writeWithManifestAndProfile(df, corpus, partitionCols = parts)._2
+        }
+        val inferred = rec.outside.map(_._1).filter(_.startsWith("parquet at Manifest.scala"))
+        assert(inferred.isEmpty, s"$name: jobs outside any SQL execution: $inferred")
+        val v = Manifest.verifyManifest(spark, corpus)
+        assert(v.count() >= 3 && v.filter(!col("ok")).count() == 0,
+          s"$name: ${v.collect().mkString("\n")}")
+        val merged = estimates(prof)
+        assert(merged == estimates(Manifest.writeProfileFor(spark, corpus)), name)
+      }
     }
   }
 }

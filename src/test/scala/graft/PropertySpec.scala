@@ -1026,4 +1026,41 @@ class PropertySpec extends SparkTestBase {
       }
     }
   }
+
+  /** The reference form of exact dedup: the min id per fingerprint
+    * ([[Dedup.exact]]) joined back to the corpus on the id.
+    */
+  private def exactSurvivorsByJoin(df: org.apache.spark.sql.DataFrame, textCol: String,
+                                   idCol: String): org.apache.spark.sql.DataFrame =
+    df.join(Dedup.exact(df, textCol, idCol).select(col("keep_id").as(idCol)), idCol)
+
+  test("property: exactSurvivors ≡ min-id join-back on random corpora") {
+    import spark.implicits._
+    val base = Seq("the quick fox", "a b c", "spark joins rows", "x")
+    for (seed <- Seq(5L, 17L, 29L, 61L)) {
+      val rng = new scala.util.Random(seed)
+      val n = 20 + rng.nextInt(60)
+      // unique ids, some of them null; texts from a small pool with case
+      // and whitespace variants of each, and some null texts
+      val rows = rng.shuffle((1L to 3L * n).toList).take(n).map { id =>
+        val text = Option.when(rng.nextInt(10) != 0) {
+          val t = base(rng.nextInt(base.size))
+          val cased = if (rng.nextBoolean()) t.toUpperCase else t
+          " " * rng.nextInt(2) + cased.replace(" ", " " * (1 + rng.nextInt(3))) +
+            "\t" * rng.nextInt(2)
+        }
+        (text, Option.when(rng.nextInt(8) != 0)(id), rng.nextInt(100))
+      }
+      val df = rows.toDF("text", "doc_id", "score").repartition(1 + rng.nextInt(4))
+      val got = Dedup.exactSurvivors(df, "text", "doc_id")
+      try {
+        val want = exactSurvivorsByJoin(df, "text", "doc_id")
+        assert(got.schema.map(f => f.name -> f.dataType) == want.schema.map(f => f.name -> f.dataType),
+          s"seed=$seed: ${got.schema} vs ${want.schema}")
+        def rowsOf(out: org.apache.spark.sql.DataFrame) =
+          out.collect().map(_.toSeq.map(String.valueOf)).sortBy(_.mkString("|")).toSeq
+        assert(rowsOf(got) == rowsOf(want), s"seed=$seed")
+      } finally graft.core.Checkpoints.release(got)
+    }
+  }
 }
