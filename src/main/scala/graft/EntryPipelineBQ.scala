@@ -424,7 +424,7 @@ private[graft] object EntryPipelineBQ {
           val publishedDocs = prof
             .filter(col("col_name") === "doc_id")
             .select("row_count").first().getLong(0)
-          collectAndClean(s, s.read.parquet(s"$tmp/corpus")
+          collectAndClean(s, sources.Manifest.read(s, s"$tmp/corpus")
             .groupBy("seq_id")
             .agg(count(lit(1)).as("n_docs"), sum("n_tokens").as("n_tokens"),
               min(col("id")).as("first_ord"), min("doc_id").as("min_doc_id"))

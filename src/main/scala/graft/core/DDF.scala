@@ -210,7 +210,9 @@ final class DDF(
   }
   /** Encode the corpus against its own frequency-ranked vocabulary —
     * the last transform before a training loader. See
-    * `TextAnalysis.encodeTokens` for the scale shape.
+    * `TextAnalysis.encodeTokens` for the scale shape. The result is
+    * materialized (a checkpoint: free it with
+    * [[graft.core.Checkpoints.release]] when done).
     */
   def tokenIds(textCol: String, idCol: String, minDocFreq: Long = 1L,
                oovId: Int = -1): DDF = {

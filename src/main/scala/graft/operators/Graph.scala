@@ -193,27 +193,30 @@ object Graph {
     * `edges` (direction and duplicates are erased; self-loops dropped).
     * Output: (node, triangles) for every node in ≥ 1 triangle.
     *
-    * The scale device is DEGREE ORIENTATION: each undirected edge is
-    * directed from its (degree, id)-smaller endpoint to the larger, which
-    * caps every node's out-degree at O(√m) on any graph (a node of
-    * out-degree d has d neighbors of degree ≥ its own, so d² ≤ 2m). The
-    * wedge join (e1.dst = e2.src over oriented edges) therefore produces
-    * Σ outdeg² ≤ O(m^1.5) candidate wedges instead of the Σ deg²
-    * (quadratic on skewed graphs) a naive neighbor join pays, and each
-    * triangle is generated exactly once. The closing check is one more
-    * equi-join of wedges against the oriented edge set — three
-    * edge-partitioned hash joins total, no all-pairs stage anywhere.
-    * Counting then explodes each triangle's 3 corners (3 rows per
-    * triangle, map-side combined before the final O(nodes) aggregate).
+    * The algorithm is the degree-ordered node iterator (Suri &
+    * Vassilvitskii, WWW 2011). Each undirected edge is directed from its
+    * (degree, id)-smaller endpoint u to the larger v. That caps every
+    * node's out-degree at O(√m) on any graph: a node of out-degree d has
+    * d neighbours of degree ≥ its own, so d² ≤ 2m. Each out-edge u→v
+    * carries out(u) to out(v), and every w in out(u) ∩ out(v) closes the
+    * triangle {u, v, w}. A triangle is found exactly once, from the edge
+    * between its two lowest-ranked corners, and the out-lists carried
+    * total Σ outdeg² ≤ O(m^1.5) ids, where a neighbour join on the
+    * undirected graph pays Σ deg² (quadratic on skewed graphs).
     *
-    * Result is orientation-independent (the triangle SET is a property of
-    * the undirected graph), so oracles may replay the simpler id-ordered
-    * a<b<c formulation.
+    * Both endpoint degrees come from one pass: each edge explodes into
+    * its two half-edges, a window counts them per node, and the halves
+    * regroup per edge, with no degree aggregate to join back. The window
+    * has no map-side combine, so all of a hub's half-edges land in one
+    * task; orientation keeps the hub's own out-list short. One SQL
+    * execution runs the whole plan, with no cached frame and no join
+    * hint, and both sides of the out-list join read the out-list
+    * aggregate's one shuffle.
     *
-    * The canonical and oriented edge frames are persisted across their
-    * multiple plan references and dropped before returning. The result
-    * is a checkpoint, already materialized; release it via
-    * [[graft.core.Checkpoints.release]].
+    * The result is orientation-independent (the triangle set is a
+    * property of the undirected graph), so oracles may replay the simpler
+    * id-ordered a<b<c formulation. It is a checkpoint, already
+    * materialized; release it via [[graft.core.Checkpoints.release]].
     */
   def triangleCount(edges: DataFrame, srcCol: String, dstCol: String): DataFrame = {
     val canon = edges
@@ -221,45 +224,30 @@ object Graph {
         greatest(col(srcCol), col(dstCol)).as("b"))
       .filter(col("a") =!= col("b"))
       .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val deg = canon.select(col("a").as("node"))
-      .unionAll(canon.select(col("b").as("node")))
-      .groupBy("node").agg(count(lit(1)).as("deg"))
-    // orient each edge toward the (deg, id)-larger endpoint
     val withDeg = canon
-      .join(deg.withColumnRenamed("node", "a").withColumnRenamed("deg", "da"), "a")
-      .join(deg.withColumnRenamed("node", "b").withColumnRenamed("deg", "db"), "b")
-    val oriented = withDeg.select(
-        when(col("da") < col("db") ||
-             (col("da") === col("db") && col("a") < col("b")), col("a"))
-          .otherwise(col("b")).as("u"),
-        when(col("da") < col("db") ||
-             (col("da") === col("db") && col("a") < col("b")), col("b"))
-          .otherwise(col("a")).as("v"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // r17 opt (guide §3.1): hint SHUFFLED HASH for the wedge and closing
-    // joins — sort-merge would SORT the O(m^1.5) wedge stream; hashing
-    // the O(m) oriented edge side instead streams the wedges unsorted.
-    // Build side per partition is m/shuffle-partitions oriented edges
-    // (two longs each), well inside execution memory at any scale where
-    // the partition count tracks the input (AQE skew-split still applies)
-    val wedges = oriented.select(col("u").as("x"), col("v").as("y"))
-      .join(oriented.select(col("u").as("y"), col("v").as("z")).hint("shuffle_hash"), "y")
-    val triangles = wedges
-      .join(oriented.select(col("u").as("x"), col("v").as("z")).hint("shuffle_hash"),
-        Seq("x", "z"))
-    val counts = triangles
-      .select(explode(array(col("x"), col("y"), col("z"))).as("node"))
+      .select(explode(array(col("a"), col("b"))).as("node"), col("a"), col("b"))
+      .withColumn("deg", count(lit(1)).over(
+        org.apache.spark.sql.expressions.Window.partitionBy("node")))
+      .groupBy("a", "b")
+      .agg(max(when(col("node") === col("a"), col("deg"))).as("da"),
+        max(when(col("node") === col("b"), col("deg"))).as("db"))
+    val aFirst = col("da") < col("db") || (col("da") === col("db") && col("a") < col("b"))
+    // u is never null (a ≠ b drops nulls). Stating it keeps the join's
+    // inferred not-null filter off the out(v) side, so both join sides
+    // plan the same subtree and the second one reuses its shuffles.
+    val out = withDeg
+      .select(when(aFirst, col("a")).otherwise(col("b")).as("u"),
+        when(aFirst, col("b")).otherwise(col("a")).as("v"))
+      .filter(col("u").isNotNull)
+      .groupBy("u").agg(collect_list("v").as("out"))
+    val triangles = out
+      .select(col("u"), col("out").as("out_u"), explode(col("out")).as("v"))
+      .join(out.select(col("u").as("v"), col("out").as("out_v")), "v")
+      .select(col("u"), col("v"), explode(array_intersect(col("out_u"), col("out_v"))).as("w"))
+    triangles
+      .select(explode(array(col("u"), col("v"), col("w"))).as("node"))
       .groupBy("node").agg(count(lit(1)).as("triangles"))
-    // materialize BEFORE dropping the edge caches — dropping them
-    // under the lazy plan would silently recompute everything; the
-    // finally also releases them when the checkpoint THROWS (r15
-    // persist audit)
-    try counts.localCheckpoint()
-    finally {
-      canon.unpersist(blocking = false)
-      oriented.unpersist(blocking = false)
-    }
+      .localCheckpoint()
   }
 
   /** k-core of the undirected graph induced by `edges`: the maximal

@@ -425,6 +425,10 @@ object TextAnalysis {
     * back to document order (never a global window). Both paths emit
     * identical rows — ids in document token order, OOV → `oovId`, docs
     * with zero tokens absent.
+    *
+    * The result is a checkpoint, already materialized, on both paths: the
+    * dictionary broadcast is destroyed once the rows are held, so the
+    * caller releases the result via [[graft.core.Checkpoints.release]].
     */
   def encodeTokens(df: DataFrame, textCol: String, idCol: String,
                    rankedVocab: DataFrame, oovId: Int = -1): DataFrame = {
@@ -440,11 +444,13 @@ object TextAnalysis {
         org.apache.spark.unsafe.types.UTF8String.fromString(r.getString(0)),
         Integer.valueOf(r.getInt(1))))
       val bc = df.sparkSession.sparkContext.broadcast(dict)
-      df.select(col(idCol).as("id"), expr(tokensExpr(textCol)).as("__tk"))
+      try df.select(col(idCol).as("id"), expr(tokensExpr(textCol)).as("__tk"))
         .filter(size(col("__tk")) > 0)
         .select(col("id"), size(col("__tk")).cast("long").as("n_tokens"),
           graft.functions.VectorFunctions.tokenDictIds(col("__tk"), bc, oovId)
             .as("token_ids"))
+        .localCheckpoint(eager = true)
+      finally bc.destroy()
     } else
       df.select(col(idCol).as("id"),
           posexplode(expr(tokensExpr(textCol))).as(Seq("pos", "token")))
@@ -454,6 +460,7 @@ object TextAnalysis {
         .agg(count(lit(1)).as("n_tokens"),
           expr("transform(array_sort(collect_list(struct(pos, tid))), x -> x.tid)")
             .as("token_ids"))
+        .localCheckpoint(eager = true)
   }
 
   /** Per-document mean unigram log-probability under the corpus's own

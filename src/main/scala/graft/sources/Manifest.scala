@@ -1,8 +1,11 @@
 package graft.sources
 
 import com.fasterxml.jackson.databind.json.JsonMapper
+import com.fasterxml.jackson.databind.JsonNode
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 import scala.jdk.CollectionConverters._
 
 /** Content manifest for parquet corpora — the reproducibility/audit
@@ -96,9 +99,14 @@ object Manifest {
     */
   def writeManifestFor(spark: SparkSession, path: String,
                        partitionDepth: Int = 0): DataFrame = {
-    val summary = shardSummary(spark.read.parquet(path), partitionDepth)
+    val back = spark.read.parquet(path)
+    val summary = shardSummary(back, partitionDepth)
+    // the inferred data columns, without the ones partition discovery adds
+    val dataSchema = back.queryExecution.analyzed.collectFirst {
+      case LogicalRelation(r: HadoopFsRelation, _, _, _, _) => r.dataSchema
+    }.get
     // one row per FILE — config-sized
-    storeManifest(spark, path, summary.collect(), "file", partitionDepth)
+    storeManifest(spark, path, summary.collect(), "file", partitionDepth, dataSchema)
     summary
   }
 
@@ -106,15 +114,19 @@ object Manifest {
 
   /** Write the manifest JSON of the collected per-file entries (file name
     * under `fileCol`, plus `rows`, `content_hash` and `content_sum`) to the
-    * corpus's [[ManifestFile]]: the corpus totals, then the shards by file.
+    * corpus's [[ManifestFile]]: the corpus totals, the data schema (the
+    * columns the files hold, without the partition columns, as
+    * `StructType.json`), then the shards by file.
     */
   private def storeManifest(spark: SparkSession, path: String, entries: Array[Row],
-                            fileCol: String, partitionDepth: Int): Unit = {
+                            fileCol: String, partitionDepth: Int,
+                            dataSchema: StructType): Unit = {
     val doc = json.createObjectNode()
       .put("total_rows", entries.map(_.getAs[Long]("rows")).sum)
       .put("corpus_hash", entries.map(_.getAs[Long]("content_hash")).foldLeft(0L)(_ ^ _))
       .put("corpus_sum", entries.map(r => BigInt(r.getAs[String]("content_sum"))).sum.toString)
       .put("partition_depth", partitionDepth)
+    doc.set[JsonNode]("schema", json.readTree(dataSchema.json))
     val shards = doc.putArray("shards")
     entries.sortBy(_.getAs[String](fileCol)).foreach { r =>
       shards.addObject()
@@ -175,10 +187,9 @@ object Manifest {
     // from the directory names, typed as a plain read types them, so the
     // columns the content hash folds keep a plain read's order and types
     // (data columns, then partition columns, all nullable).
-    val back = spark.read
-      .schema(org.apache.spark.sql.types.StructType(
-        df.schema.filterNot(f => partitionCols.contains(f.name)).map(_.copy(nullable = true))))
-      .parquet(path)
+    val dataSchema = StructType(
+      df.schema.filterNot(f => partitionCols.contains(f.name)).map(_.copy(nullable = true)))
+    val back = spark.read.schema(dataSchema).parquet(path)
     val cs = back.columns.toSeq
     val byName = back.schema.fields.map(f => f.name -> f.dataType).toMap
     val segs = split(input_file_name(), "/")
@@ -202,7 +213,7 @@ object Manifest {
           sum(col("__h").cast("decimal(38,0)")).cast("string").as("content_sum")) ++
           profAggs): _*)
       .collect()
-    storeManifest(spark, path, entries, "__file", depth)
+    storeManifest(spark, path, entries, "__file", depth, dataSchema)
     // per-(file, column) profile rows in Sketches.profile's exact schema
     import org.apache.spark.sql.types._
     val profSchema = StructType(Seq(
@@ -275,7 +286,8 @@ object Manifest {
     graft.stats.Sketches.profileDrift(
       mergedProfile(spark, oldPaths), mergedProfile(spark, newPaths))
 
-  /** Re-scan `path` and compare against its stored manifest. Returns a
+  /** Re-scan `path` (with the manifest's stored data schema, see
+    * [[read]]) and compare against its stored manifest. Returns a
     * per-shard status frame (file, manifest_rows, actual_rows,
     * manifest_hash, actual_hash, ok) — a full-outer join, so shards
     * that VANISHED since publish and shards that APPEARED both surface
@@ -283,20 +295,15 @@ object Manifest {
     */
   def verifyManifest(spark: SparkSession, path: String): DataFrame = {
     import spark.implicits._
-    val p = new org.apache.hadoop.fs.Path(path, ManifestFile)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(p), s"no $ManifestFile under $path")
-    val in = fs.open(p)
-    val doc = try json.readTree(in) finally in.close()
-    // parsed on the driver, no spark.read.json job. Manifests written
-    // before partitioned publish lack partition_depth — depth-0 by
-    // construction.
+    val doc = readManifest(spark, path)
+    // Manifests written before partitioned publish lack partition_depth —
+    // depth-0 by construction.
     val depth = doc.path("partition_depth").asInt(0)
     val stored = doc.path("shards").asScala.toSeq.map(s =>
         (s.path("file").asText, s.path("rows").asLong, s.path("content_hash").asLong,
           s.path("content_sum").asText))
       .toDF("file", "manifest_rows", "manifest_hash", "manifest_sum")
-    val actual = shardSummary(spark.read.parquet(path), depth)
+    val actual = shardSummary(readWith(spark, path, doc), depth)
       .withColumnRenamed("rows", "actual_rows")
       .withColumnRenamed("content_hash", "actual_hash")
       .withColumnRenamed("content_sum", "actual_sum")
@@ -306,5 +313,30 @@ object Manifest {
           col("manifest_hash") === col("actual_hash") &&
           col("manifest_sum") === col("actual_sum"))
       .withColumn("ok", coalesce(col("ok"), lit(false)))
+  }
+
+  /** Read a published corpus with the data schema its manifest stored, so
+    * no schema-inference job runs; the partition columns come from
+    * directory discovery, as in a plain read. A manifest written before
+    * the schema was stored falls back to inference.
+    */
+  def read(spark: SparkSession, path: String): DataFrame =
+    readWith(spark, path, readManifest(spark, path))
+
+  private def readWith(spark: SparkSession, path: String, doc: JsonNode): DataFrame =
+    if (doc.has("schema"))
+      spark.read.schema(DataType.fromJson(doc.get("schema").toString).asInstanceOf[StructType])
+        .parquet(path)
+    else spark.read.parquet(path)
+
+  /** The corpus's manifest document, parsed on the driver (no
+    * spark.read.json job).
+    */
+  private def readManifest(spark: SparkSession, path: String): JsonNode = {
+    val p = new org.apache.hadoop.fs.Path(path, ManifestFile)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    require(fs.exists(p), s"no $ManifestFile under $path")
+    val in = fs.open(p)
+    try json.readTree(in) finally in.close()
   }
 }

@@ -176,15 +176,25 @@ class GraphSpec extends SparkTestBase {
   test("eager triangleCount, kCore and connectedComponents record their rounds") {
     // the operators return checkpoints, so their per-round DAG is read
     // from the AQE-final plans of the SQL executions the call ran
-    def recorded(run: => org.apache.spark.sql.DataFrame): Seq[String] = {
+    def recording(run: => org.apache.spark.sql.DataFrame): graft.tools.Profile.Recording = {
       var out: org.apache.spark.sql.DataFrame = null
       val rec = graft.tools.Profile.record(spark) { out = run }
       graft.core.Checkpoints.release(out)
-      rec.executions.flatMap(_.nodes).map(_.name)
+      rec
     }
+    def recorded(run: => org.apache.spark.sql.DataFrame): Seq[String] =
+      recording(run).executions.flatMap(_.nodes).map(_.name)
     val edges = lollipop
-    assert(recorded(Graph.triangleCount(edges, "src", "dst")).exists(_.endsWith("Join")),
-      "triangleCount should record its wedge/closing joins")
+    val tc = recording(Graph.triangleCount(edges, "src", "dst"))
+    val tcNodes = tc.executions.flatMap(_.nodes).map(_.name)
+    assert(tcNodes.exists(_.endsWith("Join")), "triangleCount should record its out-list join")
+    // one SQL execution over no cached frame, in the measured job count
+    assert(tc.executions.size == 1 && tc.outside.isEmpty,
+      s"triangleCount ran ${tc.executions.size} SQL executions and " +
+        s"${tc.outside.map(_._2.jobs).sum} jobs outside them")
+    val cached = tcNodes.filter(_.contains("InMemory"))
+    assert(cached.isEmpty, s"triangleCount scanned cached frames: $cached")
+    assert(tc.total.jobs <= 7, s"triangleCount ran ${tc.total.jobs} jobs")
     assert(recorded(Graph.kCore(edges, "src", "dst", k = 2)).exists(_.endsWith("Aggregate")),
       "kCore should record the degree aggregate")
     assert(recorded(Graph.connectedComponents(edges, "src", "dst")).exists(_.endsWith("Join")),

@@ -1339,6 +1339,27 @@ class PipelineSpec extends SparkTestBase {
     }
   }
 
+  test("encodeTokens: the dictionary broadcast is destroyed once the ids are checkpointed") {
+    import spark.implicits._
+    // a token no other broadcast in the session holds
+    val marker = org.apache.spark.unsafe.types.UTF8String.fromString("qzxvbroadcastmarker")
+    val docs = Seq((1L, "qzxvbroadcastmarker a b"), (2L, "a qzxvbroadcastmarker"))
+      .toDF("doc_id", "text")
+    val ranked = TextAnalysis.rankVocabulary(TextAnalysis.vocabulary(docs, "text", "doc_id"))
+    val out = TextAnalysis.encodeTokens(docs, "text", "doc_id", ranked)
+    try {
+      // Broadcast.destroy removes the driver's blocks asynchronously
+      def held = org.apache.spark.graftbridge.DriverBlocks.broadcastValues().count {
+        case m: java.util.HashMap[_, _] => m.containsKey(marker)
+        case _ => false
+      }
+      val deadline = System.nanoTime() + 10000000000L
+      while (held > 0 && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(held == 0, s"$held driver broadcast block(s) still hold the dictionary")
+      assert(out.count() == 2) // the checkpoint holds the rows without it
+    } finally graft.core.Checkpoints.release(out)
+  }
+
   test("encodeTokens: broadcast-dict path ≡ join path (r18 gate)") {
     import spark.implicits._
     val docs = Seq(
@@ -1498,6 +1519,35 @@ class PipelineSpec extends SparkTestBase {
       val v = Manifest.verifyManifest(spark, corpus)
       assert(v.count() == 2 && v.filter(!col("ok")).count() == 0,
         v.collect().mkString("\n"))
+    }
+  }
+
+  test("verifyManifest and Manifest.read use the stored schema: no inference job") {
+    import spark.implicits._
+    import graft.sources.Manifest
+    val df = (0 until 180).map(i => (i.toLong, s"doc ${i % 40}", (i % 3).toLong))
+      .toDF("id", "text", "shard").repartition(3)
+    withTempDir("graft_manifest_schema") { dir =>
+      val publishers = Seq[(String, String => Unit)](
+        "flat" -> (p => Manifest.writeWithManifest(df, p)),
+        "sharded" -> (p => Manifest.writeWithManifest(df, p, partitionCols = Seq("shard"))),
+        "profiled" -> (p => Manifest.writeWithManifestAndProfile(df, p, Seq("shard"))))
+      for ((name, publish) <- publishers) {
+        val corpus = s"$dir/$name"
+        publish(corpus)
+        var bad = -1L
+        var rows: Seq[org.apache.spark.sql.Row] = Nil
+        val rec = graft.tools.Profile.record(spark) {
+          bad = Manifest.verifyManifest(spark, corpus).filter(!col("ok")).count()
+          rows = Manifest.read(spark, corpus).select("id", "text", "shard").collect().toSeq
+        }
+        val inferred = rec.outside.map(_._1).filter(_.startsWith("parquet at Manifest.scala"))
+        assert(inferred.isEmpty, s"$name: jobs outside any SQL execution: $inferred")
+        assert(bad == 0L, name)
+        // the stored-schema read holds the same rows as an inferring read
+        val plain = spark.read.parquet(corpus).select("id", "text", "shard").collect().toSeq
+        assert(rows.sortBy(_.getLong(0)) == plain.sortBy(_.getLong(0)), name)
+      }
     }
   }
 

@@ -535,28 +535,46 @@ class PropertySpec extends SparkTestBase {
 
   test("property: triangleCount ≡ brute-force triple enumeration") {
     import spark.implicits._
-    for (seed <- Seq(17L, 53L, 101L)) {
-      val rng = new scala.util.Random(seed)
-      val nNodes = 6 + rng.nextInt(18)
-      val edges = (0 until 15 + rng.nextInt(60)).map { _ =>
-        (rng.nextInt(nNodes).toLong, rng.nextInt(nNodes).toLong)
-      }
-      val df = edges.toDF("s", "d").repartition(1 + rng.nextInt(5))
+    def check[T](label: String, edges: Seq[(T, T)], parts: Int)(
+        implicit ord: Ordering[T], enc: org.apache.spark.sql.Encoder[(T, T)]): Unit = {
+      val df = spark.createDataset(edges).toDF("s", "d").repartition(parts)
       val tc = graft.operators.Graph.triangleCount(df, "s", "d")
-      val got = tc.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val got = tc.collect().map(r => r.getAs[T](0) -> r.getLong(1)).toMap
       graft.core.Checkpoints.release(tc)
-      val simple = edges.map { case (a, b) => (math.min(a, b), math.max(a, b)) }
+      val simple = edges.map { case (a, b) => (ord.min(a, b), ord.max(a, b)) }
         .filter(e => e._1 != e._2).distinct.toSet
       val nodes = simple.toSeq.flatMap(e => Seq(e._1, e._2)).distinct.sorted
-      val counts = scala.collection.mutable.Map[Long, Long]().withDefaultValue(0L)
+      val counts = scala.collection.mutable.Map[T, Long]().withDefaultValue(0L)
       for {
         i <- nodes.indices; j <- (i + 1) until nodes.size; l <- (j + 1) until nodes.size
         (a, b, c) = (nodes(i), nodes(j), nodes(l))
         if simple((a, b)) && simple((b, c)) && simple((a, c))
       } { counts(a) += 1; counts(b) += 1; counts(c) += 1 }
       val want = counts.toMap
-      assert(got == want, s"seed=$seed diff=${(got.toSet diff want.toSet) ++ (want.toSet diff got.toSet)}")
+      assert(got == want, s"$label diff=${(got.toSet diff want.toSet) ++ (want.toSet diff got.toSet)}")
     }
+    for (seed <- Seq(17L, 53L, 101L)) {
+      val rng = new scala.util.Random(seed)
+      val nNodes = 6 + rng.nextInt(18)
+      val edges = (0 until 15 + rng.nextInt(60)).map { _ =>
+        (rng.nextInt(nNodes).toLong, rng.nextInt(nNodes).toLong)
+      }
+      check(s"seed=$seed", edges, 1 + rng.nextInt(5))
+    }
+    val rng = new scala.util.Random(29L)
+    // hub-heavy: node 0 touches every other node, plus random chords, so
+    // orientation puts the hub last and its out-list stays empty
+    val star = (1L to 40L).map(i => (0L, i)) ++
+      (0 until 60).map(_ => (1L + rng.nextInt(40), 1L + rng.nextInt(40)))
+    check("hub", star, 3)
+    // dense: near-complete on 12 nodes (every 7th pair dropped)
+    val dense = for {
+      a <- 0L until 12L; b <- (a + 1) until 12L if (a * 12 + b) % 7 != 0
+    } yield if ((a + b) % 2 == 0) (a, b) else (b, a)
+    check("dense", dense, 4)
+    // string ids order lexicographically: "n10" < "n2"
+    val strs = (0 until 50).map(_ => (s"n${rng.nextInt(14)}", s"n${rng.nextInt(14)}"))
+    check("string ids", strs, 2)
   }
 
   test("property: rangeJoin ≡ brute-force containment on random intervals × bucket sizes") {
