@@ -263,25 +263,34 @@ object Dedup {
   def minhashSignaturesPortable(sh: DataFrame, k: Int = 32): DataFrame =
     signaturesNative(sh, k, portable = true)
 
-  private def signaturesNative(sh: DataFrame, k: Int, portable: Boolean): DataFrame = {
+  private def signaturesNative(sh: DataFrame, k: Int, portable: Boolean): DataFrame =
+    signatureColumns(sh.select(col("id"), signature(col("sh"), k, portable).as("__mh")), k)
+
+  /** The k-value MinHash signature array of a shingle-set column, NULL
+    * for a NULL or empty set.
+    */
+  private def signature(sh: Column, k: Int, portable: Boolean): Column =
     // NULL array elements are dropped up front: the native loop skips
     // them, so the caller-visible contract (and the agg equivalence
     // reference below) must see the same element set — without this, a
     // caller-supplied shingle frame containing nulls would hash
     // xxhash64(NULL)=seed into every permutation's min on the agg path
     // but not the native one
-    val cleaned = sh.withColumn("sh", expr("filter(sh, x -> x IS NOT NULL)"))
-    val sig = org.apache.spark.sql.graftbridge.Bridge.column(
+    org.apache.spark.sql.graftbridge.Bridge.column(
       graft.functions.MinHashAffine(
-        org.apache.spark.sql.graftbridge.Bridge.expression(col("sh")), k, portable))
+        org.apache.spark.sql.graftbridge.Bridge.expression(filter(sh, _.isNotNull)),
+        k, portable))
+
+  /** (id, h0..h{k-1}) from a frame with an `id` and an `__mh`
+    * signature-array column; rows without a signature drop out.
+    */
+  private def signatureColumns(mh: DataFrame, k: Int): DataFrame =
     // the signature is computed in ITS OWN projection and the h-columns
     // extracted from the materialized array in the next one —
     // CollapseProject keeps the boundary (non-cheap, multiply-referenced),
     // so the O(shingles·k) loop runs once per row, not k times
-    cleaned.select(col("id"), sig.as("__mh"))
-      .filter(col("__mh").isNotNull)
+    mh.filter(col("__mh").isNotNull)
       .select(col("id") +: (0 until k).map(i => col("__mh").getItem(i).as(s"h$i")): _*)
-  }
 
   /** The explode→base-hash→partial-aggregated-min formulation — kept as
     * the equivalence reference for [[signaturesNative]] (TextExprSpec
@@ -347,13 +356,24 @@ object Dedup {
       .distinct()
   }
 
+  /** The band hash of a MinHash family: the portable family keeps the
+    * joined values as its (cross-engine) band key, the default family
+    * hashes them with xxhash64.
+    */
+  private def bandSigFor(portable: Boolean): Seq[Column] => Column =
+    if (portable) cs => concat_ws(",", cs: _*)
+    else cs => xxhash64(concat_ws(",", cs: _*))
+
   /** MinHash-LSH candidate pairs (id1 < id2) from a precomputed signature
     * frame, deduplicated across bands. EAGER: the result is
     * `localCheckpoint`ed — this (a) lets the temporary band table be
     * unpersisted HERE instead of leaking into the caller's session
-    * (round-1/2 advice), and (b) means the caller's multiple references to
-    * the candidate set (members union + two verify joins) read materialized
-    * rows instead of re-running the LSH join per reference.
+    * (round-1/2 advice), and (b) means a caller that reads the candidate
+    * set several times (say, [[jaccardOnPairs]]' member semi-join and its
+    * two shingle lookups) reads materialized rows instead of re-running
+    * the LSH join per reference. [[minhashDedup]] does not come through
+    * here: it bands and verifies in one execution over its own
+    * checkpoint.
     *
     * Recall tuning: P(candidate | J) = 1 − (1 − J^r)^bands with
     * r = k/bands. Defaults (k=32, bands=8, r=4): J=0.9→0.9996, 0.8→0.985,
@@ -376,7 +396,9 @@ object Dedup {
 
   /** Exact n-gram Jaccard for candidate pairs given precomputed (id, sh)
     * shingle sets: two key joins, then per-row array intersection — use
-    * AFTER banding, never on all pairs.
+    * AFTER banding, never on all pairs. Both lookups read `sh`; when it
+    * is a checkpoint, AQE plans its exchange once and reuses it for the
+    * second lookup.
     */
   def jaccardOnShingledPairs(pairs: DataFrame, sh: DataFrame): DataFrame =
     pairs
@@ -396,8 +418,9 @@ object Dedup {
   /** Jaccard for candidate pairs from raw documents: shingles ONLY the
     * pair members (semi-join prefilter) — after banding, candidates are a
     * tiny fraction of the corpus, so this skips shingling ~everything.
-    * Callers that already hold a shingled frame (minhashDedup) should use
-    * jaccardOnShingledPairs instead of re-shingling.
+    * Callers that already hold a shingled frame should use
+    * jaccardOnShingledPairs instead of re-shingling, as [[minhashDedup]]
+    * does over its signed-shingle checkpoint.
     */
   def jaccardOnPairs(pairs: DataFrame, docs: DataFrame, textCol: String,
                      idCol: String, shingleN: Int = 3): DataFrame = {
@@ -407,38 +430,51 @@ object Dedup {
     jaccardOnShingledPairs(pairs, shingled(filtered, textCol, idCol, shingleN))
   }
 
-  /** Full MinHash-LSH near-dup pipeline: shingle ONCE (persisted; shared
-    * by the signature stage and the verify stage), candidates → exact
-    * Jaccard → threshold filter. EAGER (localCheckpoint) so the shingle
-    * cache can be released before returning — no persist leaks across
-    * invocations. At extreme corpus scale where persisting shingle sets is
-    * too much storage, compose minhashCandidatesFromSignatures + jaccardOnPairs instead
+  /** Runs `body` over one materialization of `df`'s shingles: each
+    * document's (id, sh) shingle set and its MinHash signature come from
+    * ONE projection over [[shingled]], `localCheckpoint`ed eagerly. The
+    * body gets the (id, sh) frame and the lazy LSH candidate pairs
+    * (id1 < id2) banded from the checkpoint's signatures, both reading
+    * the checkpoint, so shingling and signing run once however often the
+    * body reads them. The checkpoint is released when the body returns
+    * or fails: the body must hand back a materialized result.
+    */
+  private def withSignedShingles[T](df: DataFrame, textCol: String, idCol: String,
+      shingleN: Int, k: Int, bands: Int, portable: Boolean)
+      (body: (DataFrame, DataFrame) => T): T = {
+    val signed = shingled(df, textCol, idCol, shingleN)
+      .select(col("id"), col("sh"), signature(col("sh"), k, portable).as("__mh"))
+      .localCheckpoint(eager = true)
+    try {
+      val cand = candidatePairsFromBandRows(
+        bandRows(signatureColumns(signed, k), k, bands, bandSigFor(portable)))
+      body(signed.select(col("id"), col("sh")), cand)
+    } finally graft.core.Checkpoints.release(signed)
+  }
+
+  /** Full MinHash-LSH near-dup pipeline: verified pairs (id1 < id2,
+    * jaccard ≥ threshold) of `df`'s documents. Shingles and signatures are
+    * computed once, into one checkpoint (see [[withSignedShingles]]);
+    * after it, ONE SQL execution bands the signatures, self-joins the
+    * band rows into candidates, looks both members' shingles up in the
+    * same checkpoint (one exchange, reused for the second lookup), takes
+    * the exact Jaccard and filters it. EAGER: the result is
+    * `localCheckpoint`ed and the shingle checkpoint released before
+    * returning; release the result with
+    * [[graft.core.Checkpoints.release]] once done. At extreme corpus
+    * scale, where materializing every shingle set is too much storage,
+    * compose minhashCandidatesFromSignatures + jaccardOnPairs instead
     * (re-shingles candidate members only).
     */
   def minhashDedup(df: DataFrame, textCol: String, idCol: String,
                    threshold: Double = 0.8, shingleN: Int = 3,
                    k: Int = 32, bands: Int = 8,
-                   portable: Boolean = false): DataFrame = {
-    val sh = shingled(df, textCol, idCol, shingleN)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val sigs = if (portable) minhashSignaturesPortable(sh, k)
-                 else minhashSignaturesFromShingles(sh, k)
-      val cand =
-        if (portable)
-          minhashCandidatesFromSignatures(sigs, k, bands, cs => concat_ws(",", cs: _*))
-        else minhashCandidatesFromSignatures(sigs, k, bands)
-      val members = cand.select(col("id1").as("id"))
-        .unionAll(cand.select(col("id2").as("id"))).distinct()
-      val out = jaccardOnShingledPairs(cand, sh.join(members, Seq("id"), "left_semi"))
+                   portable: Boolean = false): DataFrame =
+    withSignedShingles(df, textCol, idCol, shingleN, k, bands, portable) { (sh, cand) =>
+      jaccardOnShingledPairs(cand, sh)
         .filter(col("jaccard") >= threshold)
         .localCheckpoint()
-      // the verify output is materialized — the candidate checkpoint has
-      // no remaining reader; release it now instead of pinning until GC
-      graft.core.Checkpoints.release(cand)
-      out
-    } finally sh.unpersist(blocking = false)
-  }
+    }
 
   /** Banding-recall EVALUATION: measure, on an eval-sized corpus slice,
     * how much of the exact near-dup truth the LSH banding surfaces — the
@@ -456,7 +492,9 @@ object Dedup {
     * generous for a recall estimate, far below where a hot shingle
     * hurts) or the call fails before any pair work starts; pass
     * `force = true` to run a larger slice deliberately. The count is
-    * one cheap job over the eval slice.
+    * one cheap job over the eval slice. The truth join and the banding
+    * both read one checkpoint of the slice's shingles and signatures
+    * (see [[withSignedShingles]]).
     *
     * Returns ONE row: n_docs, n_true (exact pairs ≥ threshold), n_cand
     * (banding candidate pairs), n_hit (their intersection = candidates
@@ -485,9 +523,7 @@ object Dedup {
           s"Views.hashSample/an id range, raise maxDocs, or pass force=true " +
           s"to run a larger slice deliberately.")
     }
-    val sh = shingled(df, textCol, idCol, shingleN)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    withSignedShingles(df, textCol, idCol, shingleN, k, bands, portable) { (sh, cand) =>
       val post = sh.select(col("id"), explode(col("sh")).as("s"))
       val truthCand = post.alias("a").join(post.alias("b"),
           col("a.s") === col("b.s") && col("a.id") < col("b.id"))
@@ -495,12 +531,8 @@ object Dedup {
       val truth = jaccardOnShingledPairs(truthCand, sh)
         .filter(col("jaccard") >= threshold)
         .localCheckpoint() // read twice (count + hit join); truthCand dies here
-      val sigs = if (portable) minhashSignaturesPortable(sh, k)
-                 else minhashSignaturesFromShingles(sh, k)
-      val cand =
-        if (portable)
-          minhashCandidatesFromSignatures(sigs, k, bands, cs => concat_ws(",", cs: _*))
-        else minhashCandidatesFromSignatures(sigs, k, bands)
+      // cand stays lazy: both its reads (count + hit join) sit in the
+      // one execution below, which ends in the one-row checkpoint
       val out = df.agg(count(lit(1)).as("n_docs"))
         .crossJoin(truth.agg(count(lit(1)).as("n_true")))
         .crossJoin(cand.agg(count(lit(1)).as("n_cand")))
@@ -510,11 +542,10 @@ object Dedup {
           .otherwise(col("n_hit").cast("double") / col("n_true")))
         .withColumn("precision", when(col("n_cand") === 0, lit(1.0))
           .otherwise(col("n_hit").cast("double") / col("n_cand")))
-        .localCheckpoint(eager = true) // 1 row; lets both pair frames release
+        .localCheckpoint(eager = true) // 1 row; lets the truth frame release
       graft.core.Checkpoints.release(truth)
-      graft.core.Checkpoints.release(cand)
       out
-    } finally sh.unpersist(blocking = false)
+    }
   }
 
   /** Incremental near-dup dedup: process a NEW batch against a persisted
@@ -575,10 +606,7 @@ object Dedup {
     try {
       val sigs = if (portable) minhashSignaturesPortable(sh, k)
                  else minhashSignaturesFromShingles(sh, k)
-      val bandSigFn: Seq[Column] => Column =
-        if (portable) cs => concat_ws(",", cs: _*)
-        else cs => xxhash64(concat_ws(",", cs: _*))
-      val rows = bandRows(sigs, k, bands, bandSigFn)
+      val rows = bandRows(sigs, k, bands, bandSigFor(portable))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
         // EAGER like minhashCandidatesFromSignatures: cand is referenced

@@ -257,5 +257,12 @@ class GraphSpec extends SparkTestBase {
     val texts = Seq((1L, "a b"), (2L, "A  b "), (3L, "c")).toDF("doc_id", "text")
     assert(pinsOnlyResult("exactSurvivors")(
       graft.pipeline.Dedup.exactSurvivors(texts, "text", "doc_id")) == 2)
+    val near = Seq((1L, "the quick brown fox jumps over the lazy dog"),
+      (2L, "the quick brown fox jumps over the lazy cat"), (3L, "an unrelated text"))
+      .toDF("doc_id", "text")
+    assert(pinsOnlyResult("minhashDedup")(graft.pipeline.Dedup.minhashDedup(
+      near, "text", "doc_id", threshold = 0.5)) == 1)
+    assert(pinsOnlyResult("minhashRecallEval")(graft.pipeline.Dedup.minhashRecallEval(
+      near, "text", "doc_id", threshold = 0.5)) == 1)
   }
 }

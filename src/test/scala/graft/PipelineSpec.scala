@@ -436,6 +436,37 @@ class PipelineSpec extends SparkTestBase {
     }))
   }
 
+  test("minhashDedup: one signed-shingle checkpoint, then one execution with a reused shingle exchange") {
+    withTempDir("graft_minhash_plan") { dir =>
+      docs().write.parquet(s"$dir/docs")
+      val in = spark.read.parquet(s"$dir/docs")
+      var out: org.apache.spark.sql.DataFrame = null
+      val rec = graft.tools.Profile.record(spark) {
+        out = Dedup.minhashDedup(in, "text", "doc_id", threshold = 0.5)
+      }
+      try {
+        val nodes = rec.executions.flatMap(_.nodes).map(_.name)
+        val cached = nodes.filter(_.startsWith("InMemory"))
+        assert(cached.isEmpty, s"minhashDedup scanned cached frames: $cached")
+        assert(rec.outside.isEmpty, s"jobs outside any SQL execution: ${rec.outside}")
+        // the signature checkpoint (2 jobs), then candidates → verify →
+        // result checkpoint (4 jobs)
+        assert(rec.executions.size == 2, rec.executions.map(_.description).mkString("\n"))
+        assert(rec.total.jobs == 6, s"minhashDedup ran ${rec.total.jobs} jobs")
+        // the verify looks both members' shingles up in the checkpoint:
+        // the second lookup reuses the first one's exchange, and no
+        // members semi-join filters the shingles first
+        val verify = rec.executions.last.plan
+        val reused = (raw"\(\d+\) ReusedExchange \[Reuses operator id: \d+\]\s+" +
+          raw"Output \[2\]: \[id2#\d+L, sh2#\d+\]").r
+        assert(reused.findFirstIn(verify).isDefined, verify)
+        assert(!verify.contains("LeftSemi"), verify)
+        assert(out.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+          .contains((1L, 4L)))
+      } finally graft.core.Checkpoints.release(out)
+    }
+  }
+
   test("minhashRecallEval: complete truth, count consistency, vacuous edges") {
     import spark.implicits._
     // disjoint vocabularies per planted pair so truth is exactly the

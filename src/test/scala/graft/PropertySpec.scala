@@ -1081,4 +1081,64 @@ class PropertySpec extends SparkTestBase {
       } finally graft.core.Checkpoints.release(got)
     }
   }
+
+  /** The reference form of MinHash-LSH dedup: candidates checkpointed by
+    * [[Dedup.minhashCandidatesFromSignatures]], and the verify reading
+    * only the candidate members' shingles, through a semi-join on the
+    * union of both members. Lazy; the caller releases `cand`.
+    */
+  private def minhashDedupBySemiJoin(df: org.apache.spark.sql.DataFrame, shingleN: Int,
+      threshold: Double, portable: Boolean)
+      : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
+    val sh = Dedup.shingled(df, "text", "doc_id", shingleN)
+    val cand =
+      if (portable)
+        Dedup.minhashCandidatesFromSignatures(Dedup.minhashSignaturesPortable(sh), 32, 8,
+          cs => concat_ws(",", cs: _*))
+      else Dedup.minhashCandidatesFromSignatures(Dedup.minhashSignaturesFromShingles(sh))
+    val members = cand.select(col("id1").as("id"))
+      .unionAll(cand.select(col("id2").as("id"))).distinct()
+    (Dedup.jaccardOnShingledPairs(cand, sh.join(members, Seq("id"), "left_semi"))
+      .filter(col("jaccard") >= threshold), cand)
+  }
+
+  test("property: minhashDedup ≡ members semi-join verify on corpora with planted near-dups") {
+    import spark.implicits._
+    val vocab = (0 until 40).map(i => s"w$i")
+    for (seed <- Seq(3L, 11L, 23L, 47L); portable <- Seq(false, true)) {
+      val rng = new scala.util.Random(seed)
+      val shingleN = 2 + rng.nextInt(2)
+      // groups of near-duplicates: a base text and variants with one or
+      // two words replaced, so true pairs sit on both sides of the
+      // threshold; then texts shorter than shingleN, empty and null texts
+      val planted = (0 until 3 + rng.nextInt(3)).flatMap { _ =>
+        val base = Vector.fill(10 + rng.nextInt(10))(vocab(rng.nextInt(vocab.size)))
+        base.mkString(" ") +: Seq.fill(1 + rng.nextInt(3)) {
+          (0 until 1 + rng.nextInt(2)).foldLeft(base) { (t, _) =>
+            t.updated(rng.nextInt(t.size), vocab(rng.nextInt(vocab.size)))
+          }.mkString(" ")
+        }
+      }
+      val texts = planted.map(Option(_)) ++ Seq(Some("w1"), Some("w1"), Some("w2 w3"),
+        Some(""), Some(""), None, None)
+      // unique ids in shuffled order, one of them null
+      val ids = rng.shuffle((1L to 3L * texts.size).toList).take(texts.size)
+        .map(Option(_)).updated(rng.nextInt(texts.size), None)
+      val df = rng.shuffle(texts.zip(ids)).toDF("text", "doc_id")
+        .repartition(1 + rng.nextInt(4))
+      val got = Dedup.minhashDedup(df, "text", "doc_id", threshold = 0.6,
+        shingleN = shingleN, portable = portable)
+      val (want, cand) = minhashDedupBySemiJoin(df, shingleN, 0.6, portable)
+      try {
+        def rowsOf(out: org.apache.spark.sql.DataFrame) =
+          out.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sorted.toSeq
+        val expected = rowsOf(want)
+        assert(expected.exists(_._3 < 1.0), s"seed=$seed portable=$portable: no near-dup pair")
+        assert(rowsOf(got) == expected, s"seed=$seed portable=$portable")
+      } finally {
+        graft.core.Checkpoints.release(got)
+        graft.core.Checkpoints.release(cand)
+      }
+    }
+  }
 }
